@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """The repo benchmark: cold-start runs of the engine's public entry points.
 
-    python3 perfbench/run.py --workload cli_pipeline[,etl_scale,...] --seed 1 \
+    python3 perfbench/run.py --workload cli_pipeline[,etl_scale] --seed 1 \
         --seconds 30 --trace 0
 
 Run from the root of a checkout. The first run builds the engine and this
@@ -35,7 +35,7 @@ sys.path.insert(0, HERE)
 # Generated input size (fraction of the engine's sf1 testdata row counts).
 SF = 0.01
 # etl_scale's key-shifted replicas of the generated source tables
-ETL_REPLICAS = 10
+ETL_REPLICAS = 20
 # Wall-clock ceiling for one whole run, build excluded.
 RUN_LIMIT_S = 170
 # local[CORES]: the cores this process may run on (nproc)
@@ -43,12 +43,11 @@ CORES = len(os.sched_getaffinity(0))
 # added to build.sbt's javaOptions: no hsperfdata file in the system temp dir
 JVM_EXTRA = ["-XX:-UsePerfData"]
 
-# BENCHMARK.json lists the first two; ohdsi_sql runs by name (see README.md)
-WORKLOADS = ("cli_pipeline", "etl_scale", "ohdsi_sql")
-# calls whose result files are checked against the engine's DuckDB oracle
-ORACLE_CHECKED = ("ohdsi_sql",)
+WORKLOADS = ("cli_pipeline", "etl_scale")
+# the calls whose returned rows are the omop-zone rows the ETL wrote
+ETL_CALLS = ("run_etl", "etl_run")
 
-END_TO_END = [("wall_s", "s"), ("setup_s", "s"), ("rows_per_s", "rows/s")]
+END_TO_END = [("wall_s", "s"), ("setup_s", "s"), ("cdm_rows_per_s", "rows/s")]
 
 # per-layer metrics: span sums, FolderEtl GRAFT_TIMING phase sums, and the
 # tracer's counters; every workload reports all of them (0 = layer unused)
@@ -155,8 +154,6 @@ def build():
 def normalize(df):
     df = df[sorted(df.columns)].copy()
     for c in df.columns:
-        if str(df[c].dtype).startswith("datetime"):
-            df[c] = df[c].astype("datetime64[us]")
         if str(df[c].dtype) in ("int8", "int16", "int32", "uint32", "Int64"):
             df[c] = df[c].astype("int64")
     if len(df.columns):
@@ -164,37 +161,39 @@ def normalize(df):
     return df.reset_index(drop=True)
 
 
-class Oracle:
-    """DuckDB replays of the engine's oracle SQL over the generated tables;
-    computed once per run (the iterations of a run share the inputs)."""
-
-    def __init__(self, data_dir):
-        import duckdb
-        self.con = duckdb.connect()
-        self.con.execute("SET threads=1")
-        for f in sorted(x for x in os.listdir(data_dir) if x.endswith(".parquet")):
-            t = f[:-len(".parquet")]
-            self.con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{data_dir}/{f}'")
-        self.want = {}
-
-    def check(self, name, sql, result_dir):
-        """Return (rows, mismatch message or None)."""
+def oracle_checks(path):
+    """Replay the runner's `oracle_checks.json` in DuckDB: each check's
+    oracle SQL over the omop-zone tables against the stored results.
+    Returns one message per mismatch."""
+    import duckdb
+    with open(path) as fh:
+        spec = json.load(fh)
+    con = duckdb.connect()
+    con.execute("SET threads=1")
+    con.execute("SET TimeZone='UTC'")
+    for t, files in spec["views"].items():
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM {files}")
+    bad = []
+    for c in spec["checks"]:
         try:
-            if name not in self.want:
-                self.want[name] = normalize(self.con.sql(sql).df())
-            want = self.want[name]
-            got = normalize(self.con.sql(f"SELECT * FROM '{result_dir}/*.parquet'").df())
+            want = normalize(con.sql(c["oracle"]).df())
+            got = normalize(con.sql(c["stored"]).df())
         except Exception as e:  # noqa: BLE001 -- any read or replay error is a mismatch
-            return 0, f"{name}: {type(e).__name__}: {str(e)[:200]}"
-        if list(got.columns) != list(want.columns) or got.shape != want.shape:
-            return len(got), f"{name}: shape {list(got.columns)} {got.shape} != {want.shape}"
+            bad.append(f"{c['name']}: {type(e).__name__}: {str(e)[:200]}")
+            continue
+        if list(got.columns) != list(want.columns) or got.shape != want.shape or got.empty:
+            bad.append(f"{c['name']}: {list(got.columns)} {got.shape} != oracle "
+                       f"{list(want.columns)} {want.shape}")
+            continue
         # the engine's oracle contract compares stringified cells
-        for c in got.columns:
-            g, w = got[c].map(str).values, want[c].map(str).values
+        for col in got.columns:
+            g, w = got[col].map(str).values, want[col].map(str).values
             if (g != w).any():
-                i = int((g != w).argmax())
-                return len(got), f"{name}: column {c} row {i}: {g[i]!r} != {w[i]!r}"
-        return len(got), None
+                k = int((g != w).argmax())
+                bad.append(f"{c['name']}: column {col} row {k}: {g[k]!r} != oracle {w[k]!r}")
+                break
+    con.close()
+    return bad
 
 
 # ---------------------------------------------------------------- iterations
@@ -204,7 +203,13 @@ def load1():
         return float(fh.read().split()[0])
 
 
-def run_iteration(workload, data_dir, seed, traced, opts, cp, deadline, oracle):
+def steal_s():
+    """CPU time the hypervisor gave to other guests, summed over cores."""
+    with open("/proc/stat") as fh:
+        return int(fh.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+
+
+def run_iteration(workload, data_dir, seed, traced, opts, cp, deadline):
     """One cold iteration: a fresh JVM on an empty zones root and warehouse."""
     it = os.path.join(BUILD, "work", f"{workload}-{os.getpid()}-{time.time_ns()}")
     os.makedirs(os.path.join(it, "tmp"))
@@ -219,6 +224,7 @@ def run_iteration(workload, data_dir, seed, traced, opts, cp, deadline, oracle):
            [f"-Dgraft.zones.root={it}/zones", f"-Djava.io.tmpdir={it}/tmp", "-cp", cp,
             "perfbench.Runner", workload, data_dir, it, str(seed), "1" if traced else "0"])
     rec = {"traced": traced, "load1_before": load1()}
+    steal0 = steal_s()
     try:
         with open(os.path.join(it, "stdout.log"), "w") as o, \
                 open(os.path.join(it, "stderr.log"), "w") as e:
@@ -230,7 +236,7 @@ def run_iteration(workload, data_dir, seed, traced, opts, cp, deadline, oracle):
                 p.kill()
                 p.wait()
                 code = "timeout"
-        rec["load1_after"] = load1()
+        rec.update(load1_after=load1(), steal_s=steal_s() - steal0)
         res = os.path.join(it, "iteration.json")
         if code != 0 or not os.path.exists(res):
             with open(os.path.join(it, "stderr.log")) as fh:
@@ -242,15 +248,11 @@ def run_iteration(workload, data_dir, seed, traced, opts, cp, deadline, oracle):
             rec.update(json.load(fh))
         if traced:
             rec["layers"].update(etl_phases(os.path.join(it, "stderr.log")))
-        if oracle:
-            with open(os.path.join(it, "oracle_sql.json")) as fh:
-                oracles = json.load(fh)
-            for c in rec["calls"]:
-                if c["error"] is None:
-                    c["rows"], bad = oracle.check(c["name"], oracles[c["name"]],
-                                                  os.path.join(it, "results", c["name"]))
-                    if bad:
-                        rec["check_failures"].append(bad)
+        checks = os.path.join(it, "oracle_checks.json")
+        if os.path.exists(checks):
+            rec["check_failures"] += oracle_checks(checks)
+        elif workload == "cli_pipeline" and not any(c["error"] for c in rec["calls"]):
+            rec["check_failures"].append("no oracle checks written")
         return rec
     finally:
         shutil.rmtree(it, ignore_errors=True)
@@ -279,10 +281,9 @@ def run_workload(workload, seed, seconds, trace, opts, cp):
         gen.generate(data_dir, seed, SF)
         if workload == "etl_scale":
             gen.etl_raw(data_dir, os.path.join(data_dir, "etl_raw"), seed, ETL_REPLICAS)
-        oracle = Oracle(data_dir) if workload in ORACLE_CHECKED else None
         its = []
         while True:
-            its.append(run_iteration(workload, data_dir, seed, trace, opts, cp, deadline, oracle))
+            its.append(run_iteration(workload, data_dir, seed, trace, opts, cp, deadline))
             elapsed = time.time() - start
             if trace or "error" in its[-1] or elapsed >= seconds or \
                     time.time() + elapsed / len(its) > deadline:
@@ -313,7 +314,8 @@ def summarize(its, trace):
         values = {
             "wall_s": med([i["wall_s"] for i in ok]),
             "setup_s": med([i["setup_s"] for i in ok]),
-            "rows_per_s": med([sum(c["rows"] for c in i["calls"]) / i["wall_s"] for i in ok]),
+            "cdm_rows_per_s": med([sum(c["rows"] for c in i["calls"] if c["name"] in ETL_CALLS)
+                                   / i["wall_s"] for i in ok]),
         }
         return attempted, len(problems), problems, \
             {k: {"value": values[k], "unit": u} for k, u in END_TO_END}
@@ -322,7 +324,7 @@ def summarize(its, trace):
         for c in i["calls"]:
             if c["name"] in CLI_SPANS:
                 lay[CLI_SPANS[c["name"]]] = c["s"]
-            if c["name"] in ("run_etl", "etl_run"):
+            if c["name"] in ETL_CALLS:
                 lay["etl.run_s"] = c["s"]
         lay.update({"trace.wall_s": i["wall_s"], "jvm.cpu_s": i["cpu_s"],
                     "jvm.peak_rss_mb": i["peak_rss_mb"]})
@@ -354,7 +356,8 @@ def main():
             desc = i.get("error") or (f"setup {i['setup_s']:.3f} s, wall {i['wall_s']:.3f} s, "
                                        f"cpu {i['cpu_s']:.2f} s")
             print(f"{w} iteration {k}{' (traced)' if i['traced'] else ''}: {desc}; "
-                  f"load1 {i['load1_before']:.2f} -> {i.get('load1_after', 0.0):.2f}")
+                  f"load1 {i['load1_before']:.2f} -> {i.get('load1_after', 0.0):.2f}, "
+                  f"host steal {i.get('steal_s', 0.0):.1f} s")
             if a.trace and "error" not in i:
                 for c in i["calls"]:
                     print(f"  call {c['name']}: {c['s']:.4f} s, {c['rows']} rows"

@@ -22,9 +22,7 @@ import java.nio.file.{Files, Path, Paths}
   */
 object Runner {
 
-  /** A timed call: its name and a thunk returning the rows it produced
-    * (-1 when the rows are counted from its result files instead).
-    */
+  /** A timed call: its name and a thunk returning the rows it produced. */
   final case class Call(name: String, run: () => Long)
 
   /** A workload: set-up staging, the timed calls, and output checks that
@@ -62,7 +60,6 @@ object Runner {
     val w: Workload = workload match {
       case "etl_scale" => new EtlScale(spark, zones, work)
       case "cli_pipeline" => new CliPipeline(spark, dataDir, zones, work, seed)
-      case "ohdsi_sql" => new Registered(spark, dataDir, work, Registered.ohdsiSql)
       case other => throw new IllegalArgumentException(s"unknown workload: $other")
     }
     w.setup()
@@ -196,7 +193,7 @@ final class EtlScale(spark: SparkSession, zones: Zones, work: Path)
 
 /** `cli_pipeline`: the user path `--run-etl` -> `--data-quality` ->
   * `--achilles` through [[GraftCli]]'s entry points, over the derived CDM
-  * universe staged into the raw zone with one passthrough load per table.
+  * tables staged into the raw zone with one passthrough load per table.
   */
 final class CliPipeline(spark: SparkSession, dataDir: String, zones: Zones, work: Path, seed: Long)
     extends Runner.Workload {
@@ -260,11 +257,41 @@ final class CliPipeline(spark: SparkSession, dataDir: String, zones: Zones, work
       }
     val checks = graft.operators.DqdChecks.queryTexts(cliModel, rules).size.toLong
     val dqd = zones.read(spark, "dqd", "dqd_results").count()
-    val stored = zones.read(spark, "achilles", "achilles_results").count()
+    val achilles = zones.read(spark, "achilles", "achilles_results")
+    val stored = achilles.count()
+    val core = achilles.filter(col("analysis_id") < graft.operators.AchillesGen.GeneratedBase).count()
+    writeOracleChecks()
     counts ++ orphanDiffs ++
       (if (dqd != checks) Seq(s"dqd_results rows $dqd != generated checks $checks") else Nil) ++
-      (if (stored != achillesRows || stored == 0)
-        Seq(s"achilles_results rows $stored != recorded $achillesRows") else Nil)
+      (if (stored != achillesRows) Seq(s"achilles_results rows $stored != returned $achillesRows")
+       else Nil) ++
+      (if (core == 0) Seq("achilles_results holds no core (literal-id) analysis rows") else Nil)
+  }
+
+  /** The stored results that have a DuckDB rendering of their own, for the
+    * caller to replay over the omop zone: the whole DQD battery and the
+    * generated Achilles analyses (ids from `AchillesGen.GeneratedBase`).
+    */
+  private def writeOracleChecks(): Unit = {
+    import graft.operators.{AchillesGen, DqdChecks}
+    val dir = (zone: String, tb: String) =>
+      s"'${Paths.get(zones.tablePath(zone, tb)).toAbsolutePath}/*.parquet'"
+    val dqdCols = "check_id, check_name, check_level, category, cdm_table_name, cdm_field_name, " +
+      "num_violated_rows, num_denominator_rows, pct_violated_rows, threshold_value, failed"
+    writeFile(work.resolve("oracle_checks.json"), Json.obj(
+      "views" -> Json.obj(tables.map(tb => tb -> Json.str(dir("omop", tb))): _*),
+      "checks" -> Json.arr(Seq(
+        Json.obj("name" -> Json.str("dqd_results"),
+          "oracle" -> Json.str(DqdChecks.oracleSql(cliModel, rules)),
+          "stored" -> Json.str(s"SELECT $dqdCols FROM ${dir("dqd", "dqd_results")}")),
+        // the model has no timestamp column, so the merged battery holds no
+        // year-paired analyses and equals the count battery `oracleSql`
+        // renders; a paired row would show as an extra stored row
+        Json.obj("name" -> Json.str("achilles_results (generated analyses)"),
+          "oracle" -> Json.str(AchillesGen.oracleSql(cliModel)),
+          "stored" -> Json.str("SELECT analysis_id, stratum_1, count_value FROM " +
+            s"${dir("achilles", "achilles_results")} " +
+            s"WHERE analysis_id >= ${AchillesGen.GeneratedBase}"))))))
   }
 }
 
@@ -276,43 +303,6 @@ object CliPipeline {
     */
   val tables: Seq[String] =
     Seq("person", "visit_occurrence")
-}
-
-/** A family of registered queries ([[graft.SparkEntry.queries]]), each call
-  * writing its result under `<work>/results/<name>` for the oracle check,
-  * which the caller runs against [[graft.SparkEntry.oracleSql]].
-  */
-final class Registered(spark: SparkSession, dataDir: String, work: Path, names: Seq[String])
-    extends Runner.Workload {
-  import Runner._
-
-  def setup(): Unit = {
-    val oracles = graft.SparkEntry.oracleSql
-    writeFile(work.resolve("oracle_sql.json"), Json.obj(names.map(n => n -> Json.str(oracles(n))): _*))
-  }
-
-  def calls: Seq[Call] = {
-    val qs = graft.SparkEntry.queries
-    names.map(n => Call(n, () => {
-      qs(n)(spark, dataDir).write.mode("overwrite").parquet(work.resolve(s"results/$n").toString)
-      -1L
-    }))
-  }
-
-  def check(): Seq[String] = Seq.empty
-}
-
-object Registered {
-  /** The `ohdsi_sql_*` family minus the six queries that read the derived
-    * CDM run-once stores: their first caller pays the Achilles battery
-    * build, which belongs to `cli_pipeline`.
-    */
-  val StoreReaders: Set[String] = Set("achilles105", "achilles701", "concept_check",
-    "delete_flow", "heel_rule", "plausible_low").map("ohdsi_sql_" + _)
-
-  def ohdsiSql: Seq[String] = graft.SparkEntry.queries.keys.toSeq
-    .filter(n => n.startsWith("ohdsi_sql_") && !StoreReaders(n)).sorted
-    .zipWithIndex.collect { case (n, i) if i % 17 == 0 => n }
 }
 
 /** Just enough JSON writing for the iteration record. */
