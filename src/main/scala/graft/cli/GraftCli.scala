@@ -256,14 +256,17 @@ object GraftCli {
     * the omop zone (absent tables evaluate as empty, like a fresh DB),
     * store the rows in the dqd zone (`data_quality.py:239-247`), export
     * the dashboard JSON when asked (`:391-421`). Returns the stored rows.
+    * Without `rules` the battery runs the CDM rule catalog restricted to
+    * `model` ([[graft.queries.LifecycleQueries.cdmRules]]).
     */
   def dataQuality(
       s: SparkSession,
       zones: Zones,
       model: CdmModel = Cdm54.model,
-      rules: DqdChecks.RuleSet = graft.queries.LifecycleQueries.cdm54Rules,
+      rules: DqdChecks.RuleSet = null,
       jsonPath: Option[Path] = None,
       cohortDefinitionId: Option[Long] = None): DataFrame = {
+    val ruleSet = Option(rules).getOrElse(graft.queries.LifecycleQueries.cdmRules(model))
     val omop = zones.listTables(s, "omop").toSet
     val base: String => DataFrame = tb =>
       if (omop.contains(tb)) zones.read(s, "omop", tb) else emptyTyped(s, model, tb)
@@ -277,10 +280,10 @@ object GraftCli {
     // dqdashboard_results.query_text, served by the show-query drill-down)
     val texts = {
       import s.implicits._
-      DqdChecks.queryTexts(model, rules).toDF("check_id", "query_text")
+      DqdChecks.queryTexts(model, ruleSet).toDF("check_id", "query_text")
     }
     zones.write(
-      DqdChecks.fieldLevel(model, load, rules)
+      DqdChecks.fieldLevel(model, load, ruleSet)
         .join(broadcast(texts), Seq("check_id"), "left")
         .withColumn("run_timestamp", lit(null).cast("timestamp")),
       "dqd", "dqd_results")

@@ -200,9 +200,12 @@ object FolderEtl {
     // W3: deterministic dedup over the surrogate identity — restricted to
     // the columns the user's queries actually emitted (the reference's
     // merge projects the model columns, NULL-defaulting the absent ones;
-    // absent concept columns cannot partition the dedup window)
-    val identity = (model.pk(tb).toSeq ++ conceptCols).distinct.filter(df.columns.contains)
-    if (identity.nonEmpty) df = MergeOps.dedupKeepFirst(df, identity)
+    // absent concept columns cannot partition the dedup window). Without
+    // an emitted pk there is no surrogate identity: concept values alone
+    // would collapse distinct rows, and S10 already dropped exact repeats
+    model.pk(tb).filter(df.columns.contains).foreach { pk =>
+      df = MergeOps.dedupKeepFirst(df, (pk +: conceptCols).distinct.filter(df.columns.contains))
+    }
 
     // S11 atomic replace, laid out on the model's cluster keys (the
     // reference's per-table `cluster by` — key-range scans skip row groups)

@@ -21,10 +21,14 @@ final case class RiabConfig(sections: Map[String, Map[String, String]]) {
   def dbEngine: String = riab.getOrElse("db_engine",
     throw new IllegalArgumentException("[riab] db_engine missing"))
   def cdmFolderPath: Option[String] = riab.get("cdm_folder_path")
-  /** `etl.py` defaults: 9 parallel tables, 16 worker threads per table. */
-  def maxParallelTables: Int = riab.get("max_parallel_tables").map(_.toInt).getOrElse(9)
-  def maxWorkerThreadsPerTable: Int =
-    riab.get("max_worker_threads_per_table").map(_.toInt).getOrElse(16)
+  /** `etl.py` defaults: 9 parallel tables, 16 worker threads per table. A
+    * malformed or non-positive value falls back to the default.
+    */
+  def maxParallelTables: Int = positive("max_parallel_tables", 9)
+  def maxWorkerThreadsPerTable: Int = positive("max_worker_threads_per_table", 16)
+
+  private def positive(key: String, default: Int): Int =
+    riab.get(key).flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(default)
 
   /** The selected backend's section (`[spark]`, `[bigquery]`, ...). */
   def backend: Map[String, String] = sections.getOrElse(dbEngine, Map.empty)

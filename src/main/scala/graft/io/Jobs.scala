@@ -16,10 +16,11 @@ object Jobs {
   def concurrently(thunks: Seq[() => Unit], maxParallel: Int = 8): Unit = {
     // measurement/ops knob: -Dgraft.jobs.maxParallel=1 serializes every
     // overlapped group on the SAME binary — the clean A/B for the §2.6
-    // overlaps (and an escape hatch for memory-tight deployments)
+    // overlaps (and an escape hatch for memory-tight deployments); a
+    // malformed or non-positive value falls back to `maxParallel`
     val cap = sys.props.get("graft.jobs.maxParallel")
       .orElse(sys.env.get("GRAFT_JOBS_MAXPAR"))
-      .map(_.toInt).getOrElse(maxParallel)
+      .flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(maxParallel)
     if (thunks.size <= 1 || cap <= 1) thunks.foreach(_.apply())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(

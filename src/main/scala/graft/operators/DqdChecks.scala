@@ -332,6 +332,43 @@ object DqdChecks {
         invCol = Some("invalid_reason")))
     }.sortBy(r => (r.table, r.field))
 
+  /** `rules` minus every rule naming a table or column `model` lacks —
+    * including a parent reached through an FK the model does not declare —
+    * so one rule catalog serves any subset of the CDM.
+    */
+  def restrictTo(model: CdmModel, rules: RuleSet): RuleSet = {
+    def has(tb: String, cols: String*): Boolean =
+      model.tables.contains(tb) && cols.forall(model.columns(tb).contains)
+    def parentHas(tb: String, fkCol: String, cols: String*): Boolean =
+      has(tb, fkCol) && model.fks(tb).get(fkCol).exists(has(_, cols: _*))
+    rules.copy(
+      bounds = rules.bounds.filter { case ((tb, f), _) => has(tb, f) },
+      temporal = rules.temporal.filter(r =>
+        has(r.table, r.field) && parentHas(r.table, r.fkCol, r.parentField)),
+      startEnd = rules.startEnd.filter(r => has(r.table, r.startField, r.endField)),
+      domains = rules.domains.filter(r => has(r.table, r.field)),
+      completeness = rules.completeness.filter(r =>
+        parentHas(r.table, r.fkCol) && model.pk(model.fks(r.table)(r.fkCol)).isDefined),
+      thresholds = rules.thresholds.filter { case ((_, tb, _), _) => has(tb) },
+      concepts = rules.concepts.filter(r => has(r.table, r.strataCol, r.field)),
+      withinVisit = rules.withinVisit.filter(r =>
+        has(r.table, r.field) && parentHas(r.table, r.fkCol, r.parentStart, r.parentEnd)),
+      duringLife = rules.duringLife.filter(r => has(r.table, r.field, r.fkCol) &&
+        has(r.deathTable, r.deathKey, r.deathDateField)),
+      conceptAttrs = rules.conceptAttrs.filter(r => has(r.table, r.field) &&
+        has(r.conceptTable, r.conceptPk +: r.attrCol +: r.invCol.toSeq: _*)),
+      recordCompleteness = rules.recordCompleteness.filter(r => has(r.table, r.field)),
+      sourceValues = rules.sourceValues.filter(r => has(r.table, r.field, r.conceptField)),
+      siblings = rules.siblings.filter(r =>
+        has(r.table, r.tableKey) && has(r.sibling, r.siblingKey)),
+      genders = rules.genders.filter(r =>
+        has(r.table, r.conceptCol) && parentHas(r.table, r.fkCol, r.parentGenderCol)),
+      genderDesc = rules.genderDesc.filter(r => has(r.table, r.conceptCol) &&
+        has(r.closureTable, r.ancestorCol, r.descendantCol) &&
+        parentHas(r.table, r.fkCol, r.parentGenderCol)),
+      units = rules.units.filter(r => has(r.table, r.conceptCol, r.unitCol)))
+  }
+
   // --------------------------------------------------------------- checks
 
   /** One generated check: aggregate expressions for violated/denominator

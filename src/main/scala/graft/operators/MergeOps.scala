@@ -65,6 +65,9 @@ object MergeOps {
     */
   def dedupKeepFirst(df: DataFrame, keyCols: Seq[String]): DataFrame = {
     val orderCols = df.columns.filterNot(keyCols.contains).map(col).toSeq
+    // every column is a key (a table emitting only its pk): rows sharing
+    // the key are identical, and a window cannot rank without ORDER BY
+    if (orderCols.isEmpty) return df.dropDuplicates(keyCols)
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(orderCols: _*)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)

@@ -302,8 +302,16 @@ object LifecycleQueries {
     * drug-era fkClass rules, condition-era completeness, and two
     * illustrative gender-specific concept rules (DQD Concept_Level shape).
     */
-  def cdm54Rules: graft.operators.DqdChecks.RuleSet = {
-    val m = graft.model.Cdm54.model
+  def cdm54Rules: graft.operators.DqdChecks.RuleSet = cdmRuleCatalog(graft.model.Cdm54.model)
+
+  /** The same rule builders over any CDM subset `m`, restricted to the
+    * tables and columns `m` carries (`--data-quality`'s default rules);
+    * over [[graft.model.Cdm54.model]] this equals [[cdm54Rules]].
+    */
+  def cdmRules(m: graft.model.CdmModel): graft.operators.DqdChecks.RuleSet =
+    Dqd.restrictTo(m, cdmRuleCatalog(m))
+
+  private def cdmRuleCatalog(m: graft.model.CdmModel): graft.operators.DqdChecks.RuleSet =
     Dqd.RuleSet(
       startEnd = Dqd.startEndRules(m),
       completeness = Dqd.personCompletenessRules(m),
@@ -353,7 +361,6 @@ object LifecycleQueries {
           "unit_concept_id", Seq("8504", "9529")),
         Dqd.UnitRule("measurement", "measurement_concept_id", "3036277",
           "unit_concept_id", Seq("8582", "9327"))))
-  }
 
   /** The metadata-GENERATED check battery (TABLE-level cdmTable presence +
     * measurePersonCompleteness + FIELD-level cdmField / isRequired /

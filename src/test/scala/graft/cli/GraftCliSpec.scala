@@ -353,6 +353,31 @@ class GraftCliSpec extends SparkSpec {
     assert(lineage.filter(col("omop_table") === "person").count() === 6L)
   }
 
+  test("--data-quality's default rules follow the model: person + visit_occurrence") {
+    import spark.implicits._
+    val zones = newZones("dqdefault")
+    // the CDM 5.4 person and visit tables, FKs kept only inside the subset
+    val kept = Set("person", "visit_occurrence")
+    val model = Cdm54.model.copy(fields = Cdm54.model.fields.collect {
+      case f if kept(f.table) => f.copy(fkTable = f.fkTable.filter(kept + "concept"))
+    })
+    val people = Seq((1L, 8507L, 1980L), (2L, 8532L, 1990L))
+      .toDF("person_id", "gender_concept_id", "year_of_birth")
+    zones.write(people.select(model.sparkSchema("person").fields.toSeq.map(f =>
+      (if (people.columns.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)): _*), "omop", "person")
+    val texts = graft.operators.DqdChecks.queryTexts(model,
+      graft.queries.LifecycleQueries.cdmRules(model))
+    val stored = GraftCli.dataQuality(spark, zones, model)
+    val ids = stored.select("check_id").as[String].collect().toSeq
+    assert(ids.sorted === texts.map(_._1).sorted)
+    // the model-derived families are present, the CDM 5.4-only ones are not
+    val names = stored.select("check_name").distinct().as[String].collect().toSet
+    assert(Set("plausibleStartBeforeEnd", "measurePersonCompleteness", "fkDomain")
+      .subsetOf(names), names)
+    assert(!names.contains("plausibleGender"), names)
+  }
+
   test("--cohort-definition-id restricts person-keyed tables before the checks") {
     import spark.implicits._
     val zones = newZones("dqcohort")

@@ -65,4 +65,40 @@ class EtlIntegrationSpec extends SparkSpec {
     // dense ids start at 1 per swap
     assert(nation.values.toSet == Set(1L, 2L))
   }
+
+  test("FolderEtl keeps every row of a pk-less table whose rows share concept values") {
+    import graft.model.{CdmField, CdmModel}
+    def f(t: String, n: String, dt: String, pk: Boolean = false, fk: Option[String] = None) =
+      CdmField(t, n, dt, required = false, isPk = pk, fk, "CDM")
+    // observation_period without a pk, as in the derived CDM
+    val m = CdmModel(fields = Seq(
+      f("person", "person_id", "int64", pk = true),
+      f("observation_period", "person_id", "int64", fk = Some("person")),
+      f("observation_period", "observation_period_start_date", "date"),
+      f("observation_period", "period_type_concept_id", "int64")))
+    val zones = Zones(Files.createTempDirectory("graft-etl-nopk").toString)
+    val folder = Files.createTempDirectory("graft-etl-nopk-folder")
+    zones.write(Seq(11L, 12L, 13L).toDF("person_id"), "raw", "persons")
+    // every period shares the one type concept; person 11 has two periods
+    zones.write(Seq((11L, "2020-01-01"), (11L, "2021-01-01"), (12L, "2020-01-01"),
+      (13L, "2022-06-01")).toDF("person_id", "start_d"), "raw", "periods")
+    def write(rel: String, sql: String): Unit = {
+      val p = folder.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, sql)
+    }
+    write("person/load.sql.jinja", "SELECT person_id FROM {{project_raw}}_persons")
+    write("observation_period/load.sql.jinja",
+      """SELECT person_id, CAST(start_d AS DATE) AS observation_period_start_date,
+        |  CAST(32817 AS BIGINT) AS period_type_concept_id
+        |FROM {{project_raw}}_periods""".stripMargin)
+
+    val counts = FolderEtl.run(spark, m, zones, folder)
+    assert(counts === Map("person" -> 3L, "observation_period" -> 4L))
+    val periods = zones.read(spark, "omop", "observation_period")
+    // person_id rewrote through the person swap: two periods on one person
+    assert(periods.groupBy("person_id").count().select("count").as[Long]
+      .collect().sorted.toSeq === Seq(1L, 1L, 2L))
+    assert(periods.filter(col("person_id").between(1L, 3L)).count() === 4L)
+  }
 }

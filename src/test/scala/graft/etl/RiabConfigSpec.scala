@@ -70,6 +70,19 @@ class RiabConfigSpec extends AnyFunSuite {
     }
   }
 
+  test("malformed or non-positive parallelism falls back to the defaults") {
+    for ((tables, workers) <- Seq(("abc", "1.5"), ("0", "-3"), ("", " ")))
+      withClue(s"max_parallel_tables=$tables max_worker_threads_per_table=$workers: ") {
+        val c = RiabConfig.parse(
+          s"[riab]\nmax_parallel_tables=$tables\nmax_worker_threads_per_table=$workers\n")
+        assert(c.maxParallelTables === 9)
+        assert(c.maxWorkerThreadsPerTable === 16)
+      }
+    // surrounding whitespace is not malformed
+    val c = RiabConfig.parse("[riab]\nmax_parallel_tables= 3 \n")
+    assert(c.maxParallelTables === 3)
+  }
+
   test("key=value before any [section] throws like configparser") {
     val e = intercept[IllegalArgumentException](
       RiabConfig.parse("db_engine=spark\n[riab]\n"))

@@ -221,6 +221,20 @@ class DqdChecksSpec extends SparkSpec {
     assert(missing.isEmpty, s"battery lacks check types: $missing")
   }
 
+  test("restricting the CDM rule catalog to the full CDM 5.4 model drops nothing") {
+    val cdm54 = graft.model.Cdm54.model
+    val rules = graft.queries.LifecycleQueries.cdm54Rules
+    assert(graft.queries.LifecycleQueries.cdmRules(cdm54) === rules)
+    // and a subset model keeps only rules over its own tables and columns
+    val sub = cdm54.copy(fields = cdm54.fields.filter(_.table == "person")
+      .map(_.copy(fkTable = None)))
+    val kept = restrictTo(sub, rules)
+    assert(kept.domains.map(_.table) === Seq("person"))
+    assert(kept.bounds.keySet === Set(("person", "year_of_birth")))
+    assert(kept.temporal.isEmpty && kept.completeness.isEmpty && kept.genders.isEmpty
+      && kept.conceptAttrs.isEmpty && kept.units.isEmpty && kept.siblings.isEmpty)
+  }
+
   test("the battery enumerates exactly the oracle's check set") {
     val oracleIds = "'(field|table|concept)_[A-Za-z]+_[A-Za-z0-9_]+'".r
     val sql = oracleSql(model, rules)
