@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
@@ -18,20 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf: the compiled-class cache defaults to 100 entries, but
-      // the generated DQD/Achilles batteries alone produce several hundred
-      // distinct codegen classes — at 100 the cache thrashes and composite
-      // queries re-Janino-compile mid-bench (etl_two_stage 27.8s in the
-      // full run vs 13.4s standalone)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // warm the file index / parquet footers once so the alphabetically-first

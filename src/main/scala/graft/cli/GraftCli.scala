@@ -534,15 +534,10 @@ object GraftCli {
     * options in riab.ini.
     */
   private def session(backend: Map[String, String]): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(backend.getOrElse("master", sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")))
-      .appName("graft")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        backend.getOrElse("shuffle_partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
+    val master = backend.getOrElse("master", sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
+    val partitions =
+      backend.getOrElse("shuffle_partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val builder = graft.GraftSession.builder(master, partitions).appName("graft")
     backend.foreach { case (k, v) => if (k.startsWith("spark.")) builder.config(k, v) }
     builder.getOrCreate()
   }

@@ -5,21 +5,6 @@ import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
-/** Stage-1 of the "two-stage rocket": level-barrier scheduling of per-table
-  * ETL work (`/root/reference/src/riab/etl/etl.py:82-175`).
-  *
-  * The FK-dependency DAG resolves into levels ([[CdmModel.dependencyLevels]]);
-  * tables inside one level share no FK edges, so they run in parallel —
-  * Scala `Future`s submitting concurrent Spark jobs on one SparkSession,
-  * the analogue of the reference's `ThreadPoolExecutor(max_parallel_tables
-  * = 9)` (`etl_base.py:29`). A barrier sits between levels because level
-  * N+1's FK-swap joins read the swap tables level N materialized.
-  *
-  * `onlyTables` reproduces `--table` (`etl.py:109-129`): restrict to the
-  * given tables while preserving level order. Spark's scheduler interleaves
-  * the concurrent jobs across executors; on a cluster, set a FAIR pool per
-  * level if strict sharing is wanted.
-  */
 /** The CLI restriction flags of `etl.py:109-129` / `riab.py`:
   *  - `onlyQueries`: `--only-query` — run just the named user-query files,
   *    grouped by their OMOP table (etl.py groups `Path.parts[0]`), each
@@ -54,32 +39,24 @@ final case class EtlFlags(
     else Seq("APPROVED")
 }
 
+/** Stage-1 of the "two-stage rocket": per-table ETL work scheduled over
+  * the FK-dependency DAG (the reference's `etl/etl.py:82-175`).
+  * Tables run as Scala `Future`s submitting concurrent Spark jobs on one
+  * SparkSession, the analogue of the reference's
+  * `ThreadPoolExecutor(max_parallel_tables = 9)` (`etl_base.py:29`).
+  */
 final case class EtlRunner(model: CdmModel, maxParallelTables: Int = 9) {
 
-  /** Run `process` for every table, level by level. Returns per-table
-    * results in completion order within levels. Any failure aborts the run
-    * (fail-fast like the reference's future.result()).
-    */
-  def run[T](
-      universe: Seq[String],
-      onlyTables: Option[Set[String]] = None)(process: String => T): Map[String, T] = {
-    val pool = Executors.newFixedThreadPool(math.max(1, maxParallelTables))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      model.dependencyLevels(universe).foldLeft(Map.empty[String, T]) { (acc, level) =>
-        val tables = level.filter(t => onlyTables.forall(_.contains(t)))
-        val futures = tables.map(t => Future(t -> process(t)))
-        // the barrier: level N+1 must not start before level N finished
-        acc ++ Await.result(Future.sequence(futures), Duration.Inf).toMap
-      }
-    } finally pool.shutdown()
-  }
-
-  /** [[runFlow]] with the level barrier dissolved into the per-table data
-    * dependencies it over-approximated. A table's `prepareTable` — user
-    * queries to the work upload, usagi/custom uploads, and the PK-swap
-    * write — reads only the raw zone and its own uploads, NEVER another
-    * table, so every prepare launches immediately and runs concurrently.
+  /** The full `etl.py:109-129` control flow under [[EtlFlags]], without a
+    * level barrier: `--only-query` runs the named queries table by table,
+    * `--table` the named tables, otherwise the whole dependency DAG; each
+    * processed table's event step follows unless `--skip-event-fks-step`;
+    * the invalid-reason cleanup runs ONLY on a full etl.
+    *
+    * A table's `prepareTable` — user queries to the work upload,
+    * usagi/custom uploads, and the PK-swap write — reads only the raw
+    * zone and its own uploads, NEVER another table, so every prepare
+    * launches immediately and runs concurrently.
     * The returned finalize thunk (FK rewrite, dedup, gold write) is the
     * only phase that reads other tables' artifacts (the parents' swap
     * tables), so each finalize is gated on exactly {own + FK-parent}
@@ -89,11 +66,10 @@ final case class EtlRunner(model: CdmModel, maxParallelTables: Int = 9) {
     * event step touches (lineage map + version metadata), so it gates on
     * all prepares and drains concurrently with the finalizes.
     *
-    * On a 1000-executor run the critical path collapses from
-    * sum-over-levels to max-over-tables(prepare) + finalize — FK cycles
-    * cannot deadlock because gates wait on prepares only, and prepares
-    * wait on nothing. Restricted runs (`--table` / `--only-query`) stay
-    * sequential like [[runFlow]]'s.
+    * The critical path is max-over-tables(prepare) + finalize, not a
+    * sum over dependency levels — FK cycles cannot deadlock because gates
+    * wait on prepares only, and prepares wait on nothing. Restricted runs
+    * (`--table` / `--only-query`) stay sequential.
     */
   def runFlowPipelined[T](
       universe: Seq[String],
@@ -133,43 +109,4 @@ final case class EtlRunner(model: CdmModel, maxParallelTables: Int = 9) {
       } finally pool.shutdown()
     }
   }
-
-  /** The full `etl.py:109-129` control flow under [[EtlFlags]]:
-    * `--only-query` runs the named queries table by table, `--table` the
-    * named tables, otherwise the whole dependency DAG; each processed
-    * table's event step follows unless `--skip-event-fks-step`; the
-    * invalid-reason cleanup runs ONLY on a full etl.
-    */
-  def runFlow[T](
-      universe: Seq[String],
-      flags: EtlFlags = EtlFlags())(
-      processTable: (String, Seq[String]) => T,
-      eventStep: String => Unit = _ => (),
-      postEtlCleanup: () => Unit = () => ()): Map[String, T] = {
-    def withEvents(tb: String, queries: Seq[String]): (String, T) = {
-      val r = processTable(tb, queries)
-      if (!flags.skipEventFksStep) eventStep(tb)
-      tb -> r
-    }
-    if (flags.onlyQueries.isDefined)
-      flags.queriesByTable.toSeq.sortBy(_._1)
-        .map { case (tb, qs) => withEvents(tb, qs) }.toMap
-    else if (flags.onlyTables.isDefined)
-      flags.onlyTables.get.toSeq.sorted.map(tb => withEvents(tb, Seq.empty)).toMap
-    else {
-      val results = run(universe)(tb => processTable(tb, Seq.empty))
-      if (!flags.skipEventFksStep) universe.foreach(eventStep)
-      postEtlCleanup() // full etl only (`etl.py:126-129`)
-      results
-    }
-  }
-}
-
-object EtlRunner {
-  /** Wire the runner from the riab.ini surface the way the reference CLI
-    * does (`cli.py` passes `[riab] max_parallel_tables` into the ETL's
-    * thread pool).
-    */
-  def fromConfig(model: CdmModel, config: RiabConfig): EtlRunner =
-    EtlRunner(model, config.maxParallelTables)
 }

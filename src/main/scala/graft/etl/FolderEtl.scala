@@ -36,7 +36,7 @@ import scala.jdk.CollectionConverters._
   *
   * Scale shape: identical to the oracle-gated `etl_two_stage` composite —
   * swap tables are materialized parquet re-read by dependent levels (no
-  * plan grows with DAG depth), level-parallel scheduling via [[EtlRunner]],
+  * plan grows with DAG depth), FK-gated parallel scheduling via [[EtlRunner]],
   * equi-joins AQE can broadcast when genuinely small.
   */
 object FolderEtl {

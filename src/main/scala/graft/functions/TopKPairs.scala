@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   * Why it exists: every top-k tail in the similarity family ranked with
   * `row_number() OVER (PARTITION BY query ORDER BY sim DESC, id)`, which
   * shuffles and SORTS every candidate row — at serving scale the probed
-  * lists' full candidate set (AnnServeSoak's hot-centroid block measured
+  * lists' full candidate set (SOAK_r19.md's hot-centroid block measured
   * the rerank window as the salted serve's widest task: ~11 s over
   * 17.5M candidate rows). This aggregate keeps AT MOST `k` (score, id)
   * pairs per group in each map partition, so the exchange carries

@@ -101,17 +101,4 @@ object StoreVacuum {
     doomed.foreach { p => fs.delete(new Path(s"$root/$DirPrefix$p"), true) }
     doomed
   }
-
-  /** Recursive file count under every zone root of `family` — the soak's
-    * flat-across-generations evidence metric.
-    */
-  def familyFileCount(spark: SparkSession, root: String, family: Family): Long = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(p: Path): Long = {
-      val st = fs.listStatus(p)
-      st.count(_.isFile).toLong + st.filter(_.isDirectory).map(s => files(s.getPath)).sum
-    }
-    listPurposes(spark, root).filter(family.owns)
-      .map(p => files(new Path(s"$root/$DirPrefix$p"))).sum
-  }
 }

@@ -110,23 +110,9 @@ final case class Zones(root: String) {
       .saveAsTable(tmpName)
     val fp = new Path(finalPath)
     val fs = fp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // full AtomicWrite demote/promote discipline (not delete-then-rename):
-    // demote live -> .__old, promote staged, drop .__old only after a
-    // successful promote — and throw on any failed rename, so a crash or
-    // rename failure can never leave the catalog pointing at a missing
-    // path with the old data already deleted
-    val oldP = new Path(finalPath + ".__old")
-    if (fs.exists(oldP)) fs.delete(oldP, true)
-    if (fs.exists(fp)) {
-      if (!fs.rename(fp, oldP))
-        throw new java.io.IOException(s"bucketed swap: demote failed for $finalPath")
-    }
-    if (!fs.rename(new Path(tmpPath), fp)) {
-      // restore the demoted table before failing — the live name stays valid
-      if (fs.exists(oldP)) fs.rename(oldP, fp)
-      throw new java.io.IOException(s"bucketed swap: promote failed for $finalPath")
-    }
-    fs.delete(oldP, true)
+    // a failed swap leaves the previous files at the live path, which the
+    // catalog entry still names
+    fs.delete(AtomicWrite.promote(fs, new Path(tmpPath), fp), true)
     spark.sql(s"ALTER TABLE $tmpName SET LOCATION '$finalPath'")
     spark.sql(s"DROP TABLE IF EXISTS $name")
     spark.sql(s"ALTER TABLE $tmpName RENAME TO $name")

@@ -158,7 +158,7 @@ object SimOps {
       // assignment — the dominant stage at scale) as ONE map-side-
       // combinable max-struct aggregation instead of a partition-sort
       // window: the window shuffles AND sorts all n·|C| scored rows
-      // (AnnServeSoak r18: 253 s at 200k × 400), the aggregation reduces
+      // (SOAK_r18.md: 253 s at 200k × 400), the aggregation reduces
       // each partition to one struct per item before the shuffle.
       // Identical pick by construction: max over (rankKey, -centroid_id)
       // == orderBy(rankKey desc, centroid_id asc) row 1; payload fields
@@ -356,7 +356,7 @@ object SimOps {
     * rule hard-caps its own sets at 1024; the MECHANISM accepts 4096,
     * the model budget) the nearest-centroid argmax is
     * ONE projection per row — no crossJoin, no scored-pair
-    * materialization, no shuffle. AnnServeSoak showed the 200k × 400
+    * materialization, no shuffle. SOAK_r18.md showed the 200k × 400
     * build's dominant cost was materializing the 80M scored pair rows
     * (vec + centroid arrays copied per pair), which no join-side
     * optimization removes; the projection never forms the pairs.
@@ -496,7 +496,7 @@ object SimOps {
     * aggregate instead of a row_number window. The window form shuffles
     * and SORTS every candidate row; this keeps ≤ k pairs per (group,
     * partition) on the map side, so the exchange never carries the full
-    * candidate set (AnnServeSoak: the rerank window was the salted
+    * candidate set (SOAK_r19.md: the rerank window was the salted
     * serve's widest task). Output identical to the window form: same
     * comparator, same rk numbering.
     */
@@ -744,7 +744,7 @@ object SimOps {
       col(idCol).as("centroid_id"), asDouble(col(vecCol)).as("centroid_vec")))
     // the corpus-wide keep=1 assignments route through the inlined fold
     // when the centroid set is within the family's 1024 bound (r18, the
-    // AnnServeSoak finding: the crossJoin's scored-pair materialization
+    // SOAK_r18.md finding: the crossJoin's scored-pair materialization
     // dominated, 8.6x on the index build) — identical lists either way
     val inverted = assignNearestAdaptive(corpus, centroids, idCol, vecCol,
       "item_id", "item_vec")
@@ -1494,7 +1494,7 @@ object SimOps {
       // it, the exact argmax is ONE projection per row
       // ([[mapSideAssign]], the stream assigner, bit-identical to the
       // crossJoin pick by its own spec): no scored pairs materialize at
-      // all (r18, the AnnServeSoak finding — the crossJoin's pair rows,
+      // all (the SOAK_r18.md finding — the crossJoin's pair rows,
       // two arrays each, dominated assignment)
       val centsSeq = cents
         .select(col("centroid_id").cast("long"), col("centroid_vec"))

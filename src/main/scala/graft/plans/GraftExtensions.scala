@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{ExpressionInfo, Literal}
 
 /** Session extensions registering the engine's native Catalyst functions —
-  * installed with `SparkSession.builder().withExtensions(new
-  * GraftExtensions)` (or `spark.sql.extensions=graft.plans.GraftExtensions`
-  * on a cluster), after which `rolling_hash` is a first-class SQL function
-  * that participates in whole-stage codegen like any built-in.
+  * installed by [[graft.GraftSession.builder]] (or
+  * `spark.sql.extensions=graft.plans.GraftExtensions` on a cluster), after
+  * which `rolling_hash` is a first-class SQL function that participates in
+  * whole-stage codegen like any built-in.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

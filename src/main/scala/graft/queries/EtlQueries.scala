@@ -9,8 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The full "two-stage rocket" composed end to end, the way `etl.py:82-159`
-  * runs it: stage 1 processes every table of the model universe level by
-  * level through [[EtlRunner]] (usagi-style concept mapping -> PK swap ->
+  * runs it: stage 1 processes every table of the model universe, each
+  * gated on its FK parents, through [[EtlRunner]] (usagi-style concept mapping -> PK swap ->
   * FK swaps -> atomic merge into the omop zone, per
   * `etl.py:177-323`), stage 2 rewrites the event table's polymorphic FK
   * through the swap tables stage 1 materialized

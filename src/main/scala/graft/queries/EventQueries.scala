@@ -383,37 +383,24 @@ object EventQueries {
   /** Drain a streaming frame through a memory sink with AvailableNow and
     * return the resulting table.
     *
-    * State-store sizing (100 TB posture, guide §2.2): each stateful
-    * operator runs ONE state-store instance per shuffle partition per
-    * micro-batch, pinned into the checkpoint at first start. On local[N]
-    * the session default (= core count, the bench contract) is kept
-    * unchanged; a production deployment sizes state partitioning
-    * independently of the session's batch shuffle width via
-    * `graft.stream.shuffle` (system property) or
-    * `SPARK_GRAFT_STREAM_SHUFFLE` (env) — partitions should hold state in
-    * the 100 MB–1 GB band, not mirror the core count. The conf mutation
-    * is scoped to the query start and restored after (the value is
-    * captured into the checkpoint at start; later batches read it from
-    * there).
+    * State-store sizing: each stateful operator runs ONE state-store
+    * instance per shuffle partition per micro-batch, pinned into the
+    * checkpoint at first start from the session's
+    * `spark.sql.shuffle.partitions`. The drain never changes that conf:
+    * the session is shared with concurrent batch queries.
     */
   private[graft] def drainToTable(df: DataFrame, sink: String, mode: String): DataFrame = {
     val s = df.sparkSession
     val ckpt = new org.apache.hadoop.fs.Path(
       new java.io.File(s"${graft.io.Zones.defaultRoot}/stream_ckpt_$sink").getAbsolutePath)
     ckpt.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ckpt, true)
-    val knob = sys.props.get("graft.stream.shuffle")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE"))
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    knob.foreach(v => s.conf.set("spark.sql.shuffle.partitions", v))
-    try {
-      val q = df.writeStream
-        .format("memory").queryName(sink)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally knob.foreach(_ => s.conf.set("spark.sql.shuffle.partitions", prev))
+    val q = df.writeStream
+      .format("memory").queryName(sink)
+      .outputMode(mode)
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try q.awaitTermination() finally q.stop()
     s.table(sink)
   }
 

@@ -493,8 +493,10 @@ object LifecycleQueries {
     graft.io.StoreVacuum.Family("bpe", LlmQueries.BpeStoreGen),
     graft.io.StoreVacuum.Family("bkt", EventQueries.BktStoreGen))
 
-  /** Purposes safe to retire wholesale: soak scratch written only by the
-    * standalone soak mains, plus (r19, VERDICT #2) the ANN serving-tier
+  /** Purposes safe to retire wholesale: scratch of the retired soak mains
+    * (`compactsoak_*`, `annsoak_*`; their results are in SOAK_r17–20.md,
+    * and warehouses written by earlier runs can still hold the
+    * directories), plus (r19, VERDICT #2) the ANN serving-tier
     * scratch purposes — `ivfgrow_*` / `ivfcomp_*` / `annserve_*` are
     * rebuilt unconditionally at the START of every invocation of their
     * owning entry (no cross-invocation read precedes a write), so a

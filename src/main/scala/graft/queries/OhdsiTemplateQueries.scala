@@ -2331,144 +2331,6 @@ object OhdsiTemplateQueries {
     OhdsiSql.execute(s, DatepartTailSql)
   }
 
-  /** Scale soak (dev aid, driven by [[graft.tools.TemplateSoak]]): the
-    * DATA-PATH templates — pk-swap create+merge and the core
-    * `{omop_table}_merge` — run VERBATIM over sf-scaled uploads (one
-    * provider row per order, modular concept/fk codes), returning
-    * (step, seconds, rows). This is the evidence that the published
-    * templates' Catalyst plans scale with the upload batch: the swap
-    * anti-join and usagi/fk joins are equi-joins on bounded keys, the
-    * template's own ROW_NUMBER orders only the batch's NEW rows, and the
-    * final INSERT is one append.
-    */
-  def templateSoak(s: SparkSession, d: String): Seq[(String, Double, Long)] = {
-    stageSoakFixture(s, d, "graft_soak", "graft_soak_omop")
-    val db = "graft_soak"
-    val vars = Map(
-      "work_database_catalog" -> "spark_catalog",
-      "work_database_schema" -> db,
-      "omop_database_catalog" -> "spark_catalog",
-      "omop_database_schema" -> "graft_soak_omop",
-      "omop_table" -> "provider",
-      "primary_key_column" -> "provider_id",
-      "pk_auto_numbering" -> "true",
-      "process_semi_approved_mappings" -> "",
-      "min_custom_concept_id" -> "2000000000")
-    val listVars = Map(
-      "columns" -> Seq("provider_id", "provider_name", "specialty_concept_id",
-        "specialty_source_value", "year_of_birth", "care_site_id"),
-      "concept_id_columns" -> Seq("specialty_concept_id"),
-      "foreign_key_columns" -> Seq("care_site_id"),
-      "required_columns" -> Seq("care_site_id"),
-      "events" -> Seq.empty[String],
-      "sql_files" -> Seq("provider1", "provider2"),
-      "upload_tables" -> Seq("u1", "u2"))
-    def timed(label: String, table: String)(run: => Unit): (String, Double, Long) = {
-      val t0 = System.nanoTime()
-      run
-      val secs = (System.nanoTime() - t0) / 1e9
-      (label, secs, s.table(table).count())
-    }
-    Seq(
-      timed("pk_swap_create", s"$db.provider_id_swap") {
-        OhdsiSql.executeAll(s, JinjaLite.render(PkSwapCreateSql, vars, listVars))
-      },
-      timed("pk_swap_merge", s"$db.provider_id_swap") {
-        OhdsiSql.executeAll(s, JinjaLite.render(PkSwapMergeSql, vars, listVars))
-      },
-      timed("pk_swap_merge_idempotent", s"$db.provider_id_swap") {
-        OhdsiSql.executeAll(s, JinjaLite.render(PkSwapMergeSql, vars, listVars))
-      },
-      timed("omop_table_merge", "graft_soak_omop.provider") {
-        val in = getClass.getResourceAsStream("/graft/ohdsi/omop_table_merge.sql.jinja")
-        val text = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        OhdsiSql.executeAll(s, JinjaLite.render(text, vars, listVars))
-      })
-  }
-
-  /** The sf-scaled upload fixture shared by BOTH dialect soaks: two
-    * uploads (one per order, one per customer), a 1000-code usagi map,
-    * a 500-key care-site swap, the empty OMOP target.
-    */
-  private def stageSoakFixture(s: SparkSession, d: String,
-      db: String, omopDb: String): Unit = {
-    s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    s.sql(s"DROP DATABASE IF EXISTS $omopDb CASCADE")
-    val k = col("o_orderkey")
-    stage(s, db, "provider__upload__u1", t(s, d, "orders").select(
-      concat(lit("P_"), k.cast("string")).as("provider_id"),
-      concat(lit("prov "), k.cast("string")).as("provider_name"),
-      concat(lit("SRC_"), (k % 1000).cast("string")).as("specialty_concept_id"),
-      concat(lit("SV_"), k.cast("string")).as("specialty_source_value"),
-      (lit(1900) + k % 120).cast("int").as("year_of_birth"),
-      concat(lit("CS_"), (k % 500).cast("string")).as("care_site_id")))
-    stage(s, db, "provider__upload__u2", t(s, d, "customer").select(
-      concat(lit("PC_"), col("c_custkey").cast("string")).as("provider_id"),
-      col("c_name").as("provider_name"),
-      concat(lit("SRC_"), (col("c_custkey") % 1000).cast("string")).as("specialty_concept_id"),
-      concat(lit("SVC_"), col("c_custkey").cast("string")).as("specialty_source_value"),
-      (lit(1900) + col("c_custkey") % 120).cast("int").as("year_of_birth"),
-      concat(lit("CS_"), (col("c_custkey") % 500).cast("string")).as("care_site_id")))
-    stage(s, db, "provider__specialty_concept_id_usagi", s.range(0, 1000).select(
-      concat(lit("SRC_"), col("id").cast("string")).as("sourceCode"),
-      (col("id") + 100).cast("int").as("conceptId"),
-      lit("APPROVED").as("mappingStatus")))
-    stage(s, db, "care_site_id_swap", s.range(0, 500).select(
-      concat(lit("CS_"), col("id").cast("string")).as("x"),
-      (col("id") + 1).cast("int").as("y")))
-    stage(s, omopDb, "provider", s.range(0).select(
-      lit(0).as("provider_id"), lit("").as("provider_name"),
-      lit(0).as("specialty_concept_id"), lit("").as("specialty_source_value"),
-      lit(0).as("year_of_birth"), lit(0).as("care_site_id")))
-  }
-
-  /** The BIGQUERY-dialect twin of [[templateSoak]]: the published
-    * GoogleSQL pk-swap create+merge and `{omop_table}_merge` verbatim
-    * over the SAME sf-scaled uploads — the evidence that the bq tree's
-    * Catalyst plans scale exactly like the sql_server tree's (same
-    * equi-join shapes after the pre-pass; the only ordering is the
-    * template's own ROW_NUMBER over the batch's NEW rows).
-    */
-  def templateSoakBq(s: SparkSession, d: String): Seq[(String, Double, Long)] = {
-    val (db, omopDb) = ("graft_soak_bq", "graft_soak_bq_omop")
-    stageSoakFixture(s, d, db, omopDb)
-    val vars = Map(
-      "dataset_work" -> db,
-      "dataset_omop" -> omopDb,
-      "omop_table" -> "provider",
-      "primary_key_column" -> "provider_id",
-      "pk_auto_numbering" -> "true",
-      "process_semi_approved_mappings" -> "",
-      "min_custom_concept_id" -> "2000000000")
-    val listVars = Map(
-      "columns" -> Seq("provider_id", "provider_name", "specialty_concept_id",
-        "specialty_source_value", "year_of_birth", "care_site_id"),
-      "concept_id_columns" -> Seq("specialty_concept_id"),
-      "foreign_key_columns" -> Seq("care_site_id"),
-      "required_columns" -> Seq("care_site_id"),
-      "events" -> Seq.empty[String],
-      "sql_files" -> Seq("provider1", "provider2"),
-      "upload_tables" -> Seq("u1", "u2"))
-    def runRes(name: String): Unit = {
-      val in = getClass.getResourceAsStream(s"/graft/ohdsi/$name.sql.jinja")
-      val text = scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      OhdsiSql.executeAll(s,
-        OhdsiSql.translateBigQuery(JinjaLite.render(text, vars, listVars)),
-        sqlRender = false)
-    }
-    def timed(label: String, table: String)(run: => Unit): (String, Double, Long) = {
-      val t0 = System.nanoTime()
-      run
-      val secs = (System.nanoTime() - t0) / 1e9
-      (label, secs, s.table(table).count())
-    }
-    Seq(
-      timed("bq_pk_swap_create", s"$db.provider_id_swap") { runRes("bq_pk_swap_create") },
-      timed("bq_pk_swap_merge", s"$db.provider_id_swap") { runRes("bq_pk_swap_merge") },
-      timed("bq_pk_swap_merge_idem", s"$db.provider_id_swap") { runRes("bq_pk_swap_merge") },
-      timed("bq_omop_table_merge", s"$omopDb.provider") { runRes("bq_omop_table_merge") })
-  }
-
   val defs: Seq[(String, Q)] = Seq(
     "ohdsi_sql_cdm54_full" -> ohdsiSqlCdm54Full,
     "ohdsi_sql_validate_dups" -> ohdsiSqlValidateDups,

@@ -517,18 +517,22 @@ object OhdsiSql {
 
   /** Drop-and-recreate a catalog table (`[db.]table` or
     * `catalog.db.table`, catalog stripped — the session has one). The
-    * location is deleted alongside the DROP: a LOCATION left by a
-    * previous JVM whose in-memory catalog forgot the entry would
-    * otherwise fail the recreate (the r15 lesson).
+    * files at the location are moved aside before the DROP and deleted
+    * after the recreate: a LOCATION left by a previous JVM whose
+    * in-memory catalog forgot the entry would otherwise fail the
+    * recreate (the r15 lesson).
     *
     * Swap-by-rename (optimization guide §6 — write once, move the
     * pointer): the fresh contents are written ONCE to a staging
     * directory beside the final location (same filesystem), promoted by
-    * a directory rename, and the catalog entry re-pointed with the
-    * frame's exact schema. The previous protocol materialized to /tmp,
-    * read the copy back and `saveAsTable`d it — every write-back paid
-    * the data bytes TWICE plus a read; at 100 TB a catalog rewrite now
-    * moves each byte exactly once. Self-read safety is unchanged: the
+    * [[graft.io.AtomicWrite.promote]], and the catalog entry re-pointed
+    * with the frame's exact schema. The live files are demoted BEFORE
+    * the DROP (dropping a managed table deletes its location); a failed
+    * promote moves them back and re-registers the previous entry over
+    * them, so a read by name still returns the previous rows. The
+    * previous protocol materialized to /tmp, read the copy back and
+    * `saveAsTable`d it — every write-back paid the data bytes TWICE plus
+    * a read; at 100 TB a catalog rewrite now moves each byte exactly once. Self-read safety is unchanged: the
     * plan still reads the live location while the staging copy is
     * written, and the swap happens only after the write completes.
     */
@@ -559,22 +563,36 @@ object OhdsiSql {
     // dot-prefixed staging: invisible to Spark file listing, cannot
     // collide with a table name
     val staging = new org.apache.hadoop.fs.Path(warehouse + s"/$db.db/.graft_stage_$tbl")
+    def register(schema: org.apache.spark.sql.types.StructType, location: String): Unit = {
+      val props = clusterBy.map(keys =>
+        s" TBLPROPERTIES ('graft.cluster_by' = '${keys.mkString(",")}')").getOrElse("")
+      spark.sql(s"CREATE TABLE $dbTbl (${schema.toDDL}) " +
+        s"USING parquet LOCATION '$location'$props")
+      ()
+    }
+    val prior =
+      if (!spark.catalog.tableExists(dbTbl)) None
+      else Some(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tbl, Some(db))))
     fs.delete(staging, true)
     try {
       fresh.write.mode("overwrite").parquet(staging.toString)
-      spark.sql(s"DROP TABLE IF EXISTS $dbTbl")
-      fs.delete(loc, true)
-      require(fs.rename(staging, loc), s"staging rename failed: $staging -> $loc")
+      val old =
+        try graft.io.AtomicWrite.promote(fs, staging, loc,
+          detached = () => { spark.sql(s"DROP TABLE IF EXISTS $dbTbl"); () })
+        catch { case scala.util.control.NonFatal(e) =>
+          // the previous files are back where the previous entry named them
+          if (!spark.catalog.tableExists(dbTbl))
+            prior.foreach(t => register(t.schema, t.location.toString))
+          throw e
+        }
       // explicit schema — exactly the read-back schema of the files just
       // written (file sources read parquet columns as nullable), so the
       // catalog entry matches what the old read-back-and-save protocol
       // recorded, with no inference pass over the footers
-      val props = clusterBy.map(keys =>
-        s" TBLPROPERTIES ('graft.cluster_by' = '${keys.mkString(",")}')").getOrElse("")
-      val nullable = org.apache.spark.sql.types.StructType(
-        df.schema.fields.map(_.copy(nullable = true)))
-      spark.sql(s"CREATE TABLE $dbTbl (${nullable.toDDL}) " +
-        s"USING parquet LOCATION '${loc.toString}'$props")
+      register(org.apache.spark.sql.types.StructType(
+        df.schema.fields.map(_.copy(nullable = true))), loc.toString)
+      fs.delete(old, true)
     } finally {
       fs.delete(staging, true)
     }
@@ -604,8 +622,9 @@ object OhdsiSql {
       spark.sessionState.catalog.getTableMetadata(
         org.apache.spark.sql.catalyst.TableIdentifier(tbl, Some(db))).location)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir") + s"/$db.db/.graft_stage_append_$tbl")
+    // staged beside the registered location, so each move is a
+    // same-filesystem rename wherever the table lives
+    val staging = new org.apache.hadoop.fs.Path(loc.getParent, s".graft_stage_append_$tbl")
     fs.delete(staging, true)
     try {
       sorted.write.mode("overwrite").parquet(staging.toString)

@@ -7,15 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * single test JVM), small parallelism so the suite stays fast.
   */
 object SparkSpec {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.builder("local[4]", "4").appName("graft-test").getOrCreate()
 }
 
 trait SparkSpec extends AnyFunSuite {

@@ -8,11 +8,10 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** End-to-end stage-1 run: the EtlRunner schedules real per-table Spark
-  * work in dependency order — each table builds its PK swap into the work
-  * zone, then rewrites its FK columns through the swap tables its
-  * dependencies materialized in EARLIER levels (which is exactly why the
-  * level barrier exists), and lands the result in the omop zone through
-  * the atomic writer.
+  * work — each table's prepare builds its PK swap into the work zone, and
+  * its finalize, gated on its FK parents' prepares, rewrites its FK
+  * columns through the swap tables those parents materialized and lands
+  * the result in the omop zone through the atomic writer.
   */
 class EtlIntegrationSpec extends SparkSpec {
   import spark.implicits._
@@ -28,27 +27,29 @@ class EtlIntegrationSpec extends SparkSpec {
         .toDF("c_custkey", "c_name", "c_nationkey"))
     val universe = raw.keys.toSeq
 
-    EtlRunner(m, maxParallelTables = 4).run(universe) { table =>
+    EtlRunner(m, maxParallelTables = 4).runFlowPipelined(universe)(prepareTable = (table, _) => {
       val df = raw(table)
       val pk = m.pk(table).get
-      // build this table's dense PK swap into the work zone
+      // prepare: build this table's dense PK swap into the work zone
       val swap = Swap.denseIds(
         df.select(col(pk).cast("string").as("x")).distinct(), Seq("x"), 0L)
       zones.write(swap, "work", s"${pk}_swap")
-      // rewrite FK columns through the swaps earlier levels materialized
-      val fks = m.fks(table).map { case (c, target) => c -> m.pk(target).get }
-      val rewritten = fks.foldLeft(df) { case (acc, (fkCol, targetPk)) =>
-        val fkSwap = zones.read(spark, "work", s"${targetPk}_swap")
-        MergeOps.fkSwapJoin(
-          acc.withColumn(fkCol, col(fkCol).cast("string")), fkSwap, fkCol, required = true)
+      Some { () =>
+        // finalize: rewrite FK columns through the swaps the parents wrote
+        val fks = m.fks(table).map { case (c, target) => c -> m.pk(target).get }
+        val rewritten = fks.foldLeft(df) { case (acc, (fkCol, targetPk)) =>
+          val fkSwap = zones.read(spark, "work", s"${targetPk}_swap")
+          MergeOps.fkSwapJoin(
+            acc.withColumn(fkCol, col(fkCol).cast("string")), fkSwap, fkCol, required = true)
+        }
+        // swap this table's own PK and land in the omop zone atomically
+        val landed = MergeOps.fkSwapJoin(
+          rewritten.withColumn(pk, col(pk).cast("string")),
+          zones.read(spark, "work", s"${pk}_swap"), pk, required = true)
+        zones.write(landed, "omop", table)
+        table
       }
-      // swap this table's own PK and land in the omop zone atomically
-      val landed = MergeOps.fkSwapJoin(
-        rewritten.withColumn(pk, col(pk).cast("string")),
-        zones.read(spark, "work", s"${pk}_swap"), pk, required = true)
-      zones.write(landed, "omop", table)
-      table
-    }
+    })
 
     // the work zone holds one swap per table; omop holds every table
     assert(zones.listTables(spark, "work") ==

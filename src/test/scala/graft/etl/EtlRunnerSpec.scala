@@ -4,53 +4,32 @@ import graft.model.TpchModel
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 
-/** Level-barrier scheduling semantics (etl.py:82-175 analogue). */
+/** FK-gated scheduling and the `etl.py:82-175` control flow. */
 class EtlRunnerSpec extends AnyFunSuite {
   private val m = TpchModel.model
 
-  test("every table starts only after all its FK dependencies finished (barrier)") {
-    val started = new ConcurrentHashMap[String, Long]()
-    val finished = new ConcurrentHashMap[String, Long]()
-    EtlRunner(m).run(m.tables) { t =>
-      started.put(t, System.nanoTime())
-      Thread.sleep(5)
-      finished.put(t, System.nanoTime())
-      t
-    }
-    for (t <- m.tables; (_, dep) <- m.fks(t) if dep != t)
-      assert(finished.get(dep) < started.get(t), s"$t started before its dependency $dep finished")
-  }
-
   test("tables inside one level genuinely run in parallel") {
-    // customer and supplier share a level; each waits for the other to have
-    // started — only possible if the runner executes them concurrently
+    // customer and supplier share a level; each prepare waits for the
+    // other's to have started — only possible if they run concurrently
     val latch = new CountDownLatch(2)
-    val out = EtlRunner(m, maxParallelTables = 4).run(m.tables) { t =>
-      if (t == "customer" || t == "supplier") {
-        latch.countDown()
-        assert(latch.await(10, TimeUnit.SECONDS), s"$t never saw its level peer start")
-      }
-      s"done-$t"
-    }
+    val out = EtlRunner(m, maxParallelTables = 4).runFlowPipelined(m.tables)(
+      prepareTable = (t, _) => {
+        if (t == "customer" || t == "supplier") {
+          latch.countDown()
+          assert(latch.await(10, TimeUnit.SECONDS), s"$t never saw its level peer start")
+        }
+        Some(() => s"done-$t")
+      })
     assert(out.keySet == m.tables.toSet)
     assert(out("lineitem") == "done-lineitem")
   }
 
-  test("onlyTables restricts work but preserves level order") {
-    val order = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    EtlRunner(m).run(m.tables, onlyTables = Some(Set("nation", "orders"))) { t =>
-      order.add(t); t
-    }
-    assert(order.size == 2)
-    assert(order.get(0) == "nation" && order.get(1) == "orders")
-  }
-
   test("a failing table aborts the run") {
     intercept[RuntimeException] {
-      EtlRunner(m).run(m.tables) { t =>
+      EtlRunner(m).runFlowPipelined(m.tables)(prepareTable = (t, _) => {
         if (t == "nation") throw new RuntimeException("boom")
-        t
-      }
+        Some(() => t)
+      })
     }
   }
 
@@ -58,8 +37,8 @@ class EtlRunnerSpec extends AnyFunSuite {
     val events = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val flags = EtlFlags(onlyQueries = Some(Seq(
       "orders/load_a.sql", "orders/load_b.sql", "nation/load.sql")))
-    val out = EtlRunner(m).runFlow(m.tables, flags)(
-      processTable = (t, qs) => qs.sorted.mkString("+"),
+    val out = EtlRunner(m).runFlowPipelined(m.tables, flags)(
+      prepareTable = (t, qs) => Some(() => qs.sorted.mkString("+")),
       eventStep = events.add(_))
     assert(out == Map(
       "nation" -> "nation/load.sql",
@@ -69,11 +48,11 @@ class EtlRunnerSpec extends AnyFunSuite {
 
   test("--skip-event-fks-step suppresses the event step in every mode") {
     val events = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    EtlRunner(m).runFlow(
-      m.tables,
-      EtlFlags(onlyTables = Some(Set("region")), skipEventFksStep = true))(
-      processTable = (t, _) => t,
-      eventStep = events.add(_))
+    for (flags <- Seq(EtlFlags(), EtlFlags(onlyTables = Some(Set("region"))),
+        EtlFlags(onlyQueries = Some(Seq("region/q.sql")))))
+      EtlRunner(m).runFlowPipelined(m.tables, flags.copy(skipEventFksStep = true))(
+        prepareTable = (t, _) => Some(() => t),
+        eventStep = events.add(_))
     assert(events.isEmpty)
   }
 
@@ -129,27 +108,31 @@ class EtlRunnerSpec extends AnyFunSuite {
   }
 
   test("pipelined: restricted --only-query path stays sequential with event steps") {
-    val events = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    // one table at a time, in name order: prepare, finalize, then its own
+    // event step before the next table starts
+    val log = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val flags = EtlFlags(onlyQueries = Some(Seq(
       "orders/load_a.sql", "orders/load_b.sql", "nation/load.sql")))
-    val out = EtlRunner(m).runFlowPipelined(m.tables, flags)(
-      prepareTable = (t, qs) => Some(() => qs.sorted.mkString("+")),
-      eventStep = events.add(_))
-    assert(out == Map(
-      "nation" -> "nation/load.sql",
-      "orders" -> "orders/load_a.sql+orders/load_b.sql"))
-    assert(events.toArray.toSet == Set("nation", "orders"))
+    EtlRunner(m).runFlowPipelined(m.tables, flags)(
+      prepareTable = (t, _) => { log.add(s"prep $t"); Some(() => { log.add(s"fin $t"); t }) },
+      eventStep = t => { log.add(s"event $t"); () })
+    assert(log.toArray.toSeq == Seq(
+      "prep nation", "fin nation", "event nation",
+      "prep orders", "fin orders", "event orders"))
   }
 
   test("post-etl cleanup runs only on a FULL etl (etl.py:126-129)") {
     var cleanups = 0
     val runner = EtlRunner(m)
-    runner.runFlow(m.tables)((t, _) => t, postEtlCleanup = () => cleanups += 1)
+    def run(flags: EtlFlags): Unit = {
+      runner.runFlowPipelined(m.tables, flags)(
+        (t, _) => Some(() => t), postEtlCleanup = () => cleanups += 1)
+      ()
+    }
+    run(EtlFlags())
     assert(cleanups == 1)
-    runner.runFlow(m.tables, EtlFlags(onlyTables = Some(Set("region"))))(
-      (t, _) => t, postEtlCleanup = () => cleanups += 1)
-    runner.runFlow(m.tables, EtlFlags(onlyQueries = Some(Seq("region/q.sql"))))(
-      (t, _) => t, postEtlCleanup = () => cleanups += 1)
+    run(EtlFlags(onlyTables = Some(Set("region"))))
+    run(EtlFlags(onlyQueries = Some(Seq("region/q.sql"))))
     assert(cleanups == 1)
   }
 }
