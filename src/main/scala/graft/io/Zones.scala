@@ -70,10 +70,15 @@ final case class Zones(root: String) {
         .toSeq
   }
 
-  def drop(spark: SparkSession, zone: String, table: String): Unit = {
-    val p = new Path(tablePath(zone, table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
+  def drop(spark: SparkSession, zone: String, table: String): Unit =
+    delete(spark, tablePath(zone, table))
+
+  /** Drop every table in every zone of this namespace. */
+  def clear(spark: SparkSession): Unit = delete(spark, root)
+
+  private def delete(spark: SparkSession, path: String): Unit = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     ()
   }
 

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators._
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -328,9 +329,22 @@ object EventQueries {
       .orderBy("l_returnflag", "l_linestatus")
   }
 
+  /** The events table as a file-source stream
+    * ([[StreamingOps.tableStream]]) with the SAME per-encoding ts
+    * conversion `Tables.load` applies, taken from the table's footer.
+    * Round 7 hardcoded the long-nanos schema here and the generator
+    * switched to naive micros: every timestamp silently shrank 1000x and
+    * all four streaming queries lost their oracle — the footer probe makes
+    * the stream source drift-proof the same way the batch loader is.
+    */
+  private[graft] def eventsStream(s: SparkSession, d: String, stageName: String): DataFrame = {
+    val raw = StreamingOps.tableStream(s, d, "events", stageName)
+    raw.withColumn("ts", Tables.normalizedTs(s, raw.schema("ts").dataType, "ts"))
+  }
+
   /** The streaming extension run as a REAL StreamingQuery, oracle-checked:
-    * a parquet file-source stream of the events table (Trigger.AvailableNow
-    * processes everything then stops), windowed event counts with a
+    * a parquet file-source stream of the events table (the AvailableNow
+    * trigger processes everything then stops), windowed event counts with a
     * watermark, memory sink, and the final table compared against the
     * batch oracle — the stream/batch-equivalence contract Structured
     * Streaming promises, certified by the same DuckDB gate as every batch
@@ -338,76 +352,10 @@ object EventQueries {
     * tumbling window aligns to epoch hours, so the oracle is a plain
     * date_trunc aggregation.
     */
-  /** Stream the events table through a file source: stage a directory
-    * holding a symlink to the parquet file (the source only accepts
-    * directories; no data copied, testdata untouched). Streaming sources
-    * require a fixed schema — take it from the staged file's own footer
-    * (one driver-side batch-reader schema probe, no data read) instead of
-    * assuming an encoding, then apply the SAME per-encoding ts conversion
-    * `Tables.load` applies. Round 7 hardcoded the long-nanos schema here
-    * and the generator switched to naive micros: every timestamp silently
-    * shrank 1000× and all four streaming queries lost their oracle — the
-    * footer probe makes the stream source drift-proof the same way the
-    * batch loader is.
-    */
-  private[graft] def eventsStream(s: SparkSession, d: String, stageName: String): DataFrame = {
-    val onDisk = s.read.parquet(s"$d/events.parquet").schema
-    val src =
-      if (new java.io.File(s"$d/events.parquet").isDirectory)
-        // an engine-written dataset is already a DIRECTORY of part files —
-        // stream it directly. Staging a symlink to the directory would
-        // list ZERO files (the file source treats the symlinked subdir as
-        // a partition dir with no leaves): the sf1 soak's streaming lines
-        // silently processed an empty source until this branch existed
-        s"$d/events.parquet"
-      else {
-        // the driver's testdata is a single FILE; the file source only
-        // accepts directories, so stage a dir holding a symlink (no data
-        // copied, testdata untouched)
-        val srcDir = new org.apache.hadoop.fs.Path(
-          new java.io.File(
-            s"${graft.io.Zones.defaultRoot}/${stageName}_${graft.io.Zones.pathKey(d)}")
-            .getAbsolutePath)
-        val fs = srcDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.delete(srcDir, true)
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir.toString))
-        java.nio.file.Files.createSymbolicLink(
-          java.nio.file.Paths.get(srcDir.toString, "events.parquet"),
-          java.nio.file.Paths.get(s"$d/events.parquet"))
-        srcDir.toString
-      }
-    s.readStream.schema(onDisk).parquet(src)
-      .withColumn("ts", graft.Tables.normalizedTs(s, onDisk("ts").dataType, "ts"))
-  }
-
-  /** Drain a streaming frame through a memory sink with AvailableNow and
-    * return the resulting table.
-    *
-    * State-store sizing: each stateful operator runs ONE state-store
-    * instance per shuffle partition per micro-batch, pinned into the
-    * checkpoint at first start from the session's
-    * `spark.sql.shuffle.partitions`. The drain never changes that conf:
-    * the session is shared with concurrent batch queries.
-    */
-  private[graft] def drainToTable(df: DataFrame, sink: String, mode: String): DataFrame = {
-    val s = df.sparkSession
-    val ckpt = new org.apache.hadoop.fs.Path(
-      new java.io.File(s"${graft.io.Zones.defaultRoot}/stream_ckpt_$sink").getAbsolutePath)
-    ckpt.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ckpt, true)
-    val q = df.writeStream
-      .format("memory").queryName(sink)
-      .outputMode(mode)
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    s.table(sink)
-  }
-
   val streamWindowedCounts: Q = (s, d) => {
     val stream = eventsStream(s, d, "stream_src_events")
-    val counts = graft.streaming.StreamingOps.windowedEventCounts(stream, "ts", "event_type")
-    drainToTable(counts, "stream_windowed_counts_sink", "complete")
+    val counts = StreamingOps.windowedEventCounts(stream, "ts", "event_type")
+    StreamingOps.drainToTable(counts, "stream_windowed_counts_sink", "complete")
       .orderBy("window_start", "event_type")
   }
 
@@ -418,11 +366,11 @@ object EventQueries {
     * operator.
     */
   val streamDedup: Q = (s, d) => {
-    val deduped = graft.streaming.StreamingOps
+    val deduped = StreamingOps
       .streamingDedup(eventsStream(s, d, "stream_src_events_dedup"), "ts",
         Seq("user_id", "event_type"))
       .select("user_id", "event_type", "ts")
-    drainToTable(deduped, "stream_dedup_sink", "append")
+    StreamingOps.drainToTable(deduped, "stream_dedup_sink", "append")
       .orderBy("user_id", "event_type", "ts")
   }
 
@@ -434,9 +382,9 @@ object EventQueries {
     * session on both sides.
     */
   val streamSessionize: Q = (s, d) => {
-    val sessions = graft.streaming.StreamingOps.sessionCounts(
+    val sessions = StreamingOps.sessionCounts(
       eventsStream(s, d, "stream_src_events_sess"), "ts", "user_id")
-    drainToTable(sessions, "stream_sessionize_sink", "complete")
+    StreamingOps.drainToTable(sessions, "stream_sessionize_sink", "complete")
       .orderBy("user_id", "session_start")
   }
 
@@ -452,9 +400,9 @@ object EventQueries {
     * exact: counts, epoch-micros min/max, a bounded distinct-type set).
     */
   val streamRunningStats: Q = (s, d) => {
-    val stats = graft.streaming.StreamingOps.runningUserStats(
+    val stats = StreamingOps.runningUserStats(
       eventsStream(s, d, "stream_src_events_rs"), "ts", "user_id", "event_type")
-    drainToTable(stats, "stream_running_stats_sink", "update")
+    StreamingOps.drainToTable(stats, "stream_running_stats_sink", "update")
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("first_ts"), col("last_ts"),
         col("n_event_types"))).as("__fin"))
@@ -592,9 +540,9 @@ object EventQueries {
     val purchases = eventsStream(s, d, "stream_src_events_jr")
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("purchase_ts"), col("value").as("purchase_value"))
-    val joined = graft.streaming.StreamingOps.streamStreamJoin(
+    val joined = StreamingOps.streamStreamJoin(
       clicks, purchases, "user_id", "click_ts", "purchase_ts")
-    drainToTable(joined, "stream_join_within_sink", "append")
+    StreamingOps.drainToTable(joined, "stream_join_within_sink", "append")
       .orderBy("user_id", "click_ts", "purchase_ts")
   }
 
@@ -696,20 +644,14 @@ object EventQueries {
     */
   val streamUpsertZone: Q = (s, d) => {
     val zones = graft.io.Zones.forPurpose(s"streamup_${graft.io.Zones.pathKey(d)}")
-    val fs = new org.apache.hadoop.fs.Path(zones.root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     // fresh state + checkpoint as a pair: a stale checkpoint beside a
     // cleaned table would replay NOTHING and leave the state empty
-    fs.delete(new org.apache.hadoop.fs.Path(zones.tablePath("work", "stream_state")), true)
-    val ckpt = new org.apache.hadoop.fs.Path(
-      new java.io.File(
-        s"${graft.io.Zones.defaultRoot}/stream_ckpt_upsert_${graft.io.Zones.pathKey(d)}")
-        .getAbsolutePath)
-    ckpt.getFileSystem(s.sparkContext.hadoopConfiguration).delete(ckpt, true)
-    val stream = eventsStream(s, d, "stream_src_events_up")
-    graft.streaming.StreamingOps.upsertFold(
-      stream, zones, "stream_state", Seq("user_id", "event_type"),
-      max(struct(col("ts"), col("event_id"), col("value"))), ckpt.toString)
+    zones.drop(s, "work", "stream_state")
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_upsert", d)
+    StreamingOps.upsertFold(
+      eventsStream(s, d, "stream_src_events_up"), zones, "stream_state",
+      Seq("user_id", "event_type"),
+      max(struct(col("ts"), col("event_id"), col("value"))), ckpt)
     zones.read(s, "work", "stream_state")
       .select(col("user_id"), col("event_type"),
         col("__m.ts").as("last_ts"), col("__m.event_id").as("last_event_id"),
@@ -748,63 +690,18 @@ object EventQueries {
 
   val streamDqdRuns: Q = (s, d) => {
     val zones = graft.io.Zones.forPurpose(s"streamdqd_${graft.io.Zones.pathKey(d)}")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
     // fresh incremental state + run history + checkpoint as a set
-    rm(zones.tablePath("work", "counts"))
-    rm(zones.tablePath("work", "pk_state"))
-    rm(zones.tablePath("dqd", "dqd_runs"))
-    rm(zones.tablePath("dqd", "dqd_results_run_1"))
-    rm(zones.tablePath("dqd", "dqd_results_run_2"))
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_dqd_${graft.io.Zones.pathKey(d)}").getAbsolutePath
-    rm(ckpt)
-    // stage two single-file batches in a deterministic order (written
-    // sequentially, so the file source's mod-time ordering is fixed)
-    val stagingDir = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_src_dqd_${graft.io.Zones.pathKey(d)}").getAbsolutePath
-    rm(stagingDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
+    Seq("work" -> "counts", "work" -> "pk_state", "dqd" -> "dqd_runs",
+      "dqd" -> "dqd_results_run_1", "dqd" -> "dqd_results_run_2")
+      .foreach { case (z, tb) => zones.drop(s, z, tb) }
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_dqd", d)
     val ev = t(s, d, "events").select("event_id", "user_id", "event_type", "value")
-    def stageOne(name: String, part: org.apache.spark.sql.DataFrame,
-        mtime: Long): Unit = {
-      val tmp = s"$stagingDir/__tmp_$name"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-      val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      // STRICTLY increasing mtimes, set explicitly: the file source orders
-      // by modification time, and back-to-back writes on a coarse-mtime
-      // filesystem can tie and process in the wrong order
-      fs.setTimes(dst, mtime, -1)
-      ()
-    }
-    // null-safe split: a NULL event_id must land in exactly one batch
-    // (arithmetic parity would drop it from both)
-    val par = coalesce(pmod(col("event_id"), lit(2)), lit(0))
-    val t0 = System.currentTimeMillis()
-    stageOne("batch0.parquet", ev.filter(par === 0), t0)
-    stageOne("batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
+    val src = stageParity(s, "stream_src_dqd", d, ev)
     // threshold lookup is metadata-only — built once, reused per batch
     val thrDf = graft.operators.DqdChecks.batteryThresholds(streamDqdModel, _ => ev)
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.operators.DqdChecks.incrementalBatch(
-          s, zones, streamDqdModel, thrDf, batch)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    StreamingOps.drainEach(StreamingOps.stagedStream(s, src, ev.schema), ckpt) { (batch, _) =>
+      graft.operators.DqdChecks.incrementalBatch(s, zones, streamDqdModel, thrDf, batch)
+    }
     graft.operators.DqdChecks.lastRuns(s, zones).drop("run_timestamp")
   }
 
@@ -834,80 +731,37 @@ object EventQueries {
     */
   val streamAchillesCounts: Q = (s, d) => {
     val zones = graft.io.Zones.forPurpose(s"streamach_${graft.io.Zones.pathKey(d)}")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
-    rm(zones.tablePath("work", "ach_partials"))
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_ach_${graft.io.Zones.pathKey(d)}").getAbsolutePath
-    rm(ckpt)
-    val stagingDir = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_src_ach_${graft.io.Zones.pathKey(d)}").getAbsolutePath
-    rm(stagingDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
+    zones.drop(s, "work", "ach_partials")
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_ach", d)
     val ev = t(s, d, "events").select("event_id", "user_id", "event_type", "value", "ts")
-    def stageOne(name: String, part: org.apache.spark.sql.DataFrame,
-        mtime: Long): Unit = {
-      val tmp = s"$stagingDir/__tmp_$name"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-      val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, mtime, -1)
-      ()
-    }
-    val par = coalesce(pmod(col("event_id"), lit(2)), lit(0))
-    val t0 = System.currentTimeMillis()
-    stageOne("batch0.parquet", ev.filter(par === 0), t0)
-    stageOne("batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        // foreachBatch is AT-LEAST-ONCE: after a failure/restart the same
-        // batchId can re-execute, and an unconditional merge would double
-        // every stratum it carries. The last-applied id rides IN the
-        // partials table itself (a constant __last_batch column), so the
-        // skip decision and the merged counts commit in ONE atomic
-        // staging-then-swap write — no separate meta table to drift.
-        val stored =
-          if (zones.listTables(s, "work").contains("ach_partials"))
-            Some(zones.read(s, "work", "ach_partials"))
-          else None
-        val lastApplied = stored.map(
-          _.agg(coalesce(max(col("__last_batch")), lit(-1L))).head.getLong(0))
-          .getOrElse(-1L)
-        if (batchId > lastApplied) {
-          val part = graft.operators.AchillesGen
-            .partialCounts(streamAchModel, _ => batch)
-          val merged = stored match {
-            case Some(p) => graft.operators.AchillesGen.mergePartialCounts(
-              Seq(p.drop("__last_batch"), part), -1L)
-            case None => part
-          }
-          // bounded report (one row per stratum); the zone write is
-          // staging-then-swap, so reading the prior table while writing
-          // the next is safe
-          zones.write(merged.withColumn("__last_batch", lit(batchId))
-            .coalesce(1), "work", "ach_partials")
-        }
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    zones.read(s, "work", "ach_partials")
-      .drop("__last_batch")
+    StreamingOps.drainEach(
+      StreamingOps.stagedStream(s, stageParity(s, "stream_src_ach", d, ev), ev.schema),
+      ckpt)(achCountsFold(zones))
+    StreamingOps.guardedState(s, zones, "ach_partials")
       .filter(col("count_value") > 5)
       .coalesce(1)
       .sortWithinPartitions("analysis_id", "stratum_1")
   }
+
+  /** Stage the events as two files, even event ids then odd; a NULL
+    * event_id lands in exactly one of them (arithmetic parity would drop
+    * it from both).
+    */
+  private def stageParity(s: SparkSession, name: String, d: String, ev: DataFrame): String = {
+    val par = coalesce(pmod(col("event_id"), lit(2)), lit(0))
+    StreamingOps.stageFiles(s, name, d, Seq(
+      "batch0.parquet" -> ev.filter(par === 0), "batch1.parquet" -> ev.filter(par =!= 0)))
+  }
+
+  /** One micro-batch of [[streamAchillesCounts]]: the batch's unsuppressed
+    * sum-family partials merged into the stored ones by a bounded
+    * groupBy-sum on the report key, replay-guarded.
+    */
+  private[graft] def achCountsFold(zones: graft.io.Zones)(batch: DataFrame, id: Long): Unit =
+    StreamingOps.guardedFold(zones, "ach_partials", batch, id) { (stored, b) =>
+      val part = AchillesGen.partialCounts(streamAchModel, _ => b)
+      stored.fold(part)(p => AchillesGen.mergePartialCounts(Seq(p, part), -1L))
+    }
 
   /** CONTINUOUS Achilles, DIST tier — [[streamAchillesCounts]]'s twin for
     * the distribution families: each micro-batch computes the mergeable
@@ -924,71 +778,27 @@ object EventQueries {
     */
   val streamAchillesDist: Q = (s, d) => {
     val zones = graft.io.Zones.forPurpose(s"streamachd_${graft.io.Zones.pathKey(d)}")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
-    rm(zones.tablePath("work", "ach_dist_partials"))
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_achd_${graft.io.Zones.pathKey(d)}").getAbsolutePath
-    rm(ckpt)
-    val stagingDir = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_src_achd_${graft.io.Zones.pathKey(d)}").getAbsolutePath
-    rm(stagingDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
+    zones.drop(s, "work", "ach_dist_partials")
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_achd", d)
     val ev = t(s, d, "events").select("event_id", "user_id", "event_type", "value", "ts")
-    def stageOne(name: String, part: org.apache.spark.sql.DataFrame,
-        mtime: Long): Unit = {
-      val tmp = s"$stagingDir/__tmp_$name"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-      val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, mtime, -1)
-      ()
-    }
-    val par = coalesce(pmod(col("event_id"), lit(2)), lit(0))
-    val t0 = System.currentTimeMillis()
-    stageOne("batch0.parquet", ev.filter(par === 0), t0)
-    stageOne("batch1.parquet", ev.filter(par =!= 0), t0 + 60000L)
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        val stored =
-          if (zones.listTables(s, "work").contains("ach_dist_partials"))
-            Some(zones.read(s, "work", "ach_dist_partials"))
-          else None
-        val lastApplied = stored.map(
-          _.agg(coalesce(max(col("__last_batch")), lit(-1L))).head.getLong(0))
-          .getOrElse(-1L)
-        if (batchId > lastApplied) {
-          val part = graft.operators.AchillesGen
-            .distValueCounts(streamAchModel, _ => batch)
-          val merged = stored match {
-            // histogram merge IS the sum — the dist aggregation stays at
-            // read so a value's count can keep accumulating across batches
-            case Some(p) => p.drop("__last_batch").unionByName(part)
-              .groupBy(col("analysis_id"), col("stratum_1"), col("__v"))
-              .agg(sum(col("__cnt")).as("__cnt"))
-            case None => part
-          }
-          zones.write(merged.withColumn("__last_batch", lit(batchId))
-            .coalesce(1), "work", "ach_dist_partials")
-        }
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    graft.operators.AchillesGen.mergeDistPartials(Seq(
-      zones.read(s, "work", "ach_dist_partials").drop("__last_batch")))
+    StreamingOps.drainEach(
+      StreamingOps.stagedStream(s, stageParity(s, "stream_src_achd", d, ev), ev.schema),
+      ckpt)(achDistFold(zones))
+    AchillesGen.mergeDistPartials(Seq(
+      StreamingOps.guardedState(s, zones, "ach_dist_partials")))
   }
+
+  /** One micro-batch of [[streamAchillesDist]], replay-guarded. Histogram
+    * merge IS the sum — the dist aggregation stays at read so a value's
+    * count can keep accumulating across batches.
+    */
+  private[graft] def achDistFold(zones: graft.io.Zones)(batch: DataFrame, id: Long): Unit =
+    StreamingOps.guardedFold(zones, "ach_dist_partials", batch, id) { (stored, b) =>
+      val part = AchillesGen.distValueCounts(streamAchModel, _ => b)
+      stored.fold(part)(p => p.unionByName(part)
+        .groupBy(col("analysis_id"), col("stratum_1"), col("__v"))
+        .agg(sum(col("__cnt")).as("__cnt")))
+    }
 
   /** Count-Min heavy hitters beside their ground truth: exact top-10
     * users by event count, each with its CMS point estimate (min over

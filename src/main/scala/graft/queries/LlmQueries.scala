@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.ops._
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -301,25 +302,12 @@ object LlmQueries {
       zones.read(s, "work", table)
     })
 
-  /** A `documents` file-source stream (symlink staging dir + footer-probed
-    * schema + id normalization — the same drift-proof contract as
-    * `eventsStream`).
+  /** The `documents` table as a file-source stream
+    * ([[StreamingOps.tableStream]]), ids normalized to long.
     */
-  private def docsStream(s: SparkSession, d: String, stageName: String): org.apache.spark.sql.DataFrame = {
-    // staging dir keyed by dataset like the zone roots: interleaved runs
-    // over two datasets in one JVM must not clobber each other's staging
-    val srcDir = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/${stageName}_${graft.io.Zones.pathKey(d)}")
-    val p = new org.apache.hadoop.fs.Path(srcDir.getAbsolutePath)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    java.nio.file.Files.createDirectories(srcDir.toPath)
-    java.nio.file.Files.createSymbolicLink(
-      srcDir.toPath.resolve("documents.parquet"),
-      java.nio.file.Paths.get(s"$d/documents.parquet"))
-    val onDisk = s.read.parquet(s"$d/documents.parquet").schema
-    s.readStream.schema(onDisk).parquet(srcDir.getAbsolutePath)
+  private[graft] def docsStream(s: SparkSession, d: String, stageName: String): DataFrame =
+    StreamingOps.tableStream(s, d, "documents", stageName)
       .withColumn("doc_id", col("doc_id").cast("long"))
-  }
 
   /** STREAMING incremental admission — the same verdict as
     * [[dedupIncremental]] computed as a real Structured Streaming query:
@@ -356,43 +344,11 @@ object LlmQueries {
       .groupBy(col("doc_id"))
       .agg(max(struct(col("__j").as("j"), (-col("corpus_id")).as("negid"))).as("__b"))
       .select(col("doc_id"), (-col("__b.negid")).as("dup_of"), col("__b.j").as("__bj"))
-    val drained = EventQueries.drainToTable(best, "stream_dedup_incremental_sink", "complete")
+    val drained = StreamingOps.drainToTable(best, "stream_dedup_incremental_sink", "complete")
     docs.filter(col("doc_id") % 10 === 0).select("doc_id")
       .join(drained, Seq("doc_id"), "left")
       .select(col("doc_id"), col("dup_of"), graft.ops.SimOps.roundMicro(col("__bj")).as("jaccard"))
       .orderBy("doc_id")
-  }
-
-  /** CONTINUOUS ingestion quality-gating: the 13-rule Gopher repetition
-    * gate over a document STREAM — the admission shape a training-data
-    * pipeline runs on every incoming shard. The verdict is PER-DOCUMENT
-    * (no cross-document state), so each micro-batch applies the EXACT
-    * batch gate ([[graft.ops.RepetitionOps.gopherGate]]) inside
-    * `foreachBatch` and lands its verdicts in a batchId-keyed zone table
-    * (overwrite per id — at-least-once replay rewrites the same rows,
-    * idempotent); the report is the union of batch tables. Two
-    * deterministically-staged files drive a genuinely multi-batch drain
-    * (`maxFilesPerTrigger = 1`, strictly increasing mtimes — the
-    * streamDqdRuns staging discipline). Oracle: the SAME SQL as
-    * `corpus_gopher_gate` — stream == batch, row for row.
-    */
-  /** Stage one single-file parquet into a stream-source directory with a
-    * pinned mtime (the streamDqdRuns staging discipline — strictly
-    * increasing mtimes drive a deterministic multi-batch drain).
-    */
-  private def stageStreamFile(s: SparkSession, stagingDir: String,
-      name: String, part: DataFrame, mtime: Long): Unit = {
-    val hconf = s.sparkContext.hadoopConfiguration
-    val tmp = s"$stagingDir/__tmp_$name"
-    part.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-    val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-      .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-    val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-    require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    fs.setTimes(dst, mtime, -1)
-    ()
   }
 
   /** ONE staged document stream source per (JVM, dataset), shared by the
@@ -417,46 +373,33 @@ object LlmQueries {
     */
   private def sharedDocsSource(s: SparkSession, d: String): String =
     stagedDocsMemo.getOrElseUpdate((s, d), {
-      val hconf = s.sparkContext.hadoopConfiguration
-      val stagingDir = new java.io.File(
-        s"${graft.io.Zones.defaultRoot}/stream_src_shared_docs_${graft.io.Zones.pathKey(d)}")
-        .getAbsolutePath
-      val hp = new org.apache.hadoop.fs.Path(stagingDir)
-      hp.getFileSystem(hconf).delete(hp, true)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
       val docs = t(s, d, "documents").select("doc_id", "text")
       val par = coalesce(pmod(col("doc_id"), lit(20)), lit(0))
-      val t0 = System.currentTimeMillis()
-      stageStreamFile(s, stagingDir, "batch0.parquet", docs.filter(par < 10), t0)
-      stageStreamFile(s, stagingDir, "batch1.parquet", docs.filter(par >= 10), t0 + 60000L)
-      stagingDir
+      StreamingOps.stageFiles(s, "stream_src_shared_docs", d, Seq(
+        "batch0.parquet" -> docs.filter(par < 10), "batch1.parquet" -> docs.filter(par >= 10)))
     })
 
+  /** CONTINUOUS ingestion quality-gating: the 13-rule Gopher repetition
+    * gate over a document STREAM — the admission shape a training-data
+    * pipeline runs on every incoming shard. The verdict is PER-DOCUMENT
+    * (no cross-document state), so each micro-batch applies the EXACT
+    * batch gate ([[graft.ops.RepetitionOps.gopherGate]]) inside
+    * `foreachBatch` and lands its verdicts in a batchId-keyed zone table
+    * (overwrite per id — at-least-once replay rewrites the same rows,
+    * idempotent); the report is the union of batch tables. Two
+    * deterministically-staged files ([[sharedDocsSource]]) drive a
+    * genuinely multi-batch drain. Oracle: the SAME SQL as
+    * `corpus_gopher_gate` — stream == batch, row for row.
+    */
   val streamGopherGate: Q = (s, d) => {
     val zones = graft.io.Zones.forPurpose(s"streamgg_${graft.io.Zones.pathKey(d)}")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
-    rm(zones.root)
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_gg_${graft.io.Zones.pathKey(d)}").getAbsolutePath
-    rm(ckpt)
+    zones.clear(s)
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_gg", d)
     val docs = t(s, d, "documents").select("doc_id", "text")
-    val stagingDir = sharedDocsSource(s, d)
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        zones.write(graft.ops.RepetitionOps.gopherGate(batch),
-          "work", s"gate_batch_$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    StreamingOps.drainEach(
+      StreamingOps.stagedStream(s, sharedDocsSource(s, d), docs.schema), ckpt) { (batch, id) =>
+      zones.write(graft.ops.RepetitionOps.gopherGate(batch), "work", s"gate_batch_$id")
+    }
     streamBatchUnion(s, zones, "gate_batch_")
       .orderBy("doc_id")
   }
@@ -965,13 +908,9 @@ object LlmQueries {
       () => zones.write(bloomPre, "work", "base_bloom_compacted")))
     // the segments retire AFTER the swap — the compaction protocol's
     // read-before-delete ordering
-    val hconf = s.sparkContext.hadoopConfiguration
     (0 until nSegs).foreach { i =>
-      Seq("delta_md5_", "delta_band_", "delta_docs_", "delta_bloom_").foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(
-          new java.io.File(zones.tablePath("work", s"$p$i")).getAbsolutePath)
-        hp.getFileSystem(hconf).delete(hp, true)
-      }
+      Seq("delta_md5_", "delta_band_", "delta_docs_", "delta_bloom_")
+        .foreach(p => zones.drop(s, "work", s"$p$i"))
     }
     // v2_post zone-materializes too, so the RETURNED frame reads only
     // stored tables (no plan over the query-local checkpoint survives
@@ -997,15 +936,8 @@ object LlmQueries {
     */
   val streamCorpusAdmit: Q = (s, d) => {
     val zones = graft.io.Zones.forPurpose(s"streamadm_${graft.io.Zones.pathKey(d)}")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
-    rm(zones.root)
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_adm_${graft.io.Zones.pathKey(d)}").getAbsolutePath
-    rm(ckpt)
+    zones.clear(s)
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_adm", d)
     val batchDocs = t(s, d, "documents")
       .filter(col("doc_id") % 10 === 0).select("doc_id", "text")
     // the SHARED staged source (pmod 20 split): batch 0 carries this
@@ -1015,19 +947,12 @@ object LlmQueries {
     val stagingDir = sharedDocsSource(s, d)
     // force the stored static sides ONCE, outside the per-batch loop
     corpusMd5(s, d); bandIndex(s, d)
-    val stream = s.readStream.schema(batchDocs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        zones.write(
-          admissionVerdicts(s, d, batch.filter(col("doc_id") % 10 === 0)),
-          "work", s"admit_batch_$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    StreamingOps.drainEach(
+      StreamingOps.stagedStream(s, stagingDir, batchDocs.schema), ckpt) { (batch, id) =>
+      zones.write(
+        admissionVerdicts(s, d, batch.filter(col("doc_id") % 10 === 0)),
+        "work", s"admit_batch_$id")
+    }
     streamBatchUnion(s, zones, "admit_batch_")
       .orderBy("doc_id")
   }
@@ -1043,28 +968,13 @@ object LlmQueries {
   val streamCorpusAdmitSequential: Q = (s, d) => {
     val key = graft.io.Zones.pathKey(d)
     val zones = graft.io.Zones.forPurpose(s"streamadmseq_$key")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
-    rm(zones.root)
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_admseq_$key").getAbsolutePath
-    rm(ckpt)
-    val stagingDir = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_src_admseq_$key").getAbsolutePath
-    rm(stagingDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
+    zones.clear(s)
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_admseq", d)
     val docs = t(s, d, "documents")
     // this stream CANNOT share the memoized docs source: its second
     // staged file carries AUTHORED probe docs derived from batch-1's
     // admits (the index-growth fixture)
-    def stageOne(name: String, part: DataFrame, mtime: Long): Unit =
-      stageStreamFile(s, stagingDir, name, part, mtime)
-    val t0 = System.currentTimeMillis()
     val b1 = docs.filter(col("doc_id") % 20 === 0).select("doc_id", "text")
-    stageOne("batch0.parquet", b1, t0)
     // FIXTURE PREP (producer side): the second staged file carries the
     // same deterministic copy/variant probes as the batch entry, derived
     // from batch-1's admits — computed here only to AUTHOR the staged
@@ -1072,73 +982,75 @@ object LlmQueries {
     // delta, and the probes' rejections can only come from that growth
     zones.write(seqB1Verdicts(s, d).filter(col("admitted") === 1L)
       .select("doc_id"), "work", "seq_b1_admits")
-    val admProbe = b1.join(zones.read(s, "work", "seq_b1_admits"), "doc_id")
-      .filter(size(graft.ops.TextOps.tokens(col("text"))) >= 3)
-    stageOne("batch1.parquet",
-      docs.filter(col("doc_id") % 20 === 10).select("doc_id", "text")
-        .unionByName(admProbe.select((col("doc_id") + 10000000L).as("doc_id"),
-          concat(col("text"), lit("  ")).as("text")))
-        .unionByName(admProbe.select((col("doc_id") + 20000000L).as("doc_id"),
-          col("text"))),
-      t0 + 60000L)
+    val stagingDir = StreamingOps.stageFiles(s, "stream_src_admseq", d, Seq(
+      "batch0.parquet" -> b1,
+      "batch1.parquet" -> withAdmitProbes(docs,
+        b1.join(zones.read(s, "work", "seq_b1_admits"), "doc_id"))))
     corpusMd5(s, d); bandIndex(s, d) // force the static base ONCE
     val (seqBaseBloom, seqBloomWords) = corpusBloom(s, d)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
-    val stream = s.readStream
-      .schema(docs.select("doc_id", "text").schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        def deltas(prefix: String): Seq[DataFrame] =
-          zones.listTables(s, "work").filter(_.startsWith(prefix)).sorted
-            .map(tb => zones.read(s, "work", tb))
-        val md5All = (corpusMd5(s, d) +: deltas("delta_md5_")).reduce(_ unionByName _)
-        val idxAll = (bandIndex(s, d) +: deltas("delta_band_")).reduce(_ unionByName _)
-        val corpusAll = (corpus +: deltas("delta_docs_")).reduce(_ unionByName _)
-        // (r18) the exact-dup shield stays active across growth: base ∪
-        // accumulated per-batch segment filters, bit_or-folded
-        val bloomAll = mergeBloomStates(seqBaseBloom +: deltas("delta_bloom_"))
-        // stable reuseKey: each micro-batch's resolution REPLACES the
-        // previous one (superseded broadcast destroyed) — the stream
-        // holds one filter array, not one per batch; safe because the
-        // verdicts materialize (zones.write) within this batch body
-        val v = admissionVerdictsAgainst(corpusAll, md5All, idxAll, batch,
-          bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
-            s, bloomAll, seqBloomWords, "__h",
-            reuseKey = Some(s"admseq_shield_$key"))))
-          .withColumn("batch", lit(id + 1L))
-        zones.write(v, "work", s"admit_batch_$id")
-        // GROW the index: this batch's admits append as new delta segments
-        val adm = batch.join(
-          zones.read(s, "work", s"admit_batch_$id")
-            .filter(col("admitted") === 1L).select("doc_id"), "doc_id")
-        // (r21) the segment writes are independent readers of the admit
-        // set — concurrent jobs (guide §2.6); the Bloom write chains
-        // after the md5 write inside its thunk (it reads that table)
-        concurrently(Seq(
-          () => {
-            zones.write(adm.select(md5(col("text")).as("__h")).distinct(),
-              "work", s"delta_md5_$id")
-            zones.write(
-              graft.ops.SketchOps.bloomBits(
-                zones.read(s, "work", s"delta_md5_$id"), col("__h"),
-                words = seqBloomWords),
-              "work", s"delta_bloom_$id")
-          },
-          () => zones.write(
-            DedupOps.lshBandsFromSigArray(
-              DedupOps.minhashSignatureArray(adm, "doc_id", "text", k = 8, w = 3),
-              "doc_id", k = 8, rows = 4),
-            "work", s"delta_band_$id"),
-          () => zones.write(adm, "work", s"delta_docs_$id")))
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    val stream = StreamingOps.stagedStream(s, stagingDir, b1.schema)
+    StreamingOps.drainEach(stream, ckpt) { (batch, id) =>
+      def deltas(prefix: String): Seq[DataFrame] =
+        zones.listTables(s, "work").filter(_.startsWith(prefix)).sorted
+          .map(tb => zones.read(s, "work", tb))
+      val md5All = (corpusMd5(s, d) +: deltas("delta_md5_")).reduce(_ unionByName _)
+      val idxAll = (bandIndex(s, d) +: deltas("delta_band_")).reduce(_ unionByName _)
+      val corpusAll = (corpus +: deltas("delta_docs_")).reduce(_ unionByName _)
+      // (r18) the exact-dup shield stays active across growth: base ∪
+      // accumulated per-batch segment filters, bit_or-folded
+      val bloomAll = mergeBloomStates(seqBaseBloom +: deltas("delta_bloom_"))
+      // stable reuseKey: each micro-batch's resolution REPLACES the
+      // previous one (superseded broadcast destroyed) — the stream
+      // holds one filter array, not one per batch; safe because the
+      // verdicts materialize (zones.write) within this batch body
+      val v = admissionVerdictsAgainst(corpusAll, md5All, idxAll, batch,
+        bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
+          s, bloomAll, seqBloomWords, "__h",
+          reuseKey = Some(s"admseq_shield_$key"))))
+        .withColumn("batch", lit(id + 1L))
+      zones.write(v, "work", s"admit_batch_$id")
+      // GROW the index: this batch's admits append as new delta segments
+      val adm = batch.join(
+        zones.read(s, "work", s"admit_batch_$id")
+          .filter(col("admitted") === 1L).select("doc_id"), "doc_id")
+      // (r21) the segment writes are independent readers of the admit
+      // set — concurrent jobs (guide §2.6); the Bloom write chains
+      // after the md5 write inside its thunk (it reads that table)
+      concurrently(Seq(
+        () => {
+          zones.write(adm.select(md5(col("text")).as("__h")).distinct(),
+            "work", s"delta_md5_$id")
+          zones.write(
+            graft.ops.SketchOps.bloomBits(
+              zones.read(s, "work", s"delta_md5_$id"), col("__h"),
+              words = seqBloomWords),
+            "work", s"delta_bloom_$id")
+        },
+        () => zones.write(
+          DedupOps.lshBandsFromSigArray(
+            DedupOps.minhashSignatureArray(adm, "doc_id", "text", k = 8, w = 3),
+            "doc_id", k = 8, rows = 4),
+          "work", s"delta_band_$id"),
+        () => zones.write(adm, "work", s"delta_docs_$id")))
+    }
     streamBatchUnion(s, zones, "admit_batch_")
       .orderBy("batch", "doc_id")
+  }
+
+  /** Batch 2 of the index-growth streams: the `% 20 == 10` docs plus the
+    * deterministic copy/variant probes of `b1Admits` (batch 1's admitted
+    * docs with their text) — an exact copy and a whitespace variant of
+    * each admit with at least 3 tokens, which only the grown index can
+    * reject.
+    */
+  private def withAdmitProbes(docs: DataFrame, b1Admits: DataFrame): DataFrame = {
+    val admProbe = b1Admits.filter(size(graft.ops.TextOps.tokens(col("text"))) >= 3)
+    docs.filter(col("doc_id") % 20 === 10).select("doc_id", "text")
+      .unionByName(admProbe.select((col("doc_id") + 10000000L).as("doc_id"),
+        concat(col("text"), lit("  ")).as("text")))
+      .unionByName(admProbe.select((col("doc_id") + 20000000L).as("doc_id"),
+        col("text")))
   }
 
   /** STREAMING continuous curation WITH MINOR COMPACTION (r16): the
@@ -1154,41 +1066,20 @@ object LlmQueries {
   val streamCorpusAdmitCompact: Q = (s, d) => {
     val key = graft.io.Zones.pathKey(d)
     val zones = graft.io.Zones.forPurpose(s"streamadmcpt_$key")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
-    rm(zones.root)
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_admcpt_$key").getAbsolutePath
-    rm(ckpt)
-    val stagingDir = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_src_admcpt_$key").getAbsolutePath
-    rm(stagingDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
+    zones.clear(s)
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_admcpt", d)
     val docs = t(s, d, "documents")
-    val t0 = System.currentTimeMillis()
     val b1 = docs.filter(col("doc_id") % 20 === 0).select("doc_id", "text")
-    stageStreamFile(s, stagingDir, "batch0.parquet", b1, t0)
     // same authored copy/variant probes as the sequential stream (they
     // can only be rejected through the grown-then-compacted segments)
-    val admProbe = b1.join(seqB1Verdicts(s, d).filter(col("admitted") === 1L)
-        .select("doc_id"), "doc_id")
-      .filter(size(graft.ops.TextOps.tokens(col("text"))) >= 3)
-    stageStreamFile(s, stagingDir, "batch1.parquet",
-      docs.filter(col("doc_id") % 20 === 10).select("doc_id", "text")
-        .unionByName(admProbe.select((col("doc_id") + 10000000L).as("doc_id"),
-          concat(col("text"), lit("  ")).as("text")))
-        .unionByName(admProbe.select((col("doc_id") + 20000000L).as("doc_id"),
-          col("text"))),
-      t0 + 60000L)
+    val stagingDir = StreamingOps.stageFiles(s, "stream_src_admcpt", d, Seq(
+      "batch0.parquet" -> b1,
+      "batch1.parquet" -> withAdmitProbes(docs, b1.join(
+        seqB1Verdicts(s, d).filter(col("admitted") === 1L).select("doc_id"), "doc_id"))))
     corpusMd5(s, d); bandIndex(s, d) // force the static base ONCE
     val (cptBaseBloom, cptBloomWords) = corpusBloom(s, d)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
-    val stream = s.readStream
-      .schema(docs.select("doc_id", "text").schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir)
+    val stream = StreamingOps.stagedStream(s, stagingDir, b1.schema)
     def minorCompact(prefix: String,
         fold: Seq[DataFrame] => DataFrame = _.reduce(_ unionByName _)): Unit = {
       val segs = zones.listTables(s, "work").filter(_.startsWith(prefix)).sorted
@@ -1198,65 +1089,55 @@ object LlmQueries {
         // before the swap, so reading the old merged segment is safe),
         // then retire the per-batch segments
         zones.write(merged, "work", s"${prefix}merged")
-        segs.filterNot(_ == s"${prefix}merged").foreach { tb =>
-          val hp = new org.apache.hadoop.fs.Path(
-            new java.io.File(zones.tablePath("work", tb)).getAbsolutePath)
-          hp.getFileSystem(hconf).delete(hp, true)
-        }
+        segs.filterNot(_ == s"${prefix}merged").foreach(zones.drop(s, "work", _))
       }
     }
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        def deltas(prefix: String): Seq[DataFrame] =
-          zones.listTables(s, "work").filter(_.startsWith(prefix)).sorted
-            .map(tb => zones.read(s, "work", tb))
-        val md5All = (corpusMd5(s, d) +: deltas("delta_md5_")).reduce(_ unionByName _)
-        val idxAll = (bandIndex(s, d) +: deltas("delta_band_")).reduce(_ unionByName _)
-        val corpusAll = (corpus +: deltas("delta_docs_")).reduce(_ unionByName _)
-        // (r18) the shield probes base ∪ the (compacted) segment filters
-        val bloomAll = mergeBloomStates(cptBaseBloom +: deltas("delta_bloom_"))
-        // stable reuseKey — see the sequential stream twin
-        val v = admissionVerdictsAgainst(corpusAll, md5All, idxAll, batch,
-          bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
-            s, bloomAll, cptBloomWords, "__h",
-            reuseKey = Some(s"admcpt_shield_$key"))))
-          .withColumn("batch", lit(id + 1L))
-        zones.write(v, "work", s"admit_batch_$id")
-        val adm = batch.join(
-          zones.read(s, "work", s"admit_batch_$id")
-            .filter(col("admitted") === 1L).select("doc_id"), "doc_id")
-        // (r21) segment writes overlap as concurrent jobs (guide §2.6);
-        // the Bloom write chains after the md5 write inside its thunk
-        concurrently(Seq(
-          () => {
-            zones.write(adm.select(md5(col("text")).as("__h")).distinct(),
-              "work", s"delta_md5_b$id")
-            zones.write(
-              graft.ops.SketchOps.bloomBits(
-                zones.read(s, "work", s"delta_md5_b$id"), col("__h"),
-                words = cptBloomWords),
-              "work", s"delta_bloom_b$id")
-          },
-          () => zones.write(
-            DedupOps.lshBandsFromSigArray(
-              DedupOps.minhashSignatureArray(adm, "doc_id", "text", k = 8, w = 3),
-              "doc_id", k = 8, rows = 4),
-            "work", s"delta_band_b$id"),
-          () => zones.write(adm, "work", s"delta_docs_b$id")))
-        // MINOR COMPACTION: fold every segment into one per structure —
-        // the Bloom folds by bit_or, its own associativity (r18); the
-        // four structures' folds are independent (r21: concurrent jobs)
-        concurrently(Seq(
-          () => minorCompact("delta_md5_"),
-          () => minorCompact("delta_band_"),
-          () => minorCompact("delta_docs_"),
-          () => minorCompact("delta_bloom_", mergeBloomStates)))
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    StreamingOps.drainEach(stream, ckpt) { (batch, id) =>
+      def deltas(prefix: String): Seq[DataFrame] =
+        zones.listTables(s, "work").filter(_.startsWith(prefix)).sorted
+          .map(tb => zones.read(s, "work", tb))
+      val md5All = (corpusMd5(s, d) +: deltas("delta_md5_")).reduce(_ unionByName _)
+      val idxAll = (bandIndex(s, d) +: deltas("delta_band_")).reduce(_ unionByName _)
+      val corpusAll = (corpus +: deltas("delta_docs_")).reduce(_ unionByName _)
+      // (r18) the shield probes base ∪ the (compacted) segment filters
+      val bloomAll = mergeBloomStates(cptBaseBloom +: deltas("delta_bloom_"))
+      // stable reuseKey — see the sequential stream twin
+      val v = admissionVerdictsAgainst(corpusAll, md5All, idxAll, batch,
+        bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
+          s, bloomAll, cptBloomWords, "__h",
+          reuseKey = Some(s"admcpt_shield_$key"))))
+        .withColumn("batch", lit(id + 1L))
+      zones.write(v, "work", s"admit_batch_$id")
+      val adm = batch.join(
+        zones.read(s, "work", s"admit_batch_$id")
+          .filter(col("admitted") === 1L).select("doc_id"), "doc_id")
+      // (r21) segment writes overlap as concurrent jobs (guide §2.6);
+      // the Bloom write chains after the md5 write inside its thunk
+      concurrently(Seq(
+        () => {
+          zones.write(adm.select(md5(col("text")).as("__h")).distinct(),
+            "work", s"delta_md5_b$id")
+          zones.write(
+            graft.ops.SketchOps.bloomBits(
+              zones.read(s, "work", s"delta_md5_b$id"), col("__h"),
+              words = cptBloomWords),
+            "work", s"delta_bloom_b$id")
+        },
+        () => zones.write(
+          DedupOps.lshBandsFromSigArray(
+            DedupOps.minhashSignatureArray(adm, "doc_id", "text", k = 8, w = 3),
+            "doc_id", k = 8, rows = 4),
+          "work", s"delta_band_b$id"),
+        () => zones.write(adm, "work", s"delta_docs_b$id")))
+      // MINOR COMPACTION: fold every segment into one per structure —
+      // the Bloom folds by bit_or, its own associativity (r18); the
+      // four structures' folds are independent (r21: concurrent jobs)
+      concurrently(Seq(
+        () => minorCompact("delta_md5_"),
+        () => minorCompact("delta_band_"),
+        () => minorCompact("delta_docs_"),
+        () => minorCompact("delta_bloom_", mergeBloomStates)))
+    }
     streamBatchUnion(s, zones, "admit_batch_")
       .orderBy("batch", "doc_id")
   }
@@ -1599,23 +1480,12 @@ object LlmQueries {
       .orderBy("item_id")
   }
 
-  /** An `embeddings` file-source stream (symlink staging dir, the
-    * docsStream contract).
+  /** The `embeddings` table as a file-source stream
+    * ([[StreamingOps.tableStream]]), ids normalized to long.
     */
-  private def embsStream(s: SparkSession, d: String, stageName: String): org.apache.spark.sql.DataFrame = {
-    // dataset-keyed like docsStream
-    val srcDir = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/${stageName}_${graft.io.Zones.pathKey(d)}")
-    val p = new org.apache.hadoop.fs.Path(srcDir.getAbsolutePath)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    java.nio.file.Files.createDirectories(srcDir.toPath)
-    java.nio.file.Files.createSymbolicLink(
-      srcDir.toPath.resolve("embeddings.parquet"),
-      java.nio.file.Paths.get(s"$d/embeddings.parquet"))
-    val onDisk = s.read.parquet(s"$d/embeddings.parquet").schema
-    s.readStream.schema(onDisk).parquet(srcDir.getAbsolutePath)
+  private def embsStream(s: SparkSession, d: String, stageName: String): DataFrame =
+    StreamingOps.tableStream(s, d, "embeddings", stageName)
       .withColumn("vec_id", col("vec_id").cast("long"))
-  }
 
   /** STREAMING semantic admission — [[dedupSemanticIncremental]]'s verdict
     * computed as a real Structured Streaming query: batch vectors arrive
@@ -1655,7 +1525,7 @@ object LlmQueries {
       .agg(max(struct(col("__sq"), (-col("corpus_id")).as("__nid"))).as("__b"))
       .select(col("item_id"), (-col("__b.__nid")).as("dup_of"),
         (col("__b.__sq").cast("double") / lit(1e6)).as("best_sim"))
-    val drained = EventQueries.drainToTable(best, "stream_semdedup_sink", "complete")
+    val drained = StreamingOps.drainToTable(best, "stream_semdedup_sink", "complete")
     SimOps.mapSideAssign(e.filter(col("vec_id") % 10 === 0), centsSeq, "embedding")
       .select(col("vec_id").as("item_id"), col("centroid_id"))
       .join(drained, Seq("item_id"), "left")
@@ -2053,12 +1923,7 @@ object LlmQueries {
       zones.read(s, "work", "base_index_compacted")
         .groupBy("centroid_id").agg(max(col("__nsalt")).as("__nsalt")),
       "work", "salts_compacted")
-    val hconf = s.sparkContext.hadoopConfiguration
-    segNames.foreach { n =>
-      val hp = new org.apache.hadoop.fs.Path(
-        new java.io.File(zones.tablePath("work", n)).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true)
-    }
+    segNames.foreach(zones.drop(s, "work", _))
     SimOps.ivfTopKServe(
       zones.read(s, "work", "base_index_compacted"), cents,
       e.filter(col("vec_id") % 100 === 0),
@@ -2077,30 +1942,17 @@ object LlmQueries {
   val streamIvfServe: Q = (s, d) => {
     val key = graft.io.Zones.pathKey(d)
     val zones = graft.io.Zones.forPurpose(s"annserve_$key")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
-    rm(zones.root)
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_annserve_$key").getAbsolutePath
-    rm(ckpt)
+    zones.clear(s)
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_annserve", d)
     val (index, cents, salts) = ivfStoredIndex(s, d)
     val stream = embsStream(s, d, "stream_src_annserve")
       .filter(col("vec_id") % 100 === 0)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        zones.write(
-          SimOps.ivfTopKServe(index, cents, batch,
-            "vec_id", "embedding", k = 5, nprobe = 2, salts = Some(salts)),
-          "work", s"serve_$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    StreamingOps.drainEach(stream, ckpt) { (batch, id) =>
+      zones.write(
+        SimOps.ivfTopKServe(index, cents, batch,
+          "vec_id", "embedding", k = 5, nprobe = 2, salts = Some(salts)),
+        "work", s"serve_$id")
+    }
     streamBatchUnion(s, zones, "serve_")
       .orderBy("query_id", "rk")
   }

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.sources.{JinjaLite, OhdsiSql}
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1523,33 +1524,9 @@ object OhdsiTemplateQueries {
     * semantics of the published SQL.
     */
   val streamPkSwapMerge: Q = (s, d) => {
-    val key = graft.io.Zones.pathKey(d)
     val db = "graft_stream_up"
     s.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    val hconf = s.sparkContext.hadoopConfiguration
-    def rm(p: String): Unit = {
-      val hp = new org.apache.hadoop.fs.Path(new java.io.File(p).getAbsolutePath)
-      hp.getFileSystem(hconf).delete(hp, true); ()
-    }
-    val ckpt = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_ckpt_pkswap_$key").getAbsolutePath
-    rm(ckpt)
-    val stagingDir = new java.io.File(
-      s"${graft.io.Zones.defaultRoot}/stream_src_pkswap_$key").getAbsolutePath
-    rm(stagingDir)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stagingDir))
-    def stageOne(name: String, part: DataFrame, mtime: Long): Unit = {
-      val tmp = s"$stagingDir/__tmp_$name"
-      part.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val fs = new org.apache.hadoop.fs.Path(tmp).getFileSystem(hconf)
-      val f = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
-      val dst = new org.apache.hadoop.fs.Path(s"$stagingDir/$name")
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      fs.setTimes(dst, mtime, -1)
-      ()
-    }
+    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_pkswap", d)
     val wave0 = t(s, d, "nation").select(
       concat(lit("P_"), col("n_name")).as("provider_id"),
       concat(lit("SRC_"), col("n_name")).as("specialty_concept_id"))
@@ -1558,9 +1535,8 @@ object OhdsiTemplateQueries {
       .select(
         concat(lit("PZ_"), col("r_name")).as("provider_id"),
         concat(lit("SRC_"), col("n_name")).as("specialty_concept_id"))
-    val t0 = System.currentTimeMillis()
-    stageOne("wave0.parquet", wave0, t0)
-    stageOne("wave1.parquet", wave1, t0 + 60000L)
+    val stagingDir = StreamingOps.stageFiles(s, "stream_src_pkswap", d,
+      Seq("wave0.parquet" -> wave0, "wave1.parquet" -> wave1))
     stage(s, db, "provider__specialty_concept_id_usagi", t(s, d, "nation").select(
       concat(lit("SRC_"), col("n_name")).as("sourceCode"),
       (col("n_nationkey") + 100).cast("int").as("conceptId"),
@@ -1576,19 +1552,12 @@ object OhdsiTemplateQueries {
       "events" -> Seq.empty[String],
       "upload_tables" -> Seq("stream"))
     OhdsiSql.executeAll(s, JinjaLite.render(PkSwapCreateSql, baseVars, listVars))
-    val stream = s.readStream.schema(wave0.schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        stage(s, db, "provider__upload__stream", batch)
-        OhdsiSql.executeAll(s, JinjaLite.render(PkSwapMergeSql, baseVars,
-          listVars + ("sql_files" -> Seq(s"batch_$id"))))
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    StreamingOps.drainEach(
+      StreamingOps.stagedStream(s, stagingDir, wave0.schema), ckpt) { (batch, id) =>
+      stage(s, db, "provider__upload__stream", batch)
+      OhdsiSql.executeAll(s, JinjaLite.render(PkSwapMergeSql, baseVars,
+        listVars + ("sql_files" -> Seq(s"batch_$id"))))
+    }
     s.table(s"$db.provider_id_swap").orderBy("y")
   }
 

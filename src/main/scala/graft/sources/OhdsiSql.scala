@@ -516,10 +516,11 @@ object OhdsiSql {
   }
 
   /** Drop-and-recreate a catalog table (`[db.]table` or
-    * `catalog.db.table`, catalog stripped — the session has one). The
-    * files at the location are moved aside before the DROP and deleted
-    * after the recreate: a LOCATION left by a previous JVM whose
-    * in-memory catalog forgot the entry would otherwise fail the
+    * `catalog.db.table`, catalog stripped — the session has one) at its
+    * registered location, or at the conventional warehouse path when it
+    * has none. The files at the location are moved aside before the DROP
+    * and deleted after the recreate: a LOCATION left by a previous JVM
+    * whose in-memory catalog forgot the entry would otherwise fail the
     * recreate (the r15 lesson).
     *
     * Swap-by-rename (optimization guide §6 — write once, move the
@@ -557,12 +558,20 @@ object OhdsiSql {
       case None => df
     }
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val loc = new org.apache.hadoop.fs.Path(warehouse + s"/$db.db/$tbl")
+    val prior =
+      if (!spark.catalog.tableExists(dbTbl)) None
+      else Some(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tbl, Some(db))))
+    // the table's REGISTERED location when it has one (a table created
+    // elsewhere keeps living there, and its old files are the ones to
+    // retire), else the conventional warehouse path
+    val loc = prior.map(t => new org.apache.hadoop.fs.Path(t.location)).getOrElse(
+      new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir") + s"/$db.db/$tbl"))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // dot-prefixed staging: invisible to Spark file listing, cannot
-    // collide with a table name
-    val staging = new org.apache.hadoop.fs.Path(warehouse + s"/$db.db/.graft_stage_$tbl")
+    // dot-prefixed staging beside it (a same-filesystem rename): invisible
+    // to Spark file listing, cannot collide with a table name
+    val staging = new org.apache.hadoop.fs.Path(loc.getParent, s".graft_stage_$tbl")
     def register(schema: org.apache.spark.sql.types.StructType, location: String): Unit = {
       val props = clusterBy.map(keys =>
         s" TBLPROPERTIES ('graft.cluster_by' = '${keys.mkString(",")}')").getOrElse("")
@@ -570,10 +579,6 @@ object OhdsiSql {
         s"USING parquet LOCATION '$location'$props")
       ()
     }
-    val prior =
-      if (!spark.catalog.tableExists(dbTbl)) None
-      else Some(spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl, Some(db))))
     fs.delete(staging, true)
     try {
       fresh.write.mode("overwrite").parquet(staging.toString)

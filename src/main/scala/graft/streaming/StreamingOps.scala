@@ -1,7 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.io.Zones
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Beyond-parity streaming surface. The reference is strictly batch
   * (SURVEY.md §2.9 — no watermarks/windows/state anywhere in
@@ -10,6 +14,10 @@ import org.apache.spark.sql.functions._
   * ingest of the raw zone: the transformations are plain DataFrame ops, so
   * they bind to `spark.readStream` sources unchanged, and state size is
   * bounded by the watermark (late data past it is dropped, state evicted).
+  *
+  * It is also the one streaming HARNESS: every Structured Streaming query
+  * in the engine states its batch logic and leaves staging, checkpoints
+  * and triggers to the functions at the end of this object.
   */
 object StreamingOps {
 
@@ -110,20 +118,11 @@ object StreamingOps {
         col("n_event_types"))
   }
 
-  /** Streaming upsert sink: run `stream` to completion, folding every
-    * micro-batch into the zone table `table` — per key, the MAX of
-    * `structCol` (an associative, commutative fold, so the stored state
-    * is independent of how the trigger splits the source into batches,
-    * and re-running is idempotent). The streaming counterpart of the
-    * batch MERGE (J8): each batch rewrites a key-cardinality-bounded
-    * dimension table via the atomic-replace write; fact-sized streams
-    * append, they don't fold.
-    */
   /** One micro-batch of the fold — exposed so the spec can drive the
     * LITERAL production body through explicit MemoryStream batches.
     */
   def foldBatch(
-      zones: graft.io.Zones,
+      zones: Zones,
       table: String,
       keyCols: Seq[String],
       structCol: Column)(batch: DataFrame): Unit = {
@@ -138,22 +137,24 @@ object StreamingOps {
       "work", table)
   }
 
+  /** Streaming upsert sink: run `stream` to completion, folding every
+    * micro-batch into the zone table `table` — per key, the MAX of
+    * `structCol` (an associative, commutative fold, so the stored state
+    * is independent of how the trigger splits the source into batches,
+    * and re-running is idempotent). The streaming counterpart of the
+    * batch MERGE (J8): each batch rewrites a key-cardinality-bounded
+    * dimension table via the atomic-replace write; fact-sized streams
+    * append, they don't fold.
+    */
   def upsertFold(
       stream: DataFrame,
-      zones: graft.io.Zones,
+      zones: Zones,
       table: String,
       keyCols: Seq[String],
       structCol: Column,
-      checkpointDir: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.AvailableNow()): Unit = {
-    val fold = foldBatch(zones, table, keyCols, structCol) _
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => fold(batch) }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-    try q.awaitTermination() finally q.stop()
+      checkpointDir: String): Unit = {
+    drainEach(stream, checkpointDir)((batch, _) =>
+      foldBatch(zones, table, keyCols, structCol)(batch))
   }
 
   /** Stream-STREAM inner join with an event-time range bound: each left
@@ -213,4 +214,140 @@ object StreamingOps {
         col(tsRight) <= col(tsLeft) + expr(s"INTERVAL $within"))
       .drop("__rk", "__b", "__rb")
   }
+
+  // ---- The harness: scratch dirs, sources and AvailableNow drains ----
+
+  /** A fresh scratch directory `<Zones.defaultRoot>/<name>_<pathKey(d)>`
+    * (absolute; deleted, not created): a checkpoint or a staged source
+    * keyed by dataset, so runs over two datasets in one JVM never clobber
+    * each other. A query clears its checkpoint together with the state
+    * it folds into — a stale checkpoint beside cleaned state replays
+    * nothing.
+    */
+  def scratchDir(s: SparkSession, name: String, d: String): String =
+    freshDir(s, s"${name}_${Zones.pathKey(d)}")
+
+  private def freshDir(s: SparkSession, leaf: String): String = {
+    val p = new Path(new java.io.File(s"${Zones.defaultRoot}/$leaf").getAbsolutePath)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    p.toString
+  }
+
+  /** Stage `parts` as the source dir `scratchDir(s, name, d)`, one
+    * single-file parquet per `(fileName, part)`, for [[stagedStream]]:
+    * each part is written to `__tmp_<fileName>`, its one part file renamed
+    * into the dir and the tmp dir deleted. The files get STRICTLY
+    * increasing mtimes in `parts` order (t0, t0 + 60 s, ...), set
+    * explicitly: the file source orders by modification time, and
+    * back-to-back writes on a coarse-mtime filesystem can tie and process
+    * in the wrong order. Returns the dir.
+    */
+  def stageFiles(s: SparkSession, name: String, d: String,
+      parts: Seq[(String, DataFrame)]): String = {
+    val dir = scratchDir(s, name, d)
+    val t0 = System.currentTimeMillis()
+    parts.zipWithIndex.foreach { case ((fileName, part), i) =>
+      val tmp = new Path(dir, s"__tmp_$fileName")
+      part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val fs = tmp.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val f = fs.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+      val dst = new Path(dir, fileName)
+      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
+      fs.delete(tmp, true)
+      fs.setTimes(dst, t0 + i * 60000L, -1)
+    }
+    dir
+  }
+
+  /** A stream over a [[stageFiles]] dir: one staged file per micro-batch,
+    * so batch ids follow the staging order.
+    */
+  def stagedStream(s: SparkSession, dir: String, schema: StructType): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** A file-source stream of the dataset table `$d/<table>.parquet`.
+    * Streaming sources need a fixed schema: it comes from the table's own
+    * footer (one driver-side probe, no data read), never from an assumed
+    * encoding — callers normalize columns (`ts` via
+    * `Tables.normalizedTs`, ids cast to long) as the batch loader does.
+    * An engine-written table is a DIRECTORY of part files and streams
+    * directly: a symlink to it lists ZERO files (the file source treats
+    * the symlinked subdir as a partition dir with no leaves; the sf1 soak
+    * silently streamed an empty source until this branch existed). A
+    * single FILE, the testdata layout, is staged as a symlink in
+    * the fresh dir `scratchDir(s, stageName, d)` (the source only accepts
+    * directories; no data copied).
+    */
+  def tableStream(s: SparkSession, d: String, table: String, stageName: String): DataFrame = {
+    val file = java.nio.file.Paths.get(s"$d/$table.parquet").toAbsolutePath
+    val onDisk = s.read.parquet(file.toString).schema
+    val src =
+      if (java.nio.file.Files.isDirectory(file)) file.toString
+      else {
+        val dir = java.nio.file.Paths.get(scratchDir(s, stageName, d))
+        java.nio.file.Files.createDirectories(dir)
+        java.nio.file.Files.createSymbolicLink(dir.resolve(file.getFileName), file)
+        dir.toString
+      }
+    s.readStream.schema(onDisk).parquet(src)
+  }
+
+  /** Run `stream` to completion (AvailableNow), handing `body` each
+    * micro-batch and its id. The query is stopped whatever happens, and
+    * its failure propagates. `ckpt` is the caller's [[scratchDir]].
+    */
+  def drainEach(stream: DataFrame, ckpt: String)(body: (DataFrame, Long) => Unit): Unit =
+    runToEnd(stream.writeStream.foreachBatch(body), ckpt)
+
+  /** Drain `df` into the memory sink `sink` (output `mode`, fresh
+    * checkpoint `stream_ckpt_<sink>`) and return the resulting table.
+    *
+    * State-store sizing: each stateful operator runs ONE state-store
+    * instance per shuffle partition per micro-batch, pinned into the
+    * checkpoint at first start from the session's
+    * `spark.sql.shuffle.partitions`. The drain never changes that conf:
+    * the session is shared with concurrent batch queries.
+    */
+  def drainToTable(df: DataFrame, sink: String, mode: String): DataFrame = {
+    val s = df.sparkSession
+    runToEnd(df.writeStream.format("memory").queryName(sink).outputMode(mode),
+      freshDir(s, s"stream_ckpt_$sink"))
+    s.table(sink)
+  }
+
+  private def runToEnd(w: DataStreamWriter[Row], ckpt: String): Unit = {
+    val q = w.option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+  }
+
+  private val LastBatch = "__last_batch"
+
+  /** Fold micro-batch `batchId` into the zone table `work/<table>` through
+    * `merge(stored, batch)` (`stored` is None on the first batch) — safe
+    * under foreachBatch's AT-LEAST-ONCE delivery: after a failure or
+    * restart the same id can re-execute, and an unconditional merge would
+    * count it twice. The last applied id rides IN the table (a constant
+    * `__last_batch` column), so the skip decision and the merged state
+    * commit in ONE atomic staging-then-swap write — no separate meta
+    * table to drift. The state must be bounded (it is rewritten, as one
+    * file, per batch); read it with [[guardedState]].
+    */
+  def guardedFold(zones: Zones, table: String, batch: DataFrame, batchId: Long)(
+      merge: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
+    val s = batch.sparkSession
+    val stored =
+      if (zones.listTables(s, "work").contains(table)) Some(zones.read(s, "work", table))
+      else None
+    val lastApplied = stored.map(
+      _.agg(coalesce(max(col(LastBatch)), lit(-1L))).head.getLong(0)).getOrElse(-1L)
+    // the zone write is staging-then-swap, so reading the prior table
+    // while writing the next is safe
+    if (batchId > lastApplied)
+      zones.write(merge(stored.map(_.drop(LastBatch)), batch)
+        .withColumn(LastBatch, lit(batchId)).coalesce(1), "work", table)
+  }
+
+  /** The state a [[guardedFold]] stored in `work/<table>`. */
+  def guardedState(s: SparkSession, zones: Zones, table: String): DataFrame =
+    zones.read(s, "work", table).drop(LastBatch)
 }

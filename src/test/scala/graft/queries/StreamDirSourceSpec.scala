@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 
 /** The empty-source drift fixture (round-8's streaming sibling of
@@ -9,7 +10,9 @@ import org.apache.spark.sql.functions._
   * streaming soaks silently timed an empty source until `eventsStream`
   * learned to stream directories directly. This pins both layouts: the
   * stream must drain the SAME row count the batch reader sees, whatever
-  * shape `events.parquet` takes on disk.
+  * shape `events.parquet` takes on disk — and the directory layout for
+  * `documents`, whose source kept staging a symlink after events was
+  * fixed (every source is now `StreamingOps.tableStream`).
   */
 class StreamDirSourceSpec extends SparkSpec {
 
@@ -25,7 +28,7 @@ class StreamDirSourceSpec extends SparkSpec {
   test("eventsStream drains a directory-shaped events dataset completely") {
     val dir = java.nio.file.Files.createTempDirectory("evdir").toString
     fixture(100).repartition(4).write.parquet(s"$dir/events.parquet")
-    val drained = EventQueries.drainToTable(
+    val drained = StreamingOps.drainToTable(
       EventQueries.eventsStream(spark, dir, "spec_ev_dir"),
       "spec_dir_sink", "append")
     assert(drained.count() === 100L,
@@ -43,8 +46,8 @@ class StreamDirSourceSpec extends SparkSpec {
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     val stateDir = new java.io.File(
       s"${graft.io.Zones.defaultRoot}/stream_ckpt_spec_knob_default_sink/state/0")
-    EventQueries.drainToTable(
-      graft.streaming.StreamingOps.windowedEventCounts(
+    StreamingOps.drainToTable(
+      StreamingOps.windowedEventCounts(
         EventQueries.eventsStream(spark, dir, "spec_ev_knob_a"), "ts", "event_type"),
       "spec_knob_default_sink", "complete")
     val stateDirs = Option(stateDir.listFiles())
@@ -63,10 +66,23 @@ class StreamDirSourceSpec extends SparkSpec {
       .find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.copy(part.toPath,
       java.nio.file.Paths.get(dir, "events.parquet"))
-    val drained = EventQueries.drainToTable(
+    val drained = StreamingOps.drainToTable(
       EventQueries.eventsStream(spark, dir, "spec_ev_file"),
       "spec_file_sink", "append")
     assert(drained.count() === 50L,
       "single-file events dataset not fully drained by the stream source")
+  }
+
+  test("docsStream drains a directory-shaped documents dataset completely") {
+    val dir = java.nio.file.Files.createTempDirectory("docdir").toString
+    spark.range(0, 80).select(
+      col("id").cast("int").as("doc_id"),
+      concat(lit("doc "), col("id").cast("string")).as("text"))
+      .repartition(4).write.parquet(s"$dir/documents.parquet")
+    val drained = StreamingOps.drainToTable(
+      LlmQueries.docsStream(spark, dir, "spec_docs_dir"), "spec_docs_dir_sink", "append")
+    assert(drained.count() === 80L,
+      "directory-shaped documents dataset not fully drained by the stream source")
+    assert(drained.schema("doc_id").dataType === org.apache.spark.sql.types.LongType)
   }
 }

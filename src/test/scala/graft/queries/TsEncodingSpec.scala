@@ -100,7 +100,7 @@ class TsEncodingSpec extends SparkSpec {
 
   test("eventsStream yields the identical frame for all three ts encodings") {
     val frames = dirs.map { case (enc, d) =>
-      val out = EventQueries.drainToTable(
+      val out = graft.streaming.StreamingOps.drainToTable(
         EventQueries.eventsStream(spark, d, s"ts_enc_stream_$enc"),
         s"ts_enc_sink_$enc", "append")
       assert(out.schema("ts").dataType == org.apache.spark.sql.types.TimestampType,
@@ -114,7 +114,7 @@ class TsEncodingSpec extends SparkSpec {
 
   test("stream and batch agree row-for-row on the NTZ encoding") {
     val batch = collectSorted(Tables.load(spark, dirs("ntz"), "events"))
-    val streamed = collectSorted(EventQueries.drainToTable(
+    val streamed = collectSorted(graft.streaming.StreamingOps.drainToTable(
       EventQueries.eventsStream(spark, dirs("ntz"), "ts_enc_stream_xcheck"),
       "ts_enc_sink_xcheck", "append"))
     assert(streamed == batch)

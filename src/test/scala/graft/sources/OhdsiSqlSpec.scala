@@ -645,6 +645,34 @@ class OhdsiSqlSpec extends SparkSpec {
       .collect().map(_.getString(1)).toSeq === Seq("z", "b"))
   }
 
+  test("replaceCatalogTable rewrites a table at its registered location outside the warehouse") {
+    import org.apache.hadoop.fs.Path
+    spark.sql("CREATE DATABASE IF NOT EXISTS ohdsi_spec_db")
+    spark.sql("DROP TABLE IF EXISTS ohdsi_spec_db.elsewhere")
+    val conventional = new Path(
+      spark.conf.get("spark.sql.warehouse.dir") + "/ohdsi_spec_db.db/elsewhere")
+    val fs = conventional.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(conventional, true)
+    val loc = new Path(
+      java.nio.file.Files.createTempDirectory("graft-elsewhere").toString + "/elsewhere")
+    spark.sql(s"CREATE TABLE ohdsi_spec_db.elsewhere (k BIGINT) USING parquet LOCATION '$loc'")
+    spark.sql("INSERT INTO ohdsi_spec_db.elsewhere VALUES (1), (2)")
+    def dataFiles = fs.listStatus(loc).map(_.getPath.getName)
+      .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSet
+    val oldFiles = dataFiles
+    assert(oldFiles.nonEmpty)
+    OhdsiSql.replaceCatalogTable(spark, "ohdsi_spec_db.elsewhere", Seq(7L).toDF("k"))
+    assert(spark.table("ohdsi_spec_db.elsewhere").as[Long].collect().toSeq === Seq(7L))
+    val registered = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier("elsewhere", Some("ohdsi_spec_db"))).location
+    assert(registered.getPath === loc.toUri.getPath, "the table moved off its location")
+    assert((dataFiles intersect oldFiles).isEmpty, s"old part files left at $loc")
+    assert(!fs.exists(new Path(loc.toString + ".__old")), "the demoted copy was left behind")
+    assert(!fs.exists(new Path(loc.getParent, ".graft_stage_elsewhere")))
+    assert(!fs.exists(conventional), "the replace wrote to the warehouse path")
+    spark.sql("DROP TABLE ohdsi_spec_db.elsewhere")
+  }
+
   test("block comments strip quote-aware, nested, and with embedded ';'/keywords") {
     // ADVICE r13: a template's /********/ header carries apostrophes,
     // semicolons, and statement keywords — all must be invisible to the

@@ -1,0 +1,41 @@
+package graft.streaming
+
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Regression guards on where streams start and how stream sources are
+  * staged: [[StreamingOps]] holds the drains, the stager and the table
+  * source, and the queries only wire them.
+  */
+class StreamingHarnessSpec extends AnyFunSuite {
+
+  private lazy val mainFiles: Seq[(Path, String)] = {
+    val s = Files.walk(Paths.get("src/main"))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p -> Files.readString(p))
+    finally s.close()
+  }
+
+  /** file name -> occurrences of `what`, for the files that contain it */
+  private def sites(what: String): Map[String, Int] =
+    mainFiles.collect { case (p, text) if text.contains(what) =>
+      p.getFileName.toString ->
+        java.util.regex.Pattern.quote(what).r.findAllMatchIn(text).size
+    }.toMap
+
+  test("streams start, and table sources are symlinked, only in StreamingOps") {
+    for (call <- Seq(".writeStream", "Trigger.AvailableNow", "createSymbolicLink"))
+      assert(sites(call).keySet == Set("StreamingOps.scala"),
+        s"$call outside StreamingOps: ${sites(call)}")
+  }
+
+  test("no local rm helper is left") {
+    assert(sites("def rm(").isEmpty, s"use Zones.drop / StreamingOps.scratchDir: ${sites("def rm(")}")
+  }
+
+  test("renames only in AtomicWrite, OhdsiSql's append path and the stream stager") {
+    assert(sites(".rename(") ==
+      Map("AtomicWrite.scala" -> 3, "OhdsiSql.scala" -> 1, "StreamingOps.scala" -> 1))
+  }
+}

@@ -158,4 +158,53 @@ class StreamingOpsSpec extends SparkSpec {
       .as[(Long, Timestamp)].collect().toSeq
     assert(out == Seq((1L, ts(30))))
   }
+
+  test("staged parts drain as one micro-batch each, in staging order") {
+    import org.apache.spark.sql.functions.lit
+    val d = java.nio.file.Files.createTempDirectory("stage_key").toString
+    // names deliberately out of alphabetical order: the pinned mtimes,
+    // not the names, order the batches
+    val parts = Seq("c.parquet", "a.parquet", "b.parquet").zipWithIndex.map {
+      case (name, i) => name -> spark.range(i * 10L, i * 10L + 10L).toDF("id")
+        .withColumn("part", lit(i))
+    }
+    val dir = StreamingOps.stageFiles(spark, "spec_stage_src", d, parts)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Int], Long)]()
+    StreamingOps.drainEach(
+      StreamingOps.stagedStream(spark, dir, parts.head._2.schema),
+      StreamingOps.scratchDir(spark, "spec_stage_ckpt", d)) { (batch, id) =>
+      seen.add((id, batch.select("part").distinct().as[Int].collect().toSeq, batch.count()))
+    }
+    assert(seen.toArray.toSeq == Seq((0L, Seq(0), 10L), (1L, Seq(1), 10L), (2L, Seq(2), 10L)))
+    val left = new java.io.File(dir).list().toSeq
+    assert(!left.exists(_.startsWith("__tmp_")), s"staging tmp dirs left behind: $left")
+    assert(left.filter(_.endsWith(".parquet")).sorted == Seq("a.parquet", "b.parquet", "c.parquet"))
+  }
+
+  test("the Achilles folds skip a replayed batch id") {
+    import org.apache.spark.sql.functions._
+    val zones = graft.io.Zones(
+      java.nio.file.Files.createTempDirectory("ach_replay").toString)
+    val ev = spark.range(0, 40).select(
+      col("id").as("event_id"), (col("id") % 3).as("user_id"),
+      when(col("id") % 2 === 0, "click").otherwise("view").as("event_type"),
+      (col("id") % 5).cast("double").as("value"),
+      timestamp_micros(lit(1700000000000000L) + col("id") * 86400000000L).as("ts"))
+    def rows(table: String, sumCol: String) = {
+      val st = StreamingOps.guardedState(spark, zones, table)
+      (st.collect().map(_.toString).sorted.toSeq,
+        st.agg(sum(col(sumCol))).head.getLong(0))
+    }
+    for ((fold, table, sumCol) <- Seq(
+        (graft.queries.EventQueries.achCountsFold(zones) _, "ach_partials", "count_value"),
+        (graft.queries.EventQueries.achDistFold(zones) _, "ach_dist_partials", "__cnt"))) {
+      fold(ev, 0L)
+      val once = rows(table, sumCol)
+      assert(once._2 > 0L, s"$table: empty fold")
+      fold(ev, 0L) // at-least-once redelivery of batch 0
+      assert(rows(table, sumCol) == once, s"$table: a replayed batch was merged again")
+      fold(ev, 1L) // a new batch id does merge
+      assert(rows(table, sumCol)._2 == 2 * once._2, s"$table: batch 1 not merged")
+    }
+  }
 }
