@@ -257,15 +257,27 @@ object GraftCli {
     * store the rows in the dqd zone (`data_quality.py:239-247`), export
     * the dashboard JSON when asked (`:391-421`). Returns the stored rows.
     * Without `rules` the battery runs the CDM rule catalog restricted to
-    * `model` ([[graft.queries.LifecycleQueries.cdmRules]]).
+    * `model` ([[graft.queries.LifecycleQueries.cdmRules]]). Every frame,
+    * the returned one included, is built on [[omopSession]].
     */
   def dataQuality(
-      s: SparkSession,
+      caller: SparkSession,
       zones: Zones,
       model: CdmModel = Cdm54.model,
       rules: DqdChecks.RuleSet = null,
       jsonPath: Option[Path] = None,
-      cohortDefinitionId: Option[Long] = None): DataFrame = {
+      cohortDefinitionId: Option[Long] = None): DataFrame =
+    dataQualityOn(omopSession(caller, zones, model), zones, model, rules, jsonPath,
+      cohortDefinitionId)
+
+  /** [[dataQuality]] with every frame built on `s` itself. */
+  private[graft] def dataQualityOn(
+      s: SparkSession,
+      zones: Zones,
+      model: CdmModel,
+      rules: DqdChecks.RuleSet,
+      jsonPath: Option[Path],
+      cohortDefinitionId: Option[Long]): DataFrame = {
     val ruleSet = Option(rules).getOrElse(graft.queries.LifecycleQueries.cdmRules(model))
     val omop = zones.listTables(s, "omop").toSet
     val base: String => DataFrame = tb =>
@@ -490,9 +502,14 @@ object GraftCli {
     * (`:190-200`), and — when the model carries CDM core tables — the
     * LITERAL-id core battery rows ([[graft.operators.OhdsiAchilles]]), so
     * stored results are keyed the way downstream OHDSI tooling expects.
-    * Returns the stored result-row count.
+    * Returns the stored result-row count. Every frame is built on
+    * [[omopSession]].
     */
-  def achilles(s: SparkSession, zones: Zones, model: CdmModel = Cdm54.model): Long = {
+  def achilles(caller: SparkSession, zones: Zones, model: CdmModel = Cdm54.model): Long =
+    achillesOn(omopSession(caller, zones, model), zones, model)
+
+  /** [[achilles]] with every frame built on `s` itself. */
+  private[graft] def achillesOn(s: SparkSession, zones: Zones, model: CdmModel): Long = {
     import graft.operators.{AchillesGen, OhdsiAchilles}
     val omop = zones.listTables(s, "omop").toSet
     val load: String => DataFrame = tb =>
@@ -523,8 +540,15 @@ object GraftCli {
       zones.write(OhdsiAchilles.resultConceptCounts(s, res),
         "achilles", "achilles_result_concept_count")
     }
-    zones.read(s, "achilles", "achilles_results").count()
+    zones.rows(s, "achilles", "achilles_results")
   }
+
+  /** The session a battery over `model`'s omop tables runs on:
+    * [[graft.GraftSession.forInput]] sized by their rows.
+    */
+  private def omopSession(s: SparkSession, zones: Zones, model: CdmModel): SparkSession =
+    graft.GraftSession.forInput(s,
+      zones.rows(s, "omop", model.tables, graft.GraftSession.InterpretedRowCutoff))
 
   // ------------------------------------------------------------------ main
 

@@ -77,14 +77,29 @@ object FolderEtl {
 
   /** Run the folder ETL. Returns per-processed-table row counts (tables
     * without an activated query are skipped and absent from the result).
+    * Every frame is built on the session [[graft.GraftSession.forInput]]
+    * picks for the raw zone's rows: interpreted below the cutoff, the
+    * caller's own session at or above it.
     */
   def run(
-      s: SparkSession,
+      caller: SparkSession,
       model: CdmModel,
       zones: Zones,
       folder: Path,
       flags: EtlFlags = EtlFlags(),
-      maxParallelTables: Int = 9): Map[String, Long] = {
+      maxParallelTables: Int = 9): Map[String, Long] =
+    runOn(graft.GraftSession.forInput(caller, zones.rows(caller, "raw",
+        zones.listTables(caller, "raw"), graft.GraftSession.InterpretedRowCutoff)),
+      model, zones, folder, flags, maxParallelTables)
+
+  /** [[run]] with every frame built on `s` itself. */
+  private[graft] def runOn(
+      s: SparkSession,
+      model: CdmModel,
+      zones: Zones,
+      folder: Path,
+      flags: EtlFlags,
+      maxParallelTables: Int): Map[String, Long] = {
     registerRawViews(s, zones)
     EtlRunner(model, maxParallelTables).runFlowPipelined(model.tables, flags)(
       prepareTable = (tb, qs) => prepareTable(s, model, zones, folder, tb, qs, flags),
@@ -95,7 +110,8 @@ object FolderEtl {
   /** One table's barrier-relevant stage-1 prefix — user queries to the
     * work upload, usagi/custom uploads, and the append-only PK-swap WRITE
     * (the one artifact dependent levels read). Returns the finalize thunk
-    * (FK rewrite through parent swaps, dedup, clustered gold write, count)
+    * (FK rewrite through parent swaps, dedup, clustered gold write,
+    * footer row count)
     * for [[EtlRunner.runFlowPipelined]] to drain off the critical path;
     * None when the folder holds no activated query for the table (the
     * reference only processes tables with work).
@@ -212,7 +228,7 @@ object FolderEtl {
     val clusterCols = model.clustering.getOrElse(tb, Seq.empty)
       .filter(df.columns.contains)
     timed(s"$tb omop-write")(zones.writeClustered(df, clusterCols, "omop", tb))
-    timed(s"$tb count")(zones.read(s, "omop", tb).count())
+    zones.rows(s, "omop", tb)
   }
 
   /** Stage 2: rewrite each polymorphic event column of `tb` through the

@@ -51,6 +51,43 @@ final case class Zones(root: String) {
   def read(spark: SparkSession, zone: String, table: String): DataFrame =
     AtomicWrite.readTable(spark, tablePath(zone, table))
 
+  /** Rows of `table`, summed from the row groups its parquet footers
+    * record — read on the driver, so no Spark job runs. Files named `_*`
+    * or `.*` are skipped, as Spark's listing skips them; a missing table
+    * has 0 rows. An interrupted replace is recovered first, as [[read]]
+    * does.
+    */
+  def rows(spark: SparkSession, zone: String, table: String): Long =
+    rows(spark, zone, Seq(table), Long.MaxValue)
+
+  /** [[rows]] summed over `tables`, reading footers only until the sum
+    * reaches `upTo`: exact below `upTo`, at least `upTo` otherwise, so a
+    * large zone costs a few footer reads.
+    */
+  def rows(spark: SparkSession, zone: String, tables: Seq[String], upTo: Long): Long = {
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = tables.iterator.flatMap { tb =>
+      val path = tablePath(zone, tb)
+      AtomicWrite.recover(spark, path)
+      val dir = new Path(path)
+      val fs = dir.getFileSystem(conf)
+      if (!fs.exists(dir)) Iterator.empty
+      else fs.listStatus(dir).iterator.filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+    }
+    var n = 0L
+    while (n < upTo && files.hasNext) {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(files.next(), conf))
+      try n += r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+      finally r.close()
+    }
+    n
+  }
+
   /** S12: work-table listing — the INFORMATION_SCHEMA.COLUMNS DISTINCT
     * table_name analogue (`cleanup/all_work_table_names.sql.jinja:3-5`,
     * used by `bigquery/cleanup.py:39-48`): a bounded directory listing,

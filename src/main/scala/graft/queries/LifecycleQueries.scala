@@ -409,15 +409,11 @@ object LifecycleQueries {
     // This battery is plan-heavy and data-FREE: ~1.4k generated checks over
     // statically-empty relations compile thousands of Janino classes that
     // each evaluate zero rows — profiled at ~80% of wall time. Execute it
-    // interpreted — on a FORKED session (newSession: shared SparkContext,
-    // ISOLATED SQLConf; builder-time confs inherit via SparkConf). ADVICE
-    // r5: mutating the shared session's conf around the collect would race
-    // concurrent queries and could leak the disabled-codegen state. The
-    // real-data battery (dqd_field_level) keeps codegen — there the
-    // compiled code earns its cost per row.
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.codegen.wholeStage", "false")
-    s2.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    // on GraftSession's interpreted clone (its own conf, so the caller's is
+    // never mutated, and the caller's listeners see the collect), with AQE
+    // off on the clone too. The real-data battery (dqd_field_level) keeps
+    // the caller's session.
+    val s2 = graft.GraftSession.interpreted(s)
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     // one shared empty relation per table (each is referenced by its own
     // aggregate AND as the parent of every FK edge pointing at it), built

@@ -1224,11 +1224,17 @@ object OhdsiSql {
     }
     val delta = df.select(mapped.toSeq: _*)
     val clean = cleanName(target)
+    // route on what the name resolves to: a temp or global temp view is
+    // re-registered over old ∪ delta, a catalog table (dotted or bare)
+    // receives the rows
+    lazy val bare = spark.catalog.getTable(clean)
     if (clean.contains(".") && !clean.toLowerCase.startsWith("global_temp.")) {
       val parts = clean.split('.')
       val dbTbl = (if (parts.length == 3) s"${parts(1)}.${parts(2)}" else clean).toLowerCase
       appendCatalogTable(spark, dbTbl, delta)
-    } else reRegister(spark, target, tgt.unionByName(delta))
+    } else if (!clean.contains(".") && !bare.isTemporary)
+      appendCatalogTable(spark, s"${bare.database}.${bare.name}".toLowerCase, delta)
+    else reRegister(spark, target, tgt.unionByName(delta))
   }
 
   /** The `IF NOT EXISTS (probe-subquery) CREATE TABLE ...` conditional

@@ -4,7 +4,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Regression guards on how sessions are built: [[GraftSession.builder]]
-  * is the one place, and the test session carries its settings.
+  * is the one place, [[GraftSession.interpreted]] the one place a session's
+  * codegen mode changes, and the test session carries the builder's
+  * settings.
   */
 class SessionBuilderSpec extends SparkSpec {
 
@@ -20,6 +22,21 @@ class SessionBuilderSpec extends SparkSpec {
       .filterNot(_.getFileName.toString == "GraftSession.scala")
       .filter(p => Files.readString(p).contains(call))
     assert(copies.isEmpty, s"build sessions with GraftSession.builder: ${copies.mkString(", ")}")
+  }
+
+  test("codegen modes and session forks live in GraftSession") {
+    val main = scalaFiles("src/main")
+    def filesWith(text: String): Set[String] =
+      main.filter(p => Files.readString(p).contains(text)).map(_.getFileName.toString).toSet
+    Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode", ".newSession()")
+      .foreach(t => assert(filesWith(t).subsetOf(Set("GraftSession.scala")), s"$t: ${filesWith(t)}"))
+    assert(filesWith("cloneSession") === Set("GraftSession.scala", "GraftExpressionBridge.scala"))
+  }
+
+  test("no new sys.props / sys.env reads in src/main") {
+    val reads = scalaFiles("src/main")
+      .map(p => "sys\\.(props|env)".r.findAllIn(Files.readString(p)).size).sum
+    assert(reads === 14)
   }
 
   test("the test session carries GraftSession's settings") {

@@ -583,6 +583,24 @@ class OhdsiSqlSpec extends SparkSpec {
     assert(e.getMessage.contains("columns"))
   }
 
+  test("INSERT INTO a bare-name catalog table appends to the table, not a temp view") {
+    val loc = java.nio.file.Files.createTempDirectory("ohdsi_bare_ins").resolve("t")
+    spark.sql("DROP TABLE IF EXISTS ohdsi_bare_ins")
+    spark.sql(s"CREATE TABLE ohdsi_bare_ins (k BIGINT, v STRING) USING parquet LOCATION '$loc'")
+    try {
+      spark.sql("INSERT INTO ohdsi_bare_ins VALUES (1, 'a')")
+      OhdsiSql.executeAll(spark, "INSERT INTO ohdsi_bare_ins (k, v) SELECT 2 AS k, 'b' AS v")
+      assert(!spark.catalog.getTable("ohdsi_bare_ins").isTemporary,
+        "the INSERT shadowed the table with a temp view")
+      val rows = spark.newSession().table("ohdsi_bare_ins").orderBy("k")
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+      assert(rows.toSeq === Seq((1L, "a"), (2L, "b")))
+    } finally {
+      spark.catalog.dropTempView("ohdsi_bare_ins")
+      spark.sql("DROP TABLE IF EXISTS ohdsi_bare_ins")
+    }
+  }
+
   test("catalog INSERT appends by file move — existing files are never rewritten") {
     // r22: an INSERT materializes ONLY the delta and moves its files into
     // the table location; the existing bytes must stay byte-identical on
