@@ -557,11 +557,11 @@ object GraftCli {
     * through verbatim — the analogue of the reference backends' connection
     * options in riab.ini.
     */
-  private def session(backend: Map[String, String]): SparkSession = {
+  private def session(config: RiabConfig): SparkSession = {
+    val backend = config.backend
     val master = backend.getOrElse("master", sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-    val partitions =
-      backend.getOrElse("shuffle_partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val builder = graft.GraftSession.builder(master, partitions).appName("graft")
+    val partitions = config.shufflePartitions(sys.env.get("SPARK_GRAFT_CPUS"))
+    val builder = graft.GraftSession.builder(master, partitions.toString).appName("graft")
     backend.foreach { case (k, v) => if (k.startsWith("spark.")) builder.config(k, v) }
     builder.getOrCreate()
   }
@@ -609,7 +609,7 @@ object GraftCli {
     val config = RiabConfig.resolve(args.config)
     require(config.dbEngine == "spark", s"unsupported db_engine '${config.dbEngine}'")
     val zones = Zones(config.zonesRoot)
-    val s = session(config.backend)
+    val s = session(config)
     try {
       val folder = args.runEtl.orElse(args.createFolders).filter(_.nonEmpty)
         .orElse(config.cdmFolderPath)

@@ -27,8 +27,18 @@ final case class RiabConfig(sections: Map[String, Map[String, String]]) {
   def maxParallelTables: Int = positive("max_parallel_tables", 9)
   def maxWorkerThreadsPerTable: Int = positive("max_worker_threads_per_table", 16)
 
+  /** The Spark backend's `spark.sql.shuffle.partitions`: `[spark]
+    * shuffle_partitions`, else `cpus` (the `SPARK_GRAFT_CPUS` value), else
+    * 32 — each taken only when it is a positive integer, so a malformed
+    * knob falls back instead of failing the session build.
+    */
+  def shufflePartitions(cpus: Option[String]): Int =
+    (backend.get("shuffle_partitions") ++ cpus).flatMap(positiveInt).headOption.getOrElse(32)
+
   private def positive(key: String, default: Int): Int =
-    riab.get(key).flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(default)
+    riab.get(key).flatMap(positiveInt).getOrElse(default)
+
+  private def positiveInt(v: String): Option[Int] = v.trim.toIntOption.filter(_ > 0)
 
   /** The selected backend's section (`[spark]`, `[bigquery]`, ...). */
   def backend: Map[String, String] = sections.getOrElse(dbEngine, Map.empty)

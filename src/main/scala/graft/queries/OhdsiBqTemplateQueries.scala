@@ -1,96 +1,30 @@
 package graft.queries
 
-import graft.sources.{JinjaLite, OhdsiSql}
+import graft.sources.OhdsiSql
+import graft.sources.OhdsiSql.BigQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The BIGQUERY-dialect template tree run VERBATIM — the reference's
-  * PRIMARY backend (`/root/reference/src/riab/etl/bigquery/templates/`,
-  * 43 `.sql.jinja` files), every file vendored byte-identical as a
-  * `bq_*.sql.jinja` resource and executed through
-  * [[graft.sources.OhdsiSql.translateBigQuery]] (the GoogleSQL pre-pass)
-  * + the shared statement executor. Each entry pins to the SAME expected
-  * rows as its sql_server twin wherever the dialects' outputs agree —
-  * proving both published dialect trees produce identical results on
-  * this engine — and to a dialect-specific oracle where GoogleSQL types
-  * (INT64 -> bigint) or functions (FORMAT_TIMESTAMP) change the shape.
+  * PRIMARY backend (`src/riab/etl/bigquery/templates/`, 43 `.sql.jinja`
+  * files), every file vendored byte-identical as a `bq_*.sql.jinja`
+  * resource and run by [[OhdsiSql.runTemplate]] through
+  * [[OhdsiSql.translateBigQuery]] (the GoogleSQL pre-pass) + the shared
+  * statement executor.
   *
-  * The r15 flagship entries (bq pk-swap/omop-merge chain, concept
-  * swap/merge, dup rows, usagi checks/update) live in
-  * [[OhdsiTemplateQueries]]; this file completes the remaining 33
-  * templates (r16 — full-tree coverage enforced by TemplateCoverageSpec).
+  * Most bigquery entries are dialect twins: one function of the dialect
+  * in [[OhdsiTemplateQueries]], registered there under both names and
+  * pinned to the SAME expected rows as the sql_server entry wherever the
+  * dialects' outputs agree — proving both published trees produce
+  * identical results on this engine — or to a dialect-specific oracle
+  * below where GoogleSQL types (INT64 -> bigint) or functions
+  * (FORMAT_TIMESTAMP) change the shape. This file holds the entries with
+  * no sql_server twin fixture, and every bigquery oracle.
+  * `TemplateCoverageSpec` enforces full-tree coverage.
   */
 object OhdsiBqTemplateQueries {
   private type Q = (SparkSession, String) => DataFrame
   private val T = OhdsiTemplateQueries
-
-  private def res(name: String): String = {
-    val in = getClass.getResourceAsStream(s"/graft/ohdsi/$name.sql.jinja")
-    require(in != null, s"missing vendored template resource $name.sql.jinja")
-    scala.io.Source.fromInputStream(in, "UTF-8").mkString
-  }
-
-  /** Render + GoogleSQL-translate + execute one vendored bq template;
-    * `sqlRender = false` — the reference runs its BigQuery tree through
-    * Jinja + the BigQuery driver only, no SqlRender pass.
-    */
-  private def runBq(s: SparkSession, name: String,
-      scalars: Map[String, String],
-      lists: Map[String, Seq[String]] = Map.empty,
-      dicts: Map[String, Seq[(String, String)]] = Map.empty,
-      records: Map[String, Seq[Map[String, String]]] = Map.empty,
-      binds: Map[String, String] = Map.empty): Option[DataFrame] =
-    OhdsiSql.executeAll(s,
-      OhdsiSql.translateBigQuery(
-        JinjaLite.render(res(name), scalars, lists, dicts, records)),
-      binds = binds, sqlRender = false)
-
-  private def execBq(s: SparkSession, name: String,
-      scalars: Map[String, String],
-      lists: Map[String, Seq[String]] = Map.empty,
-      dicts: Map[String, Seq[(String, String)]] = Map.empty,
-      records: Map[String, Seq[Map[String, String]]] = Map.empty,
-      binds: Map[String, String] = Map.empty): DataFrame =
-    runBq(s, name, scalars, lists, dicts, records, binds).getOrElse(
-      throw new IllegalArgumentException(s"$name produced no result frame"))
-
-  // ---- DDL tree -----------------------------------------------------------
-
-  /** Verbatim `ddl/OMOPCDM_bigquery_5.4_ddl.sql.jinja` (588 lines — the
-    * GoogleSQL CDM 5.4 DDL): `--HINT DISTRIBUTE ON KEY` headers,
-    * lower-case int64/string/datetime types, and a `cluster by` clause
-    * per table which the bridge RECORDS (graft.cluster_by) so writes
-    * keep the published clustering. Gated on the same 39-table column
-    * inventory as the sql_server twin.
-    */
-  val bqCdm54Ddl: Q = (s, _) => {
-    import s.implicits._
-    s.sql("DROP DATABASE IF EXISTS graft_bq_cdm54 CASCADE")
-    s.sql("CREATE DATABASE graft_bq_cdm54")
-    runBq(s, "OMOPCDM_bigquery_5.4_ddl", Map("dataset_omop" -> "graft_bq_cdm54"))
-    // the published clustering must be RECORDED, not dropped — fail the
-    // entry if the person table lost its cluster keys
-    val personKeys = OhdsiSql.tableClusterBy(s, "graft_bq_cdm54.person")
-    require(personKeys == Some(Seq(
-      "gender_concept_id", "location_id", "race_concept_id", "person_id")),
-      s"person clustering not recorded: $personKeys")
-    s.catalog.listTables("graft_bq_cdm54").collect().toSeq
-      .filter(_.tableType != "TEMPORARY")
-      .map(tb => (tb.name, s.table(s"graft_bq_cdm54.${tb.name}").schema.length))
-      .toDF("table_name", "n_columns").orderBy("table_name")
-  }
-
-  /** Verbatim `ddl/SOURCE_ID_TO_OMOP_ID_MAP_ddl.sql.jinja` (bq): INT64
-    * columns + `CLUSTER BY omop_table, omop_id`; the pre-staged stale
-    * table proves the DROP IF EXISTS branch.
-    */
-  val bqMapDdl: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_mddl CASCADE")
-    T.stage(s, "graft_bq_mddl", "source_id_to_omop_id_map",
-      T.t(s, d, "nation").select(col("n_name").as("junk")))
-    runBq(s, "bq_map_ddl", Map("dataset_omop" -> "graft_bq_mddl"))
-    T.schemaListing(s, "graft_bq_mddl.source_id_to_omop_id_map").orderBy("ordinal")
-  }
 
   /** The clustering-parity proof (SURVEY §1.3): create the id map via
     * the verbatim bq DDL (CLUSTER BY omop_table, omop_id), bulk-INSERT
@@ -100,8 +34,8 @@ object OhdsiBqTemplateQueries {
     * parquet row-group min/max stats prune downstream key scans.
     */
   val bqClusteredWrite: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_clw CASCADE")
-    runBq(s, "bq_map_ddl", Map("dataset_omop" -> "graft_bq_clw"))
+    T.dropDbs(s, "graft_bq_clw")
+    OhdsiSql.runTemplate(s, BigQuery, "bq_map_ddl", BigQuery.omop("graft_bq_clw"))
     T.t(s, d, "orders").createOrReplaceTempView("bq_clw_orders")
     OhdsiSql.executeAll(s,
       """INSERT INTO graft_bq_clw.source_id_to_omop_id_map
@@ -131,655 +65,95 @@ object OhdsiBqTemplateQueries {
       .agg(sum("viol").as("out_of_order"), count(lit(1)).as("n_rows"))
   }
 
-  /** Verbatim bq `ddl/result_table_ddl_{field,concept,table}.sql.jinja`:
-    * same column order as the sql_server twins, INT64/FLOAT64 types
-    * mapping to the same Spark schema — same oracle.
-    */
-  val bqResultDdl: Q = (s, _) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_rt CASCADE")
-    s.sql("CREATE DATABASE graft_bq_rt")
-    Seq("field", "concept", "table").foreach { v =>
-      runBq(s, s"bq_result_table_ddl_$v",
-        Map("dataset_dqd" -> s"graft_bq_rt.results_$v"))
-    }
-    T.schemaListing(s, "graft_bq_rt.results_field")
-      .unionByName(T.schemaListing(s, "graft_bq_rt.results_concept"))
-      .unionByName(T.schemaListing(s, "graft_bq_rt.results_table"))
-      .orderBy("table_name", "ordinal")
-  }
-
-  /** Verbatim bq `ddl/DataQualityDashboard_ddl.sql.jinja`: both
-    * dashboard tables with `{# NOT NULL #}` Jinja comments inline and
-    * CLUSTER BY clauses; INT64 -> bigint forks the type listing from the
-    * sql_server twin (its own oracle below).
-    */
-  val bqDqdDdl: Q = (s, _) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_dqdd CASCADE")
-    runBq(s, "bq_dqd_ddl", Map("dataset_dqd" -> "graft_bq_dqdd"))
-    T.schemaListing(s, "graft_bq_dqdd.dqdashboard_runs")
-      .unionByName(T.schemaListing(s, "graft_bq_dqdd.dqdashboard_results"))
-      .orderBy("table_name", "ordinal")
-  }
-
-  /** Verbatim bq `etl/{omop_table}__{concept_id_column}_concept_create`
-    * + `usagi_create`: guarded GoogleSQL DDL (`CREATE TABLE IF NOT
-    * EXISTS .. CLUSTER BY`), INT64 ids.
-    */
-  val bqWorkDdlCreate: Q = (s, _) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_wddl CASCADE")
-    val vars = Map(
-      "dataset_work" -> "graft_bq_wddl",
-      "omop_table" -> "provider",
-      "concept_id_column" -> "specialty_concept_id")
-    runBq(s, "bq_usagi_create", vars)
-    runBq(s, "bq_concept_create", vars)
-    require(OhdsiSql.tableClusterBy(
-      s, "graft_bq_wddl.provider__specialty_concept_id_usagi") == Some(Seq("sourceCode")),
-      "usagi work table lost its CLUSTER BY sourceCode")
-    T.schemaListing(s, "graft_bq_wddl.provider__specialty_concept_id_usagi")
-      .unionByName(T.schemaListing(s, "graft_bq_wddl.provider__specialty_concept_id_concept"))
-      .orderBy("table_name", "ordinal")
-  }
-
-  /** Verbatim bq `etl/{omop_work}_ddl.sql.jinja`: record-typed columns
-    * (BQ datatypes), the event-column STRING override, `not null`
-    * markers, and the `cluster_fields | length > 0` guarded CLUSTER BY.
-    */
-  val bqWorkTableDdl: Q = (s, _) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_wtd CASCADE")
-    val cols = T.SampleColumns.map { c =>
-      val bqType = c("cdmDatatype") match {
-        case "integer" => "INT64"
-        case v if v.startsWith("varchar") => "STRING"
-        case other => other
-      }
-      c + ("cdmDatatype" -> bqType) +
-        ("isRequired" -> (if (c("cdmFieldName") == "provider_id") "Yes" else "No"))
-    }
-    runBq(s, "bq_work_ddl",
-      scalars = Map(
-        "dataset_work" -> "graft_bq_wtd",
-        "omop_table" -> "provider"),
-      lists = Map("cluster_fields" -> Seq("provider_id")),
-      dicts = Map("events" -> Seq.empty),
-      records = Map("columns" -> cols))
-    require(OhdsiSql.tableClusterBy(s, "graft_bq_wtd.provider") == Some(Seq("provider_id")),
-      "work table lost its CLUSTER BY provider_id")
-    T.schemaListing(s, "graft_bq_wtd.provider").orderBy("ordinal")
-  }
-
-  // ---- dqd dashboard ------------------------------------------------------
-
-  /** Verbatim bq `dqd/get_dqd_run.sql.jinja` — the `@id` GoogleSQL named
-    * parameter through the bind flow.
-    */
-  val bqGetDqdRun: Q = (s, _) => {
-    T.stageDqdRuns(s)
-    execBq(s, "bq_get_dqd_run", Map("dataset_dqd" -> "graft_dqd"),
-      binds = Map("id" -> "'run-07'"))
-  }
-
-  /** Verbatim bq `dqd/get_dqd_run_results.sql.jinja` (`@id` bind). */
-  val bqDqdRunResults: Q = (s, _) => {
-    T.stage(s, "graft_dqd", "dqdashboard_results", s.range(1, 27).select(
-      when(col("id") % 2 === 0, lit("run-07")).otherwise(lit("run-08")).as("run_id"),
-      format_string("check_%02d", col("id")).as("checkid"),
-      (col("id") % 5 === 0).cast("long").as("failed"),
-      (col("id") * 3).as("num_violated_rows")))
-    execBq(s, "bq_get_dqd_run_results", Map("dataset_dqd" -> "graft_dqd"),
-      binds = Map("id" -> "'run-07'")).orderBy("checkid")
-  }
-
-  /** Verbatim bq `dqd/get_last_dqd_runs.sql.jinja` — `FORMAT_TIMESTAMP
-    * ("%Y-%m-%d %T", ...)` label (the strftime pre-pass mapping) over
-    * the newest-first LIMIT 15.
-    */
-  val bqLastDqdRuns: Q = (s, _) => {
-    T.stageDqdRuns(s)
-    execBq(s, "bq_get_last_dqd_runs", Map("dataset_dqd" -> "graft_dqd"))
-  }
-
-  // ---- cleanup tree -------------------------------------------------------
-
-  /** Verbatim bq `cleanup/truncate.sql.jinja` (both branches) +
-    * `cleanup/CONCEPT_remove_custom_concepts.sql.jinja` — same fixture
-    * and post-cleanup counts as the sql_server twin.
-    */
-  val bqVocabCleanup: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_vc CASCADE")
-    val nat = T.t(s, d, "nation")
-    T.stage(s, "graft_bq_vc", "provider",
-      T.t(s, d, "orders").select(col("o_orderkey").as("provider_id")))
-    T.stage(s, "graft_bq_vc", "vocabulary", nat.select(
-      col("n_name").as("vocabulary_id"),
-      col("n_nationkey").cast("long").as("vocabulary_concept_id"))
-      .unionByName(nat.select(
-        concat(lit("CUSTOM_"), col("n_name")).as("vocabulary_id"),
-        (col("n_nationkey") + 2000000000L).as("vocabulary_concept_id"))))
-    T.stage(s, "graft_bq_vc", "concept", nat.select(
-      col("n_nationkey").cast("long").as("concept_id"),
-      col("n_name").as("concept_name"))
-      .unionByName(nat.select(
-        (col("n_nationkey") + 2000000000L).as("concept_id"),
-        concat(lit("CUSTOM_"), col("n_name")).as("concept_name"))))
-    T.stage(s, "graft_bq_vc", "relationship",
-      nat.select(col("n_name").as("relationship_id")))
-    val base = Map(
-      "dataset_omop" -> "graft_bq_vc",
-      "min_custom_concept_id" -> "2000000000")
-    runBq(s, "bq_truncate", base + ("table_name" -> "provider"))
-    runBq(s, "bq_truncate", base + ("table_name" -> "vocabulary"))
-    runBq(s, "bq_concept_remove_custom", base)
-    runBq(s, "bq_truncate", base + ("table_name" -> "relationship"))
-    Seq("concept", "provider", "relationship", "vocabulary").map { tb =>
-      s.table(s"graft_bq_vc.$tb").agg(count(lit(1)).as("n_rows"))
-        .select(lit(tb).as("table_name"), col("n_rows"))
-    }.reduce(_ unionByName _).orderBy("table_name")
-  }
-
   /** Verbatim bq `vocabulary/vocabulary_table_refill.sql.jinja` — the
     * D6 refill: TRUNCATE the OMOP copy, INSERT the work copy back.
     */
   val bqVocabRefill: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_vr CASCADE")
-    s.sql("DROP DATABASE IF EXISTS graft_bq_vr_work CASCADE")
+    T.dropDbs(s, "graft_bq_vr", "graft_bq_vr_work")
     T.stage(s, "graft_bq_vr", "vocabulary", T.t(s, d, "region").select(
       concat(lit("STALE_"), col("r_name")).as("vocabulary_id"),
       concat(lit("old "), col("r_name")).as("vocabulary_name")))
     T.stage(s, "graft_bq_vr_work", "vocabulary", T.t(s, d, "nation").select(
       col("n_name").as("vocabulary_id"),
       concat(lit("vocab "), col("n_name")).as("vocabulary_name")))
-    runBq(s, "bq_vocab_refill", Map(
-      "dataset_omop" -> "graft_bq_vr",
-      "dataset_work" -> "graft_bq_vr_work",
-      "vocabulary_table" -> "vocabulary"))
+    OhdsiSql.runTemplate(s, BigQuery, "bq_vocab_refill",
+      BigQuery.omop("graft_bq_vr") ++ BigQuery.work("graft_bq_vr_work") +
+        ("vocabulary_table" -> "vocabulary"))
     s.table("graft_bq_vr.vocabulary").orderBy("vocabulary_id")
   }
 
-  /** Verbatim bq
-    * `cleanup/CONCEPT_remove_custom_concepts_by_..._usagi_table.sql.jinja`
-    * — the FROM-less GoogleSQL `delete \`ds.concept\` where ... in (...)`.
+  /** BIGQUERY-dialect CONCEPT merge VERBATIM
+    * (`bigquery/templates/etl/CONCEPT_merge.sql.jinja`): the bq swap
+    * chain feeding a MERGE whose USING selects `swap.y as concept_id,
+    * t.* EXCEPT(concept_id)` (the GoogleSQL qualified star-except) and
+    * inserts with `INSERT ROW`. Same expected rows as the sql_server
+    * entry, which reads the shared concept flow instead.
     */
-  val bqConceptRemove: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_crr CASCADE")
-    s.sql("DROP DATABASE IF EXISTS graft_bq_crw CASCADE")
-    val nat = T.t(s, d, "nation")
-    T.stage(s, "graft_bq_crr", "concept", nat.select(
-      col("n_nationkey").cast("long").as("concept_id"),
-      col("n_name").as("concept_name"))
-      .unionByName(nat.select(
-        (col("n_nationkey") + 2000000000L).as("concept_id"),
-        concat(lit("CUSTOM_"), col("n_name")).as("concept_name"))))
-    T.stage(s, "graft_bq_crw", "provider__specialty_concept_id_usagi",
-      nat.filter(col("n_nationkey") % 2 === 0).select(
-        concat(lit("SRC_"), col("n_name")).as("sourceCode"),
-        (col("n_nationkey") + 2000000000L).as("conceptId")))
-    T.stage(s, "graft_bq_crw", "provider__specialty_concept_id_concept",
-      nat.select(concat(lit("SRC_"), col("n_name")).as("concept_code")))
-    runBq(s, "bq_concept_remove_by_usagi", Map(
-      "dataset_omop" -> "graft_bq_crr",
-      "dataset_work" -> "graft_bq_crw",
-      "omop_table" -> "provider",
-      "concept_id_column" -> "specialty_concept_id",
-      "min_custom_concept_id" -> "2000000000"))
-    s.table("graft_bq_crr.concept").orderBy("concept_id")
+  val bqConceptMerge: Q = (s, d) => {
+    val (work, omop) = ("graft_bq_cm", "graft_bq_cm_omop")
+    T.dropDbs(s, work, omop)
+    T.stage(s, work, "provider__specialty_concept_id_concept",
+      T.workConceptTable(BigQuery, T.workConceptFixture(s, d)))
+    T.swapFlow(s, BigQuery, work)
+    T.stage(s, omop, "concept", T.conceptSeed(s, d))
+    OhdsiSql.runTemplate(s, BigQuery, "bq_concept_merge",
+      BigQuery.work(work) ++ BigQuery.omop(omop) ++ T.CustomConcepts)
+    s.table(s"$omop.concept").orderBy("concept_id")
   }
 
-  /** Verbatim bq
-    * `cleanup/SOURCE_ID_TO_OMOP_ID_MAP_remove_ids_by_omop_table.sql.jinja`
-    * — the `{% for %}`/`loop.last` IN-list DELETE.
+  /** BIGQUERY-dialect usagi checks VERBATIM (`usagi_non_standard` +
+    * `usagi_fk_domain_check` from the bigquery tree): double-quoted
+    * string literals, bare LIMIT, and the domains-list Jinja loop — run
+    * over the SAME staged universe as the sql_server flow (the shared
+    * concept chain), returning one union frame.
     */
-  val bqMapCleanup: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_mcl CASCADE")
-    T.stage(s, "graft_bq_mcl", "source_id_to_omop_id_map", T.t(s, d, "orders").select(
-      element_at(array(lit("person"), lit("provider"), lit("visit_occurrence")),
-        (col("o_orderkey") % 3 + 1).cast("int")).as("omop_table"),
-      col("o_orderkey").as("source_id"),
-      (col("o_orderkey") * 10).as("omop_id")))
-    runBq(s, "bq_map_remove_ids",
-      scalars = Map("dataset_omop" -> "graft_bq_mcl"),
-      lists = Map("omop_tables" -> Seq("person", "provider")))
-    s.table("graft_bq_mcl.source_id_to_omop_id_map").orderBy("source_id")
-  }
-
-  /** Verbatim bq
-    * `cleanup/SOURCE_TO_CONCEPT_MAP_remove_concepts_by_..._usagi_table.sql.jinja`
-    * — the MERGE `WHEN MATCHED THEN DELETE`.
-    */
-  val bqS2cmRemove: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_srw CASCADE")
-    s.sql("DROP DATABASE IF EXISTS graft_bq_sro CASCADE")
-    T.stage(s, "graft_bq_sro", "source_to_concept_map", T.t(s, d, "nation").select(
-      concat(lit("SRC_"), col("n_name")).as("source_code"),
-      (col("n_nationkey") + 100).cast("int").as("target_concept_id"),
-      lit("keepable").as("source_code_description")))
-    T.stage(s, "graft_bq_srw", "provider__specialty_concept_id_usagi",
-      T.t(s, d, "nation").filter(col("n_nationkey") % 3 === 0).select(
-        concat(lit("SRC_"), col("n_name")).as("sourceCode"),
-        (col("n_nationkey") + 100).cast("int").as("conceptId")))
-    runBq(s, "bq_s2cm_remove", Map(
-      "dataset_omop" -> "graft_bq_sro",
-      "dataset_work" -> "graft_bq_srw",
-      "omop_table" -> "provider",
-      "concept_id_column" -> "specialty_concept_id"))
-    s.table("graft_bq_sro.source_to_concept_map").orderBy("source_code")
-  }
-
-  /** Verbatim bq `cleanup/all_work_table_names.sql.jinja` — the
-    * `INFORMATION_SCHEMA.COLUMNS` catalog listing (snapshot-view
-    * mapping, the sys.tables discipline).
-    */
-  val bqWorkTables: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_s12 CASCADE")
-    val one = T.t(s, d, "nation").limit(1)
-    T.stage(s, "graft_bq_s12", "person__upload__q1", one)
-    T.stage(s, "graft_bq_s12", "person__gender_concept_id_usagi", one)
-    T.stage(s, "graft_bq_s12", "person_id_swap", one)
-    execBq(s, "bq_all_work_table_names", Map("dataset" -> "graft_bq_s12"))
-  }
-
-  // ---- etl: merges / invalidation / checks --------------------------------
-
-  /** Verbatim bq `etl/SOURCE_TO_CONCEPT_MAP_merge.sql.jinja` over the
-    * shared verbatim concept chain — CURRENT_DATE()/DATE(2099,12,31)
-    * stamps (the wall-clock column drops from the gated shape, the
-    * GETDATE precedent) and `INSERT ROW`.
-    */
-  val bqStcmMerge: Q = (s, d) => {
+  val bqUsagiChecks: Q = (s, d) => {
     val (workDb, omopDb) = T.sharedConceptFlow(s, d)
-    val rank1Code = T.workConceptFixture(s, d)
-      .agg(min(col("concept_code"))).head().getString(0)
-    T.stage(s, omopDb, "source_to_concept_map", s.range(1).select(
-      lit(rank1Code).as("source_code"),
-      lit(99).as("source_concept_id"),
-      lit("OLDVOCAB").as("source_vocabulary_id"),
-      lit("stale desc").as("source_code_description"),
-      lit(2000000001).as("target_concept_id"),
-      lit("OLDVOCAB").as("target_vocabulary_id"),
-      lit(java.sql.Date.valueOf("1990-01-01")).as("valid_start_date"),
-      lit(java.sql.Date.valueOf("1990-01-01")).as("valid_end_date"),
-      lit("D").as("invalid_reason")))
-    runBq(s, "bq_stcm_merge", Map(
-      "dataset_work" -> workDb,
-      "dataset_omop" -> omopDb,
-      "omop_table" -> "provider",
-      "concept_id_column" -> "specialty_concept_id",
-      "process_semi_approved_mappings" -> ""))
-    s.table(s"$omopDb.source_to_concept_map")
-      .drop("valid_start_date").orderBy("source_code")
+    val vars = BigQuery.work(workDb) ++ BigQuery.omop(omopDb) ++
+      T.CustomConcepts ++ T.ApprovedOnly
+    val nonStd = OhdsiSql.runTemplate(s, BigQuery, "bq_usagi_non_standard", vars).get
+      .select(lit("non_standard").as("check"), col("sourceCode"),
+        col("conceptId").cast("long").as("conceptId"),
+        col("standard_concept").as("detail"))
+    val domain = OhdsiSql.runTemplate(s, BigQuery, "bq_usagi_fk_domain_check", vars,
+        lists = Map("domains" -> Seq("condition", "procedure"))).get
+      .select(lit("domain").as("check"), col("sourceCode"),
+        col("conceptId").cast("long").as("conceptId"),
+        col("domain_id").as("detail"))
+    nonStd.unionByName(domain).orderBy("check", "sourceCode")
   }
 
-  /** Verbatim bq `etl/SOURCE_TO_CONCEPT_MAP_check_for_duplicates
-    * .sql.jinja` — same saturated usagi fixture as the sql_server twin,
-    * bare trailing LIMIT instead of TOP.
+  /** BIGQUERY-dialect usagi id injection VERBATIM
+    * (`bigquery/templates/etl/{omop_table}__{concept_id_column}_usagi_update_custom_concepts`):
+    * the GoogleSQL `UPDATE t AS T SET .. FROM ( subquery ) c WHERE ..`
+    * shape (the r15 second UPDATE..FROM grammar), whose own
+    * `conceptId IS NULL or = 0` guard updates only unassigned rows —
+    * the full pure-BQ chain: work concept upload → bq swap create+merge
+    * → bq id injection.
     */
-  val bqS2cmDups: Q = (s, d) => {
-    OhdsiCdmQueries.stageUsagiFixture(s, d)
-    execBq(s, "bq_s2cm_dups", Map(
-      "dataset_work" -> "graft_work",
-      "dataset_omop" -> "graft_omop",
-      "omop_table" -> "provider",
-      "concept_id_column" -> "specialty_concept_id",
-      "process_semi_approved_mappings" -> ""))
-      .orderBy("source_code", "target_concept_id")
+  val bqUsagiUpdate: Q = (s, d) => {
+    val db = "graft_bq_uu"
+    T.dropDbs(s, db)
+    T.stage(s, db, "provider__specialty_concept_id_concept", T.workConceptFixture(s, d))
+    T.swapFlow(s, BigQuery, db)
+    // unassigned = 0 (the template's own NULL-or-zero guard)
+    T.stage(s, db, "provider__specialty_concept_id_usagi", T.t(s, d, "nation").select(
+      concat(lit("SRC_"), col("n_name")).as("sourceCode"),
+      concat(lit("name "), col("n_name")).as("sourceName"),
+      lit(0).as("conceptId"),
+      when(col("n_nationkey") % 2 === 0, lit("APPROVED")).otherwise(lit("FLAGGED"))
+        .as("mappingStatus")))
+    OhdsiSql.runTemplate(s, BigQuery, "bq_usagi_update",
+      BigQuery.work(db) ++ T.CustomConcepts ++ T.ApprovedOnly)
+    s.table(s"$db.provider__specialty_concept_id_usagi").orderBy("sourceCode")
   }
-
-  /** Verbatim bq `etl/SOURCE_TO_CONCEPT_MAP_update_invalid_reason
-    * .sql.jinja` — the aliased GoogleSQL `UPDATE <t> T SET` with the
-    * `@etl_start` bind.
-    */
-  val bqStcmInvalidate: Q = (s, d) => {
-    val s2cm = T.t(s, d, "orders").select(
-      col("o_orderkey").as("source_code"),
-      col("o_custkey").as("target_concept_id"),
-      col("o_orderdate").cast("date").as("valid_start_date"),
-      lit(null).cast("string").as("invalid_reason"))
-    T.stage(s, "graft_bq_si", "source_to_concept_map", s2cm)
-    runBq(s, "bq_stcm_invalidate", Map("dataset_omop" -> "graft_bq_si"),
-      binds = Map("etl_start" -> "DATE '1995-06-01'"))
-    s.table("graft_bq_si.source_to_concept_map").orderBy("source_code")
-  }
-
-  /** Verbatim bq `etl/SOURCE_ID_TO_OMOP_ID_MAP_update_invalid_reason
-    * .sql.jinja` — the sibling tombstone.
-    */
-  val bqMapInvalidate: Q = (s, d) => {
-    val map = T.t(s, d, "orders").select(
-      lit("provider").as("omop_table"),
-      col("o_orderkey").as("omop_id"),
-      col("o_orderdate").cast("date").as("valid_start_date"),
-      lit(null).cast("string").as("invalid_reason"))
-    T.stage(s, "graft_bq_mi", "source_id_to_omop_id_map", map)
-    runBq(s, "bq_map_invalidate", Map("dataset_omop" -> "graft_bq_mi"),
-      binds = Map("etl_start" -> "DATE '1995-06-01'"))
-    s.table("graft_bq_mi.source_id_to_omop_id_map").orderBy("omop_id")
-  }
-
-  /** Verbatim bq `etl/SOURCE_ID_TO_OMOP_ID_MAP_merge.sql.jinja` — the
-    * pk-swap rows upserted via MERGE + `INSERT ROW`; wall-clock
-    * valid_start_date drops from the gated shape.
-    */
-  val bqMapMerge: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_mmw CASCADE")
-    s.sql("DROP DATABASE IF EXISTS graft_bq_mmo CASCADE")
-    T.stage(s, "graft_bq_mmw", "provider_id_swap", T.t(s, d, "nation").select(
-      concat(lit("PRV_"), col("n_name")).as("x"),
-      (col("n_nationkey") + 1).cast("int").as("y"),
-      lit("q1").as("source")))
-    T.stage(s, "graft_bq_mmo", "source_id_to_omop_id_map", s.range(1).select(
-      lit("provider").as("omop_table"),
-      lit(1).as("omop_id"),
-      lit("old_source").as("source"),
-      lit("stale_x").as("source_id"),
-      lit(java.sql.Date.valueOf("1990-01-01")).as("valid_start_date"),
-      lit(java.sql.Date.valueOf("1990-01-01")).as("valid_end_date"),
-      lit("D").as("invalid_reason")))
-    runBq(s, "bq_map_merge", Map(
-      "dataset_omop" -> "graft_bq_mmo",
-      "dataset_work" -> "graft_bq_mmw",
-      "omop_table" -> "provider",
-      "primary_key_column" -> "provider_id"))
-    s.table("graft_bq_mmo.source_id_to_omop_id_map")
-      .drop("valid_start_date").orderBy("omop_id")
-  }
-
-  /** Verbatim bq `etl/cdm_metadata_git_commit_hash.sql.jinja` +
-    * `cdm_metadata_riab_version.sql.jinja` — double-quoted GoogleSQL
-    * string literals, CURRENT_DATE()/CURRENT_DATETIME() stamps (dropped
-    * from the gated shape), explicit NULL casts.
-    */
-  val bqMetadataRows: Q = (s, _) => {
-    val git = execBq(s, "bq_metadata_git", Map(
-      "cdm_version" -> "5.4", "git_commit_hash" -> "abc123def"))
-    val riab = execBq(s, "bq_metadata_riab", Map(
-      "cdm_version" -> "5.4", "riab_version" -> "0.1.0"))
-    git.unionByName(riab)
-      .drop("metadata_date", "metadata_datetime")
-      .orderBy("metadata_id")
-  }
-
-  /** Verbatim bq `etl/CONCEPT_custom_validate.sql.jinja` — three LEFT
-    * OUTER JOINs, any-null WHERE, bare trailing LIMIT 100.
-    */
-  val bqCustomValidate: Q = (s, d) => {
-    import s.implicits._
-    s.sql("DROP DATABASE IF EXISTS graft_bq_cvw CASCADE")
-    s.sql("DROP DATABASE IF EXISTS graft_bq_cvo CASCADE")
-    T.stage(s, "graft_bq_cvw", "provider__specialty_concept_id_concept",
-      T.workConceptFixture(s, d))
-    T.stage(s, "graft_bq_cvo", "domain",
-      Seq("Condition", "Procedure", "Measurement").toDF("domain_id"))
-    T.stage(s, "graft_bq_cvo", "vocabulary",
-      Seq("LOCAL", "SNOMED").toDF("vocabulary_id"))
-    T.stage(s, "graft_bq_cvo", "concept_class",
-      Seq("Clinical Finding", "Custom").toDF("concept_class_id"))
-    execBq(s, "bq_custom_validate", Map(
-      "dataset_work" -> "graft_bq_cvw",
-      "dataset_omop" -> "graft_bq_cvo",
-      "omop_table" -> "provider",
-      "concept_id_column" -> "specialty_concept_id"))
-      .orderBy("concept_code")
-  }
-
-  /** Verbatim bq `etl/CONCEPT_custom_validate_duplicates.sql.jinja` —
-    * the qualified star-except over the bq swap chain; the fixture
-    * plants one concept code with two conflicting names.
-    */
-  val bqValidateDups: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_vd CASCADE")
-    val db = "graft_bq_vd"
-    val rank1Code = T.workConceptFixture(s, d)
-      .agg(min(col("concept_code"))).head().getString(0)
-    val dupRow = T.workConceptFixture(s, d)
-      .filter(col("concept_code") === rank1Code)
-      .withColumn("concept_name", lit("conflicting name"))
-    val withDup = T.workConceptFixture(s, d).unionByName(dupRow)
-    // the bq work concept table carries a concept_id column (its
-    // concept_create DDL does) — the dups template's star-except drops it
-    T.stage(s, db, "provider__specialty_concept_id_concept",
-      withDup.select((lit(0L).as("concept_id") +: withDup.columns.map(col)): _*))
-    val vars = Map(
-      "dataset_work" -> db,
-      "omop_table" -> "provider",
-      "concept_id_column" -> "specialty_concept_id",
-      "min_custom_concept_id" -> "2000000000")
-    runBq(s, "bq_concept_id_swap_create", vars)
-    runBq(s, "bq_concept_id_swap_merge", vars)
-    execBq(s, "bq_custom_validate_duplicates", vars).orderBy("concept_code")
-  }
-
-  // ---- etl: events / uploads / samples ------------------------------------
-
-  /** Verbatim bq `etl/{omop_table}_apply_event_columns.sql.jinja` (190
-    * lines — the GoogleSQL `CREATE OR REPLACE TABLE .. LIKE .. AS` with
-    * the dict-driven CASE/join fan-out) for the fact_relationship
-    * branch: same fixture and expected rows as the sql_server twin.
-    */
-  val bqApplyEvents: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_ae CASCADE")
-    s.sql("DROP DATABASE IF EXISTS graft_bq_ae_omop CASCADE")
-    val k = col("o_orderkey")
-    T.stage(s, "graft_bq_ae", "fact_relationship", T.t(s, d, "orders").select(
-      when(k % 2 === 0, lit("person")).otherwise(lit("observation"))
-        .as("domain_concept_id_1"),
-      when(k % 2 === 0, concat(lit("P_"), (k % 5).cast("string")))
-        .otherwise(concat(lit("O_"), (k % 5).cast("string"))).as("fact_id_1"),
-      when(k % 3 === 0, lit("person")).otherwise(lit("observation"))
-        .as("domain_concept_id_2"),
-      when(k % 3 === 0, concat(lit("P_"), (k % 7).cast("string")))
-        .otherwise(concat(lit("O_"), (k % 7).cast("string"))).as("fact_id_2"),
-      (lit(44818821) + k % 2).cast("int").as("relationship_concept_id")))
-    T.stage(s, "graft_bq_ae", "person_id_swap", s.range(0, 10).select(
-      concat(lit("P_"), col("id").cast("string")).as("x"),
-      (col("id") + 1).cast("int").as("y")))
-    T.stage(s, "graft_bq_ae", "observation_id_swap", s.range(0, 10).select(
-      concat(lit("O_"), col("id").cast("string")).as("x"),
-      (col("id") + 1001).cast("int").as("y")))
-    T.stage(s, "graft_bq_ae_omop", "fact_relationship", s.range(0).select(
-      lit(0).as("domain_concept_id_1"), lit(0).as("fact_id_1"),
-      lit(0).as("domain_concept_id_2"), lit(0).as("fact_id_2"),
-      lit(0).as("relationship_concept_id")))
-    runBq(s, "bq_apply_event_columns",
-      scalars = Map(
-        "dataset_work" -> "graft_bq_ae",
-        "dataset_omop" -> "graft_bq_ae_omop",
-        "omop_table" -> "fact_relationship"),
-      lists = Map(
-        "columns" -> Seq("domain_concept_id_1", "fact_id_1",
-          "domain_concept_id_2", "fact_id_2", "relationship_concept_id")),
-      dicts = Map(
-        "events" -> Seq(
-          "fact_id_1" -> "domain_concept_id_1",
-          "fact_id_2" -> "domain_concept_id_2"),
-        "event_tables" -> Seq(
-          "person" -> "person_id",
-          "observation" -> "observation_id")))
-    s.table("graft_bq_ae_omop.fact_relationship")
-      .orderBy("domain_concept_id_1", "fact_id_1", "domain_concept_id_2",
-        "fact_id_2", "relationship_concept_id")
-  }
-
-  /** The VOCABULARY branch of the bq `{omop_table}_merge` (r16): the
-    * GoogleSQL refill writes `CREATE OR REPLACE TABLE omop.vocabulary
-    * LIKE .. AS (dedup'd uploads UNION ALL the preserved standards
-    * `vocabulary_concept_id < min_custom_concept_id`)` — reading the
-    * REPLACED table inside its own replacement (the materialize-then-
-    * swap protocol makes that safe). Same fixture and expected rows as
-    * the sql_server twin's vocab branch.
-    */
-  val bqVocabMerge: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_vm CASCADE")
-    s.sql("DROP DATABASE IF EXISTS graft_bq_vm_omop CASCADE")
-    val nat = T.t(s, d, "nation")
-    T.stage(s, "graft_bq_vm", "vocabulary__upload__u1", nat.select(
-      concat(lit("CUSTOM_"), col("n_name")).as("vocabulary_id"),
-      concat(lit("vocab "), col("n_name")).as("vocabulary_name"),
-      lit("ref").as("vocabulary_reference"),
-      lit("v1").as("vocabulary_version"),
-      (col("n_nationkey") + 2000000000L).as("vocabulary_concept_id")))
-    T.stage(s, "graft_bq_vm_omop", "vocabulary", T.t(s, d, "region").select(
-      col("r_name").as("vocabulary_id"),
-      concat(lit("std "), col("r_name")).as("vocabulary_name"),
-      lit("ref").as("vocabulary_reference"),
-      lit("v0").as("vocabulary_version"),
-      col("r_regionkey").cast("long").as("vocabulary_concept_id"))
-      .unionByName(nat.limit(3).select(
-        concat(lit("STALE_"), col("n_name")).as("vocabulary_id"),
-        lit("stale").as("vocabulary_name"),
-        lit("ref").as("vocabulary_reference"),
-        lit("old").as("vocabulary_version"),
-        (col("n_nationkey") + 2000000000L).as("vocabulary_concept_id"))))
-    runBq(s, "bq_omop_table_merge",
-      scalars = Map(
-        "dataset_work" -> "graft_bq_vm",
-        "dataset_omop" -> "graft_bq_vm_omop",
-        "omop_table" -> "vocabulary",
-        "primary_key_column" -> "vocabulary_id",
-        "pk_auto_numbering" -> "", // the vocabulary pk is its natural id
-        "process_semi_approved_mappings" -> "",
-        "min_custom_concept_id" -> "2000000000"),
-      lists = Map(
-        "columns" -> Seq("vocabulary_id", "vocabulary_name",
-          "vocabulary_reference", "vocabulary_version", "vocabulary_concept_id"),
-        "concept_id_columns" -> Seq.empty,
-        "foreign_key_columns" -> Seq.empty,
-        "required_columns" -> Seq.empty,
-        "sql_files" -> Seq("vocab1"),
-        "upload_tables" -> Seq("u1")),
-      dicts = Map("events" -> Seq.empty))
-    s.table("graft_bq_vm_omop.vocabulary").orderBy("vocabulary_id")
-  }
-
-  /** The EVENTS branch of the bq `{omop_table}_merge` chained into the
-    * bq discovery + apply steps — the full published GoogleSQL
-    * fact_relationship sequence (upload -> merge-into-WORK ->
-    * get_event_tables -> apply_event_columns), same fixture and expected
-    * rows as the sql_server chain.
-    */
-  val bqFactMergeChain: Q = (s, d) => {
-    T.stageFactChainFixture(s, d, "graft_bq_fc", "graft_bq_fc_omop")
-    val scalars = T.FactChainScalars ++ Map(
-      "dataset_work" -> "graft_bq_fc",
-      "dataset_omop" -> "graft_bq_fc_omop")
-    runBq(s, "bq_omop_table_merge", scalars, T.FactChainLists, T.FactChainDicts)
-    execBq(s, "bq_get_event_tables", scalars,
-      lists = Map("events" -> Seq("domain_concept_id_1", "domain_concept_id_2")))
-    runBq(s, "bq_apply_event_columns", scalars, T.FactChainLists, T.FactChainDicts)
-    s.table("graft_bq_fc_omop.fact_relationship")
-      .orderBy("domain_concept_id_1", "fact_id_1", "domain_concept_id_2",
-        "fact_id_2", "relationship_concept_id")
-  }
-
-  /** The RENUMBER branch of the bq `{omop_table}_apply_event_columns`
-    * template (the GoogleSQL `cte_events_mapped_to_multiple_rows` /
-    * `SELECT * EXCEPT(rn)` / `inner join cte_max_id m on true = true`
-    * shapes) — same fixture and expected rows as the sql_server twin.
-    */
-  val bqApplyEventsRenumber: Q = (s, d) => {
-    T.stageApplyEventsRenumber(s, d, "graft_bq_aer2", "graft_bq_aer2_omop")
-    runBq(s, "bq_apply_event_columns",
-      scalars = Map(
-        "dataset_work" -> "graft_bq_aer2",
-        "dataset_omop" -> "graft_bq_aer2_omop",
-        "omop_table" -> "observation",
-        "primary_key_column" -> "observation_id"),
-      lists = T.ApplyEventsRenumberLists,
-      dicts = T.ApplyEventsRenumberDicts)
-    s.table("graft_bq_aer2_omop.observation").orderBy("observation_id")
-  }
-
-  /** Verbatim bq `etl/{omop_table}_get_event_tables.sql.jinja` — the
-    * `events.values()` UNION ALL discovery (alias-free subquery).
-    */
-  val bqEventTables: Q = (s, d) => {
-    T.stage(s, "graft_bq_ev", "fact_relationship", T.t(s, d, "orders").select(
-      when(col("o_orderkey") % 2 === 0, lit("person")).otherwise(lit("observation"))
-        .as("fact_id_1_event"),
-      when(col("o_orderkey") % 3 === 0, lit("measurement")).otherwise(lit("person"))
-        .as("fact_id_2_event")))
-    execBq(s, "bq_get_event_tables",
-      scalars = Map(
-        "dataset_work" -> "graft_bq_ev",
-        "omop_table" -> "fact_relationship"),
-      lists = Map("events" -> Seq("fact_id_1_event", "fact_id_2_event")))
-      .orderBy("event_table")
-  }
-
-  /** Verbatim bq `cdm_folders/sample_etl_query.sql.jinja` (the dict
-    * LITERAL `{% set cdmToBigQuertyDataTypes = {...} %}` datatype map)
-    * composed into `etl/{omop_table}_{sql_file}_insert.sql.jinja` (the
-    * `CREATE OR REPLACE TABLE .. AS SELECT DISTINCT *` upload sink) —
-    * the published S9 -> S10 chain, bigquery dialect.
-    */
-  val bqUploadInsert: Q = (s, d) => {
-    s.sql("DROP DATABASE IF EXISTS graft_bq_ui CASCADE")
-    T.stage(s, "raw_dataset", "raw_provider", T.t(s, d, "nation").select(
-      col("n_nationkey").as("provider_id_column"),
-      col("n_name").as("provider_name_column"),
-      concat(lit("SPEC_"), (col("n_nationkey") % 4).cast("string"))
-        .as("specialty_concept_id_column"),
-      (lit(1950) + col("n_nationkey")).cast("int").as("year_of_birth_column"),
-      (col("n_nationkey") % 6).as("care_site_id_column")))
-    val userSelect = JinjaLite.render(res("bq_sample_etl_query"),
-      scalars = Map("omop_table" -> "provider", "project_raw" -> "spark_catalog"),
-      records = Map("columns" -> T.SampleColumns))
-    runBq(s, "bq_upload_insert", Map(
-      "dataset_work" -> "graft_bq_ui",
-      "upload_table" -> "provider__upload__u1",
-      "select_query" -> userSelect))
-    s.table("graft_bq_ui.provider__upload__u1").orderBy("provider_id")
-  }
-
-  /** Verbatim bq `cdm_folders/sample_usagi_query.sql.jinja` — the A8
-    * sourceFrequency aggregation, GoogleSQL quoting.
-    */
-  val bqSampleUsagi: Q = (s, d) => {
-    T.stage(s, "raw_dataset", "raw_provider2", T.t(s, d, "orders").select(
-      concat(lit("SPEC_"), (col("o_orderkey") % 4).cast("string"))
-        .as("specialty_concept_id_column"),
-      concat(lit("desc "), (col("o_orderkey") % 4).cast("string"))
-        .as("specialty_concept_id_column_with_description")))
-    execBq(s, "bq_sample_usagi_query", Map(
-      "omop_table" -> "provider2",
-      "project_raw" -> "spark_catalog",
-      "concept_column.cdmFieldName" -> "specialty_concept_id"))
-      .orderBy(desc("sourceFrequency"), col("sourceCode"))
-  }
-
-  // ---- registration -------------------------------------------------------
 
   val defs: Seq[(String, Q)] = Seq(
-    "ohdsi_sql_bq_cdm54_ddl" -> bqCdm54Ddl,
-    "ohdsi_sql_bq_map_ddl" -> bqMapDdl,
     "ohdsi_sql_bq_clustered_write" -> bqClusteredWrite,
-    "ohdsi_sql_bq_result_ddl" -> bqResultDdl,
-    "ohdsi_sql_bq_dqd_ddl" -> bqDqdDdl,
-    "ohdsi_sql_bq_work_ddl_create" -> bqWorkDdlCreate,
-    "ohdsi_sql_bq_work_table_ddl" -> bqWorkTableDdl,
-    "ohdsi_sql_bq_get_dqd_run" -> bqGetDqdRun,
-    "ohdsi_sql_bq_dqd_run_results" -> bqDqdRunResults,
-    "ohdsi_sql_bq_last_dqd_runs" -> bqLastDqdRuns,
-    "ohdsi_sql_bq_vocab_cleanup" -> bqVocabCleanup,
     "ohdsi_sql_bq_vocab_refill" -> bqVocabRefill,
-    "ohdsi_sql_bq_concept_remove" -> bqConceptRemove,
-    "ohdsi_sql_bq_map_cleanup" -> bqMapCleanup,
-    "ohdsi_sql_bq_s2cm_remove" -> bqS2cmRemove,
-    "ohdsi_sql_bq_work_tables" -> bqWorkTables,
-    "ohdsi_sql_bq_stcm_merge" -> bqStcmMerge,
-    "ohdsi_sql_bq_s2cm_dups" -> bqS2cmDups,
-    "ohdsi_sql_bq_stcm_invalidate" -> bqStcmInvalidate,
-    "ohdsi_sql_bq_map_invalidate" -> bqMapInvalidate,
-    "ohdsi_sql_bq_map_merge" -> bqMapMerge,
-    "ohdsi_sql_bq_metadata_rows" -> bqMetadataRows,
-    "ohdsi_sql_bq_custom_validate" -> bqCustomValidate,
-    "ohdsi_sql_bq_validate_dups" -> bqValidateDups,
-    "ohdsi_sql_bq_apply_events" -> bqApplyEvents,
-    "ohdsi_sql_bq_apply_events_renumber" -> bqApplyEventsRenumber,
-    "ohdsi_sql_bq_vocab_merge" -> bqVocabMerge,
-    "ohdsi_sql_bq_fact_merge_chain" -> bqFactMergeChain,
-    "ohdsi_sql_bq_event_tables" -> bqEventTables,
-    "ohdsi_sql_bq_upload_insert" -> bqUploadInsert,
-    "ohdsi_sql_bq_sample_usagi" -> bqSampleUsagi)
+    "ohdsi_sql_bq_concept_merge" -> bqConceptMerge,
+    "ohdsi_sql_bq_usagi_checks" -> bqUsagiChecks,
+    "ohdsi_sql_bq_usagi_update" -> bqUsagiUpdate)
 
   /** The sql_server twins' oracle texts, for row-identical entries. */
   private lazy val twin: Map[String, String] =

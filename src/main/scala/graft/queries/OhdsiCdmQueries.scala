@@ -1405,258 +1405,9 @@ object OhdsiCdmQueries {
         |ORDER BY user_id""".stripMargin)
   }
 
-  /** The reference's upload duplicate-row check template, VERBATIM
-    * (`sql_server/templates/etl/{omop_work_table}_merge_check_for_duplicate_rows.sql.jinja`
-    * — the A2 operator's own published SQL): Jinja loop over the upload
-    * tables with `loop.first` separators, the per-omop-table elif chain,
-    * the `not column in events.values()` membership guard (the r15
-    * JinjaLite widening), bracketed three-part names, `SELECT TOP` with
-    * `STRING_AGG` + HAVING. Vendored unmodified to prove the template
-    * runs through JinjaLite + the SqlRender-subset bridge.
-    */
-  private val DupRowsTemplateSql =
-    """{#- Copyright 2024 RADar-AZDelta -#}
-      |{#- SPDX-License-Identifier: gpl3+ -#}
-      |WITH cte_uploaded_tables AS (
-      |    {%- for upload_table in upload_tables -%}
-      |        {%- if not loop.first %}
-      |    UNION ALL
-      |        {%- endif %}
-      |    SELECT DISTINCT *, '{{upload_table}}' as upload_table
-      |    FROM [{{work_database_catalog}}].[{{work_database_schema}}].[{{omop_table}}__upload__{{upload_table}}]
-      |    {%- endfor %}
-      |)
-      |SELECT TOP 100
-      |    STRING_AGG(upload_table, ', ') as upload_tables
-      |{%- if omop_table == 'fact_relationship' %}
-      |    , fact_id_1
-      |    , fact_id_2
-      |{%- elif omop_table == 'death' -%}
-      |    , person_id
-      |{%- elif omop_table == 'cdm_source' -%}
-      |    , cdm_source_name
-      |{%- elif omop_table == 'episode_event' %}
-      |    , episode_id
-      |{%- elif primary_key_column -%}
-      |    , {{primary_key_column}}
-      |{%- endif %}
-      |{%- for column in concept_id_columns -%}
-      |    {%- if not column in events.values() %}
-      |    , [{{column}}]
-      |    {%- endif -%}
-      |{%- endfor -%}
-      |{%- for column in events -%}
-      |    {%- if omop_table != 'fact_relationship' %}
-      |    , [{{column}}]
-      |    {%- endif -%}
-      |{%- endfor %}
-      |    , count(*)
-      |FROM cte_uploaded_tables
-      |GROUP BY
-      |{%- if omop_table == 'fact_relationship' %}
-      |    fact_id_1
-      |    , fact_id_2
-      |{%- elif omop_table == 'death' %}
-      |    person_id
-      |{%- elif omop_table == 'cdm_source' %}
-      |    cdm_source_name
-      |{%- elif omop_table == 'episode_event' %}
-      |    episode_id
-      |{%- elif primary_key_column %}
-      |    {{primary_key_column}}
-      |{%- endif -%}
-      |{%- for column in concept_id_columns -%}
-      |    {%- if not column in events.values() %}
-      |    , [{{column}}]
-      |    {%- else %}
-      |    , [{{column}}]
-      |    {%- endif -%}
-      |{%- endfor -%}
-      |{%- for column in events -%}
-      |    {%- if omop_table != 'fact_relationship' %}
-      |    , [{{column}}]
-      |    {%- endif -%}
-      |{%- endfor %}
-      |HAVING COUNT(*) > 1""".stripMargin
-
-  /** The verbatim duplicate-rows template over two provider upload views
-    * (u2 ⊂ u1 by modulus, so the duplicate set is the u2 key set — 41
-    * groups at sf0.01, safely inside the template's own TOP 100). The
-    * returned frame canonicalizes ONLY what the published SQL leaves
-    * engine-unspecified: STRING_AGG's aggregation order (sorted rejoin)
-    * and the row order / count column name — the benchmark-rows
-    * precedent for pinning an unhashable facet.
-    */
-  val ohdsiSqlDupRows: Q = (s, d) => {
-    val orders = t(s, d, "orders")
-    def upload(m: Long) = orders.filter(col("o_orderkey") % m === 0)
-      .select(col("o_orderkey").as("provider_id"),
-        (col("o_custkey") % 5).as("specialty_concept_id"))
-    // the template addresses its uploads by the THREE-part
-    // catalog.schema.table name the reference's warehouse uses — real
-    // catalog tables, not temp views (global temp views are not
-    // catalog-addressable)
-    stageCatalogTable(s, "graft_work", "provider__upload__u1", upload(97L))
-    stageCatalogTable(s, "graft_work", "provider__upload__u2", upload(1455L))
-    val rendered = graft.sources.JinjaLite.render(DupRowsTemplateSql,
-      scalars = Map(
-        "work_database_catalog" -> "spark_catalog",
-        "work_database_schema" -> "graft_work",
-        "omop_table" -> "provider",
-        "primary_key_column" -> "provider_id"),
-      lists = Map(
-        "upload_tables" -> Seq("u1", "u2"),
-        "concept_id_columns" -> Seq("specialty_concept_id"),
-        "events" -> Seq.empty))
-    val raw = graft.sources.OhdsiSql.execute(s, rendered)
-    raw.select(
-      concat_ws(", ", array_sort(split(col("upload_tables"), ",\\s*")))
-        .as("upload_tables"),
-      col("provider_id"), col("specialty_concept_id"),
-      col(raw.columns.last).as("cnt"))
-      .orderBy("provider_id", "specialty_concept_id")
-  }
-
-  /** Create-or-replace a managed catalog table, tolerating a LOCATION
-    * left by a previous JVM whose in-memory catalog forgot the entry.
-    */
-  private[queries] def stageCatalogTable(s: SparkSession, db: String, tb: String,
-      df: DataFrame): Unit = {
-    s.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    s.sql(s"DROP TABLE IF EXISTS $db.$tb")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.conf.get("spark.sql.warehouse.dir") + s"/$db.db/$tb")
-    loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-    df.write.saveAsTable(s"$db.$tb")
-  }
-
-  /** The shared usagi/concept fixture of the two verbatim check
-    * templates below: every column is MODULAR in c_custkey and the usagi
-    * table is the DISTINCT of the projection, so the table holds at most
-    * lcm(24,7,6,4) = 168 rows at ANY scale factor — the templates' own
-    * un-ordered `TOP 100` is then provably a no-op, which is what makes
-    * their verbatim output hash-gateable.
-    */
-  private[queries] def stageUsagiFixture(s: SparkSession, d: String): Unit = {
-    stageCatalogTable(s, "graft_work", "provider__specialty_concept_id_usagi",
-      t(s, d, "customer").select(
-        concat(lit("S"), (col("c_custkey") % 24).cast("string")).as("sourceCode"),
-        // % 7, COPRIME to the 24 of sourceCode: a modulus dividing 24
-        // would make the name functional of the code class and no
-        // duplicate could ever form; 24 (not 30) keeps the saturated
-        // domain-violation set at 84 rows — inside the template's own
-        // un-ordered TOP 100 (this synthetic universe's nations take
-        // round-robin regions, so 3 of the 5 joinable concepts are
-        // outside the allowed-domain set)
-        concat(lit("n"), (col("c_custkey") % 7).cast("string")).as("sourceName"),
-        (col("c_custkey") % 6).as("conceptId"),
-        when(col("c_custkey") % 4 =!= 0, "APPROVED").otherwise("FLAGGED")
-          .as("mappingStatus")).distinct())
-    stageCatalogTable(s, "graft_omop", "concept",
-      t(s, d, "nation").select(
-        col("n_nationkey").as("concept_id"),
-        concat(lit("V"), col("n_regionkey").cast("string")).as("vocabulary_id"),
-        col("n_name").as("domain_id")))
-  }
-
-  /** The reference's SOURCE_TO_CONCEPT_MAP duplicate check, VERBATIM
-    * (`etl/SOURCE_TO_CONCEPT_MAP_check_for_duplicates.sql.jinja` — the A3
-    * operator's published SQL): the s2cm projection with its GETDATE()
-    * stamp (constant per query, so DISTINCT multiplicity and the output
-    * are deterministic — the stamp itself never reaches the output),
-    * the APPROVED-only conditional branch, grouped HAVING > 1.
-    */
-  val ohdsiSqlS2cmDups: Q = (s, d) => {
-    stageUsagiFixture(s, d)
-    val rendered = graft.sources.JinjaLite.render(
-      """{#- Copyright 2024 RADar-AZDelta -#}
-        |{#- SPDX-License-Identifier: gpl3+ -#}
-        |select top 100 source_code, target_concept_id, count(*) as nbr_of_rows
-        |from (
-        |    SELECT DISTINCT
-        |        t.sourceCode as source_code
-        |        ,0 as source_concept_id
-        |        ,'' as source_vocabulary_id
-        |        ,t.sourceName as source_code_description
-        |        ,t.conceptId as target_concept_id
-        |        ,c.vocabulary_id as target_vocabulary_id
-        |        ,GETDATE() as valid_start_date
-        |        ,CAST('2099-12-31' AS DATE) as valid_end_date
-        |        ,NULL as invalid_reason
-        |    FROM [{{work_database_catalog}}].[{{work_database_schema}}].[{{omop_table}}__{{concept_id_column}}_usagi] t
-        |    INNER JOIN [{{omop_database_catalog}}].[{{omop_database_schema}}].[concept] c on c.concept_id = t.conceptId
-        |{%- if not process_semi_approved_mappings %}
-        |    where t.mappingStatus = 'APPROVED'
-        |{%- else %}
-        |    where t.mappingStatus in ('APPROVED', 'SEMI-APPROVED')
-        |{%- endif %}
-        |) t
-        |group by source_code, target_concept_id
-        |having count(*) > 1;""".stripMargin,
-      scalars = Map(
-        "work_database_catalog" -> "spark_catalog",
-        "work_database_schema" -> "graft_work",
-        "omop_database_catalog" -> "spark_catalog",
-        "omop_database_schema" -> "graft_omop",
-        "omop_table" -> "provider",
-        "concept_id_column" -> "specialty_concept_id",
-        "process_semi_approved_mappings" -> ""))
-    graft.sources.OhdsiSql.execute(s, rendered)
-      .orderBy("source_code", "target_concept_id")
-  }
-
-  /** The reference's usagi domain check, VERBATIM
-    * (`etl/{omop_table}__{concept_id_column}_usagi_fk_domain_check
-    * .sql.jinja` — the J7 operator's published SQL): the Jinja loop over
-    * the allowed domains with `loop.first` comma control, the
-    * `cast(u.conceptId as integer)` join with the concept-0 guard, the
-    * APPROVED-only branch. The allowed set is fetched driver-side from
-    * the concept dimension exactly like the reference's `_get_fk_domains`
-    * (`etl_base.py:323-347`).
-    */
-  val ohdsiSqlUsagiDomainCheck: Q = (s, d) => {
-    stageUsagiFixture(s, d)
-    val allowed = t(s, d, "nation").filter(col("n_regionkey") < 2)
-      .select(lower(col("n_name"))).orderBy("lower(n_name)")
-      .collect().map(_.getString(0)).toSeq
-    val rendered = graft.sources.JinjaLite.render(
-      """{#- Copyright 2024 RADar-AZDelta -#}
-        |{#- SPDX-License-Identifier: gpl3+ -#}
-        |select top 100 u.*, c.domain_id
-        |from [{{work_database_catalog}}].[{{work_database_schema}}].[{{omop_table}}__{{concept_id_column}}_usagi] u
-        |inner join [{{omop_database_catalog}}].[{{omop_database_schema}}].[concept] c on c.concept_id = cast(u.conceptId as integer)
-        |  and c.concept_id <> 0
-        |  and lower(c.domain_id) not in (
-        |  {%- for domain in domains -%}
-        |    {%- if not loop.first -%}
-        |        {{', '}}
-        |    {%- endif -%}
-        |    '{{domain}}'
-        |  {%- endfor -%})
-        |{% if not process_semi_approved_mappings -%}
-        |where u.mappingStatus = 'APPROVED'
-        |{%- else -%}
-        |where u.mappingStatus in ('APPROVED', 'SEMI-APPROVED')
-        |{%- endif %}""".stripMargin,
-      scalars = Map(
-        "work_database_catalog" -> "spark_catalog",
-        "work_database_schema" -> "graft_work",
-        "omop_database_catalog" -> "spark_catalog",
-        "omop_database_schema" -> "graft_omop",
-        "omop_table" -> "provider",
-        "concept_id_column" -> "specialty_concept_id",
-        "process_semi_approved_mappings" -> ""),
-      lists = Map("domains" -> allowed))
-    graft.sources.OhdsiSql.execute(s, rendered)
-      .orderBy("sourceCode", "sourceName", "conceptId")
-  }
-
   val defs: Seq[(String, Q)] = Seq(
     "achilles_cdm_store_build" -> achillesCdmStoreBuild,
     "ohdsi_sql_session_span" -> ohdsiSqlSessionSpan,
-    "ohdsi_sql_dup_rows" -> ohdsiSqlDupRows,
-    "ohdsi_sql_s2cm_dups" -> ohdsiSqlS2cmDups,
-    "ohdsi_sql_usagi_domain_check" -> ohdsiSqlUsagiDomainCheck,
     "ohdsi_sql_achilles701" -> ohdsiSqlAchilles701,
     "ohdsi_sql_achilles105" -> ohdsiSqlAchilles105,
     "ohdsi_sql_heel_rule" -> ohdsiSqlHeelRule,

@@ -660,6 +660,31 @@ object OhdsiSql {
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
   }
 
+  /** The first balanced parenthesized span at or after `from`, quote-aware
+    * throughout: `(open, close)`, the indices of the `(` and its matching
+    * `)`. `open` is `s.length` when no `(` follows; `close` is -1 when the
+    * span never closes. Callers name their own shape in the error.
+    */
+  private def parenSpan(s: String, from: Int): (Int, Int) = {
+    var inQ = false
+    var i = from
+    while (i < s.length && (inQ || s.charAt(i) != '(')) {
+      if (s.charAt(i) == '\'') inQ = !inQ
+      i += 1
+    }
+    val open = i
+    var depth = 0
+    var close = -1
+    while (i < s.length && close < 0) {
+      val ch = s.charAt(i)
+      if (ch == '\'') inQ = !inQ
+      else if (!inQ && ch == '(') depth += 1
+      else if (!inQ && ch == ')') { depth -= 1; if (depth == 0) close = i }
+      i += 1
+    }
+    (open, close)
+  }
+
   /** First span at paren depth 0 OUTSIDE quotes where the keyword phrase
     * (words separated by ANY whitespace, including newlines) starts on a
     * word boundary: `Some((startIdx, idxAfterLastWord))`, `None` if
@@ -717,26 +742,10 @@ object OhdsiSql {
         var i = w.end
         var more = true
         while (more) {
-          // skip to the CTE body's opening paren
-          var inQ = false
-          while (i < stmt.length && (inQ || stmt.charAt(i) != '(')) {
-            if (stmt.charAt(i) == '\'') inQ = !inQ
-            i += 1
-          }
-          require(i < stmt.length, "malformed WITH: missing CTE body")
-          // balanced body
-          var depth = 0
-          inQ = false
-          var closed = false
-          while (i < stmt.length && !closed) {
-            val ch = stmt.charAt(i)
-            if (ch == '\'') inQ = !inQ
-            else if (!inQ && ch == '(') depth += 1
-            else if (!inQ && ch == ')') { depth -= 1; if (depth == 0) closed = true }
-            i += 1
-          }
-          require(closed, "malformed WITH: unbalanced CTE body")
-          var j = i
+          val (open, close) = parenSpan(stmt, i)
+          require(open < stmt.length, "malformed WITH: missing CTE body")
+          require(close > open, "malformed WITH: unbalanced CTE body")
+          var j = close + 1
           while (j < stmt.length && Character.isWhitespace(stmt.charAt(j))) j += 1
           if (j < stmt.length && stmt.charAt(j) == ',') { i = j + 1 }
           else { more = false; i = j }
@@ -778,19 +787,7 @@ object OhdsiSql {
             "unsupported UPDATE..FROM shape (expected: UPDATE a SET ... FROM t " +
               "[AS] a INNER JOIN rel [AS] r ON cond, or UPDATE t [AS] a SET ... " +
               "FROM ( subquery ) r WHERE cond)"))
-        // balanced subquery
-        var i = body.indexOf('(', gm.end - 1)
-        var depth = 0
-        var inQ = false
-        val start = i
-        var end = -1
-        while (i < body.length && end < 0) {
-          val ch = body.charAt(i)
-          if (ch == '\'') inQ = !inQ
-          else if (!inQ && ch == '(') depth += 1
-          else if (!inQ && ch == ')') { depth -= 1; if (depth == 0) end = i }
-          i += 1
-        }
+        val (start, end) = parenSpan(body, gm.end - 1)
         require(end > start, "unbalanced parentheses in UPDATE..FROM subquery")
         val sub = body.substring(start + 1, end)
         val tm = ci(raw"(?s)^\s*(\w+)\s+WHERE\s+(.*?)\s*;?\s*$$")
@@ -854,21 +851,8 @@ object OhdsiSql {
       .getOrElse(throw new IllegalArgumentException(
         "unsupported MERGE shape (expected: MERGE INTO <t> [AS] <alias> USING (...))"))
     val (target, tA) = (head.group(1), head.group(2))
-    // balanced-paren source subquery
-    var i = head.end
-    while (i < stmt.length && stmt.charAt(i) != '(') i += 1
-    require(i < stmt.length, "MERGE USING must be a parenthesized subquery")
-    var depth = 0
-    var inQ = false
-    val start = i
-    var end = -1
-    while (i < stmt.length && end < 0) {
-      val ch = stmt.charAt(i)
-      if (ch == '\'') inQ = !inQ
-      else if (!inQ && ch == '(') depth += 1
-      else if (!inQ && ch == ')') { depth -= 1; if (depth == 0) end = i }
-      i += 1
-    }
+    val (start, end) = parenSpan(stmt, head.end)
+    require(start < stmt.length, "MERGE USING must be a parenthesized subquery")
     require(end > start, "unbalanced parentheses in MERGE USING subquery")
     val srcSql = stmt.substring(start + 1, end)
     // a leading `WITH name AS (...)` prefix (the CONCEPT_ID_swap_merge
@@ -974,6 +958,67 @@ object OhdsiSql {
         updated.unionByName(inserted)
     }
     reRegister(spark, target, result)
+  }
+
+  /** The template tree a vendored RiaB template comes from. The two trees
+    * differ in three ways the runner owns: the resource name (BigQuery
+    * files carry a `bq_` prefix), the variables that name a location
+    * (`{omop,work,dqd}_database_catalog` + `_schema` against
+    * `dataset_{omop,work,dqd}`), and the execution path ([[runTemplate]]).
+    */
+  sealed abstract class Dialect(prefix: String) {
+    /** The resource of the template whose SQL Server resource is `base`. */
+    def file(base: String): String = prefix + base
+    /** Render variables naming catalog database `db` as the tree's
+      * `role` location (`omop`, `work` or `dqd`).
+      */
+    protected def location(role: String, db: String): Map[String, String]
+    def omop(db: String): Map[String, String] = location("omop", db)
+    def work(db: String): Map[String, String] = location("work", db)
+    def dqd(db: String): Map[String, String] = location("dqd", db)
+    def pick[A](sqlServer: => A, bigQuery: => A): A =
+      if (this == SqlServer) sqlServer else bigQuery
+  }
+  case object SqlServer extends Dialect("") {
+    protected def location(role: String, db: String): Map[String, String] = Map(
+      s"${role}_database_catalog" -> "spark_catalog",
+      s"${role}_database_schema" -> db)
+  }
+  case object BigQuery extends Dialect("bq_") {
+    protected def location(role: String, db: String): Map[String, String] =
+      Map(s"dataset_$role" -> db)
+  }
+
+  /** The vendored template `graft/ohdsi/<name>.sql.jinja`; a missing
+    * resource fails with its name.
+    */
+  def template(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/graft/ohdsi/$name.sql.jinja")
+    require(in != null, s"missing vendored template resource $name.sql.jinja")
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** Render the vendored template `name` with JinjaLite and run it the way
+    * the reference runs its tree: SQL Server through [[executeAll]] (with
+    * the SqlRender pass unless `sqlRender` is false — the DDL tree),
+    * BigQuery through [[translateBigQuery]] and [[executeAll]] without
+    * SqlRender (the reference drives that tree through Jinja and the
+    * BigQuery client only). Returns the last SELECT's frame, if any.
+    */
+  def runTemplate(s: SparkSession, dialect: Dialect, name: String,
+      vars: Map[String, String] = Map.empty,
+      lists: Map[String, Seq[String]] = Map.empty,
+      dicts: Map[String, Seq[(String, String)]] = Map.empty,
+      records: Map[String, Seq[Map[String, String]]] = Map.empty,
+      binds: Map[String, String] = Map.empty,
+      sqlRender: Boolean = true): Option[DataFrame] = {
+    val rendered = JinjaLite.render(template(name), vars, lists, dicts, records)
+    dialect match {
+      case SqlServer => executeAll(s, rendered, binds = binds, sqlRender = sqlRender)
+      case BigQuery =>
+        executeAll(s, translateBigQuery(rendered), binds = binds, sqlRender = false)
+    }
   }
 
   /** Render + translate + run a multi-statement OHDSI SQL script against
@@ -1246,20 +1291,8 @@ object OhdsiSql {
     */
   private def executeIfNotExists(spark: SparkSession, stmt: String): Unit = {
     val m = ci(raw"^\s*IF\s+NOT\s+EXISTS\s*").findFirstMatchIn(stmt).get
-    var i = m.end
-    while (i < stmt.length && stmt.charAt(i) != '(') i += 1
-    require(i < stmt.length, "IF NOT EXISTS needs a parenthesized probe subquery")
-    var depth = 0
-    var inQ = false
-    val start = i
-    var end = -1
-    while (i < stmt.length && end < 0) {
-      val ch = stmt.charAt(i)
-      if (ch == '\'') inQ = !inQ
-      else if (!inQ && ch == '(') depth += 1
-      else if (!inQ && ch == ')') { depth -= 1; if (depth == 0) end = i }
-      i += 1
-    }
+    val (start, end) = parenSpan(stmt, m.end)
+    require(start < stmt.length, "IF NOT EXISTS needs a parenthesized probe subquery")
     require(end > start, "unbalanced parentheses in IF NOT EXISTS probe")
     val probe = stmt.substring(start + 1, end)
     val guarded = stmt.substring(end + 1).trim
@@ -1374,17 +1407,7 @@ object OhdsiSql {
     val bodyRaw = m.group(3).trim
     val body =
       if (bodyRaw.startsWith("(")) {
-        var depth = 0
-        var inQ = false
-        var closeAt = -1
-        var i = 0
-        while (i < bodyRaw.length && closeAt < 0) {
-          val ch = bodyRaw.charAt(i)
-          if (ch == '\'') inQ = !inQ
-          else if (!inQ && ch == '(') depth += 1
-          else if (!inQ && ch == ')') { depth -= 1; if (depth == 0) closeAt = i }
-          i += 1
-        }
+        val (_, closeAt) = parenSpan(bodyRaw, 0)
         if (closeAt == bodyRaw.length - 1) bodyRaw.substring(1, closeAt) else bodyRaw
       } else bodyRaw
     val df = spark.sql(body)
@@ -1407,20 +1430,8 @@ object OhdsiSql {
     */
   private def executeIfExists(spark: SparkSession, stmt: String): Unit = {
     val m = ci(raw"^\s*IF\s+EXISTS\s*").findFirstMatchIn(stmt).get
-    var i = m.end
-    while (i < stmt.length && stmt.charAt(i) != '(') i += 1
-    require(i < stmt.length, "IF EXISTS needs a parenthesized probe subquery")
-    var depth = 0
-    var inQ = false
-    val start = i
-    var end = -1
-    while (i < stmt.length && end < 0) {
-      val ch = stmt.charAt(i)
-      if (ch == '\'') inQ = !inQ
-      else if (!inQ && ch == '(') depth += 1
-      else if (!inQ && ch == ')') { depth -= 1; if (depth == 0) end = i }
-      i += 1
-    }
+    val (start, end) = parenSpan(stmt, m.end)
+    require(start < stmt.length, "IF EXISTS needs a parenthesized probe subquery")
     require(end > start, "unbalanced parentheses in IF EXISTS probe")
     val probe = stmt.substring(start + 1, end)
     val guarded = stmt.substring(end + 1).trim

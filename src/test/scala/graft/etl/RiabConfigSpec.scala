@@ -80,6 +80,17 @@ class RiabConfigSpec extends AnyFunSuite {
     // surrounding whitespace is not malformed
     val c = RiabConfig.parse("[riab]\nmax_parallel_tables= 3 \n")
     assert(c.maxParallelTables === 3)
+    // shuffle partitions: [spark] shuffle_partitions, then SPARK_GRAFT_CPUS,
+    // then 32, skipping each malformed or non-positive value
+    def spark(knob: Option[String]) = RiabConfig.parse("[riab]\ndb_engine=spark\n[spark]\n" +
+      knob.map(v => s"shuffle_partitions=$v\n").getOrElse(""))
+    for ((knob, cpus, expected) <- Seq(
+        (Some("abc"), None, 32), (Some("0"), Some("-2"), 32), (Some("1.5"), Some(""), 32),
+        (Some("abc"), Some("8"), 8), (None, Some("x"), 32), (None, Some(" 6 "), 6),
+        (Some(" 12 "), Some("8"), 12), (None, None, 32)))
+      withClue(s"shuffle_partitions=$knob SPARK_GRAFT_CPUS=$cpus: ") {
+        assert(spark(knob).shufflePartitions(cpus) === expected)
+      }
   }
 
   test("key=value before any [section] throws like configparser") {

@@ -1,12 +1,16 @@
 package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Certifies that EVERY template in the reference's sql_server tree is
   * exercised by a verbatim `ohdsi_sql_*` query (or is an intentionally
-  * documented near-duplicate of one). Runs only where the reference
-  * checkout is present; a template added upstream that this map does not
-  * know fails the suite, keeping the verbatim coverage honest.
+  * documented near-duplicate of one), and that every vendored resource is
+  * byte-identical to its reference original. Those tests run only where
+  * the reference checkout is present; a template added upstream that this
+  * map does not know fails the suite, keeping the verbatim coverage
+  * honest. The guards on how templates live in the code (resources only,
+  * one loader) run everywhere.
   */
 class TemplateCoverageSpec extends AnyFunSuite {
 
@@ -188,16 +192,82 @@ class TemplateCoverageSpec extends AnyFunSuite {
     * the sql_server templates root).
     */
   private val SqlServerVendored: Map[String, String] = Map(
-    "DataQualityDashboard_ddl" -> "ddl/DataQualityDashboard_ddl.sql.jinja",
+    "sample_etl_query" -> "cdm_folders/sample_etl_query.sql.jinja",
+    "sample_usagi_query" -> "cdm_folders/sample_usagi_query.sql.jinja",
+    "concept_remove_custom" -> "cleanup/CONCEPT_remove_custom_concepts.sql.jinja",
+    "concept_remove_by_usagi" -> "cleanup/CONCEPT_remove_custom_concepts_by_{omop_table}__{concept_id_column}_usagi_table.sql.jinja",
+    "map_remove_ids" -> "cleanup/SOURCE_ID_TO_OMOP_ID_MAP_remove_ids_by_omop_table.sql.jinja",
+    "s2cm_remove" -> "cleanup/SOURCE_TO_CONCEPT_MAP_remove_concepts_by_{omop_table}__{concept_id_column}_usagi_table.sql.jinja",
+    "all_work_table_names" -> "cleanup/all_work_table_names.sql.jinja",
+    "drop" -> "cleanup/drop.sql.jinja",
+    "truncate" -> "cleanup/truncate.sql.jinja",
+    "dqd_ddl" -> "ddl/DataQualityDashboard_ddl.sql.jinja",
     "OMOPCDM_sql_server_5.4_ddl" -> "ddl/OMOPCDM_sql_server_5.4_ddl.sql.jinja",
     "OMOPCDM_sql_server_5.4_primary_keys" -> "ddl/OMOPCDM_sql_server_5.4_primary_keys.sql.jinja",
     "OMOPCDM_sql_server_5.4_indices" -> "ddl/OMOPCDM_sql_server_5.4_indices.sql.jinja",
     "OMOPCDM_sql_server_5.4_constraints" -> "ddl/OMOPCDM_sql_server_5.4_constraints.sql.jinja",
+    "map_ddl" -> "ddl/SOURCE_ID_TO_OMOP_ID_MAP_ddl.sql.jinja",
     "result_table_ddl_concept" -> "ddl/result_table_ddl_concept.sql.jinja",
     "result_table_ddl_field" -> "ddl/result_table_ddl_field.sql.jinja",
     "result_table_ddl_table" -> "ddl/result_table_ddl_table.sql.jinja",
-    "omop_table_apply_event_columns" -> "etl/{omop_table}_apply_event_columns.sql.jinja",
-    "omop_table_merge" -> "etl/{omop_table}_merge.sql.jinja")
+    "get_dqd_run" -> "dqd/get_dqd_run.sql.jinja",
+    "get_dqd_run_results" -> "dqd/get_dqd_run_results.sql.jinja",
+    "get_last_dqd_runs" -> "dqd/get_last_dqd_runs.sql.jinja",
+    "concept_id_swap_create" -> "etl/CONCEPT_ID_swap_create.sql.jinja",
+    "concept_id_swap_merge" -> "etl/CONCEPT_ID_swap_merge.sql.jinja",
+    "custom_validate" -> "etl/CONCEPT_custom_validate.sql.jinja",
+    "custom_validate_duplicates" -> "etl/CONCEPT_custom_validate_duplicates.sql.jinja",
+    "concept_merge" -> "etl/CONCEPT_merge.sql.jinja",
+    "map_merge" -> "etl/SOURCE_ID_TO_OMOP_ID_MAP_merge.sql.jinja",
+    "map_invalidate" -> "etl/SOURCE_ID_TO_OMOP_ID_MAP_update_invalid_reason.sql.jinja",
+    "s2cm_dups" -> "etl/SOURCE_TO_CONCEPT_MAP_check_for_duplicates.sql.jinja",
+    "stcm_merge" -> "etl/SOURCE_TO_CONCEPT_MAP_merge.sql.jinja",
+    "stcm_invalidate" -> "etl/SOURCE_TO_CONCEPT_MAP_update_invalid_reason.sql.jinja",
+    "metadata_git" -> "etl/cdm_metadata_git_commit_hash.sql.jinja",
+    "metadata_riab" -> "etl/cdm_metadata_riab_version.sql.jinja",
+    "concept_create" -> "etl/{omop_table}__{concept_id_column}_concept_create.sql.jinja",
+    "usagi_create" -> "etl/{omop_table}__{concept_id_column}_usagi_create.sql.jinja",
+    "usagi_fk_domain_check" -> "etl/{omop_table}__{concept_id_column}_usagi_fk_domain_check.sql.jinja",
+    "usagi_non_standard" -> "etl/{omop_table}__{concept_id_column}_usagi_non_standard.sql.jinja",
+    "usagi_update" -> "etl/{omop_table}__{concept_id_column}_usagi_update_custom_concepts.sql.jinja",
+    "apply_event_columns" -> "etl/{omop_table}_apply_event_columns.sql.jinja",
+    "get_event_tables" -> "etl/{omop_table}_get_event_tables.sql.jinja",
+    "omop_table_merge" -> "etl/{omop_table}_merge.sql.jinja",
+    "upload_insert" -> "etl/{omop_table}_{sql_file}_insert.sql.jinja",
+    "dup_rows" -> "etl/{omop_work_table}_merge_check_for_duplicate_rows.sql.jinja",
+    "work_ddl" -> "etl/{omop_work}_ddl.sql.jinja",
+    "work_drop_table" -> "etl/{omop_work}_drop_table.sql.jinja",
+    "pk_swap_create" -> "etl/{primary_key_column}_swap_create.sql.jinja",
+    "pk_swap_merge" -> "etl/{primary_key_column}_swap_merge.sql.jinja",
+    "vocabulary_table_truncate" -> "vocabulary/vocabulary_table_truncate.sql.jinja")
+
+  /** Every `src/main` Scala file with its text. */
+  private def mainSources: Seq[(String, String)] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+    finally s.close()
+  }
+
+  test("no RiaB template is inlined in the Scala sources") {
+    val marker = "{#- Copyright 2024 RADar-AZDelta"
+    val inlined = mainSources.collect { case (f, text) if text.contains(marker) => f }
+    assert(inlined.isEmpty, s"move these templates to graft/ohdsi/ resources: ${inlined.mkString(", ")}")
+  }
+
+  test("resources load only through OhdsiSql.template and the CDM model's CSV loader") {
+    val loads = mainSources.flatMap { case (f, text) =>
+      Seq.fill("getResourceAsStream".r.findAllMatchIn(text).size)(f)
+    }
+    assert(loads.sorted === Seq("CdmModel.scala", "OhdsiSql.scala"))
+  }
+
+  test("the template loader reads every vendored resource and names a missing one") {
+    (BqVendored.keySet ++ SqlServerVendored.keySet)
+      .foreach(n => assert(graft.sources.OhdsiSql.template(n).nonEmpty, n))
+    val e = intercept[IllegalArgumentException](graft.sources.OhdsiSql.template("no_such"))
+    assert(e.getMessage.contains("no_such.sql.jinja"))
+  }
 
   test("every vendored sql_server resource is byte-identical to its reference original") {
     val root = new java.io.File("/root/reference/src/riab/etl/sql_server/templates")

@@ -473,6 +473,24 @@ class OhdsiSqlSpec extends SparkSpec {
     spark.sql("INSERT INTO ohdsi_spec_db.concept_id_swap VALUES ('a', 1)")
     OhdsiSql.executeAll(spark, ddl)
     assert(spark.table("ohdsi_spec_db.concept_id_swap").count() === 1L)
+    // a ')' inside a quoted literal does not close the probe: the probe
+    // finds no such table and the guarded CREATE runs
+    spark.sql("DROP TABLE IF EXISTS ohdsi_spec_db.paren_q")
+    OhdsiSql.executeAll(spark,
+      """IF NOT EXISTS (SELECT 1 FROM sys.tables t WHERE t.name = 'x)y' AND t.name <> ')')
+        |CREATE TABLE [spark_catalog].[ohdsi_spec_db].[paren_q] (x varchar(10))""".stripMargin)
+    assert(spark.catalog.tableExists("ohdsi_spec_db.paren_q"))
+    // an unbalanced probe, and one whose only ')' is quoted, raise with
+    // the shape named
+    for (probe <- Seq("(SELECT 1 FROM sys.tables t WHERE (t.name = 'zz')",
+        "(SELECT 1 FROM sys.tables t WHERE t.name = ')'"))
+      for ((guard, shape) <- Seq(
+          ("IF NOT EXISTS", "CREATE TABLE ohdsi_spec_db.never (x integer)"),
+          ("IF EXISTS", "DROP TABLE ohdsi_spec_db.never"))) {
+        val e = intercept[IllegalArgumentException](
+          OhdsiSql.executeAll(spark, s"$guard $probe $shape"))
+        assert(e.getMessage.endsWith(s"unbalanced parentheses in $guard probe"))
+      }
   }
 
   test("MERGE under a leading WITH scopes the CTE over the USING subquery") {
@@ -544,6 +562,19 @@ class OhdsiSqlSpec extends SparkSpec {
         |SELECT k, v FROM #md_tgt ORDER BY k""".stripMargin)
       .collect().map(r => (r.getLong(0), r.getString(1)))
     assert(out.toSeq === Seq((1L, "a"), (3L, "c")))
+    // a quoted ')' stays inside the USING subquery; an unclosed one raises
+    val quoted = OhdsiSql.execute(spark,
+      """MERGE INTO #md_tgt AS T
+        |USING (SELECT k FROM md_hits WHERE ')' <> '(') AS S
+        |ON S.k = T.k
+        |WHEN MATCHED THEN
+        |  DELETE;
+        |SELECT k FROM #md_tgt ORDER BY k""".stripMargin)
+    assert(quoted.collect().map(_.getLong(0)).toSeq === Seq(1L, 3L))
+    val open = intercept[IllegalArgumentException](OhdsiSql.executeAll(spark,
+      "MERGE INTO #md_tgt AS T USING (SELECT k FROM md_hits WHERE (k > 0) AS S ON S.k = T.k " +
+        "WHEN MATCHED THEN DELETE"))
+    assert(open.getMessage.endsWith("unbalanced parentheses in MERGE USING subquery"))
     // UPDATE and DELETE on matched rows together is a refused shape
     val e = intercept[IllegalArgumentException](OhdsiSql.executeAll(spark,
       """MERGE INTO #md_tgt AS T USING (SELECT k FROM md_hits) AS S ON S.k = T.k
