@@ -45,39 +45,36 @@ object EtlQueries {
   private val StaleTables = Set("region", "part")
 
   val etlTwoStage: Q = (s, d) => {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, Promise}
     import scala.concurrent.duration.Duration
     val m = TpchModel.model
     val zones = Zones.forPurpose("etl")
-    // epilogue/overlap pool (the stage-1 tables run on EtlRunner's own pool)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    // usagi upload (stage 0): priority codes -> concept ids; '1%' codes get
+    // custom concepts over the 2e9 floor, like the usagi composite. Only
+    // the orders table (level 4) consumes it, so it OVERLAPS stage 1 as a
+    // concurrent Spark job and is awaited where needed (it is the first
+    // job, so a serialized pool still runs it before stage 1 waits).
+    val usagiDone = Promise[Unit]()
+    def usagiUpload(): Unit = usagiDone.complete(scala.util.Try(timed("usagi upload") {
+      val codes = t(s, d, "orders").select(col("o_orderpriority").as("code")).distinct()
+      val baseIds = Swap.denseIds(codes, Seq("code"), 0L, "cid")
+      val customIds = Swap.rankIds(
+        codes.filter(col("code").startsWith("1")), "code", MergeOps.CustomConceptBase, "customId")
+      zones.write(
+        baseIds.join(customIds, Seq("code"), "left")
+          .select(col("code"), coalesce(col("customId"), col("cid")).as("conceptId")),
+        "work", "usagi_priority")
+    }))
 
-    try {
-      // usagi upload (stage 0): priority codes -> concept ids; '1%' codes get
-      // custom concepts over the 2e9 floor, like the usagi composite. Only
-      // the orders table (level 4) consumes it, so it OVERLAPS the early
-      // levels as a concurrent Spark job and is awaited where needed.
-      val usagiDone = Future(timed("usagi upload") {
-        val codes = t(s, d, "orders").select(col("o_orderpriority").as("code")).distinct()
-        val baseIds = Swap.denseIds(codes, Seq("code"), 0L, "cid")
-        val customIds = Swap.rankIds(
-          codes.filter(col("code").startsWith("1")), "code", MergeOps.CustomConceptBase, "customId")
-        zones.write(
-          baseIds.join(customIds, Seq("code"), "left")
-            .select(col("code"), coalesce(col("customId"), col("cid")).as("conceptId")),
-          "work", "usagi_priority")
-      })
-
-      // stage 1: barrier-free prepare/finalize scheduling (round-7, same
-      // shape as FolderEtl): a table's swap write reads only its OWN
-      // source, so every swap launches immediately; the finalize (FK
-      // rewrites through parent swaps + own pk join + gold write) gates on
-      // exactly {own + parent} swap writes. The epilogue — stage 2 event
-      // rewrite, lineage tombstone — reads only swap tables, so it rides
-      // the postEtlCleanup hook (fires when the LAST prepare lands) and
-      // drains concurrently with the finalizes.
+    // stage 1: barrier-free prepare/finalize scheduling (round-7, same
+    // shape as FolderEtl): a table's swap write reads only its OWN
+    // source, so every swap launches immediately; the finalize (FK
+    // rewrites through parent swaps + own pk join + gold write) gates on
+    // exactly {own + parent} swap writes. The epilogue — stage 2 event
+    // rewrite, lineage tombstone — reads only swap tables, so it rides
+    // the postEtlCleanup hook (fires when the LAST prepare lands) and
+    // drains concurrently with the finalizes.
+    graft.io.Jobs.concurrently(Seq(() => usagiUpload(), () =>
       EtlRunner(m).runFlowPipelined(m.tables)(
         prepareTable = (tb, _) => {
           val src = t(s, d, tb)
@@ -95,7 +92,7 @@ object EtlQueries {
                 .drop("x", "y")
             }
             if (tb == "orders") {
-              Await.result(usagiDone, Duration.Inf) // barrier only where consumed
+              Await.result(usagiDone.future, Duration.Inf) // barrier only where consumed
               val usagi = zones.read(s, "work", "usagi_priority")
               out = out.join(broadcast(usagi), out("o_orderpriority") === usagi("code"), "left")
                 .withColumn("priority_concept_id", coalesce(col("conceptId"), lit(0L)))
@@ -111,8 +108,8 @@ object EtlQueries {
             0L
           })
         },
-        postEtlCleanup = () => {
-          val stage2 = Future(timed("stage2 events") {
+        postEtlCleanup = () => graft.io.Jobs.concurrently(Seq(
+          () => timed("stage2 events") {
             val custSwap = zones.read(s, "work", "customer_id_swap")
             zones.write(
               t(s, d, "events")
@@ -120,8 +117,8 @@ object EtlQueries {
                 .withColumn("user_id", coalesce(col("y"), lit(0L)))
                 .select("event_id", "user_id", "event_type"),
               "omop", "events_mapped")
-          })
-          val lineageDone = Future(timed("lineage+tombstone") {
+          },
+          () => timed("lineage+tombstone") {
             val lineage = m.tables.filter(m.pk(_).isDefined).sorted.map { tb =>
               val start =
                 if (StaleTables(tb)) java.sql.Date.valueOf("1990-01-01")
@@ -131,42 +128,38 @@ object EtlQueries {
             zones.write(
               Cleanup.tombstoneStale(lineage, lit("2000-01-01").cast("date")),
               "omop", "source_id_to_omop_id_map")
-          })
-          Await.result(Future.sequence(Seq(stage2, lineageDone)), Duration.Inf)
-          ()
-        })
+          })))))
 
-      // metadata stamp (deterministic "now")
-      val metadata = Cleanup.versionMetadata(
-        s, "5.4", "0.1.0",
-        java.sql.Date.valueOf("2026-01-01"),
-        java.sql.Timestamp.valueOf("2026-01-01 12:00:00"))
+    // metadata stamp (deterministic "now")
+    val metadata = Cleanup.versionMetadata(
+      s, "5.4", "0.1.0",
+      java.sql.Date.valueOf("2026-01-01"),
+      java.sql.Timestamp.valueOf("2026-01-01 12:00:00"))
 
-      // summary over the READ-BACK zone tables: one row per artifact with a
-      // surrogate-id checksum, so a wrong swap/join anywhere shifts a sum.
-      // ONE aggregate over a union of narrow per-table projections — a
-      // single tiny-shuffle job (and far fewer codegen classes) instead of
-      // eleven separate global aggregates (round-5 verdict #4: the untimed
-      // summary tail was ~3.7 s of the 13.7 s standalone wall).
-      def contrib(tb: String): DataFrame = {
-        val idCols = m.pk(tb).toSeq ++ m.fks(tb).keys.toSeq ++
-          (if (tb == "orders") Seq("priority_concept_id") else Nil)
-        zones.read(s, "omop", tb).select(
-          lit(tb).as("omop_table"),
-          idCols.map(col).reduce(_ + _).as("__contrib"))
-      }
-      val rows = m.tables.sorted.map(contrib) ++ Seq(
-        zones.read(s, "omop", "events_mapped")
-          .select(lit("events_mapped").as("omop_table"), col("user_id").as("__contrib")),
-        zones.read(s, "omop", "source_id_to_omop_id_map")
-          .select(lit("source_id_to_omop_id_map").as("omop_table"),
-            when(col("invalid_reason") === "D", 1L).otherwise(0L).as("__contrib")),
-        metadata.select(lit("_metadata").as("omop_table"), lit(0L).as("__contrib")))
-      rows.reduce(_ unionByName _)
-        .groupBy("omop_table")
-        .agg(count(lit(1)).as("n_rows"), sum(col("__contrib")).as("checksum"))
-        .orderBy("omop_table")
-    } finally pool.shutdown()
+    // summary over the READ-BACK zone tables: one row per artifact with a
+    // surrogate-id checksum, so a wrong swap/join anywhere shifts a sum.
+    // ONE aggregate over a union of narrow per-table projections — a
+    // single tiny-shuffle job (and far fewer codegen classes) instead of
+    // eleven separate global aggregates (round-5 verdict #4: the untimed
+    // summary tail was ~3.7 s of the 13.7 s standalone wall).
+    def contrib(tb: String): DataFrame = {
+      val idCols = m.pk(tb).toSeq ++ m.fks(tb).keys.toSeq ++
+        (if (tb == "orders") Seq("priority_concept_id") else Nil)
+      zones.read(s, "omop", tb).select(
+        lit(tb).as("omop_table"),
+        idCols.map(col).reduce(_ + _).as("__contrib"))
+    }
+    val rows = m.tables.sorted.map(contrib) ++ Seq(
+      zones.read(s, "omop", "events_mapped")
+        .select(lit("events_mapped").as("omop_table"), col("user_id").as("__contrib")),
+      zones.read(s, "omop", "source_id_to_omop_id_map")
+        .select(lit("source_id_to_omop_id_map").as("omop_table"),
+          when(col("invalid_reason") === "D", 1L).otherwise(0L).as("__contrib")),
+      metadata.select(lit("_metadata").as("omop_table"), lit(0L).as("__contrib")))
+    rows.reduce(_ unionByName _)
+      .groupBy("omop_table")
+      .agg(count(lit(1)).as("n_rows"), sum(col("__contrib")).as("checksum"))
+      .orderBy("omop_table")
   }
 
   /** The CLI's folder-driven ETL ([[graft.etl.FolderEtl]]) under the hash

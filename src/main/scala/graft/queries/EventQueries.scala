@@ -428,10 +428,9 @@ object EventQueries {
     */
   /** Current bucketed-store generation (vacuumed from this constant, r17). */
   private[graft] val BktStoreGen = "bkt1"
-  private val bucketedStore =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
+  private val bucketedStore = graft.io.Stored.perDataset[(String, String)]
   val joinBucketedColocated: Q = (s, d) => {
-    val (ot, lt) = bucketedStore.getOrElseUpdate((s, d), {
+    val (ot, lt) = bucketedStore((s, d)) {
       val z = graft.io.Zones.forPurpose(s"${BktStoreGen}_${graft.io.Zones.pathKey(d)}")
       // (r21) the two bucketed stores are independent writes — concurrent
       // jobs (guide §2.6) instead of two serial job tails
@@ -442,7 +441,7 @@ object EventQueries {
           t(s, d, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey"),
           "o_orderkey", 8, "work", "lineitem")))
       (ot, lt)
-    })
+    }
     s.table(ot).join(s.table(lt), "o_orderkey")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_items"),
@@ -513,18 +512,10 @@ object EventQueries {
   // every consumer — the canonical merge report, the counts view, the
   // pairs view — reads the stored table. Same run-once-store-report-many
   // pattern as the DQD battery (r5 lesson).
-  private val achillesStore =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def storedAchilles(s: SparkSession, d: String): DataFrame =
-    achillesStore.getOrElseUpdate((s, d), {
-      val zones = graft.io.Zones.forPurpose("achilles")
-      val table = s"achilles_results_${graft.io.Zones.pathKey(d)}"
-      zones.write(
-        graft.operators.AchillesGen.mergedResults(
-          graft.model.TpchModel.modelWithEvents, tb => t(s, d, tb)),
-        "achilles", table)
-      zones.read(s, "achilles", table)
-    })
+  private val storedAchilles = new graft.io.Stored.Table(
+    graft.io.Stored.Zone("achilles", "achilles"), "achilles_results",
+    (s, d) => graft.operators.AchillesGen.mergedResults(
+      graft.model.TpchModel.modelWithEvents, tb => t(s, d, tb)))
 
   /** Stream-STREAM join run as a real StreamingQuery: purchases landing
     * within one hour of a click by the same user, both sides file-source

@@ -378,17 +378,9 @@ object LifecycleQueries {
   // (Round 4 shared only the plan OBJECT — each consumer re-executed all
   // ~40 branch aggregates and, because the bench GCs between queries,
   // re-COMPILED them: dqd_overview alone measured 16 s at sf0.1.)
-  private val batteryResults =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def generatedBattery(s: SparkSession, d: String): DataFrame =
-    batteryResults.getOrElseUpdate((s, d), {
-      val zones = Zones.forPurpose("dqd")
-      val table = s"dqd_results_${Zones.pathKey(d)}"
-      zones.write(
-        Dqd.fieldLevel(TpchModel.modelWithEvents, tb => t(s, d, tb), dqdRules),
-        "dqd", table)
-      zones.read(s, "dqd", table)
-    })
+  private val generatedBattery = new graft.io.Stored.Table(
+    graft.io.Stored.Zone("dqd", "dqd"), "dqd_results",
+    (s, d) => Dqd.fieldLevel(TpchModel.modelWithEvents, tb => t(s, d, tb), dqdRules))
 
   // battery output is bounded metadata (one row per check) at ANY data
   // scale, so the report sort is a single-partition sort — orderBy would

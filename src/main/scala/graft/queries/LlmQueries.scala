@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.corpus.AdmissionIndex
 import graft.ops._
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -124,31 +125,33 @@ object LlmQueries {
     LmOps.perplexityFilter(t(s, d, "documents"), "doc_id", "text",
       ClassifyOps.label(col("text")), 100)
 
+  /** The dedup zone's work tables, named per dataset ([[graft.io.Stored]]). */
+  private val dedupWork = graft.io.Stored.Zone("dedup", "work")
+
+  /** The corpus slice every admission path probes: `doc_id % 10 != 0`. */
+  private def corpusDocs(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
+
   // A dedup stage materializes its cluster map ONCE and every downstream
   // consumer (the cluster report, the survivor filter) reads the stored
   // table — the iterative component computation is far too expensive to
-  // replay per consumer. Same stored-results pattern as the DQD battery:
-  // atomic-replace write into a work zone, read back.
-  private val clusterMaps =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  /** The stored per-doc Gopher-gate verdict (doc_id, fails, kept):
-    * computed once per (session, dataset) and read back by both the
-    * standalone gate report and the curation funnel's stage 5 — the
-    * run-once-store-report-many pattern (the unconditional per-JVM write
-    * keeps it staleness-proof, like the cluster map). Without it the
-    * funnel re-ran the full 13-rule scan beside the standalone gate
-    * (r14 bench: funnel 6.5 -> 11.7 s the day the stage landed).
+  // replay per consumer. The component iteration returns its final round
+  // still persisted (it was materialized for convergence detection); it
+  // is released once the stored table holds the results.
+  private val clusterMap = new graft.io.Stored.Table(dedupWork, "dedup_clusters",
+    (s, d) => DedupOps.connectedComponents(
+      DedupOps.jaccardPairs(t(s, d, "documents"), "doc_id", "text", threshold = 0.2),
+      "id_a", "id_b"),
+    release = _.unpersist(blocking = false))
+
+  /** The stored per-doc Gopher-gate verdict (doc_id, fails, kept), read
+    * back by both the standalone gate report and the curation funnel's
+    * stage 5. Without it the funnel re-ran the full 13-rule scan beside
+    * the standalone gate (r14 bench: funnel 6.5 -> 11.7 s the day the
+    * stage landed).
     */
-  private val gateVerdicts =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def gopherVerdicts(s: SparkSession, d: String): DataFrame =
-    gateVerdicts.getOrElseUpdate((s, d), {
-      val zones = graft.io.Zones.forPurpose("dedup")
-      val table = s"gopher_gate_${graft.io.Zones.pathKey(d)}"
-      zones.write(
-        graft.ops.RepetitionOps.gopherGate(t(s, d, "documents")), "work", table)
-      zones.read(s, "work", table)
-    })
+  private val gopherVerdicts = new graft.io.Stored.Table(dedupWork, "gopher_gate",
+    (s, d) => graft.ops.RepetitionOps.gopherGate(t(s, d, "documents")))
 
   /** Explicit owner of the per-JVM corpus artifact builds (stored cluster
     * map, corpus band index, Gopher verdicts). These memoized stores
@@ -160,28 +163,19 @@ object LlmQueries {
     * consumers then read stored tables only.
     */
   val corpusArtifactStoreBuild: Q = (s, d) => {
-    // the three builds are independent scans of the documents table —
-    // launch them as CONCURRENT Spark jobs on the shared session (the
-    // derived-CDM staging pool pattern): the iterative cluster map leaves
-    // local[32] mostly idle between its bounded rounds, and the band/gate
-    // scans fill those gaps instead of queueing behind them
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try scala.concurrent.Await.result(
-      scala.concurrent.Future.sequence(Seq(
-        scala.concurrent.Future(clusterMap(s, d)),
-        scala.concurrent.Future(bandIndex(s, d)),
-        scala.concurrent.Future(gopherVerdicts(s, d)),
-        scala.concurrent.Future { corpusMd5(s, d); corpusBloom(s, d) })),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
+    // the builds are independent scans of the documents table — launch
+    // them as CONCURRENT Spark jobs on the shared session: the iterative
+    // cluster map leaves the cores mostly idle between its bounded
+    // rounds, and the band/gate scans fill those gaps instead of
+    // queueing behind them
+    graft.io.Jobs.concurrently(Seq(
+      () => clusterMap(s, d), () => bandIndex(s, d), () => gopherVerdicts(s, d),
+      () => { corpusMd5(s, d); corpusBloom(s, d) }), maxParallel = 4)
     // (r19, VERDICT #4) the stored batch-1 admission verdicts are a
     // shared artifact too (both delta-growth admission entries read
     // them); built here — AFTER the stores it runs the gauntlet
     // against — so their cost bills to the build entry instead of to
-    // whichever admission entry sorts first (corpus_batch_admit_compact
-    // was silently absorbing it)
+    // whichever admission entry sorts first
     seqB1Verdicts(s, d)
     import s.implicits._
     Seq("admit_seq_v1", "corpus_bloom", "corpus_bloom_meta", "corpus_md5",
@@ -189,50 +183,29 @@ object LlmQueries {
       .toDF("table_name").coalesce(1).sortWithinPartitions("table_name")
   }
 
-  /** The stored corpus md5 set (one hash per kept-corpus document) — the
-    * exact-dup admission probe's index, built once per (session, dataset)
-    * like the band index.
+  /** The stored corpus md5 set (one hash per corpus-slice document) — the
+    * exact-dup admission probe's index.
     */
-  private val corpusMd5s =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def corpusMd5(s: SparkSession, d: String): DataFrame =
-    corpusMd5s.getOrElseUpdate((s, d), {
-      val zones = graft.io.Zones.forPurpose("dedup")
-      val table = s"corpus_md5_${graft.io.Zones.pathKey(d)}"
-      zones.write(
-        t(s, d, "documents").filter(col("doc_id") % 10 =!= 0)
-          .select(md5(col("text")).as("__h")).distinct(),
-        "work", table)
-      zones.read(s, "work", table)
-    })
+  private[graft] val corpusMd5 = new graft.io.Stored.Table(dedupWork, "corpus_md5",
+    (s, d) => corpusDocs(s, d).select(md5(col("text")).as("__h")).distinct())
 
   /** The stored Bloom filter over the corpus hash set (r16,
     * [[graft.ops.SketchOps.bloomBits]]) — the broadcastable pre-filter
-    * the STATIC-corpus admission paths apply before the exact-dup
-    * semi-join. Built once per (session, dataset) FROM the stored md5
-    * table by one map-side-combinable aggregate. SIZED from the stored
-    * corpus cardinality (r17, [[graft.ops.SketchOps.bloomWordsFor]]:
-    * m ≈ n·k/ln 2 rounded up to a power of two) — a fixed size
-    * saturates once the corpus outgrows it and every probe turns
-    * positive, silently degrading the 100 TB exact-dup shield to a
-    * no-op. The chosen size is PERSISTED beside the filter
-    * (`corpus_bloom_meta`: one row of `words`/`k`/`n_values`/`saturated`) — the
-    * durable record of the constants the state was built with, listed in
-    * the store-build manifest and re-derived independently by the DuckDB
-    * oracle from the same count. Probes MUST use the build's exact `m`
-    * (a wrong `m` hashes into the wrong bit positions and breaks the
-    * no-false-negative contract); within a JVM the memo carries the pair
-    * (state, words) together, and a rebuild (this memo writes once per
-    * JVM, like every dedup-zone sibling) refreshes filter AND meta
-    * atomically from the same deterministic md5 store, so the persisted
-    * constants never drift from the persisted state.
+    * the admission paths apply before the exact-dup semi-join. SIZED
+    * from the stored corpus cardinality (r17,
+    * [[graft.ops.SketchOps.bloomWordsFor]]: m ≈ n·k/ln 2 rounded up to a
+    * power of two) — a fixed size saturates once the corpus outgrows it
+    * and every probe turns positive. The chosen size is PERSISTED beside
+    * the filter (`corpus_bloom_meta`: one row of
+    * `words`/`k`/`n_values`/`saturated`), listed in the store-build
+    * manifest and re-derived independently by the DuckDB oracle from the
+    * same count. Probes MUST use the build's exact `m`; the memo carries
+    * the pair (state, words) together, and a rebuild refreshes filter
+    * AND meta from the same deterministic md5 store.
     */
-  private val corpusBlooms =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, Int)]
+  private val corpusBlooms = graft.io.Stored.perDataset[(DataFrame, Int)]
   private[graft] def corpusBloom(s: SparkSession, d: String): (DataFrame, Int) =
-    corpusBlooms.getOrElseUpdate((s, d), {
-      val zones = graft.io.Zones.forPurpose("dedup")
-      val key = graft.io.Zones.pathKey(d)
+    corpusBlooms((s, d)) {
       val n = corpusMd5(s, d).count()
       val words = graft.ops.SketchOps.bloomWordsFor(n)
       // (r18) cap-saturation is LOUD: past the 2^24-word clamp the <5%
@@ -245,62 +218,29 @@ object LlmQueries {
           "2^24-word cap's <5% FP capacity — route probes per-shard " +
           "(bloomBitsRouted) to multiply capacity")
       import s.implicits._
-      zones.write(Seq((words.toLong, 4L, n, if (saturated) 1L else 0L))
-        .toDF("words", "k", "n_values", "saturated"),
-        "work", s"corpus_bloom_meta_$key")
-      zones.write(
+      dedupWork.write(Seq((words.toLong, 4L, n, if (saturated) 1L else 0L))
+        .toDF("words", "k", "n_values", "saturated"), d, "corpus_bloom_meta")
+      dedupWork.write(
         graft.ops.SketchOps.bloomBits(corpusMd5(s, d), col("__h"), words = words),
-        "work", s"corpus_bloom_$key")
-      (zones.read(s, "work", s"corpus_bloom_$key"), words)
-    })
+        d, "corpus_bloom")
+      (dedupWork.read(s, d, "corpus_bloom"), words)
+    }
 
-  /** bit_or-fold of Bloom states built at the SAME word count into one
-    * filter — the segment-merge mechanism `corpus_batch_admit_bloom_sharded`
-    * oracle-certifies (bit_or over the same inserts is associative, so
-    * merged-segments == whole-filter, bit for bit). The delta-growth
-    * admission paths use it to keep the exact-dup shield ACTIVE while the
-    * index grows: each admitted batch writes a per-segment filter at the
-    * base's recorded size, and every probe folds base ∪ segments into one
-    * broadcastable state (≤ words rows regardless of segment count).
+  /** The stored corpus band index for incremental admission, built over
+    * the corpus slice — the corpus text is hashed exactly once, ever.
     */
-  private[graft] def mergeBloomStates(states: Seq[DataFrame]): DataFrame =
-    states.reduce(_ unionByName _)
-      .groupBy("word").agg(expr("bit_or(bits)").as("bits"))
+  private[graft] val bandIndex = new graft.io.Stored.Table(dedupWork, "dedup_band_index",
+    (s, d) => AdmissionIndex.bands(corpusDocs(s, d)))
 
-  private def clusterMap(s: SparkSession, d: String): DataFrame =
-    clusterMaps.getOrElseUpdate((s, d), {
-      val zones = graft.io.Zones.forPurpose("dedup")
-      val table = s"dedup_clusters_${graft.io.Zones.pathKey(d)}"
-      val cc = DedupOps.connectedComponents(
-        DedupOps.jaccardPairs(t(s, d, "documents"), "doc_id", "text", threshold = 0.2),
-        "id_a", "id_b")
-      zones.write(cc, "work", table)
-      // the component iteration returns its final round still persisted
-      // (it was materialized for convergence detection); release it now
-      // that the stored table holds the results
-      cc.unpersist(blocking = false)
-      zones.read(s, "work", table)
-    })
-
-  /** The stored corpus band index for incremental admission: built once
-    * per dataset over the corpus slice (doc_id % 10 != 0) and read back
-    * from the work zone by every subsequent batch — the corpus text is
-    * hashed exactly once, ever.
+  /** The admission index over the stored corpus artifacts, its segments
+    * kept in `zones`.
     */
-  private val bandIndexes =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def bandIndex(s: SparkSession, d: String): DataFrame =
-    bandIndexes.getOrElseUpdate((s, d), {
-      val zones = graft.io.Zones.forPurpose("dedup")
-      val table = s"dedup_band_index_${graft.io.Zones.pathKey(d)}"
-      val corpus = t(s, d, "documents").filter(col("doc_id") % 10 =!= 0)
-      zones.write(
-        DedupOps.lshBandsFromSigArray(
-          DedupOps.minhashSignatureArray(corpus, "doc_id", "text", k = 8, w = 3),
-          "doc_id", k = 8, rows = 4),
-        "work", table)
-      zones.read(s, "work", table)
-    })
+  private[graft] def corpusIndex(s: SparkSession, d: String,
+      zones: graft.io.Zones = dedupWork.zones): AdmissionIndex = {
+    val (bloom, words) = corpusBloom(s, d)
+    new AdmissionIndex(s, zones,
+      AdmissionIndex.Part(corpusDocs(s, d), corpusMd5(s, d), bandIndex(s, d), bloom), words)
+  }
 
   /** The `documents` table as a file-source stream
     * ([[StreamingOps.tableStream]]), ids normalized to long.
@@ -362,22 +302,19 @@ object LlmQueries {
     * foreachBatch; verdicts are per-document, so the filtered union is
     * identical to the dedicated-staging rows (oracles unchanged).
     */
-  private val stagedDocsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val stagedDocs = graft.io.Stored.perDataset[String]
 
-  /** Keyed by (SparkSession, dataset) like every sibling memo (ADVICE
-    * r16); same one-build-per-(JVM, dataset) invariant as
-    * [[b1VerdictMemo]] — staged files replay stale documents only if the
-    * source table is rebuilt mid-JVM, which nothing in the bench/test
-    * flow does.
+  /** One staged source per (session, dataset), like every sibling store:
+    * staged files replay stale documents only if the source table is
+    * rebuilt mid-JVM, which nothing in the bench/test flow does.
     */
   private def sharedDocsSource(s: SparkSession, d: String): String =
-    stagedDocsMemo.getOrElseUpdate((s, d), {
+    stagedDocs((s, d)) {
       val docs = t(s, d, "documents").select("doc_id", "text")
       val par = coalesce(pmod(col("doc_id"), lit(20)), lit(0))
       StreamingOps.stageFiles(s, "stream_src_shared_docs", d, Seq(
         "batch0.parquet" -> docs.filter(par < 10), "batch1.parquet" -> docs.filter(par >= 10)))
-    })
+    }
 
   /** CONTINUOUS ingestion quality-gating: the 13-rule Gopher repetition
     * gate over a document STREAM — the admission shape a training-data
@@ -481,97 +418,59 @@ object LlmQueries {
     * quality > repetition). The per-batch cost is O(batch): every
     * corpus-sized structure is a stored table probed by equi-joins,
     * never recomputed — the operational shape of admitting a shard into
-    * a 100 TB corpus.
-    */
-  /** One batch's admission verdicts against the stored corpus artifacts —
-    * shared by the batch pipeline and the streaming admitter (each
-    * micro-batch runs this exact logic; the repetition gate is computed
-    * ON THE BATCH, per-doc stateless, while exact/near-dup probe the
-    * stored corpus structures).
+    * a 100 TB corpus. Shared by the batch pipeline and the streaming
+    * admitter (each micro-batch runs this exact logic).
     */
   private[graft] def admissionVerdicts(s: SparkSession, d: String, batch: DataFrame): DataFrame =
-    admissionVerdictsAgainst(
-      t(s, d, "documents").filter(col("doc_id") % 10 =!= 0),
-      corpusMd5(s, d), bandIndex(s, d), batch,
-      bloomFilter = Some(corpusShield(s, d)))
+    corpusIndex(s, d).probe(batch, Nil, corpusShield(s, d))
 
   /** The STATIC corpus filter resolved to its serving form once per
     * (JVM, dataset) — the collect + `Broadcast` of
     * [[graft.ops.SketchOps.bloomServingFilter]] is a per-filter cost, and
     * the static-corpus admission entries (and every micro-batch of the
-    * static streaming admitter) share one immutable filter, so one
-    * resolution serves them all. The GROWTH paths resolve per merged
-    * state by design (their filter changes as segments append).
+    * static streaming admitter) share one immutable filter. The GROWTH
+    * paths resolve per merged state by design (their filter changes as
+    * segments append).
     */
-  private val corpusShields =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Column]
+  private val corpusShields = graft.io.Stored.perDataset[Column]
   private def corpusShield(s: SparkSession, d: String): Column =
-    corpusShields.getOrElseUpdate((s, d), {
+    corpusShields((s, d)) {
       val (b, words) = corpusBloom(s, d)
       graft.ops.SketchOps.bloomServingFilter(s, b, words, "__h",
         reuseKey = Some(s"static_shield_${graft.io.Zones.pathKey(d)}"))
-    })
-
-  /** The same gauntlet against CALLER-SUPPLIED corpus structures — the
-    * index-growth path: after a batch's admits are appended to the stored
-    * hash set / band index (delta tables), the next batch probes the
-    * grown structures through this entry point (r15,
-    * [[corpusAdmitSequential]]).
-    */
-  private[graft] def admissionVerdictsAgainst(corpusDocs: DataFrame, md5Set: DataFrame,
-      index: DataFrame, batch: DataFrame,
-      bloomFilter: Option[Column] = None): DataFrame = {
-    // the exact-dup stage: at 100 TB the semi-join against the corpus
-    // hash set shuffles with the corpus — the STATIC-corpus paths pass
-    // the stored broadcast Bloom filter so only the bloom-positive band
-    // reaches it (no false negatives, so verdicts are provably
-    // unchanged); the delta-growth paths (r18) pass base ∪ per-segment
-    // filters folded by [[mergeBloomStates]] — built at the base's
-    // recorded word count, so the fold is the bit_or associativity the
-    // sharded entry oracle-certifies, and the shield stays active while
-    // the index grows. The probe arrives RESOLVED to its serving form
-    // (r18, [[graft.ops.SketchOps.bloomServingFilter]]): one
-    // native-codegen projection per row over the broadcast bit array —
-    // bit-identical verdicts to the join probe the gated bloom entries
-    // oracle-replay, without its per-batch exchange/explode/groupBy
-    // machinery; the static path memoizes one resolution per (JVM,
-    // dataset) ([[corpusShield]]), the growth paths resolve per merged
-    // state
-    val hashed = batch.select(col("doc_id"), md5(col("text")).as("__h"))
-    val exactProbe = bloomFilter match {
-      case Some(f) => hashed.filter(f)
-      case None => hashed
     }
-    val exactDup = exactProbe
-      .join(md5Set, Seq("__h"), "left_semi")
-      .select("doc_id").withColumn("__m1", lit(1))
-    val nearDup = DedupOps.incrementalDedup(
-        corpusDocs, index,
-        batch, "doc_id", "text", threshold = 0.2)
-      .filter(col("dup_of").isNotNull)
-      .select("doc_id").withColumn("__m2", lit(1))
-    val quality = batch.filter(ClassifyOps.label(col("text")))
-      .select("doc_id").withColumn("__m4", lit(1))
-    batch.select("doc_id")
-      .join(exactDup, Seq("doc_id"), "left")
-      .join(nearDup, Seq("doc_id"), "left")
-      .join(graft.ops.RepetitionOps.gopherGate(batch)
-        .select(col("doc_id"), col("kept")), Seq("doc_id"), "left")
-      .join(quality, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (col("__m1").isNull && col("__m2").isNull &&
-          col("__m4").isNotNull && col("kept") === 1L).cast("long").as("admitted"),
-        when(col("__m1").isNotNull, "1_exact")
-          .when(col("__m2").isNotNull, "2_neardup")
-          .when(col("__m4").isNull, "3_quality")
-          .when(col("kept") =!= 1L, "4_repetition")
-          .as("reject_reason"))
-  }
 
   val corpusAdmissionPipeline: Q = (s, d) =>
     admissionVerdicts(s, d,
       t(s, d, "documents").filter(col("doc_id") % 10 === 0))
       .orderBy("doc_id")
+
+  /** The Bloom admission entries' shared body. The batch is every 10th
+    * doc plus an id-shifted COPY of every 50th corpus doc (the synthetic
+    * corpus has no natural cross-slice exact dups, so the
+    * no-false-negative contract is exercised by real positives); `probe`
+    * adds `bloom_positive` (and any entry columns) to it, and
+    * `exact_dup` is the exact md5 check of the positive band. The output
+    * is `doc_id`, `columns`, `bloom_positive`, `exact_dup`.
+    */
+  private def bloomAdmit(s: SparkSession, d: String)(probe: DataFrame => DataFrame)(
+      columns: Column*): DataFrame = {
+    val docs = t(s, d, "documents")
+    val batch = docs.filter(col("doc_id") % 10 === 0)
+      .select(col("doc_id"), col("text"))
+      .unionByName(docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 50 === 1)
+        .select((col("doc_id") + 30000000L).as("doc_id"), col("text")))
+      .select(col("doc_id"), md5(col("text")).as("__h"))
+    val probed = probe(batch)
+    val exact = batch
+      .join(probed.filter(col("bloom_positive") === 1L).select("doc_id"), "doc_id")
+      .join(corpusMd5(s, d), Seq("__h"), "left_semi")
+      .select(col("doc_id")).withColumn("__e", lit(1L))
+    probed.join(exact, Seq("doc_id"), "left")
+      .select(col("doc_id") +: columns :+ col("bloom_positive") :+
+        coalesce(col("__e"), lit(0L)).as("exact_dup"): _*)
+      .orderBy("doc_id")
+  }
 
   /** BLOOM-accelerated exact-dup admission (r16,
     * [[graft.ops.SketchOps.bloomBits]]): at 100 TB the exact-dup stage's
@@ -580,349 +479,158 @@ object LlmQueries {
     * built by one map-side-combinable bit_or aggregate and BROADCAST to
     * every probe, so only the Bloom-positive band (true dups + bounded
     * false positives) reaches the exact semi-join. SIZED adaptively from
-    * the stored corpus cardinality (r17, the judge's saturation finding:
-    * the old fixed 65,536 bits turn all-positive above ~10^4 docs) — the
-    * chosen `bloom_words` rides the output so the DuckDB oracle asserts
-    * the SIZE FORMULA itself (same integer arithmetic, same
+    * the stored corpus cardinality (r17) — the chosen `bloom_words` and
+    * (r18) the cap-saturation flag ride the output so the DuckDB oracle
+    * asserts the SIZE and FLAG FORMULAS (same integer arithmetic, same
     * power-of-two ladder) and then replays the bit matrix AT that size.
-    * The gated shape exposes both verdicts per batch doc —
-    * `bloom_positive` and the exact-verified `exact_dup` — so the
-    * no-false-negative contract AND the false-positive band are
-    * oracle-replayed bit-for-bit at every scale factor.
+    * `bloom_positive` and the exact-verified `exact_dup` expose both the
+    * no-false-negative contract and the false-positive band.
     */
   val corpusAdmitBloom: Q = (s, d) => {
-    val docs = t(s, d, "documents")
-    // the synthetic corpus has no natural cross-slice exact dups — the
-    // batch carries a COPY of every 50th corpus doc (id-shifted, same
-    // text) so the no-false-negative contract is exercised by real
-    // positives, not just the empty set
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 50 === 1)
-        .select((col("doc_id") + 30000000L).as("doc_id"), col("text")))
-      .select(col("doc_id"), md5(col("text")).as("__h"))
     val (bloom, words) = corpusBloom(s, d)
-    val probed = graft.ops.SketchOps.bloomProbe(batch, "doc_id", col("__h"),
-      bloom, words = words)
-    val exact = batch
-      .join(probed.filter(col("bloom_positive") === 1L).select("doc_id"), "doc_id")
-      .join(corpusMd5(s, d), Seq("__h"), "left_semi")
-      .select(col("doc_id")).withColumn("__e", lit(1L))
-    // (r18) the cap-saturation flag rides the gated output beside the
-    // size, so the FLAG FORMULA is hash-gated like the size formula (the
-    // oracle re-derives both from the same stored-corpus count)
     val saturated =
       if (graft.ops.SketchOps.bloomSaturated(corpusMd5(s, d).count())) 1L else 0L
-    probed.join(exact, Seq("doc_id"), "left")
-      .select(col("doc_id"), lit(words.toLong).as("bloom_words"),
-        lit(saturated).as("saturated"),
-        col("bloom_positive"), coalesce(col("__e"), lit(0L)).as("exact_dup"))
-      .orderBy("doc_id")
+    bloomAdmit(s, d)(graft.ops.SketchOps.bloomProbe(_, "doc_id", col("__h"),
+      bloom, words = words))(lit(words.toLong).as("bloom_words"), lit(saturated).as("saturated"))
   }
 
   /** SHARDED Bloom build (r17): past the single-state broadcast cap
     * ([[graft.ops.SketchOps.bloomWordsFor]]'s 2^24 words) the production
     * move is building one filter PER CORPUS SHARD and merging by
     * `bit_or` — each shard's build is local to its partition of the hash
-    * set (no corpus-wide shuffle into one aggregate) and states union
-    * without touching raw data. This entry runs that exact path: four
+    * set and states union without touching raw data. Four
     * hash-partitioned shard filters at the SAME adaptive size, bit_or
     * fold, then the identical probe as [[corpusAdmitBloom]]. The oracle
-    * replays the WHOLE-corpus filter — bit_or over the same inserts is
-    * associative, so merged-shards == whole-filter is the equality the
-    * gate certifies cross-engine, bit for bit (the in-JVM mergeability
-    * test promoted to an oracle-gated contract).
+    * replays the WHOLE-corpus filter — merged-shards == whole-filter is
+    * the equality the gate certifies cross-engine, bit for bit.
     */
   val corpusAdmitBloomSharded: Q = (s, d) => {
-    val docs = t(s, d, "documents")
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 50 === 1)
-        .select((col("doc_id") + 30000000L).as("doc_id"), col("text")))
-      .select(col("doc_id"), md5(col("text")).as("__h"))
-    val md5Set = corpusMd5(s, d)
     val (_, words) = corpusBloom(s, d)
-    val merged = (0 until 4)
-      .map(i => graft.ops.SketchOps.bloomBits(
-        md5Set.filter(pmod(graft.ops.TextOps.hash32(col("__h")), lit(4)) === i),
-        col("__h"), words = words))
-      .reduce(_ unionByName _)
-      .groupBy("word").agg(expr("bit_or(bits)").as("bits"))
-    val probed = graft.ops.SketchOps.bloomProbe(batch, "doc_id", col("__h"),
-      merged, words = words)
-    val exact = batch
-      .join(probed.filter(col("bloom_positive") === 1L).select("doc_id"), "doc_id")
-      .join(md5Set, Seq("__h"), "left_semi")
-      .select(col("doc_id")).withColumn("__e", lit(1L))
-    probed.join(exact, Seq("doc_id"), "left")
-      .select(col("doc_id"), lit(4L).as("n_shards"),
-        lit(words.toLong).as("bloom_words"),
-        col("bloom_positive"), coalesce(col("__e"), lit(0L)).as("exact_dup"))
-      .orderBy("doc_id")
+    val merged = AdmissionIndex.mergeBloomStates((0 until 4).map(i =>
+      graft.ops.SketchOps.bloomBits(
+        corpusMd5(s, d).filter(pmod(graft.ops.TextOps.hash32(col("__h")), lit(4)) === i),
+        col("__h"), words = words)))
+    bloomAdmit(s, d)(graft.ops.SketchOps.bloomProbe(_, "doc_id", col("__h"),
+      merged, words = words))(lit(4L).as("n_shards"), lit(words.toLong).as("bloom_words"))
   }
 
   /** SHARD-ROUTED Bloom probing (r18 — the capacity move PAST the 2^24
-    * cap): the sharded entry proves shard filters MERGE back into the
-    * whole filter; this one keeps them APART — `nShards` independent
-    * filters keyed by `shard = hash32(value) % nShards`, each at the
-    * adaptive size, and every probe routed by the SAME hash to check
-    * ONLY its shard's filter ([[graft.ops.SketchOps.bloomBitsRouted]] /
-    * `bloomProbeRouted`). Capacity multiplies by `nShards` at an
-    * unchanged per-probe broadcast; no false negatives shard-locally
-    * (equal values hash to equal shards), while the positive band
-    * TIGHTENS (each shard's filter is sparser than the merged one). The
-    * oracle replays the routing bit-for-bit — per-shard bit matrices,
-    * `(shard, word)` join — and the exact-dup verdicts are pinned
-    * unchanged against the same corpus set.
+    * cap): `nShards` independent filters keyed by
+    * `shard = hash32(value) % nShards`, each at the adaptive size, and
+    * every probe routed by the SAME hash to check ONLY its shard's filter
+    * ([[graft.ops.SketchOps.bloomBitsRouted]]). Capacity multiplies by
+    * `nShards` at an unchanged per-probe broadcast; no false negatives
+    * shard-locally, while the positive band TIGHTENS. The oracle replays
+    * the routing bit-for-bit and the exact-dup verdicts are pinned
+    * unchanged against the same corpus set. (r19, VERDICT #6) the probe
+    * is a PURE PROJECTION: the multi-shard state resolves to ONE
+    * shard-major serving array behind a native bloom_might_contain — no
+    * state join in the plan (PlanAuditSpec pins this).
     */
   val corpusAdmitBloomRouted: Q = (s, d) => {
-    val docs = t(s, d, "documents")
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 50 === 1)
-        .select((col("doc_id") + 30000000L).as("doc_id"), col("text")))
-      .select(col("doc_id"), md5(col("text")).as("__h"))
-    val md5Set = corpusMd5(s, d)
     val (_, words) = corpusBloom(s, d)
     val routed = graft.ops.SketchOps.bloomBitsRouted(
-      md5Set, col("__h"), nShards = 4, words = words)
-    // (r19, VERDICT #6) the probe is a PURE PROJECTION: the multi-shard
-    // state resolves to ONE shard-major serving array behind a native
-    // bloom_might_contain that routes by the build's shard hash — no
-    // state join in the plan (PlanAuditSpec pins this), executor memory
-    // holds the array once instead of re-broadcasting it per query
-    val probed = batch
-      .withColumn("shard",
-        pmod(graft.ops.TextOps.hash32(col("__h")), lit(4L)))
+      corpusMd5(s, d), col("__h"), nShards = 4, words = words)
+    bloomAdmit(s, d)(_
+      .withColumn("shard", pmod(graft.ops.TextOps.hash32(col("__h")), lit(4L)))
       .withColumn("bloom_positive",
         when(graft.ops.SketchOps.bloomServingFilterRouted(
           s, routed, nShards = 4, words = words, "__h",
           reuseKey = Some(s"routed_shield_${graft.io.Zones.pathKey(d)}")),
-          1L).otherwise(0L))
-    val exact = batch
-      .join(probed.filter(col("bloom_positive") === 1L).select("doc_id"), "doc_id")
-      .join(md5Set, Seq("__h"), "left_semi")
-      .select(col("doc_id")).withColumn("__e", lit(1L))
-    probed.join(exact, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("shard"),
-        lit(words.toLong).as("bloom_words"),
-        col("bloom_positive"), coalesce(col("__e"), lit(0L)).as("exact_dup"))
-      .orderBy("doc_id")
+          1L).otherwise(0L)))(col("shard"), lit(words.toLong).as("bloom_words"))
   }
+
+  /** Batch 1 of the index-growth entries: every 20th doc. */
+  private def seqBatch1(s: SparkSession, d: String): DataFrame =
+    t(s, d, "documents").filter(col("doc_id") % 20 === 0).select("doc_id", "text")
+
+  /** Batch-1's admission verdicts, stored ONCE per (session, dataset): the
+    * sequential entry needs them five ways and the compaction and stream
+    * entries probe the SAME batch (the r4 run-once lesson: unmaterialized,
+    * the verdict DAG re-evaluated ~5x, 23 -> 8 s at sf0.1). Valid while
+    * the documents table and dedup-zone artifacts are not rebuilt
+    * mid-JVM, as every run-once store in this file assumes.
+    */
+  private val b1Verdicts = graft.io.Stored.perDataset[Unit]
+  private def seqB1Verdicts(s: SparkSession, d: String): DataFrame = {
+    b1Verdicts((s, d)) {
+      dedupWork.write(admissionVerdicts(s, d, seqBatch1(s, d)), d, "admit_seq_v1")
+    }
+    dedupWork.read(s, d, "admit_seq_v1")
+  }
+
+  /** Batch 1's admitted docs with their text, from its verdicts `v1`. */
+  private def seqAdmits(s: SparkSession, d: String, v1: DataFrame): DataFrame =
+    seqBatch1(s, d).join(v1.filter(col("admitted") === 1L).select("doc_id"), "doc_id")
 
   /** SEQUENTIAL admission with INDEX GROWTH (r15 — the verdict's
     * index-update-on-admit): batch 1 (every 20th doc) runs the gauntlet
-    * against the stored corpus artifacts; its ADMITTED docs' hashes and
-    * bands are then APPENDED to the index as delta zone tables (the
-    * append-only segment growth a 100 TB corpus index does — the base is
-    * never rewritten); batch 2 probes base ∪ delta, so near-dups and
-    * copies of batch-1 admits are rejected IN batch 2 even though they
-    * match nothing in the original corpus.
-    *
-    * Batch 2 = the second natural half (doc_id % 20 == 10) PLUS two
-    * deterministic synthetic probes per (>= 3-token) batch-1 admit:
-    *  - a COPY (identical text, doc_id + 2e7) — caught by the md5 DELTA
-    *    at stage 1;
-    *  - a VARIANT (text + two trailing spaces, doc_id + 1e7) — different
-    *    md5, but the whitespace tokenizer yields the IDENTICAL token
-    *    sequence, hence identical shingles, minhash signature, and band
-    *    buckets: the variant provably collides with the batch-1 admit's
-    *    DELTA index entries and Jaccard-verifies at 1.0 — caught at
-    *    stage 2 by the grown band index, deterministically at any scale
-    *    factor. (The >= 3-token filter guarantees the original banded at
-    *    all — shorter docs have no shingles.)
+    * against the stored corpus artifacts; its ADMITTED docs' hashes,
+    * bands and (r18) a Bloom state at the base's recorded word count are
+    * then APPENDED to the index as one delta segment (the base is never
+    * rewritten; the segment's docs stay in the admits frame); batch 2
+    * ([[withAdmitProbes]]) probes base ∪ segment behind the bit_or-merged
+    * shield, so near-dups and copies of batch-1 admits are rejected IN
+    * batch 2 even though they match nothing in the original corpus.
     */
-  /** Batch-1's admission verdicts, zone-materialized ONCE per (JVM,
-    * dataset): the sequential entry needs them five ways (output union,
-    * both delta writes, corpus2, both probe branches — the r4 run-once
-    * lesson: unmaterialized, the verdict DAG re-evaluated ~5x, 23 -> 8 s
-    * at sf0.1) and the r16 compaction entry probes the SAME batch — one
-    * computation serves both (the per-JVM TrieMap memo discipline).
-    * Keyed by (SparkSession, dataset) like every sibling memo (ADVICE
-    * r16); INVARIANT: one store build per (JVM, dataset) — the memo is
-    * valid as long as the documents table and dedup-zone artifacts are
-    * not rebuilt mid-JVM, which the bench/test discipline guarantees
-    * (and which every run-once memo in this file assumes).
-    */
-  private val b1VerdictMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
-
-  private def seqB1Verdicts(s: SparkSession, d: String): DataFrame = {
-    val zones = graft.io.Zones.forPurpose("dedup")
-    val key = graft.io.Zones.pathKey(d)
-    b1VerdictMemo.getOrElseUpdate((s, d), {
-      val b1 = t(s, d, "documents").filter(col("doc_id") % 20 === 0)
-        .select("doc_id", "text")
-      zones.write(admissionVerdicts(s, d, b1), "work", s"admit_seq_v1_$key")
-    })
-    zones.read(s, "work", s"admit_seq_v1_$key")
-  }
-
   val corpusAdmitSequential: Q = (s, d) => {
-    val docs = t(s, d, "documents")
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
-    val b1 = docs.filter(col("doc_id") % 20 === 0).select("doc_id", "text")
-    val zones = graft.io.Zones.forPurpose("dedup")
     val key = graft.io.Zones.pathKey(d)
+    val index = corpusIndex(s, d)
     val v1 = seqB1Verdicts(s, d)
-    val admitted1 = b1.join(
-      v1.filter(col("admitted") === 1L).select("doc_id"), "doc_id")
-    // append-only growth: the admits' hashes/bands land in DELTA tables,
-    // and (r18) so does a per-segment BLOOM filter at the base's recorded
-    // word count — batch 2's exact-dup shield probes base ∪ delta folded
-    // by bit_or instead of dropping back to the unshielded semi-join
-    // (r21) the md5 and band delta writes are independent readers of the
-    // admitted set — concurrent jobs (guide §2.6); the Bloom delta below
-    // reads the md5 delta, so it stays after the barrier
-    concurrently(Seq(
-      () => zones.write(admitted1.select(md5(col("text")).as("__h")).distinct(),
-        "work", s"corpus_md5_delta_b1_$key"),
-      () => zones.write(
-        DedupOps.lshBandsFromSigArray(
-          DedupOps.minhashSignatureArray(admitted1, "doc_id", "text", k = 8, w = 3),
-          "doc_id", k = 8, rows = 4),
-        "work", s"band_index_delta_b1_$key")))
-    val (baseBloom, bloomWords) = corpusBloom(s, d)
-    zones.write(
-      graft.ops.SketchOps.bloomBits(
-        zones.read(s, "work", s"corpus_md5_delta_b1_$key"),
-        col("__h"), words = bloomWords),
-      "work", s"bloom_delta_b1_$key")
-    val bloom2 = mergeBloomStates(Seq(baseBloom,
-      zones.read(s, "work", s"bloom_delta_b1_$key")))
-    val md52 = corpusMd5(s, d)
-      .unionByName(zones.read(s, "work", s"corpus_md5_delta_b1_$key"))
-    val idx2 = bandIndex(s, d)
-      .unionByName(zones.read(s, "work", s"band_index_delta_b1_$key")
-        .select(bandIndex(s, d).columns.map(col): _*))
-    val corpus2 = corpus.unionByName(admitted1)
-    val admProbe = admitted1
-      .filter(size(graft.ops.TextOps.tokens(col("text"))) >= 3)
-    val b2 = docs.filter(col("doc_id") % 20 === 10).select("doc_id", "text")
-      .unionByName(admProbe.select((col("doc_id") + 10000000L).as("doc_id"),
-        concat(col("text"), lit("  ")).as("text")))
-      .unionByName(admProbe.select((col("doc_id") + 20000000L).as("doc_id"),
-        col("text")))
+    val admitted1 = seqAdmits(s, d, v1)
+    val seg = AdmissionIndex.Segment(s"corpus_md5_delta_b1_$key",
+      s"band_index_delta_b1_$key", s"bloom_delta_b1_$key", docs = None)
+    index.append(Seq((seg, admitted1, AdmissionIndex.bands(admitted1))))
     // stable reuseKey (r19, ADVICE): a repeated invocation REPLACES the
     // prior resolution instead of accumulating registry entries
-    val v2 = admissionVerdictsAgainst(corpus2, md52, idx2, b2,
-      bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
-        s, bloom2, bloomWords, "__h",
-        reuseKey = Some(s"admseq_batch2_$key"))))
+    val v2 = index.probe(withAdmitProbes(t(s, d, "documents"), admitted1),
+      Seq(index.read(seg, docs = Some(admitted1))), s"admseq_batch2_$key")
     v1.withColumn("batch", lit(1L))
       .unionByName(v2.withColumn("batch", lit(2L)))
       .orderBy("batch", "doc_id")
   }
 
-  /** Delta COMPACTION for the admission index (r16 — the r15 VERDICT's
-    * item 6): production appends one delta segment per admitted batch,
-    * so after thousands of batches the probe-side union spans thousands
-    * of segments; compaction periodically folds them back into ONE base
-    * via the engine's atomic table replace, keeping probe cost flat.
-    * This entry builds the many-segment state (batch-1 admits split into
-    * FOUR per-shard delta segments for each structure — hash set, band
-    * index, docs, and (r18) a per-segment Bloom filter at the base's
-    * recorded size), computes batch-2 verdicts against base ∪ 4 segments
-    * (pre), compacts (one atomic zone write per structure, segments
-    * retired), and recomputes the SAME verdicts against the compacted
-    * base alone (post). The gated shape is BOTH verdict sets pinned to
-    * the sequential oracle's batch-2 rows — verdict equivalence under
+  /** Delta COMPACTION for the admission index (r16): production appends
+    * one delta segment per admitted batch, so after thousands of batches
+    * the probe-side union spans thousands of segments; compaction
+    * periodically folds them back into ONE base via the engine's atomic
+    * table replace, keeping probe cost flat. This entry splits batch-1's
+    * admits into FOUR segments, computes batch-2 verdicts against base ∪
+    * 4 segments (pre), compacts, and recomputes the SAME verdicts against
+    * the compacted base alone (post). Both verdict sets are pinned to the
+    * sequential oracle's batch-2 rows — verdict equivalence under
     * compaction is the oracle's own assertion, not a self-check.
     */
   val corpusAdmitCompact: Q = (s, d) => {
-    val docs = t(s, d, "documents")
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
-    val b1 = docs.filter(col("doc_id") % 20 === 0).select("doc_id", "text")
-    val zones = graft.io.Zones.forPurpose(s"admcomp_${graft.io.Zones.pathKey(d)}")
-    // admitted1 feeds 12 segment writes + the probe derivation — one
-    // materialization instead of one join per consumer (the r4 run-once
-    // lesson; confined to this query body, the result reads zone tables)
-    val admitted1 = b1.join(
-      seqB1Verdicts(s, d).filter(col("admitted") === 1L).select("doc_id"),
-      "doc_id").localCheckpoint(true)
-    val nSegs = 4
-    val (baseBloom, bloomWords) = corpusBloom(s, d)
-    // (r19, VERDICT #4 — cost creep) the admits' minhash bands compute in
-    // ONE pass and split into per-segment slices by the same doc_id pmod
-    // that shapes every other structure: bands are per-doc, so filtering
-    // the one banded frame is row-identical to banding each segment
-    // separately (the r18 form ran the signature scan once PER SEGMENT,
-    // 4x the dominant batch-side cost)
-    val admBands = DedupOps.lshBandsFromSigArray(
-      DedupOps.minhashSignatureArray(admitted1, "doc_id", "text", k = 8, w = 3),
-      "doc_id", k = 8, rows = 4).localCheckpoint(true)
-    // (r21) the 4 segments x 3 structures are independent writes over the
-    // two checkpointed frames — run them as CONCURRENT Spark jobs (the
-    // store-build pool pattern, guide §2.6): sequential writes left
-    // local[32] mostly idle through 12 small jobs; the per-segment Bloom
-    // write stays in-segment (it reads that segment's md5 table)
-    concurrently((0 until nSegs).map { i => () =>
-      val part = admitted1.filter(pmod(col("doc_id"), lit(nSegs)) === i)
-      zones.write(part.select(md5(col("text")).as("__h")).distinct(),
-        "work", s"delta_md5_$i")
-      zones.write(admBands.filter(pmod(col("doc_id"), lit(nSegs)) === i),
-        "work", s"delta_band_$i")
-      zones.write(part, "work", s"delta_docs_$i")
-      // (r18) one Bloom filter PER SEGMENT at the base's recorded word
-      // count — the shield grows with the index instead of lapsing
-      zones.write(
-        graft.ops.SketchOps.bloomBits(
-          zones.read(s, "work", s"delta_md5_$i"), col("__h"), words = bloomWords),
-        "work", s"delta_bloom_$i")
-    })
-    def segs(prefix: String): Seq[DataFrame] =
-      (0 until nSegs).map(i => zones.read(s, "work", s"$prefix$i"))
-    val idxCols = bandIndex(s, d).columns
-    val md5Pre = (corpusMd5(s, d) +: segs("delta_md5_")).reduce(_ unionByName _)
-    val idxPre = (bandIndex(s, d) +: segs("delta_band_")
-      .map(_.select(idxCols.map(col): _*))).reduce(_ unionByName _)
-    val corpusPre = (corpus +: segs("delta_docs_")).reduce(_ unionByName _)
-    val bloomPre = mergeBloomStates(baseBloom +: segs("delta_bloom_"))
-    val admProbe = admitted1
-      .filter(size(graft.ops.TextOps.tokens(col("text"))) >= 3)
-    // checkpointed: BOTH verdict passes (pre + post) probe this batch —
-    // one materialization instead of re-deriving the probe union per pass
-    val b2 = docs.filter(col("doc_id") % 20 === 10).select("doc_id", "text")
-      .unionByName(admProbe.select((col("doc_id") + 10000000L).as("doc_id"),
-        concat(col("text"), lit("  ")).as("text")))
-      .unionByName(admProbe.select((col("doc_id") + 20000000L).as("doc_id"),
-        col("text")))
-      .localCheckpoint(true)
-    // (r21) the PRE verdict pass and the four compaction folds are five
-    // independent readers of base ∪ segments (retirement happens strictly
-    // after all five land) — overlap them as concurrent jobs instead of
-    // serializing five barrier-free stages
-    concurrently(Seq(
-      () => zones.write(admissionVerdictsAgainst(corpusPre, md5Pre, idxPre, b2,
-        bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
-          s, bloomPre, bloomWords, "__h",
-          reuseKey = Some(s"admcomp_pre_${graft.io.Zones.pathKey(d)}")))),
-        "work", "v2_pre"),
-      // COMPACT: fold base ∪ segments into a new base, one atomic table
-      // replace per structure (zones.write IS the engine's atomic swap) —
-      // the BLOOM compacts the same way the tables do, its fold being
-      // bit_or instead of union (r18)
-      () => zones.write(md5Pre, "work", "base_md5_compacted"),
-      () => zones.write(idxPre, "work", "base_band_compacted"),
-      () => zones.write(corpusPre, "work", "base_docs_compacted"),
-      () => zones.write(bloomPre, "work", "base_bloom_compacted")))
-    // the segments retire AFTER the swap — the compaction protocol's
-    // read-before-delete ordering
-    (0 until nSegs).foreach { i =>
-      Seq("delta_md5_", "delta_band_", "delta_docs_", "delta_bloom_")
-        .foreach(p => zones.drop(s, "work", s"$p$i"))
-    }
+    val key = graft.io.Zones.pathKey(d)
+    val zones = graft.io.Zones.forPurpose(s"admcomp_$key")
+    val index = corpusIndex(s, d, zones)
+    // admitted1 feeds every segment write and the probe derivation — one
+    // materialization instead of one join per consumer (confined to this
+    // query body; the result reads zone tables)
+    val admitted1 = seqAdmits(s, d, seqB1Verdicts(s, d)).localCheckpoint(true)
+    // (r19) the admits' minhash bands compute in ONE pass and split into
+    // per-segment slices by the same doc_id pmod that shapes every other
+    // structure: bands are per-doc, so the slices are row-identical to
+    // banding each segment separately
+    val admBands = AdmissionIndex.bands(admitted1).localCheckpoint(true)
+    def slice(df: DataFrame, i: Int) = df.filter(pmod(col("doc_id"), lit(4)) === i)
+    val segs = (0 until 4).map(i => AdmissionIndex.Segment.delta(i.toString))
+    index.append(segs.zipWithIndex.map { case (seg, i) =>
+      (seg, slice(admitted1, i), slice(admBands, i)) })
+    val parts = segs.map(index.read(_))
+    // checkpointed: BOTH verdict passes (pre + post) probe this batch
+    val b2 = withAdmitProbes(t(s, d, "documents"), admitted1).localCheckpoint(true)
+    // the PRE verdict pass runs beside the compaction folds — all five
+    // read base ∪ segments, and the segments retire after all land
+    index.fold(index.base +: parts, AdmissionIndex.Segment.compacted, retire = segs,
+      alongside = Seq(() =>
+        zones.write(index.probe(b2, parts, s"admcomp_pre_$key"), "work", "v2_pre")))
     // v2_post zone-materializes too, so the RETURNED frame reads only
     // stored tables (no plan over the query-local checkpoint survives
     // past the body — the bench unpersists between queries)
-    zones.write(admissionVerdictsAgainst(
-      zones.read(s, "work", "base_docs_compacted"),
-      zones.read(s, "work", "base_md5_compacted"),
-      zones.read(s, "work", "base_band_compacted"), b2,
-      bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
-        s, zones.read(s, "work", "base_bloom_compacted"), bloomWords, "__h",
-        reuseKey = Some(s"admcomp_post_${graft.io.Zones.pathKey(d)}")))),
-      "work", "v2_post")
+    zones.write(index.rebased(index.read(AdmissionIndex.Segment.compacted))
+      .probe(b2, Nil, s"admcomp_post_$key"), "work", "v2_post")
     zones.read(s, "work", "v2_pre").withColumn("phase", lit("1_pre"))
       .unionByName(zones.read(s, "work", "v2_post").withColumn("phase", lit("2_post")))
       .orderBy("phase", "doc_id")
@@ -957,92 +665,68 @@ object LlmQueries {
       .orderBy("doc_id")
   }
 
-  /** STREAMING continuous curation with INDEX GROWTH (r15): each
-    * micro-batch's verdicts run against base ∪ the ACCUMULATED delta
-    * tables, and the batch's admits append their hashes/bands/docs to
-    * the delta BEFORE the next micro-batch — so batch N+1 rejects
-    * near-dups of batch-N admits, the full production loop as a stream.
-    * Two staged halves (doc_id % 20 == 0, then % 20 == 10); pinned to
-    * the natural-docs subset of the sequential oracle (stream == batch).
+  /** An index-growth stream (r15): the staged batches are batch 1 and
+    * its [[withAdmitProbes]] batch 2, authored from batch-1's stored
+    * admits (fixture prep only: the STREAM computes every verdict and
+    * grows the index, and the probes' rejections can only come from that
+    * growth; `b1Admits` derives them in the stream's zone). Each
+    * micro-batch's verdicts run against base ∪ the stored segments and
+    * land as `admit_batch_<id>`; its admits then append as segment
+    * `segment(id)` before the next micro-batch, and `maintain` runs last.
+    * Pinned to the natural-docs subset of the sequential oracle
+    * (stream == batch).
     */
-  val streamCorpusAdmitSequential: Q = (s, d) => {
+  private def growingAdmitStream(s: SparkSession, d: String, name: String,
+      b1Admits: graft.io.Zones => DataFrame, segment: Long => AdmissionIndex.Segment)(
+      maintain: AdmissionIndex => Unit): DataFrame = {
     val key = graft.io.Zones.pathKey(d)
-    val zones = graft.io.Zones.forPurpose(s"streamadmseq_$key")
+    val zones = graft.io.Zones.forPurpose(s"streamadm${name}_$key")
     zones.clear(s)
-    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_admseq", d)
-    val docs = t(s, d, "documents")
-    // this stream CANNOT share the memoized docs source: its second
-    // staged file carries AUTHORED probe docs derived from batch-1's
-    // admits (the index-growth fixture)
-    val b1 = docs.filter(col("doc_id") % 20 === 0).select("doc_id", "text")
-    // FIXTURE PREP (producer side): the second staged file carries the
-    // same deterministic copy/variant probes as the batch entry, derived
-    // from batch-1's admits — computed here only to AUTHOR the staged
-    // input; the STREAM itself still computes every verdict and grows the
-    // delta, and the probes' rejections can only come from that growth
-    zones.write(seqB1Verdicts(s, d).filter(col("admitted") === 1L)
-      .select("doc_id"), "work", "seq_b1_admits")
-    val stagingDir = StreamingOps.stageFiles(s, "stream_src_admseq", d, Seq(
+    val ckpt = StreamingOps.scratchDir(s, s"stream_ckpt_adm$name", d)
+    val b1 = seqBatch1(s, d)
+    val stagingDir = StreamingOps.stageFiles(s, s"stream_src_adm$name", d, Seq(
       "batch0.parquet" -> b1,
-      "batch1.parquet" -> withAdmitProbes(docs,
-        b1.join(zones.read(s, "work", "seq_b1_admits"), "doc_id"))))
-    corpusMd5(s, d); bandIndex(s, d) // force the static base ONCE
-    val (seqBaseBloom, seqBloomWords) = corpusBloom(s, d)
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
-    val stream = StreamingOps.stagedStream(s, stagingDir, b1.schema)
-    StreamingOps.drainEach(stream, ckpt) { (batch, id) =>
-      def deltas(prefix: String): Seq[DataFrame] =
-        zones.listTables(s, "work").filter(_.startsWith(prefix)).sorted
-          .map(tb => zones.read(s, "work", tb))
-      val md5All = (corpusMd5(s, d) +: deltas("delta_md5_")).reduce(_ unionByName _)
-      val idxAll = (bandIndex(s, d) +: deltas("delta_band_")).reduce(_ unionByName _)
-      val corpusAll = (corpus +: deltas("delta_docs_")).reduce(_ unionByName _)
-      // (r18) the exact-dup shield stays active across growth: base ∪
-      // accumulated per-batch segment filters, bit_or-folded
-      val bloomAll = mergeBloomStates(seqBaseBloom +: deltas("delta_bloom_"))
-      // stable reuseKey: each micro-batch's resolution REPLACES the
-      // previous one (superseded broadcast destroyed) — the stream
-      // holds one filter array, not one per batch; safe because the
-      // verdicts materialize (zones.write) within this batch body
-      val v = admissionVerdictsAgainst(corpusAll, md5All, idxAll, batch,
-        bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
-          s, bloomAll, seqBloomWords, "__h",
-          reuseKey = Some(s"admseq_shield_$key"))))
-        .withColumn("batch", lit(id + 1L))
-      zones.write(v, "work", s"admit_batch_$id")
-      // GROW the index: this batch's admits append as new delta segments
-      val adm = batch.join(
-        zones.read(s, "work", s"admit_batch_$id")
+      "batch1.parquet" -> withAdmitProbes(t(s, d, "documents"), b1Admits(zones))))
+    val index = corpusIndex(s, d, zones) // forces the static base ONCE
+    StreamingOps.drainEach(StreamingOps.stagedStream(s, stagingDir, b1.schema), ckpt) {
+      (batch, id) =>
+        // the verdicts materialize within this batch body, so the stable
+        // reuseKey can replace the previous batch's shield
+        zones.write(index.probe(batch, index.stored.map(index.read(_)),
+            s"adm${name}_shield_$key").withColumn("batch", lit(id + 1L)),
+          "work", s"admit_batch_$id")
+        val adm = batch.join(zones.read(s, "work", s"admit_batch_$id")
           .filter(col("admitted") === 1L).select("doc_id"), "doc_id")
-      // (r21) the segment writes are independent readers of the admit
-      // set — concurrent jobs (guide §2.6); the Bloom write chains
-      // after the md5 write inside its thunk (it reads that table)
-      concurrently(Seq(
-        () => {
-          zones.write(adm.select(md5(col("text")).as("__h")).distinct(),
-            "work", s"delta_md5_$id")
-          zones.write(
-            graft.ops.SketchOps.bloomBits(
-              zones.read(s, "work", s"delta_md5_$id"), col("__h"),
-              words = seqBloomWords),
-            "work", s"delta_bloom_$id")
-        },
-        () => zones.write(
-          DedupOps.lshBandsFromSigArray(
-            DedupOps.minhashSignatureArray(adm, "doc_id", "text", k = 8, w = 3),
-            "doc_id", k = 8, rows = 4),
-          "work", s"delta_band_$id"),
-        () => zones.write(adm, "work", s"delta_docs_$id")))
+        index.append(Seq((segment(id), adm, AdmissionIndex.bands(adm))))
+        maintain(index)
     }
     streamBatchUnion(s, zones, "admit_batch_")
       .orderBy("batch", "doc_id")
   }
 
-  /** Batch 2 of the index-growth streams: the `% 20 == 10` docs plus the
+  /** STREAMING continuous curation with INDEX GROWTH (r15): batch N+1
+    * rejects near-dups of batch-N admits, the full production loop as a
+    * stream.
+    */
+  val streamCorpusAdmitSequential: Q = (s, d) =>
+    growingAdmitStream(s, d, "seq", zones => {
+      zones.write(seqB1Verdicts(s, d).filter(col("admitted") === 1L).select("doc_id"),
+        "work", "seq_b1_admits")
+      seqBatch1(s, d).join(zones.read(s, "work", "seq_b1_admits"), "doc_id")
+    }, id => AdmissionIndex.Segment.delta(id.toString))(_ => ())
+
+  /** Batch 2 of the index-growth entries: the `% 20 == 10` docs plus the
     * deterministic copy/variant probes of `b1Admits` (batch 1's admitted
-    * docs with their text) — an exact copy and a whitespace variant of
-    * each admit with at least 3 tokens, which only the grown index can
-    * reject.
+    * docs with their text), for each admit with at least 3 tokens (shorter
+    * docs have no shingles, so they never banded):
+    *  - a COPY (identical text, doc_id + 2e7) — caught by the md5 segment
+    *    at stage 1;
+    *  - a VARIANT (text + two trailing spaces, doc_id + 1e7) — different
+    *    md5, but the whitespace tokenizer yields the IDENTICAL token
+    *    sequence, hence identical shingles, minhash signature and band
+    *    buckets: it collides with the admit's band segment and
+    *    Jaccard-verifies at 1.0 — caught at stage 2 by the grown index,
+    *    deterministically at any scale factor.
     */
   private def withAdmitProbes(docs: DataFrame, b1Admits: DataFrame): DataFrame = {
     val admProbe = b1Admits.filter(size(graft.ops.TextOps.tokens(col("text"))) >= 3)
@@ -1054,93 +738,22 @@ object LlmQueries {
   }
 
   /** STREAMING continuous curation WITH MINOR COMPACTION (r16): the
-    * index-growth stream plus the maintenance step production actually
-    * runs — after each micro-batch appends its admit segments, ALL delta
-    * segments fold into ONE merged segment per structure (a
-    * log-structured minor compaction: one atomic replace, retired
-    * segments deleted after the swap), so the next batch probes
-    * base ∪ exactly one segment regardless of how many batches ran.
-    * Compaction is verdict-invariant, so the stream pins to the SAME
-    * oracle as the sequential entries.
+    * index-growth stream plus the maintenance step production runs —
+    * after each micro-batch appends its segment, ALL segments fold into
+    * ONE merged segment (a log-structured minor compaction: one atomic
+    * replace per structure, retired segments deleted after the swap), so
+    * the next batch probes base ∪ exactly one segment regardless of how
+    * many batches ran. Compaction is verdict-invariant, so the stream
+    * pins to the SAME oracle as the sequential entries.
     */
-  val streamCorpusAdmitCompact: Q = (s, d) => {
-    val key = graft.io.Zones.pathKey(d)
-    val zones = graft.io.Zones.forPurpose(s"streamadmcpt_$key")
-    zones.clear(s)
-    val ckpt = StreamingOps.scratchDir(s, "stream_ckpt_admcpt", d)
-    val docs = t(s, d, "documents")
-    val b1 = docs.filter(col("doc_id") % 20 === 0).select("doc_id", "text")
-    // same authored copy/variant probes as the sequential stream (they
-    // can only be rejected through the grown-then-compacted segments)
-    val stagingDir = StreamingOps.stageFiles(s, "stream_src_admcpt", d, Seq(
-      "batch0.parquet" -> b1,
-      "batch1.parquet" -> withAdmitProbes(docs, b1.join(
-        seqB1Verdicts(s, d).filter(col("admitted") === 1L).select("doc_id"), "doc_id"))))
-    corpusMd5(s, d); bandIndex(s, d) // force the static base ONCE
-    val (cptBaseBloom, cptBloomWords) = corpusBloom(s, d)
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0).select("doc_id", "text")
-    val stream = StreamingOps.stagedStream(s, stagingDir, b1.schema)
-    def minorCompact(prefix: String,
-        fold: Seq[DataFrame] => DataFrame = _.reduce(_ unionByName _)): Unit = {
-      val segs = zones.listTables(s, "work").filter(_.startsWith(prefix)).sorted
-      if (segs.length > 1) {
-        val merged = fold(segs.map(tb => zones.read(s, "work", tb)))
-        // fold INTO the merged segment name (AtomicWrite materializes
-        // before the swap, so reading the old merged segment is safe),
-        // then retire the per-batch segments
-        zones.write(merged, "work", s"${prefix}merged")
-        segs.filterNot(_ == s"${prefix}merged").foreach(zones.drop(s, "work", _))
-      }
+  val streamCorpusAdmitCompact: Q = (s, d) =>
+    growingAdmitStream(s, d, "cpt", _ => seqAdmits(s, d, seqB1Verdicts(s, d)),
+        id => AdmissionIndex.Segment.delta(s"b$id")) { index =>
+      val segs = index.stored
+      val merged = AdmissionIndex.Segment.delta("merged")
+      if (segs.size > 1)
+        index.fold(segs.map(index.read(_)), merged, retire = segs.filterNot(_ == merged))
     }
-    StreamingOps.drainEach(stream, ckpt) { (batch, id) =>
-      def deltas(prefix: String): Seq[DataFrame] =
-        zones.listTables(s, "work").filter(_.startsWith(prefix)).sorted
-          .map(tb => zones.read(s, "work", tb))
-      val md5All = (corpusMd5(s, d) +: deltas("delta_md5_")).reduce(_ unionByName _)
-      val idxAll = (bandIndex(s, d) +: deltas("delta_band_")).reduce(_ unionByName _)
-      val corpusAll = (corpus +: deltas("delta_docs_")).reduce(_ unionByName _)
-      // (r18) the shield probes base ∪ the (compacted) segment filters
-      val bloomAll = mergeBloomStates(cptBaseBloom +: deltas("delta_bloom_"))
-      // stable reuseKey — see the sequential stream twin
-      val v = admissionVerdictsAgainst(corpusAll, md5All, idxAll, batch,
-        bloomFilter = Some(graft.ops.SketchOps.bloomServingFilter(
-          s, bloomAll, cptBloomWords, "__h",
-          reuseKey = Some(s"admcpt_shield_$key"))))
-        .withColumn("batch", lit(id + 1L))
-      zones.write(v, "work", s"admit_batch_$id")
-      val adm = batch.join(
-        zones.read(s, "work", s"admit_batch_$id")
-          .filter(col("admitted") === 1L).select("doc_id"), "doc_id")
-      // (r21) segment writes overlap as concurrent jobs (guide §2.6);
-      // the Bloom write chains after the md5 write inside its thunk
-      concurrently(Seq(
-        () => {
-          zones.write(adm.select(md5(col("text")).as("__h")).distinct(),
-            "work", s"delta_md5_b$id")
-          zones.write(
-            graft.ops.SketchOps.bloomBits(
-              zones.read(s, "work", s"delta_md5_b$id"), col("__h"),
-              words = cptBloomWords),
-            "work", s"delta_bloom_b$id")
-        },
-        () => zones.write(
-          DedupOps.lshBandsFromSigArray(
-            DedupOps.minhashSignatureArray(adm, "doc_id", "text", k = 8, w = 3),
-            "doc_id", k = 8, rows = 4),
-          "work", s"delta_band_b$id"),
-        () => zones.write(adm, "work", s"delta_docs_b$id")))
-      // MINOR COMPACTION: fold every segment into one per structure —
-      // the Bloom folds by bit_or, its own associativity (r18); the
-      // four structures' folds are independent (r21: concurrent jobs)
-      concurrently(Seq(
-        () => minorCompact("delta_md5_"),
-        () => minorCompact("delta_band_"),
-        () => minorCompact("delta_docs_"),
-        () => minorCompact("delta_bloom_", mergeBloomStates)))
-    }
-    streamBatchUnion(s, zones, "admit_batch_")
-      .orderBy("batch", "doc_id")
-  }
 
   /** Incremental near-dup admission ([[DedupOps.incrementalDedup]]): the
     * batch (every 10th doc) probes the STORED corpus band index; verified
@@ -1601,18 +1214,25 @@ object LlmQueries {
     val emb = t(s, d, "embeddings")
     val queries = emb.filter(col("vec_id") % 100 === 0)
     val exact = SimOps.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
     val approx = SimOps.lshTopK(emb, queries, "vec_id", "embedding",
       k = 5, nPlanes = 8, dim = 64)
-      .select(col("query_id"), col("item_id"))
-    val hits = exact.join(approx, Seq("query_id", "item_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
+    recallAt5(queries, exact, approx)
+      .orderBy("query_id")
+  }
+
+  /** Recall@5 per query: `n_hits` = how many of the exact top-5
+    * (`query_id`, `item_id`) pairs the approximate tier also returned,
+    * and `recall` = n_hits / 5 at 2 dp. A left join from the query set
+    * keeps zero-recall queries visible.
+    */
+  private def recallAt5(queries: DataFrame, exact: DataFrame, approx: DataFrame): DataFrame = {
+    val hits = exact.select("query_id", "item_id")
+      .join(approx.select("query_id", "item_id"), Seq("query_id", "item_id"), "left_semi")
+      .groupBy("query_id").agg(count(lit(1)).as("__hits"))
+    val n = coalesce(col("__hits"), lit(0L))
     queries.select(col("vec_id").as("query_id"))
       .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 5.0, 2).as("recall"))
-      .orderBy("query_id")
+      .select(col("query_id"), n.as("n_hits"), round(n.cast("double") / 5.0, 2).as("recall"))
   }
 
   /** Recall@5 of the IVF tier against exact brute force — the same
@@ -1623,19 +1243,11 @@ object LlmQueries {
     val emb = t(s, d, "embeddings")
     val queries = emb.filter(col("vec_id") % 100 === 0)
     val exact = SimOps.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
     val approx = SimOps.ivfTopK(
       corpus = emb, queries = queries,
       centroids = semAdmitCentroids(emb),
       "vec_id", "embedding", k = 5, nprobe = 2)
-      .select(col("query_id"), col("item_id"))
-    val hits = exact.join(approx, Seq("query_id", "item_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 5.0, 2).as("recall"))
+    recallAt5(queries, exact, approx)
       .orderBy("query_id")
   }
 
@@ -1651,17 +1263,9 @@ object LlmQueries {
     val trained = SimOps.lloydIteration(
       emb, semAdmitCentroids(emb), "vec_id", "embedding")
     val exact = SimOps.bruteForceTopK(emb, queries, "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
     val approx = SimOps.ivfTopK(emb, queries, trained,
       "vec_id", "embedding", k = 5, nprobe = 2)
-      .select(col("query_id"), col("item_id"))
-    val hits = exact.join(approx, Seq("query_id", "item_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 5.0, 2).as("recall"))
+    recallAt5(queries, exact, approx)
       .orderBy("query_id")
   }
 
@@ -1698,14 +1302,7 @@ object LlmQueries {
       }
       val approx = SimOps.ivfTopK(emb, queries, cents,
         "vec_id", "embedding", k = 5, nprobe = 2)
-        .select(col("query_id"), col("item_id"))
-      val hits = exact.join(approx, Seq("query_id", "item_id"), "left_semi")
-        .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-      queries.select(col("vec_id").as("query_id"))
-        .join(hits, Seq("query_id"), "left")
-        .select(lit(r.toLong).as("round"), col("query_id"),
-          coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-          round(coalesce(col("n_hits"), lit(0L)).cast("double") / 5.0, 2).as("recall"))
+      recallAt5(queries, exact, approx).select(lit(r.toLong).as("round"), col("*"))
     }
     // materialize before returning: the union references the checkpointed
     // exact frame, and the returned plan must not re-read persisted
@@ -1805,30 +1402,24 @@ object LlmQueries {
     * run-once memo discipline; no cross-JVM staleness class because the
     * write is unconditional).
     */
-  private val ivfIndexMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
+  private val ivfIndexes = graft.io.Stored.perDataset[Unit]
   private def ivfStoredIndex(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val zones = graft.io.Zones.forPurpose("dedup")
-    val key = graft.io.Zones.pathKey(d)
-    ivfIndexMemo.getOrElseUpdate((s, d), {
+    ivfIndexes((s, d)) {
       val e = t(s, d, "embeddings")
-      val cents = semAdmitCentroids(e)
-      zones.write(cents, "work", s"ivf_centroids_$key")
-      zones.write(
-        SimOps.ivfIndex(e, zones.read(s, "work", s"ivf_centroids_$key"),
-          "vec_id", "embedding"),
-        "work", s"ivf_index_$key")
+      dedupWork.write(semAdmitCentroids(e), d, "ivf_centroids")
+      dedupWork.write(
+        SimOps.ivfIndex(e, dedupWork.read(s, d, "ivf_centroids"), "vec_id", "embedding"),
+        d, "ivf_index")
       // (r19) the serve-time fan-out widths persisted BESIDE the index —
       // the tiny (centroid_id, __nsalt) table a production serving tier
       // reads instead of re-aggregating the index per query batch
-      zones.write(
-        zones.read(s, "work", s"ivf_index_$key")
+      dedupWork.write(
+        dedupWork.read(s, d, "ivf_index")
           .groupBy("centroid_id").agg(max(col("__nsalt")).as("__nsalt")),
-        "work", s"ivf_salts_$key")
-    })
-    (zones.read(s, "work", s"ivf_index_$key"),
-      zones.read(s, "work", s"ivf_centroids_$key"),
-      zones.read(s, "work", s"ivf_salts_$key"))
+        d, "ivf_salts")
+    }
+    (dedupWork.read(s, d, "ivf_index"), dedupWork.read(s, d, "ivf_centroids"),
+      dedupWork.read(s, d, "ivf_salts"))
   }
 
   /** IVF serving from the STORED index ([[SimOps.ivfTopKServe]]): queries
@@ -1963,30 +1554,23 @@ object LlmQueries {
     * per query batch. Same run-once unconditional-write memo discipline
     * as [[ivfStoredIndex]].
     */
-  private val pqArtifactsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
+  private val pqArtifacts = graft.io.Stored.perDataset[Unit]
   private def pqStoredArtifacts(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val zones = graft.io.Zones.forPurpose("dedup")
-    val key = graft.io.Zones.pathKey(d)
-    pqArtifactsMemo.getOrElseUpdate((s, d), {
+    pqArtifacts((s, d)) {
       val e = t(s, d, "embeddings")
-      zones.write(SimOps.pqCodebook(e, "vec_id", "embedding", dim = 64),
-        "work", s"pq_codebook_$key")
-      zones.write(
+      dedupWork.write(SimOps.pqCodebook(e, "vec_id", "embedding", dim = 64), d, "pq_codebook")
+      dedupWork.write(
         SimOps.pqCodes(e, "vec_id", "embedding",
-          zones.read(s, "work", s"pq_codebook_$key"), dim = 64)
+          dedupWork.read(s, d, "pq_codebook"), dim = 64)
           .withColumnRenamed("vec_id", "item_id"),
-        "work", s"pq_codes_$key")
+        d, "pq_codes")
       // (r21, ADVICE) the serve-side `codes -> array<long>` pivot is a
       // |corpus|-row groupBy — persist the pivoted form ONCE at publish
       // time so every serve invocation reads it instead of re-pivoting
       // per query batch (codes are identical; the array is index-by-sub)
-      zones.write(
-        SimOps.codesAsArray(zones.read(s, "work", s"pq_codes_$key")),
-        "work", s"pq_codes_arr_$key")
-    })
-    (zones.read(s, "work", s"pq_codebook_$key"),
-      zones.read(s, "work", s"pq_codes_arr_$key"))
+      dedupWork.write(SimOps.codesAsArray(dedupWork.read(s, d, "pq_codes")), d, "pq_codes_arr")
+    }
+    (dedupWork.read(s, d, "pq_codebook"), dedupWork.read(s, d, "pq_codes_arr"))
   }
 
   /** IVF-PQ serving from STORED artifacts ([[SimOps.ivfPqServe]]): probed
@@ -2026,17 +1610,9 @@ object LlmQueries {
     val emb = t(s, d, "embeddings")
     val queries = emb.filter(col("vec_id") % 50 === 0)
     val exact = SimOps.bruteForceL2TopK(emb, queries, "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
     val cb = SimOps.pqCodebook(emb, "vec_id", "embedding", dim = 64)
     val approx = SimOps.pqTopK(emb, queries, cb, "vec_id", "embedding", dim = 64)
-      .select(col("query_id"), col("item_id"))
-    val hits = exact.join(approx, Seq("query_id", "item_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 5.0, 2).as("recall"))
+    recallAt5(queries, exact, approx)
       .orderBy("query_id")
   }
 
@@ -2105,17 +1681,9 @@ object LlmQueries {
     val e = t(s, d, "embeddings")
     val queries = e.filter(col("vec_id") % 100 === 0)
     val exact = SimOps.bruteForceL2TopK(e, queries, "vec_id", "embedding", k = 5)
-      .select(col("query_id"), col("item_id"))
     val approx = SimOps.ivfPqRerankTopK(e, queries, semAdmitCentroids(e),
         "vec_id", "embedding", dim = 64, nprobe = 2)
-      .select(col("query_id"), col("item_id"))
-    val hits = exact.join(approx, Seq("query_id", "item_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    queries.select(col("vec_id").as("query_id"))
-      .join(hits, Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-        round(coalesce(col("n_hits"), lit(0L)).cast("double") / 5.0, 2).as("recall"))
+    recallAt5(queries, exact, approx)
       .orderBy("query_id")
   }
 

@@ -603,8 +603,7 @@ object OhdsiCdmQueries {
     * battery alone re-derived the universe ~20x). Parquet tables on disk
     * also survive Bench's between-query cache clearing, unlike persist().
     */
-  private val cdmStore =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
+  private val cdmStore = graft.io.Stored.perDataset[Unit]
   def materialized(s: SparkSession, d: String): String => DataFrame = {
     val key = graft.io.Zones.pathKey(d)
     // the purpose carries a schema VERSION: bumping it on any change to an
@@ -623,27 +622,16 @@ object OhdsiCdmQueries {
     // payer-plan fk + money columns (1501/1601/1509-1511/1610), ppp id.
     // v9: visit_detail care_site_id (2510)
     val zones = graft.io.Zones.forPurpose(s"${CdmStoreGen}_$key")
-    cdmStore.getOrElseUpdate((s, d), {
+    cdmStore((s, d)) {
       val staged = zones.listTables(s, "omop").toSet
-      val todo = derivedModel.tables.filterNot(staged).toSeq
-      if (todo.nonEmpty) {
-        // the table derivations are independent of one another (the era
-        // tables re-derive their source inline), so the writes launch as
-        // CONCURRENT Spark jobs on the shared session — same pattern as
-        // EtlRunner's per-table gates. Sequential staging left local[32]
-        // mostly idle per job (~16 s of the cold battery's wall at sf0.1);
-        // a bounded pool overlaps the scans
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, todo.size))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(todo.map(tb =>
-            scala.concurrent.Future(zones.write(derive(s, d)(tb), "omop", tb)))),
-          scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
-      }
-    })
+      // the table derivations are independent of one another (the era
+      // tables re-derive their source inline), so the writes launch as
+      // CONCURRENT Spark jobs on the shared session — same pattern as
+      // EtlRunner's per-table gates. Sequential staging left local[32]
+      // mostly idle per job (~16 s of the cold battery's wall at sf0.1)
+      graft.io.Jobs.concurrently(derivedModel.tables.filterNot(staged).toSeq.map(tb =>
+        () => zones.write(derive(s, d)(tb), "omop", tb)))
+    }
     tb => zones.read(s, "omop", tb)
   }
 
@@ -655,8 +643,7 @@ object OhdsiCdmQueries {
     * report. The purpose carries the derived-CDM schema version so a warm
     * results zone from older derivation code invalidates with it.
     */
-  private val resultsStore =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
+  private val resultsStore = graft.io.Stored.perDataset[Unit]
   private def storedBatteries(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val key = graft.io.Zones.pathKey(d)
     // the purpose carries the derived-CDM schema version AND the catalog
@@ -674,31 +661,20 @@ object OhdsiCdmQueries {
     // mirrors, cost completion, the x93/x94 density dists). v9: the
     // visit_detail siblings 2510/2511/2512
     val zones = graft.io.Zones.forPurpose(s"${ResStoreGen}_$key")
-    resultsStore.getOrElseUpdate((s, d), {
+    resultsStore((s, d)) {
       val have = zones.listTables(s, "achilles").toSet
       val load = materialized(s, d)
       // the two batteries are independent readers of the same warm
       // derived-CDM zone — write them as concurrent Spark jobs (the
-      // cdm-staging pool pattern); sequential writes left local[32]
-      // mostly idle through the smaller dist pass
-      val todo = Seq(
+      // cdm-staging pattern); sequential writes left local[32] mostly
+      // idle through the smaller dist pass
+      graft.io.Jobs.concurrently(Seq(
         "achilles_results" ->
           (() => graft.operators.OhdsiAchilles.cdmCoreResults(derivedModel, load)),
         "achilles_results_dist" ->
           (() => graft.operators.OhdsiAchilles.cdmCoreDistResults(derivedModel, load))
-      ).filterNot { case (tb, _) => have(tb) }
-      if (todo.size > 1) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(todo.size)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(todo.map { case (tb, df) =>
-            scala.concurrent.Future(zones.write(df(), "achilles", tb))
-          }),
-          scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
-      } else todo.foreach { case (tb, df) => zones.write(df(), "achilles", tb) }
-    })
+      ).collect { case (tb, df) if !have(tb) => () => zones.write(df(), "achilles", tb) })
+    }
     (zones.read(s, "achilles", "achilles_results"),
       zones.read(s, "achilles", "achilles_results_dist"))
   }

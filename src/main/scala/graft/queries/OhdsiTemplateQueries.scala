@@ -481,15 +481,13 @@ object OhdsiTemplateQueries {
     * each run — the r14 run-once discipline; each entry's own mutations
     * target tables no sibling reads).
     */
-  private val flowMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private val flowMemo = new graft.io.Stored.Once[String, (String, String)]
 
   private[queries] def sharedConceptFlow(s: SparkSession, d: String): (String, String) =
     // the staged databases are KEYED BY DATASET: with two datasets
     // interleaved in one JVM, a fixed db name would let dataset A's memo
     // hit read dataset B's re-staged rows (r15 ADVICE)
-    flowMemo.getOrElseUpdate(d,
-      stageConceptFlow(s, d, s"csh_${graft.io.Zones.pathKey(d)}"))
+    flowMemo(d)(stageConceptFlow(s, d, s"csh_${graft.io.Zones.pathKey(d)}"))
 
   /** Stage + run the published SQL Server custom-concept sequence
     * VERBATIM in a dedicated db pair: work concept upload -> swap
@@ -1098,10 +1096,18 @@ object OhdsiTemplateQueries {
       "upload_tables" -> Seq("u1"))
     // events branch: TRUNCATE + load the WORK table
     OhdsiSql.runTemplate(s, dl, dl.file("omop_table_merge"), vars, lists, FactEventDicts)
-    // the published discovery step (its frame feeds the driver's
-    // event_tables dict — here the dict is the fixture's, same content)
-    OhdsiSql.runTemplate(s, dl, dl.file("get_event_tables"), vars,
-      lists = Map("events" -> Seq("domain_concept_id_1", "domain_concept_id_2")))
+    // the published discovery step: the event tables it finds in the
+    // merged work table must be the ones the event_tables dict that
+    // apply_event_columns reads maps to their keys
+    val discovered = OhdsiSql.runTemplate(s, dl, dl.file("get_event_tables"), vars,
+      lists = Map("events" -> Seq("domain_concept_id_1", "domain_concept_id_2"))).get
+      .collect().map(r => String.valueOf(r.get(0))).toSet
+    val mapped = FactEventDicts("event_tables").map(_._1).toSet
+    require(discovered == mapped,
+      s"get_event_tables found ${discovered.toSeq.sorted.mkString(", ")}; the event_tables " +
+        s"dict maps ${mapped.toSeq.sorted.mkString(", ")} (missing: " +
+        s"${(mapped -- discovered).toSeq.sorted.mkString(", ")}; unmapped: " +
+        s"${(discovered -- mapped).toSeq.sorted.mkString(", ")})")
     OhdsiSql.runTemplate(s, dl, dl.file("apply_event_columns"), vars, lists, FactEventDicts)
     s.table(s"$omop.fact_relationship").orderBy(FactColumns.map(col): _*)
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.Zones
+import graft.io.{AtomicWrite, Zones}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -235,8 +235,9 @@ object StreamingOps {
 
   /** Stage `parts` as the source dir `scratchDir(s, name, d)`, one
     * single-file parquet per `(fileName, part)`, for [[stagedStream]]:
-    * each part is written to `__tmp_<fileName>`, its one part file renamed
-    * into the dir and the tmp dir deleted. The files get STRICTLY
+    * each part is written to `__tmp_<fileName>`, its one part file
+    * promoted into the dir ([[graft.io.AtomicWrite.promote]]) and the tmp
+    * dir deleted. The files get STRICTLY
     * increasing mtimes in `parts` order (t0, t0 + 60 s, ...), set
     * explicitly: the file source orders by modification time, and
     * back-to-back writes on a coarse-mtime filesystem can tie and process
@@ -252,7 +253,7 @@ object StreamingOps {
       val fs = tmp.getFileSystem(s.sparkContext.hadoopConfiguration)
       val f = fs.listStatus(tmp).map(_.getPath).filter(_.getName.endsWith(".parquet")).head
       val dst = new Path(dir, fileName)
-      require(fs.rename(f, dst), s"staging rename failed: $f -> $dst")
+      fs.delete(AtomicWrite.promote(fs, f, dst), true)
       fs.delete(tmp, true)
       fs.setTimes(dst, t0 + i * 60000L, -1)
     }

@@ -6,7 +6,10 @@ import scala.jdk.CollectionConverters._
 
 /** Regression guards on where streams start and how stream sources are
   * staged: [[StreamingOps]] holds the drains, the stager and the table
-  * source, and the queries only wire them.
+  * source, and the queries only wire them. The same greps keep renames in
+  * [[graft.io.AtomicWrite]] (and the catalog append), the query layer's
+  * run-once stores in [[graft.io.Stored]] and its thread pools in
+  * [[graft.io.Jobs]].
   */
 class StreamingHarnessSpec extends AnyFunSuite {
 
@@ -36,6 +39,19 @@ class StreamingHarnessSpec extends AnyFunSuite {
 
   test("renames only in AtomicWrite, OhdsiSql's append path and the stream stager") {
     assert(sites(".rename(") ==
-      Map("AtomicWrite.scala" -> 3, "OhdsiSql.scala" -> 1, "StreamingOps.scala" -> 1))
+      Map("AtomicWrite.scala" -> 3, "OhdsiSql.scala" -> 1))
+  }
+
+  test("query-layer stores go through graft.io.Stored, not their own memo maps") {
+    val memos = mainFiles.collect {
+      case (p, text) if p.toString.replace('\\', '/').contains("graft/queries/") &&
+        text.contains("TrieMap.empty") => p.getFileName.toString
+    }
+    assert(memos.isEmpty, s"use graft.io.Stored: ${memos.mkString(", ")}")
+  }
+
+  test("thread pools only in Jobs and EtlRunner") {
+    assert(sites("newFixedThreadPool").keySet == Set("Jobs.scala", "EtlRunner.scala"),
+      s"run concurrent jobs with graft.io.Jobs.concurrently: ${sites("newFixedThreadPool")}")
   }
 }
