@@ -195,11 +195,14 @@ object LlmQueries {
     * from the stored corpus cardinality (r17,
     * [[graft.ops.SketchOps.bloomWordsFor]]: m ≈ n·k/ln 2 rounded up to a
     * power of two) — a fixed size saturates once the corpus outgrows it
-    * and every probe turns positive. The chosen size is PERSISTED beside
+    * and every probe turns positive, silently degrading the exact-dup
+    * shield to a no-op. The chosen size is PERSISTED beside
     * the filter (`corpus_bloom_meta`: one row of
     * `words`/`k`/`n_values`/`saturated`), listed in the store-build
     * manifest and re-derived independently by the DuckDB oracle from the
-    * same count. Probes MUST use the build's exact `m`; the memo carries
+    * same count. Probes MUST use the build's exact `m` (a wrong `m`
+    * hashes into the wrong bit positions and breaks the
+    * no-false-negative contract); the memo carries
     * the pair (state, words) together, and a rebuild refreshes filter
     * AND meta from the same deterministic md5 store.
     */
