@@ -25,7 +25,7 @@ object Tables {
   // Library note: entries live for the SparkSession's lifetime and are never
   // evicted. That is the right trade for a bench/ETL process reading a fixed
   // table set; a long-lived service loading from many directories would want
-  // an eviction policy (or to call `spark.read.parquet` directly) — the
+  // an eviction policy (or to call `ParquetFooters.read` directly) — the
   // cached object is only a logical plan, so the footprint is small but
   // unbounded in the number of distinct (dir, table) pairs.
   private val plans =
@@ -79,7 +79,7 @@ object Tables {
   }
 
   private def doLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = graft.io.ParquetFooters.read(spark, s"$sfDir/$name.parquet")
     name match {
       case "events" =>
         df.withColumn("ts", normalizedTs(spark, df.schema("ts").dataType, "ts"))

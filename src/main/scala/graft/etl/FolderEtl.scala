@@ -178,10 +178,12 @@ object FolderEtl {
     model.pk(tb).foreach { pk =>
       val cands = df.select(col(pk).as("x")).distinct()
       val swapName = s"${tb}_id_swap"
-      val existing =
-        if (zones.listTables(s, "work").contains(swapName)) zones.read(s, "work", swapName)
-        else cands.limit(0).withColumn("y", lit(0L))
-      timed(s"$tb pk-swap")(zones.write(Swap.mergeAppend(existing, cands, Seq("x")), "work", swapName))
+      // a first run numbers every key 1..n; re-runs append unseen keys only
+      val swap =
+        if (zones.listTables(s, "work").contains(swapName))
+          Swap.mergeAppend(zones.read(s, "work", swapName), cands, Seq("x"))
+        else Swap.denseIds(cands, Seq("x"), 0L)
+      timed(s"$tb pk-swap")(zones.write(swap, "work", swapName))
       val sw = zones.read(s, "work", swapName)
       df = df.join(sw, df(pk) === sw("x")).withColumn(pk, col("y")).drop("x", "y")
     }

@@ -82,9 +82,11 @@ object AtomicWrite {
     restore(fs(spark, target), oldOf(path), target)
   }
 
-  /** Read the table, transparently recovering from an interrupted replace. */
+  /** Read the table, transparently recovering from an interrupted replace;
+    * its schema comes from a footer ([[ParquetFooters.read]]), so no job runs.
+    */
   def readTable(spark: SparkSession, path: String): DataFrame = {
     recover(spark, path)
-    spark.read.parquet(path)
+    ParquetFooters.read(spark, path)
   }
 }

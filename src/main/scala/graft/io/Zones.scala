@@ -52,10 +52,10 @@ final case class Zones(root: String) {
     AtomicWrite.readTable(spark, tablePath(zone, table))
 
   /** Rows of `table`, summed from the row groups its parquet footers
-    * record — read on the driver, so no Spark job runs. Files named `_*`
-    * or `.*` are skipped, as Spark's listing skips them; a missing table
-    * has 0 rows. An interrupted replace is recovered first, as [[read]]
-    * does.
+    * record — read on the driver, so no Spark job runs. The data files
+    * are those of [[ParquetFooters.listing]], Spark's own listing, less
+    * summary files; a missing table has 0 rows. An interrupted replace is
+    * recovered first, as [[read]] does.
     */
   def rows(spark: SparkSession, zone: String, table: String): Long =
     rows(spark, zone, Seq(table), Long.MaxValue)
@@ -70,13 +70,7 @@ final case class Zones(root: String) {
     val files = tables.iterator.flatMap { tb =>
       val path = tablePath(zone, tb)
       AtomicWrite.recover(spark, path)
-      val dir = new Path(path)
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) Iterator.empty
-      else fs.listStatus(dir).iterator.filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+      ParquetFooters.listing(spark, path).filter(f => f.isFile && !ParquetFooters.isSummary(f))
     }
     var n = 0L
     while (n < upTo && files.hasNext) {

@@ -21,9 +21,6 @@ object LlmQueries {
   private type Q = (SparkSession, String) => DataFrame
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  private def concurrently(thunks: Seq[() => Unit]): Unit =
-    graft.io.Jobs.concurrently(thunks)
-
   /** Union a drained stream's per-micro-batch zone tables (r19, ADVICE:
     * `.reduce` on an empty collection threw an opaque
     * UnsupportedOperationException when the staged source listed zero
@@ -670,17 +667,17 @@ object LlmQueries {
 
   /** An index-growth stream (r15): the staged batches are batch 1 and
     * its [[withAdmitProbes]] batch 2, authored from batch-1's stored
-    * admits (fixture prep only: the STREAM computes every verdict and
+    * verdicts (fixture prep only: the STREAM computes every verdict and
     * grows the index, and the probes' rejections can only come from that
-    * growth; `b1Admits` derives them in the stream's zone). Each
-    * micro-batch's verdicts run against base ∪ the stored segments and
-    * land as `admit_batch_<id>`; its admits then append as segment
-    * `segment(id)` before the next micro-batch, and `maintain` runs last.
+    * growth). Each micro-batch's verdicts run against base ∪ the stored
+    * segments and land as `admit_batch_<id>`; its admits then append as
+    * segment `segment(id)` before the next micro-batch, and `maintain`
+    * runs last.
     * Pinned to the natural-docs subset of the sequential oracle
     * (stream == batch).
     */
   private def growingAdmitStream(s: SparkSession, d: String, name: String,
-      b1Admits: graft.io.Zones => DataFrame, segment: Long => AdmissionIndex.Segment)(
+      segment: Long => AdmissionIndex.Segment)(
       maintain: AdmissionIndex => Unit): DataFrame = {
     val key = graft.io.Zones.pathKey(d)
     val zones = graft.io.Zones.forPurpose(s"streamadm${name}_$key")
@@ -689,7 +686,8 @@ object LlmQueries {
     val b1 = seqBatch1(s, d)
     val stagingDir = StreamingOps.stageFiles(s, s"stream_src_adm$name", d, Seq(
       "batch0.parquet" -> b1,
-      "batch1.parquet" -> withAdmitProbes(t(s, d, "documents"), b1Admits(zones))))
+      "batch1.parquet" -> withAdmitProbes(t(s, d, "documents"),
+        seqAdmits(s, d, seqB1Verdicts(s, d)))))
     val index = corpusIndex(s, d, zones) // forces the static base ONCE
     StreamingOps.drainEach(StreamingOps.stagedStream(s, stagingDir, b1.schema), ckpt) {
       (batch, id) =>
@@ -712,11 +710,7 @@ object LlmQueries {
     * stream.
     */
   val streamCorpusAdmitSequential: Q = (s, d) =>
-    growingAdmitStream(s, d, "seq", zones => {
-      zones.write(seqB1Verdicts(s, d).filter(col("admitted") === 1L).select("doc_id"),
-        "work", "seq_b1_admits")
-      seqBatch1(s, d).join(zones.read(s, "work", "seq_b1_admits"), "doc_id")
-    }, id => AdmissionIndex.Segment.delta(id.toString))(_ => ())
+    growingAdmitStream(s, d, "seq", id => AdmissionIndex.Segment.delta(id.toString))(_ => ())
 
   /** Batch 2 of the index-growth entries: the `% 20 == 10` docs plus the
     * deterministic copy/variant probes of `b1Admits` (batch 1's admitted
@@ -750,8 +744,7 @@ object LlmQueries {
     * pins to the SAME oracle as the sequential entries.
     */
   val streamCorpusAdmitCompact: Q = (s, d) =>
-    growingAdmitStream(s, d, "cpt", _ => seqAdmits(s, d, seqB1Verdicts(s, d)),
-        id => AdmissionIndex.Segment.delta(s"b$id")) { index =>
+    growingAdmitStream(s, d, "cpt", id => AdmissionIndex.Segment.delta(s"b$id")) { index =>
       val segs = index.stored
       val merged = AdmissionIndex.Segment.delta("merged")
       if (segs.size > 1)
@@ -1457,7 +1450,7 @@ object LlmQueries {
     val (_, cents, _) = ivfStoredIndex(s, d) // shared stored centroid frame
     // (r21) base and delta assignments are independent scans — concurrent
     // jobs (guide §2.6)
-    concurrently(Seq(
+    graft.io.Jobs.concurrently(Seq(
       () => zones.write(
         SimOps.ivfIndex(e.filter(col("vec_id") % 10 =!= 0), cents,
           "vec_id", "embedding"),
@@ -1492,7 +1485,7 @@ object LlmQueries {
     val (_, cents, _) = ivfStoredIndex(s, d) // shared stored centroid frame
     // (r21) the three segment assignments are independent scans —
     // concurrent jobs (guide §2.6)
-    concurrently(Seq(
+    graft.io.Jobs.concurrently(Seq(
       () => zones.write(
         SimOps.ivfIndex(e.filter(col("vec_id") % 10 =!= 0), cents,
           "vec_id", "embedding"),

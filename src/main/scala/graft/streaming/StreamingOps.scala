@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.io.{AtomicWrite, Zones}
+import graft.io.{AtomicWrite, ParquetFooters, Zones}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -268,9 +268,10 @@ object StreamingOps {
 
   /** A file-source stream of the dataset table `$d/<table>.parquet`.
     * Streaming sources need a fixed schema: it comes from the table's own
-    * footer (one driver-side probe, no data read), never from an assumed
-    * encoding — callers normalize columns (`ts` via
-    * `Tables.normalizedTs`, ids cast to long) as the batch loader does.
+    * footer ([[ParquetFooters]]: one driver-side probe, no data read, no
+    * job), never from an assumed encoding — callers normalize columns
+    * (`ts` via `Tables.normalizedTs`, ids cast to long) as the batch
+    * loader does.
     * An engine-written table is a DIRECTORY of part files and streams
     * directly: a symlink to it lists ZERO files (the file source treats
     * the symlinked subdir as a partition dir with no leaves; the sf1 soak
@@ -281,7 +282,7 @@ object StreamingOps {
     */
   def tableStream(s: SparkSession, d: String, table: String, stageName: String): DataFrame = {
     val file = java.nio.file.Paths.get(s"$d/$table.parquet").toAbsolutePath
-    val onDisk = s.read.parquet(file.toString).schema
+    val onDisk = ParquetFooters.read(s, file.toString).schema
     val src =
       if (java.nio.file.Files.isDirectory(file)) file.toString
       else {

@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
   * staged: [[StreamingOps]] holds the drains, the stager and the table
   * source, and the queries only wire them. The same greps keep renames in
   * [[graft.io.AtomicWrite]] (and the catalog append), the query layer's
-  * run-once stores in [[graft.io.Stored]] and its thread pools in
-  * [[graft.io.Jobs]].
+  * run-once stores in [[graft.io.Stored]], its thread pools in
+  * [[graft.io.Jobs]] and its schema-less parquet reads in
+  * [[graft.io.ParquetFooters]].
   */
 class StreamingHarnessSpec extends AnyFunSuite {
 
@@ -48,6 +49,11 @@ class StreamingHarnessSpec extends AnyFunSuite {
         text.contains("TrieMap.empty") => p.getFileName.toString
     }
     assert(memos.isEmpty, s"use graft.io.Stored: ${memos.mkString(", ")}")
+  }
+
+  test("parquet reads without a schema only in ParquetFooters' fallback") {
+    assert(sites(".read.parquet(") == Map("ParquetFooters.scala" -> 1),
+      s"read tables with graft.io.ParquetFooters.read: ${sites(".read.parquet(")}")
   }
 
   test("thread pools only in Jobs and EtlRunner") {
