@@ -133,7 +133,7 @@ class TableReadSpec extends SparkSpec {
     }
   }
 
-  test("an engine-written table of every column kind, an empty write, and _SUCCESS / .crc files") {
+  test("an engine-written table of every column kind, an empty write, summary files and _SUCCESS / .crc files") {
     val zones = Zones(tmp("kinds"))
     val kinds = spark.range(0, 50, 1, 4).select(
       col("id"),
@@ -156,6 +156,11 @@ class TableReadSpec extends SparkSpec {
     assertParity(spark, zones.tablePath("work", "empty"))
     assert(ParquetFooters.schema(spark, zones.tablePath("work", "empty")).map(_.fieldNames.toSeq)
       === Some(kinds.columns.toSeq))
+    // summary files: inference reads `_common_metadata` first
+    val summarized = zones.tablePath("work", "summarized")
+    kinds.write.option("parquet.summary.metadata.level", "ALL").parquet(summarized)
+    assert(new java.io.File(summarized).list().toSet.contains("_common_metadata"))
+    assertParity(spark, summarized)
   }
 
   test("a missing path fails as inference does; a partitioned directory falls back to it") {
