@@ -388,14 +388,22 @@ object GraftCli {
         |});</script></body></html>""".stripMargin
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress(port), 0)
-    def handler(body: String, contentType: String): com.sun.net.httpserver.HttpHandler =
+    // one responder: `f` maps the request's query string to a body and
+    // content type, or to None for a JSON 404
+    def dyn(f: String => Option[(String, String)]): com.sun.net.httpserver.HttpHandler =
       exchange => {
+        val (code, body, ct) = f(exchange.getRequestURI.getQuery) match {
+          case Some((b, c)) => (200, b, c)
+          case None => (404, """{"error":"not found"}""", "application/json")
+        }
         val bytes = body.getBytes("UTF-8")
-        exchange.getResponseHeaders.set("Content-Type", contentType)
-        exchange.sendResponseHeaders(200, bytes.length.toLong)
+        exchange.getResponseHeaders.set("Content-Type", ct)
+        exchange.sendResponseHeaders(code, bytes.length.toLong)
         val os = exchange.getResponseBody
         try os.write(bytes) finally os.close()
       }
+    def handler(body: String, contentType: String): com.sun.net.httpserver.HttpHandler =
+      dyn(_ => Some((body, contentType)))
     server.createContext("/data", handler(json, "application/json"))
     server.createContext("/overview", handler(overview, "application/json"))
     server.createContext("/figure", handler(figSvg, "image/svg+xml"))
@@ -454,19 +462,6 @@ object GraftCli {
         }
       // non-numeric ids resolve to None -> 404, never an escaped exception
       def asId(v: String): Option[Long] = scala.util.Try(v.toLong).toOption
-      def dyn(f: String => Option[(String, String)]): com.sun.net.httpserver.HttpHandler =
-        exchange => {
-          val out = f(exchange.getRequestURI.getQuery)
-          val (code, body, ct) = out match {
-            case Some((b, c)) => (200, b, c)
-            case None => (404, """{"error":"not found"}""", "application/json")
-          }
-          val bytes = body.getBytes("UTF-8")
-          exchange.getResponseHeaders.set("Content-Type", ct)
-          exchange.sendResponseHeaders(code, bytes.length.toLong)
-          val os = exchange.getResponseBody
-          try os.write(bytes) finally os.close()
-        }
       server.createContext("/runs", handler(runsJson, "application/json"))
       server.createContext("/run", dyn(q =>
         param(q, "id").flatMap(asId).flatMap(runSummaries.get)

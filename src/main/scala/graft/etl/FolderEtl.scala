@@ -41,14 +41,7 @@ import scala.jdk.CollectionConverters._
   */
 object FolderEtl {
 
-  // dev aid: GRAFT_TIMING=1 prints per-phase wall times to stderr
-  private def timed[T](label: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[folder-timing] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    } else f
+  private def timed[T](label: String)(f: => T): T = graft.Timing.timed("folder-timing", label)(f)
 
   /** Activated files: the named extensions, minus `example*` samples and
     * the deactivated `._jinja` / `._csv` suffix convention.

@@ -132,7 +132,7 @@ object BpeOps {
       var dry = false
       val t0 = System.nanoTime()
       var tPrev = t0
-      def lap(tag: String): Unit = if (sys.env.contains("GRAFT_TIMING")) {
+      def lap(tag: String): Unit = if (graft.Timing.enabled) {
         val now = System.nanoTime()
         System.err.println(f"[bpe] $tag: ${(now - tPrev) / 1e9}%.2f s")
         tPrev = now

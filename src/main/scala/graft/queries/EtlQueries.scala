@@ -30,14 +30,7 @@ object EtlQueries {
   private type Q = (SparkSession, String) => DataFrame
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  // dev aid: GRAFT_TIMING=1 prints per-phase wall times to stderr
-  private def timed[T](label: String)(f: => T): T =
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[etl-timing] $label%-28s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    } else f
+  private def timed[T](label: String)(f: => T): T = graft.Timing.timed("etl-timing", label)(f)
 
   /** Tables whose lineage rows predate the tombstone cutoff (gives the D7
     * step real work deterministically).

@@ -141,6 +141,8 @@ object JinjaLite {
       op: Option[(String, String)], inList: Option[(String, String)] = None)
 
   private val Ident = raw"[A-Za-z_][A-Za-z0-9_]*"
+  /** Jinja expression text, scanned once for its literals and brackets. */
+  private def jinja(s: String) = SqlText(s, SqlText.GoogleSql)
   // a variable reference in {{ .. }} / conditions: plain name or loop
   // attr. The loop.* alternative comes FIRST — in a prefix match the
   // bare-Ident alternative would otherwise stop at 'loop' and leave
@@ -290,6 +292,7 @@ object JinjaLite {
 
   /** Recursive-descent parser over one `{% if %}` condition. */
   private final class CondParser(s: String) {
+    private val text = jinja(s)
     private var i = 0
     def atEnd: Boolean = i >= s.length
     def rest: String = s.substring(i)
@@ -379,16 +382,9 @@ object JinjaLite {
         skipWs()
         if (i < s.length && s.charAt(i) == '[') {
           // literal list: in ["a", "b", ...]
-          val close = {
-            var j = i + 1; var inQ = false
-            while (j < s.length && (inQ || s.charAt(j) != ']')) {
-              if (s.charAt(j) == '\'' || s.charAt(j) == '"') inQ = !inQ
-              j += 1
-            }
-            require(j < s.length, s"unsupported Jinja condition '$s' — missing ']'")
-            j
-          }
-          val lits = s.substring(i + 1, close).split(",").toSeq
+          val close = text.close(i)
+          require(close > i, s"unsupported Jinja condition '$s' — missing ']'")
+          val lits = jinja(s.substring(i + 1, close)).split(',')
             .map(_.trim).filter(_.nonEmpty)
             .map(q => q.substring(1, q.length - 1))
           i = close + 1
@@ -504,22 +500,7 @@ object JinjaLite {
     */
   private def evalExpr(e: String, ctx: Ctx): String = {
     val s = e.trim
-    val plusParts = {
-      // split on '+' outside quotes/brackets/parens
-      val out = Seq.newBuilder[String]
-      val cur = new StringBuilder
-      var inQ = false
-      var depth = 0
-      s.foreach { ch =>
-        if (ch == '\'') { inQ = !inQ; cur += ch }
-        else if (!inQ && (ch == '(' || ch == '[')) { depth += 1; cur += ch }
-        else if (!inQ && (ch == ')' || ch == ']')) { depth -= 1; cur += ch }
-        else if (!inQ && depth == 0 && ch == '+') { out += cur.result(); cur.clear() }
-        else cur += ch
-      }
-      out += cur.result()
-      out.result()
-    }
+    val plusParts = jinja(s).split('+')
     if (plusParts.length > 1)
       return plusParts.map(p => evalExpr(p, ctx).toLong).sum.toString
     val attrRef = raw"^($Ident)\.($Ident)$$".r
@@ -578,7 +559,7 @@ object JinjaLite {
       case SetVar(n, e) => e match {
         case NamespaceCall(kvs) =>
           val m = scala.collection.mutable.Map.empty[String, String]
-          kvs.split(",").map(_.trim).filter(_.nonEmpty).foreach {
+          jinja(kvs).split(',').map(_.trim).filter(_.nonEmpty).foreach {
             case NsKv(attr, v) => m(attr) = evalExpr(v, ctx)
             case other => sys.error(
               s"unsupported namespace initializer '$other' — expected attr = expr")
@@ -593,20 +574,8 @@ object JinjaLite {
             s"unsupported Jinja dict literal '$expr' — missing closing brace")
           val QuotedPair =
             raw"""(?s)^\s*('[^']*'|\x22[^\x22]*\x22)\s*:\s*('[^']*'|\x22[^\x22]*\x22)\s*$$""".r
-          val pairs = {
-            // split on commas outside quotes
-            val out = Seq.newBuilder[String]
-            val cur = new StringBuilder
-            var q: Char = 0
-            body.substring(1, body.length - 1).foreach { ch =>
-              if (q == 0 && (ch == '\'' || ch == '"')) { q = ch; cur += ch }
-              else if (q != 0 && ch == q) { q = 0; cur += ch }
-              else if (q == 0 && ch == ',') { out += cur.result(); cur.clear() }
-              else cur += ch
-            }
-            out += cur.result()
-            out.result()
-          }.map(_.trim).filter(_.nonEmpty).map {
+          val pairs = jinja(body.substring(1, body.length - 1)).split(',')
+            .map(_.trim).filter(_.nonEmpty).map {
             case QuotedPair(k, v) =>
               (k.substring(1, k.length - 1), v.substring(1, v.length - 1))
             case other => sys.error(

@@ -66,21 +66,10 @@ object OhdsiSql {
     * literals fed through the bridge.
     */
   private val CmpTerm = raw"'([^']*)'\s*(==|!=)\s*'([^']*)'".r
-  /** Split on `sep` only OUTSIDE single-quoted runs. */
-  private def splitTop(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inQ = false
-    s.foreach { ch =>
-      if (ch == '\'') { inQ = !inQ; cur += ch }
-      else if (ch == sep && !inQ) { out += cur.result(); cur.clear() }
-      else cur += ch
-    }
-    out += cur.result()
-    out.result()
-  }
+  /** T-SQL text, scanned once for its literals, comments and brackets. */
+  private def tsql(s: String) = SqlText(s, SqlText.TSql)
   private def evalCond(cond: String): Boolean =
-    splitTop(cond, '|').exists(splitTop(_, '&').forall { raw =>
+    tsql(cond).split('|').exists(tsql(_).split('&').forall { raw =>
       raw.trim match {
         case CmpTerm(a, op, b) => if (op == "==") a == b else a != b
         case t if t.equalsIgnoreCase("true") => true
@@ -103,28 +92,12 @@ object OhdsiSql {
     * quotes then keeps its legacy pass-through meaning). A colon inside
     * quotes ('12:30') is content and never a bind.
     */
-  private def substituteBinds(sql: String, binds: Map[String, String]): String = {
-    if (binds.isEmpty) return sql
-    val out = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < sql.length) {
-      val ch = sql.charAt(i)
-      if (ch == '\'') { inQ = !inQ; out += ch; i += 1 }
-      else if (!inQ && ch == ':' && i + 1 < sql.length &&
-          (Character.isLetter(sql.charAt(i + 1)) || sql.charAt(i + 1) == '_')) {
-        var j = i + 1
-        while (j < sql.length &&
-            (Character.isLetterOrDigit(sql.charAt(j)) || sql.charAt(j) == '_')) j += 1
-        val name = sql.substring(i + 1, j)
-        out ++= binds.getOrElse(name, throw new IllegalArgumentException(
-          s"unbound bind parameter :$name — known: " +
-            binds.keys.toSeq.sorted.map(":" + _).mkString(", ")))
-        i = j
-      } else { out += ch; i += 1 }
-    }
-    out.result()
-  }
+  private def substituteBinds(text: String, binds: Map[String, String]): String =
+    if (binds.isEmpty) text
+    else tsql(text).mapCode(raw":([\p{L}_][\p{L}\p{Nd}_]*)".r.replaceAllIn(_, m =>
+      java.util.regex.Matcher.quoteReplacement(binds.getOrElse(m.group(1),
+        throw new IllegalArgumentException(s"unbound bind parameter :${m.group(1)} — known: " +
+          binds.keys.toSeq.sorted.map(":" + _).mkString(", "))))))
 
   /** SqlRender's render step: collect `{DEFAULT @p = v}` declarations,
     * overlay the caller's parameters, substitute every `@p` textually,
@@ -159,18 +132,11 @@ object OhdsiSql {
 
   private def ci(pattern: String) = ("(?i)" + pattern).r
 
-  /** The SqlTranslate step for the SQL Server constructs of the subset.
-    * A `DATEADD`/`DATEDIFF` with an unsupported datepart (or nested
-    * parentheses the simple rules cannot parse) raises rather than
-    * passing through to an opaque Spark parse error.
+  /** A bare float literal (decimal point and/or exponent). [[translate]]
+    * matches it on literal-masked text, so no digit inside a string can.
     */
-  /** A single-quoted string (doubled-quote escapes), or a bare float
-    * literal (decimal point and/or exponent). Matching the string
-    * alternative FIRST protects literals inside quotes from the numeric
-    * rewrite below.
-    */
-  private val StrOrFloatLit =
-    raw"('(?:[^']|'')*')|(?<![\w.])(\d*\.\d+(?:[eE][+-]?\d+)?|\d+[eE][+-]?\d+)(?![\w.])".r
+  private val FloatLit =
+    raw"(?<![\w.])(\d*\.\d+(?:[eE][+-]?\d+)?|\d+[eE][+-]?\d+)(?![\w.])".r
 
   /** One term of a SQL Server `+` string-concatenation chain: a string
     * literal, a function call one paren level deep (string literals
@@ -183,39 +149,28 @@ object OhdsiSql {
     raw"(?:'(?:[^']|'')*'|\w+(?:\.\w+)*\s*\((?:[^()']|'(?:[^']|'')*'|\([^()]*\))*\)|`\w+`(?:\.`?\w+`?)*|\w+(?:\.\w+)*)"
   private val StrPlusChain = (s"$ConcatTerm(?:\\s*\\+\\s*$ConcatTerm)+").r
 
-  /** Split a matched chain on the `+`s at paren depth 0 outside quotes. */
-  private def splitPlus(chain: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inQ = false
-    var depth = 0
-    chain.foreach { ch =>
-      if (ch == '\'') { inQ = !inQ; cur += ch }
-      else if (!inQ && ch == '(') { depth += 1; cur += ch }
-      else if (!inQ && ch == ')') { depth -= 1; cur += ch }
-      else if (!inQ && depth == 0 && ch == '+') { out += cur.result(); cur.clear() }
-      else cur += ch
-    }
-    out += cur.result()
-    out.result()
-  }
-
+  /** The SqlTranslate step for the SQL Server constructs of the subset.
+    * A `DATEADD`/`DATEDIFF` with an unsupported datepart (or nested
+    * parentheses the simple rules cannot parse) raises rather than
+    * passing through to an opaque Spark parse error. Every rewrite runs on
+    * the literal-masked text and the literals come back at the end, so a
+    * string's content is never rewritten, while rules that take a literal
+    * argument (DATEADD, CHARINDEX, CONVERT, the `+` chain) still see one.
+    */
   def translate(sql: String): String = {
-    var s = sql
     // a T-SQL DECLARE blob (the CDM DDL's dynamic constraint-drop
     // preamble) is dispatched whole by execute — its QUOTENAME chains are
     // not the string-concat grammar the rewrites below parse
-    if (ci(raw"^\s*DECLARE\s+@").findFirstIn(s).isDefined) return s
+    if (ci(raw"^\s*DECLARE\s+@").findFirstIn(sql).isDefined) return sql
+    val text = tsql(sql)
+    var s = text.masked
     // SqlRender's rendered target dialects type bare decimal literals as
     // FLOAT (e.g. FLOAT64 on BigQuery; the reference consumes DQD's
     // `1.0*x/y` pct as a float, data_quality.py) — Spark would type the
     // same literal DECIMAL(2,1) and propagate DECIMAL(38,16) through the
     // division, a silent cross-engine semantics fork (the r9 red). Rewrite
     // every unquoted float literal to an explicit DOUBLE.
-    s = StrOrFloatLit.replaceAllIn(s, m =>
-      java.util.regex.Matcher.quoteReplacement(
-        if (m.group(1) != null) m.group(1)
-        else s"CAST(${m.group(2)} AS DOUBLE)"))
+    s = FloatLit.replaceAllIn(s, "CAST($1 AS DOUBLE)")
     s = ci(raw"COUNT_BIG\s*\(").replaceAllIn(s, "COUNT(")
     s = ci(raw"\bISNULL\s*\(").replaceAllIn(s, "coalesce(")
     s = ci(raw"\bLEN\s*\(").replaceAllIn(s, "length(")
@@ -348,18 +303,16 @@ object OhdsiSql {
     // actually uses: string literals, one-call-deep function calls
     // (CAST(x AS STRING)), and (qualified) identifiers.
     s = StrPlusChain.replaceAllIn(s, m => {
-      val chain = m.matched
+      val terms = tsql(m.matched).split('+').map(_.trim)
       java.util.regex.Matcher.quoteReplacement(
-        if (!chain.trim.startsWith("'") && !splitPlus(chain).exists(_.trim.startsWith("'")))
-          chain // all-identifier/number chain: genuine addition, untouched
-        else s"concat(${splitPlus(chain).map(_.trim).mkString(", ")})")
+        if (!terms.exists(_.startsWith("'")))
+          m.matched // all-identifier/number chain: genuine addition, untouched
+        else s"concat(${terms.mkString(", ")})")
     })
     // a string literal still adjacent to `+` means a chain the term
     // grammar could not parse (nested calls two levels deep, subqueries)
     // — fail loudly rather than hand Spark a type error
-    require(ci(raw"'\s*\+|\+\s*'").findFirstIn(
-      StrOrFloatLit.replaceAllIn(s, m => if (m.group(1) != null) "''" else m.matched))
-      .isEmpty,
+    require(ci(raw"'\s*\+|\+\s*'").findFirstIn(s).isEmpty,
       "string '+' concatenation too complex for the translate subset " +
         "(term grammar: literals, one-level calls, identifiers) — " +
         "simplify the expression or use concat() directly")
@@ -393,7 +346,7 @@ object OhdsiSql {
     }
     // temp tables: #name -> a session temp view name
     s = ci(raw"#(\w+)").replaceAllIn(s, "tmp_ohdsi_$1")
-    s
+    text.unmask(s)
   }
 
   /** A possibly-backtick-quoted, possibly-qualified table name as it
@@ -479,23 +432,6 @@ object OhdsiSql {
     * into unrelated queries sharing the session).
     */
   private val UseDb = ci(raw"^\s*USE\s+($QNamePat)\s*$$")
-
-  /** Split on `sep` at paren depth 0 outside single-quoted runs. */
-  private def splitTopDepth(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inQ = false
-    var depth = 0
-    s.foreach { ch =>
-      if (ch == '\'') { inQ = !inQ; cur += ch }
-      else if (!inQ && ch == '(') { depth += 1; cur += ch }
-      else if (!inQ && ch == ')') { depth -= 1; cur += ch }
-      else if (!inQ && depth == 0 && ch == sep) { out += cur.result(); cur.clear() }
-      else cur += ch
-    }
-    out += cur.result()
-    out.result()
-  }
 
   /** Re-register `target` over a rewritten frame. A bare name is a
     * session temp view, `global_temp.x` a global one — `spark.table`
@@ -660,76 +596,6 @@ object OhdsiSql {
       .map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
   }
 
-  /** The first balanced parenthesized span at or after `from`, quote-aware
-    * throughout: `(open, close)`, the indices of the `(` and its matching
-    * `)`. `open` is `s.length` when no `(` follows; `close` is -1 when the
-    * span never closes. Callers name their own shape in the error.
-    */
-  private def parenSpan(s: String, from: Int): (Int, Int) = {
-    var inQ = false
-    var i = from
-    while (i < s.length && (inQ || s.charAt(i) != '(')) {
-      if (s.charAt(i) == '\'') inQ = !inQ
-      i += 1
-    }
-    val open = i
-    var depth = 0
-    var close = -1
-    while (i < s.length && close < 0) {
-      val ch = s.charAt(i)
-      if (ch == '\'') inQ = !inQ
-      else if (!inQ && ch == '(') depth += 1
-      else if (!inQ && ch == ')') { depth -= 1; if (depth == 0) close = i }
-      i += 1
-    }
-    (open, close)
-  }
-
-  /** First span at paren depth 0 OUTSIDE quotes where the keyword phrase
-    * (words separated by ANY whitespace, including newlines) starts on a
-    * word boundary: `Some((startIdx, idxAfterLastWord))`, `None` if
-    * absent.
-    */
-  private def topLevelSpanOf(s: String, phrase: String, from: Int = 0): Option[(Int, Int)] = {
-    val words = phrase.split(" ").toSeq
-    var i = from
-    var inQ = false
-    var depth = 0
-    def wordAt(pos: Int, w: String): Int = { // end index, -1 on mismatch
-      if (!s.regionMatches(true, pos, w, 0, w.length)) -1
-      else {
-        val before = pos == 0 ||
-          (!Character.isLetterOrDigit(s.charAt(pos - 1)) && s.charAt(pos - 1) != '_')
-        val after = pos + w.length >= s.length ||
-          (!Character.isLetterOrDigit(s.charAt(pos + w.length)) && s.charAt(pos + w.length) != '_')
-        if (before && after) pos + w.length else -1
-      }
-    }
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '\'') inQ = !inQ
-      else if (!inQ && ch == '(') depth += 1
-      else if (!inQ && ch == ')') depth -= 1
-      else if (!inQ && depth == 0) {
-        var pos = i
-        var lastEnd = -1
-        var ok = true
-        for (w <- words if ok) {
-          val end = wordAt(pos, w)
-          if (end < 0) ok = false
-          else {
-            lastEnd = end
-            pos = end
-            while (pos < s.length && Character.isWhitespace(s.charAt(pos))) pos += 1
-          }
-        }
-        if (ok) return Some((i, lastEnd))
-      }
-      i += 1
-    }
-    None
-  }
-
   /** Split a statement's leading `WITH name AS (...) [, name AS (...)]*`
     * prefix (quote-aware, balanced parens) from its body: `(ctePrefix,
     * body)`; ctePrefix is empty when the statement has no WITH.
@@ -739,10 +605,11 @@ object OhdsiSql {
     m match {
       case None => ("", stmt)
       case Some(w) =>
+        val text = tsql(stmt)
         var i = w.end
         var more = true
         while (more) {
-          val (open, close) = parenSpan(stmt, i)
+          val (open, close) = text.parenSpan(i)
           require(open < stmt.length, "malformed WITH: missing CTE body")
           require(close > open, "malformed WITH: unbalanced CTE body")
           var j = close + 1
@@ -774,9 +641,9 @@ object OhdsiSql {
     //   T-SQL:     UPDATE a SET ... FROM t [AS] a INNER JOIN rel [AS] r ON cond
     //   GoogleSQL: UPDATE t [AS] a SET ... FROM ( subquery ) r WHERE cond
     //              (the bigquery usagi_update_custom_concepts form)
-    val tsql = ci(raw"(?s)^\s*UPDATE\s+(\w+)\s+SET\s+(.*?)\s+FROM\s+($QNamePat)\s+(?:AS\s+)?(\w+)\s+INNER\s+JOIN\s+($QNamePat)\s+(?:AS\s+)?(\w+)\s+ON\s+(.*?)\s*;?\s*$$")
+    val joinShape = ci(raw"(?s)^\s*UPDATE\s+(\w+)\s+SET\s+(.*?)\s+FROM\s+($QNamePat)\s+(?:AS\s+)?(\w+)\s+INNER\s+JOIN\s+($QNamePat)\s+(?:AS\s+)?(\w+)\s+ON\s+(.*?)\s*;?\s*$$")
       .findFirstMatchIn(body)
-    val (ua, setBody, tbl, ta, rel, ra, cond) = tsql match {
+    val (ua, setBody, tbl, ta, rel, ra, cond) = joinShape match {
       case Some(hm) =>
         (hm.group(1), hm.group(2), hm.group(3), hm.group(4), hm.group(5),
           hm.group(6), hm.group(7))
@@ -787,7 +654,7 @@ object OhdsiSql {
             "unsupported UPDATE..FROM shape (expected: UPDATE a SET ... FROM t " +
               "[AS] a INNER JOIN rel [AS] r ON cond, or UPDATE t [AS] a SET ... " +
               "FROM ( subquery ) r WHERE cond)"))
-        val (start, end) = parenSpan(body, gm.end - 1)
+        val (start, end) = tsql(body).parenSpan(gm.end - 1)
         require(end > start, "unbalanced parentheses in UPDATE..FROM subquery")
         val sub = body.substring(start + 1, end)
         val tm = ci(raw"(?s)^\s*(\w+)\s+WHERE\s+(.*?)\s*;?\s*$$")
@@ -799,7 +666,7 @@ object OhdsiSql {
       }
     require(ua.equalsIgnoreCase(ta),
       s"UPDATE alias '$ua' must name the FROM target alias '$ta'")
-    val assigns = splitTopDepth(setBody, ',').map(_.trim).filter(_.nonEmpty).map { a =>
+    val assigns = tsql(setBody).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
       val eq = a.indexOf('=')
       require(eq > 0, s"unsupported UPDATE assignment '$a'")
       val lhs = a.substring(0, eq).trim
@@ -851,7 +718,7 @@ object OhdsiSql {
       .getOrElse(throw new IllegalArgumentException(
         "unsupported MERGE shape (expected: MERGE INTO <t> [AS] <alias> USING (...))"))
     val (target, tA) = (head.group(1), head.group(2))
-    val (start, end) = parenSpan(stmt, head.end)
+    val (start, end) = tsql(stmt).parenSpan(head.end)
     require(start < stmt.length, "MERGE USING must be a parenthesized subquery")
     require(end > start, "unbalanced parentheses in MERGE USING subquery")
     val srcSql = stmt.substring(start + 1, end)
@@ -865,10 +732,11 @@ object OhdsiSql {
         "unsupported MERGE shape (expected: ... ) [AS] <alias> ON <cond>)"))
     val sA = tailM.group(1)
     val afterOn = tail.substring(tailM.end)
-    val wm = topLevelSpanOf(afterOn, "WHEN MATCHED THEN UPDATE SET")
-    val wnm = topLevelSpanOf(afterOn, "WHEN NOT MATCHED THEN INSERT")
+    val clauses = tsql(afterOn)
+    val wm = clauses.keywords("WHEN MATCHED THEN UPDATE SET").headOption
+    val wnm = clauses.keywords("WHEN NOT MATCHED THEN INSERT").headOption
     // the targeted-removal cleanup templates' form: matched rows DELETE
-    val wd = topLevelSpanOf(afterOn, "WHEN MATCHED THEN DELETE")
+    val wd = clauses.keywords("WHEN MATCHED THEN DELETE").headOption
     require(wm.isDefined || wnm.isDefined || wd.isDefined,
       "MERGE needs a WHEN MATCHED or WHEN NOT MATCHED clause")
     require(wm.isEmpty || wd.isEmpty,
@@ -880,7 +748,7 @@ object OhdsiSql {
       case Some((ws, we)) =>
         val setBody = afterOn.substring(we,
           wnm.map(_._1).filter(_ > ws).getOrElse(afterOn.length))
-        splitTopDepth(setBody, ',').map(_.trim).filter(_.nonEmpty).map { a =>
+        tsql(setBody).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
           val eq = a.indexOf('=')
           require(eq > 0, s"unsupported MERGE assignment '$a'")
           val lhs = a.substring(0, eq).trim
@@ -908,7 +776,7 @@ object OhdsiSql {
             .getOrElse(throw new IllegalArgumentException(
               "unsupported MERGE INSERT shape (expected: INSERT (cols) VALUES (exprs) or INSERT ROW)"))
           (im.group(1).split(",").map(c => cleanName(c.trim)).filter(_.nonEmpty).toSeq,
-            splitTopDepth(im.group(2), ',').map(_.trim).toSeq)
+            tsql(im.group(2)).split(',').map(_.trim).toSeq)
         }
       }
     val tgtSchema = spark.table(target).schema
@@ -1117,7 +985,7 @@ object OhdsiSql {
       case stmt if {
         val (_, b) = splitLeadingWith(stmt)
         ci(raw"^\s*UPDATE\b").findFirstIn(b).isDefined &&
-          topLevelSpanOf(b, "FROM").isDefined
+          tsql(b).keywords("FROM").nonEmpty
       } =>
         val (ctes, b) = splitLeadingWith(stmt)
         executeUpdateFrom(spark, ctes, b)
@@ -1129,47 +997,15 @@ object OhdsiSql {
         import org.apache.spark.sql.functions.{col => fcol, expr => fexpr, lit => flit, when => fwhen}
         // an alias only qualifies the target's own columns here — strip
         // its prefix (outside quotes) so expressions resolve on the frame
-        val body = Option(aliasOpt) match {
-          case Some(a) =>
-            val out = new StringBuilder
-            var inQ = false
-            var i = 0
-            while (i < bodyRaw.length) {
-              val ch = bodyRaw.charAt(i)
-              if (ch == '\'') { inQ = !inQ; out += ch; i += 1 }
-              else if (!inQ && bodyRaw.regionMatches(true, i, a + ".", 0, a.length + 1) &&
-                  (i == 0 || !Character.isLetterOrDigit(bodyRaw.charAt(i - 1)) &&
-                    bodyRaw.charAt(i - 1) != '_' && bodyRaw.charAt(i - 1) != '.'))
-                i += a.length + 1
-              else { out += ch; i += 1 }
-            }
-            out.result()
-          case None => bodyRaw
-        }
-        val upperNoQ = {
-          var inQ = false
-          body.map { ch => if (ch == '\'') { inQ = !inQ; ch }
-            else if (inQ) ' ' else ch.toUpper }
-        }
-        val whereIdx = {
-          val m = raw"\bWHERE\b".r.findAllMatchIn(upperNoQ)
-            .filter(mm => { // depth 0 only
-              val prefix = body.substring(0, mm.start)
-              var inQ = false; var d = 0
-              prefix.foreach { ch =>
-                if (ch == '\'') inQ = !inQ
-                else if (!inQ && ch == '(') d += 1
-                else if (!inQ && ch == ')') d -= 1 }
-              d == 0
-            }).toSeq
-          m.lastOption.map(_.start)
-        }
-        val (setPart, condPart) = whereIdx match {
-          case Some(i) => (body.substring(0, i), Some(body.substring(i + 5)))
+        val body = Option(aliasOpt).fold(bodyRaw)(a => tsql(bodyRaw).mapCode(
+          ci(raw"(?<![\p{L}\p{Nd}_.])" + java.util.regex.Pattern.quote(a) + raw"\.")
+            .replaceAllIn(_, "")))
+        val (setPart, condPart) = tsql(body).keywords("WHERE").lastOption match {
+          case Some((i, _)) => (body.substring(0, i), Some(body.substring(i + 5)))
           case None => (body, None)
         }
         val cond = condPart.map(c => fexpr(c.trim)).getOrElse(flit(true))
-        val assigns = splitTopDepth(setPart, ',').map(_.trim).filter(_.nonEmpty).map { a =>
+        val assigns = tsql(setPart).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
           val eq = a.indexOf('=')
           require(eq > 0, s"unsupported UPDATE assignment '$a' (expected col = expr)")
           (a.substring(0, eq).trim.toLowerCase, a.substring(eq + 1).trim)
@@ -1291,7 +1127,7 @@ object OhdsiSql {
     */
   private def executeIfNotExists(spark: SparkSession, stmt: String): Unit = {
     val m = ci(raw"^\s*IF\s+NOT\s+EXISTS\s*").findFirstMatchIn(stmt).get
-    val (start, end) = parenSpan(stmt, m.end)
+    val (start, end) = tsql(stmt).parenSpan(m.end)
     require(start < stmt.length, "IF NOT EXISTS needs a parenthesized probe subquery")
     require(end > start, "unbalanced parentheses in IF NOT EXISTS probe")
     val probe = stmt.substring(start + 1, end)
@@ -1302,7 +1138,7 @@ object OhdsiSql {
     // body is a single CREATE TABLE
     val beginM = ci(raw"(?s)^\s*BEGIN\b(.*)\bEND\s*$$").findFirstMatchIn(guarded)
     val inner = beginM.map(_.group(1)).getOrElse(guarded)
-    splitTop(inner, ';').map(_.trim).filter(_.nonEmpty).foreach {
+    tsql(inner).split(';').map(_.trim).filter(_.nonEmpty).foreach {
       case st if ci(raw"^\s*CREATE\s+TABLE\b").findFirstIn(st).isDefined =>
         executeCreateTable(spark, st)
       case st if ci(raw"^\s*CREATE\s+(?:UNIQUE\s+|CLUSTERED\s+)?INDEX\b").findFirstIn(st).isDefined =>
@@ -1332,7 +1168,7 @@ object OhdsiSql {
     val name = m.group(1)
     val clusterKeys = Option(m.group(3)).map(
       _.split(',').toSeq.map(c => cleanName(c.trim)).filter(_.nonEmpty))
-    val cols = splitTopDepth(m.group(2), ',').map(_.trim).filter(_.nonEmpty).map { c =>
+    val cols = tsql(m.group(2)).split(',').map(_.trim).filter(_.nonEmpty).map { c =>
       // a trailing NULL / NOT NULL nullability marker is accepted and
       // dropped: Spark parquet tables are nullable (the DQD battery is
       // the enforcement analogue, same rationale as constraints)
@@ -1407,7 +1243,7 @@ object OhdsiSql {
     val bodyRaw = m.group(3).trim
     val body =
       if (bodyRaw.startsWith("(")) {
-        val (_, closeAt) = parenSpan(bodyRaw, 0)
+        val (_, closeAt) = tsql(bodyRaw).parenSpan(0)
         if (closeAt == bodyRaw.length - 1) bodyRaw.substring(1, closeAt) else bodyRaw
       } else bodyRaw
     val df = spark.sql(body)
@@ -1430,7 +1266,7 @@ object OhdsiSql {
     */
   private def executeIfExists(spark: SparkSession, stmt: String): Unit = {
     val m = ci(raw"^\s*IF\s+EXISTS\s*").findFirstMatchIn(stmt).get
-    val (start, end) = parenSpan(stmt, m.end)
+    val (start, end) = tsql(stmt).parenSpan(m.end)
     require(start < stmt.length, "IF EXISTS needs a parenthesized probe subquery")
     require(end > start, "unbalanced parentheses in IF EXISTS probe")
     val probe = stmt.substring(start + 1, end)
@@ -1460,7 +1296,7 @@ object OhdsiSql {
     */
   private def rewriteInfoSchema(spark: SparkSession, stmt: String): String = {
     val ref = ci(raw"`?(\w+)`?\.`?INFORMATION_SCHEMA`?\.`?COLUMNS`?")
-    ref.replaceAllIn(stmt, m => {
+    tsql(stmt).mapCode(ref.replaceAllIn(_, m => {
       import spark.implicits._
       val db = m.group(1).toLowerCase
       val snap = s"info_schema_columns_${db}_snap"
@@ -1470,7 +1306,7 @@ object OhdsiSql {
           .map(f => (t.name, f.name)))
       rows.toDF("table_name", "column_name").createOrReplaceTempView(snap)
       snap
-    })
+    }))
   }
 
   private def rewriteSysCatalog(spark: SparkSession, stmt: String): String = {
@@ -1556,9 +1392,11 @@ object OhdsiSql {
       tables.toDF("name", "schema_id").createOrReplaceTempView("sys_tables_snap")
       dbs.toSeq.map(db => (db, db)).toDF("schema_id", "name")
         .createOrReplaceTempView("sys_schemas_snap")
-      val s1 = ci(raw"\bsys\.tables\b").replaceAllIn(stmt, "sys_tables_snap")
-      val s2 = ci(raw"\bsys\.schemas\b").replaceAllIn(s1, "sys_schemas_snap")
-      ci(raw"\bSCHEMA_NAME\s*\(").replaceAllIn(s2, "(")
+      tsql(stmt).mapCode { code =>
+        val s1 = ci(raw"\bsys\.tables\b").replaceAllIn(code, "sys_tables_snap")
+        val s2 = ci(raw"\bsys\.schemas\b").replaceAllIn(s1, "sys_schemas_snap")
+        ci(raw"\bSCHEMA_NAME\s*\(").replaceAllIn(s2, "(")
+      }
     }
   }
 
@@ -1575,90 +1413,18 @@ object OhdsiSql {
     * keyword inside a block comment is invisible to the splitter and the
     * ^-anchored statement dispatch, so a template OPENING with its
     * parameter-manifest header dispatches on its first real statement.
-    * Comment markers INSIDE quotes are content and survive; doubled `''`
-    * escapes toggle the tracker twice, which keeps it consistent. A block
-    * comment is replaced by one space so it can never fuse two tokens.
+    * Comment markers INSIDE quotes are content and survive ([[SqlText]]
+    * finds comments and literals in the same pass). A block comment is
+    * replaced by one space so it can never fuse two tokens.
     */
   private def stripComments(s: String): String = {
-    val out = new StringBuilder
-    var inQ = false
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '\'') { inQ = !inQ; out += ch; i += 1 }
-      else if (!inQ && ch == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
-        while (i < s.length && s.charAt(i) != '\n') i += 1
-      } else if (!inQ && ch == '/' && i + 1 < s.length && s.charAt(i + 1) == '*') {
-        var depth = 1
-        i += 2
-        while (i < s.length && depth > 0) {
-          if (s.charAt(i) == '/' && i + 1 < s.length && s.charAt(i + 1) == '*') {
-            depth += 1; i += 2
-          } else if (s.charAt(i) == '*' && i + 1 < s.length && s.charAt(i + 1) == '/') {
-            depth -= 1; i += 2
-          } else i += 1
-        }
-        // T-SQL raises an error on an unterminated block comment; silently
-        // swallowing the rest of the script could hand execute() an earlier
-        // SELECT as the "result" of a malformed script
-        require(depth == 0,
-          "unterminated block comment in OHDSI SQL script (missing closing marker)")
-        out += ' '
-      } else { out += ch; i += 1 }
-    }
-    out.result()
-  }
-
-  /** The statement list `execute` runs: rendered, comment-stripped
-    * ([[stripComments]] — quote tracking must only ever see real
-    * SQL), split on `;` OUTSIDE string literals (the heel warning
-    * messages carry semicolons inside their quotes), translated per
-    * statement (so `TOP n` becomes that statement's `LIMIT`).
-    */
-  /** The GoogleSQL (BigQuery-dialect) pre-pass — the reference's PRIMARY
-    * backend writes its templates in this dialect
-    * (`bigquery/templates/`). The surface those templates actually use
-    * beyond portable SQL is tiny: whole-path backquoting
-    * (`` `ds.table` `` quotes the dotted path as ONE identifier — split
-    * into per-part quotes, the Spark meaning), the INT64/FLOAT64/DATETIME
-    * type names, and `CURRENT_DATETIME()`. `IFNULL`, `CONCAT`,
-    * `STRING_AGG`, window functions and `SELECT * EXCEPT(c)` are native
-    * Spark SQL already.
-    */
-  /** Apply `f` to the runs of `s` OUTSIDE string literals — GoogleSQL
-    * accepts BOTH single- and double-quoted strings, so both quote
-    * styles shield their content. Keeps a literal 'DATETIME' value or an
-    * `@` inside a quoted string from being rewritten as a type name or a
-    * bind parameter (the r15 ADVICE hardening). ESCAPES inside a literal
-    * are content, not delimiters (ADVICE r16): a GoogleSQL backslash
-    * escape (`\'`, `\\`) consumes the next char, and a doubled closing
-    * quote (`''` inside a '-quoted literal) consumes both — either form
-    * would otherwise desync the tracker and let the rewrites mangle
-    * literal content (or shield real code).
-    */
-  private def mapOutsideQuotes(s: String)(f: String => String): String = {
-    val out = new StringBuilder
-    val cur = new StringBuilder
-    var q: Char = 0
-    var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (q == 0 && (ch == '\'' || ch == '"')) {
-        out ++= f(cur.result()); cur.clear(); q = ch; out += ch; i += 1
-      } else if (q != 0) {
-        if (ch == '\\' && i + 1 < s.length) {
-          out += ch; out += s.charAt(i + 1); i += 2
-        } else if (ch == q && i + 1 < s.length && s.charAt(i + 1) == q) {
-          out += ch; out += ch; i += 2
-        } else {
-          out += ch
-          if (ch == q) q = 0
-          i += 1
-        }
-      } else { cur += ch; i += 1 }
-    }
-    out ++= f(cur.result())
-    out.result()
+    val text = tsql(s)
+    // T-SQL raises an error on an unterminated block comment; silently
+    // swallowing the rest of the script could hand execute() an earlier
+    // SELECT as the "result" of a malformed script
+    require(!text.unterminatedComment,
+      "unterminated block comment in OHDSI SQL script (missing closing marker)")
+    text.withoutComments
   }
 
   /** The strftime subset the published BQ dashboard template uses
@@ -1688,6 +1454,19 @@ object OhdsiSql {
     out.result()
   }
 
+  /** The GoogleSQL (BigQuery-dialect) pre-pass — the reference's PRIMARY
+    * backend writes its templates in this dialect
+    * (`bigquery/templates/`). The surface those templates actually use
+    * beyond portable SQL is tiny: whole-path backquoting
+    * (`` `ds.table` `` quotes the dotted path as ONE identifier — split
+    * into per-part quotes, the Spark meaning), the INT64/FLOAT64/DATETIME
+    * type names, and `CURRENT_DATETIME()`. `IFNULL`, `CONCAT`,
+    * `STRING_AGG`, window functions and `SELECT * EXCEPT(c)` are native
+    * Spark SQL already. The rewrites run only on the code between
+    * GoogleSQL literals ([[SqlText.GoogleSql]]), so a literal 'DATETIME'
+    * value or an `@` inside a quoted string is never rewritten as a type
+    * name or a bind parameter.
+    */
   def translateBigQuery(sql: String): String = {
     // FORMAT_TIMESTAMP consumes its own quoted pattern — rewrite BEFORE
     // the quote-aware pass (the pattern itself must translate, not be
@@ -1701,34 +1480,20 @@ object OhdsiSql {
     // the rewrite's value-argument regex accepts ONE level of nesting; a
     // deeper call (FORMAT_TIMESTAMP(fmt, f(g(x)))) slips through unmatched
     // and would error downstream WITHOUT naming the construct — refuse it
-    // loudly here instead (ADVICE r16). The residual scan runs INSIDE
-    // mapOutsideQuotes (ADVICE r17): a string LITERAL containing the text
+    // loudly here instead (ADVICE r16). The residual scan reads the code
+    // only (ADVICE r17): a string LITERAL containing the text
     // "FORMAT_TIMESTAMP(" is content, not code, and must not trip it.
-    locally {
-      var residual = false
-      mapOutsideQuotes(s) { seg =>
-        if (ci(raw"\bFORMAT_TIMESTAMP\s*\(").findFirstIn(seg).isDefined)
-          residual = true
-        seg
-      }
-      require(!residual,
-        "unsupported FORMAT_TIMESTAMP shape (value argument nested deeper " +
-          "than one call level) — flatten the expression or extend the rewrite")
-    }
+    val code = SqlText(s, SqlText.GoogleSql)
+    require(ci(raw"\bFORMAT_TIMESTAMP\s*\(").findFirstIn(code.masked).isEmpty,
+      "unsupported FORMAT_TIMESTAMP shape (value argument nested deeper " +
+        "than one call level) — flatten the expression or extend the rewrite")
     // the GoogleSQL DATETIME(y,m,d,...) CONSTRUCTOR would be silently
     // corrupted by the type-name rewrite below — refuse it loudly (no
     // published template uses it; this guards the assumption)
-    locally {
-      var ctorFound = false
-      mapOutsideQuotes(s) { seg =>
-        if (ci(raw"\bDATETIME\s*\(").findFirstIn(seg).isDefined) ctorFound = true
-        seg
-      }
-      require(!ctorFound,
-        "unsupported GoogleSQL DATETIME(...) constructor — the BigQuery " +
-          "pre-pass maps only the DATETIME type name")
-    }
-    s = mapOutsideQuotes(s) { seg =>
+    require(ci(raw"\bDATETIME\s*\(").findFirstIn(code.masked).isEmpty,
+      "unsupported GoogleSQL DATETIME(...) constructor — the BigQuery " +
+        "pre-pass maps only the DATETIME type name")
+    s = code.mapCode { seg =>
       var x = raw"`([\w.]+)`".r.replaceAllIn(seg, m =>
         java.util.regex.Matcher.quoteReplacement(
           m.group(1).split('.').map(p => s"`$p`").mkString(".")))
@@ -1768,6 +1533,12 @@ object OhdsiSql {
     s
   }
 
+  /** The statement list `execute` runs: rendered, comment-stripped
+    * ([[stripComments]] — quote tracking must only ever see real
+    * SQL), split on `;` OUTSIDE string literals (the heel warning
+    * messages carry semicolons inside their quotes), translated per
+    * statement (so `TOP n` becomes that statement's `LIMIT`).
+    */
   def translateScript(sql: String, params: Map[String, String] = Map.empty,
       binds: Map[String, String] = Map.empty,
       sqlRender: Boolean = true): Seq[String] = {
@@ -1790,31 +1561,12 @@ object OhdsiSql {
     * top-level `;`, which keeps the accounting safe.
     */
   private def splitStatements(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inQ = false
-    var depth = 0
-    var i = 0
-    def wordAt(w: String): Boolean =
-      s.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) && s.charAt(i - 1) != '_') &&
-        (i + w.length >= s.length ||
-          !Character.isLetterOrDigit(s.charAt(i + w.length)) && s.charAt(i + w.length) != '_')
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (ch == '\'') { inQ = !inQ; cur += ch; i += 1 }
-      else if (!inQ && (wordAt("BEGIN") || wordAt("CASE"))) {
-        depth += 1
-        val w = if (wordAt("BEGIN")) 5 else 4
-        cur ++= s.substring(i, i + w); i += w
-      } else if (!inQ && wordAt("END")) {
-        depth -= 1
-        cur ++= s.substring(i, i + 3); i += 3
-      } else if (!inQ && depth == 0 && ch == ';') {
-        out += cur.result(); cur.clear(); i += 1
-      } else { cur += ch; i += 1 }
-    }
-    out += cur.result()
-    out.result()
+    val text = tsql(s)
+    var blocks = 0
+    text.cutAt(s.indices.filter(i => text.isCode(i) && {
+      if (text.wordAt(i, "BEGIN") > 0 || text.wordAt(i, "CASE") > 0) blocks += 1
+      else if (text.wordAt(i, "END") > 0) blocks -= 1
+      s.charAt(i) == ';' && blocks == 0
+    }))
   }
 }

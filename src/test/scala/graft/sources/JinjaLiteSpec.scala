@@ -257,4 +257,14 @@ class JinjaLiteSpec extends AnyFunSuite {
       scalars = Map.empty, lists = Map("cluster_fields" -> Seq.empty))
     assert(out2 == "PLAIN")
   }
+
+  test("literal lists and '+' read both quote kinds: a comma, apostrophe or plus in a string is content") {
+    val in = "{% if x in ['a,b', 'c'] %}in{% else %}out{% endif %}"
+    assert(JinjaLite.render(in, Map("x" -> "a,b")) == "in")
+    assert(JinjaLite.render(in, Map("x" -> "b")) == "out")
+    assert(JinjaLite.render("""{% if x in ["it's", "c"] %}in{% else %}out{% endif %}""",
+      Map("x" -> "it's")) == "in")
+    assert(JinjaLite.render("""{% set y = "a+b" %}{{ y }}""", Map.empty) == "a+b")
+    assert(JinjaLite.render("{% set n = 1 + 2 %}{{ n }}", Map.empty) == "3")
+  }
 }

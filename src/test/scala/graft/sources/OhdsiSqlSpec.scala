@@ -922,4 +922,26 @@ class OhdsiSqlSpec extends SparkSpec {
       .where("invalid_reason = 'D'").count()
     assert(marked == 2L)
   }
+
+  test("translate rewrites code only: string literals come back verbatim") {
+    for (q <- Seq("SELECT 'rank #1' AS m", "SELECT 'see [note]' AS m",
+        "SELECT 'use ISNULL(x) or GETDATE()' AS m", "SELECT 'SELECT TOP 5 rows' AS m"))
+      assert(OhdsiSql.translateScript(q) === Seq(q))
+    // the rules around a literal still read it as an argument
+    assert(OhdsiSql.translate(
+      "SELECT TOP 2 ISNULL(a, '#x [y]'), DATEADD(day, 1, '2020-01-01') FROM #t") ===
+      "SELECT coalesce(a, '#x [y]'), date_add('2020-01-01', 1) FROM tmp_ohdsi_t LIMIT 2")
+    assert(OhdsiSql.translate("SELECT CHARINDEX('a,b', c), 'p+q' + c FROM t") ===
+      "SELECT instr(c, 'a,b'), concat('p+q', c) FROM t")
+  }
+
+  test("both dialects return string literals verbatim") {
+    val q = "SELECT 'rank #1' AS m, 'see [note]' AS n, 'use ISNULL(x) or GETDATE()' AS o, " +
+      "'SELECT TOP 5 rows' AS p, 'CAST(x AS FLOAT)' AS f"
+    val want = Seq("rank #1", "see [note]", "use ISNULL(x) or GETDATE()", "SELECT TOP 5 rows",
+      "CAST(x AS FLOAT)")
+    assert(OhdsiSql.execute(spark, q).head().toSeq === want)
+    assert(OhdsiSql.executeAll(spark, OhdsiSql.translateBigQuery(q), sqlRender = false)
+      .get.head().toSeq === want)
+  }
 }

@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * source, and the queries only wire them. The same greps keep renames in
   * [[graft.io.AtomicWrite]] (and the catalog append), the query layer's
   * run-once stores in [[graft.io.Stored]], its thread pools in
-  * [[graft.io.Jobs]] and its schema-less parquet reads in
-  * [[graft.io.ParquetFooters]].
+  * [[graft.io.Jobs]], its schema-less parquet reads in
+  * [[graft.io.ParquetFooters]] and its string-literal scanning in
+  * [[graft.sources.SqlText]].
   */
 class StreamingHarnessSpec extends AnyFunSuite {
 
@@ -54,6 +55,11 @@ class StreamingHarnessSpec extends AnyFunSuite {
   test("parquet reads without a schema only in ParquetFooters' fallback") {
     assert(sites(".read.parquet(") == Map("ParquetFooters.scala" -> 1),
       s"read tables with graft.io.ParquetFooters.read: ${sites(".read.parquet(")}")
+  }
+
+  test("string literals are scanned only in SqlText") {
+    assert(sites("'\\''").keySet == Set("SqlText.scala"),
+      s"split, match or rewrite SQL and Jinja text through graft.sources.SqlText: ${sites("'\\''")}")
   }
 
   test("thread pools only in Jobs and EtlRunner") {
