@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.etl.{CdmFolders, EtlFlags, FolderEtl, RiabConfig}
+import graft.etl.{CdmFolders, EtlFlags, EtlRunner, FolderEtl, RiabConfig}
 import graft.io.Zones
 import graft.model.{Cdm54, CdmModel}
 import graft.operators.{Cleanup, DqdChecks}
@@ -79,6 +79,13 @@ object GraftCli {
       case v :: tail if !v.startsWith("-") => (Some(v), tail)
       case _ => (None, rest)
     }
+    // a flag's integer value in [lo, hi], refused with the flag named
+    def number(flag: String, v: String, lo: Long, hi: Long): Long = {
+      val n = v.toLongOption.getOrElse(
+        throw new IllegalArgumentException(s"$flag: expected an integer, got '$v'"))
+      require(n >= lo && n <= hi, s"$flag: expected an integer in $lo..$hi, got $n")
+      n
+    }
     @annotation.tailrec
     def go(rest: List[String], acc: CliArgs): CliArgs = rest match {
       case Nil => acc
@@ -104,7 +111,8 @@ object GraftCli {
       // the DataQuality API's optional cohort restriction
       // (`data_quality.py:49`), surfaced as a flag
       case "--cohort-definition-id" :: v :: t =>
-        go(t, acc.copy(cohortDefinitionId = Some(v.toLong)))
+        go(t, acc.copy(cohortDefinitionId = Some(number("--cohort-definition-id", v,
+          Long.MinValue, Long.MaxValue))))
       case ("-dqd" | "--data-quality-dashboard") :: t =>
         go(t, acc.copy(dataQualityDashboard = true))
       case ("-ach" | "--achilles") :: t => go(t, acc.copy(achilles = true))
@@ -121,14 +129,12 @@ object GraftCli {
       case "--clear-auto-generated-custom-concept-ids" :: t =>
         go(t, acc.copy(clearAutoGeneratedCustomConceptIds = true))
       case "--json" :: v :: t => go(t, acc.copy(jsonPath = Some(v)))
-      case "--port" :: v :: t => go(t, acc.copy(port = Some(v.toInt)))
+      case "--port" :: v :: t =>
+        go(t, acc.copy(port = Some(number("--port", v, 0, 65535).toInt)))
       case "--vacuum" :: t => go(t, acc.copy(vacuum = true))
       case "--dry-run" :: t => go(t, acc.copy(dryRun = true))
       case "--keep" :: v :: t =>
-        val n = try v.toInt catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(s"--keep: expected an integer, got '$v'") }
-        require(n >= 0, s"--keep: expected a non-negative integer, got $n")
-        go(t, acc.copy(keepGens = Some(n)))
+        go(t, acc.copy(keepGens = Some(number("--keep", v, 0, Int.MaxValue).toInt)))
       case other :: _ =>
         throw new IllegalArgumentException(s"Unknown argument: $other")
     }
@@ -213,7 +219,7 @@ object GraftCli {
       folder: Path,
       flags: EtlFlags,
       model: CdmModel = Cdm54.model,
-      maxParallelTables: Int = 9): Map[String, Long] =
+      maxParallelTables: Int = EtlRunner.MaxParallelTables): Map[String, Long] =
     FolderEtl.run(s, model, zones, folder, flags, maxParallelTables)
 
   /** `--cleanup [TABLE]`: level-cascade cleanup (`cleanup.py:32-96`) —

@@ -45,7 +45,8 @@ final case class EtlFlags(
   * SparkSession, the analogue of the reference's
   * `ThreadPoolExecutor(max_parallel_tables = 9)` (`etl_base.py:29`).
   */
-final case class EtlRunner(model: CdmModel, maxParallelTables: Int = 9) {
+final case class EtlRunner(model: CdmModel,
+    maxParallelTables: Int = EtlRunner.MaxParallelTables) {
 
   /** The full `etl.py:109-129` control flow under [[EtlFlags]], without a
     * level barrier: `--only-query` runs the named queries table by table,
@@ -109,4 +110,11 @@ final case class EtlRunner(model: CdmModel, maxParallelTables: Int = 9) {
       } finally pool.shutdown()
     }
   }
+}
+
+object EtlRunner {
+  /** The reference's `max_parallel_tables = 9` (`etl_base.py:29`), the
+    * default of every entry point that schedules tables.
+    */
+  val MaxParallelTables = 9
 }

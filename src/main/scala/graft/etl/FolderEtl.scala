@@ -80,7 +80,7 @@ object FolderEtl {
       zones: Zones,
       folder: Path,
       flags: EtlFlags = EtlFlags(),
-      maxParallelTables: Int = 9): Map[String, Long] =
+      maxParallelTables: Int = EtlRunner.MaxParallelTables): Map[String, Long] =
     runOn(graft.GraftSession.forInput(caller, zones.rows(caller, "raw",
         zones.listTables(caller, "raw"), graft.GraftSession.InterpretedRowCutoff)),
       model, zones, folder, flags, maxParallelTables)

@@ -24,7 +24,7 @@ final case class RiabConfig(sections: Map[String, Map[String, String]]) {
   /** `etl.py` defaults: 9 parallel tables, 16 worker threads per table. A
     * malformed or non-positive value falls back to the default.
     */
-  def maxParallelTables: Int = positive("max_parallel_tables", 9)
+  def maxParallelTables: Int = positive("max_parallel_tables", EtlRunner.MaxParallelTables)
   def maxWorkerThreadsPerTable: Int = positive("max_worker_threads_per_table", 16)
 
   /** The Spark backend's `spark.sql.shuffle.partitions`: `[spark]

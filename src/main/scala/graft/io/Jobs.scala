@@ -19,7 +19,6 @@ object Jobs {
     // overlaps (and an escape hatch for memory-tight deployments); a
     // malformed or non-positive value falls back to `maxParallel`
     val cap = sys.props.get("graft.jobs.maxParallel")
-      .orElse(sys.env.get("GRAFT_JOBS_MAXPAR"))
       .flatMap(_.trim.toIntOption).filter(_ > 0).getOrElse(maxParallel)
     if (thunks.size <= 1 || cap <= 1) thunks.foreach(_.apply())
     else {

@@ -73,9 +73,10 @@ import org.apache.spark.sql.functions._
   * those columns. The whole battery is a union of O(#tables) branches,
   * nothing is collected on the driver.
   *
-  * [[oracleSql]] renders the SAME battery as ANSI SQL from the SAME
-  * metadata, so the correctness gate checks the generation logic, not a
-  * transcribed check list; [[emptyUniverseOracleSql]] renders the expected
+  * Each family writes a check's Spark aggregates and their DuckDB SQL side
+  * by side, and [[oracleSql]] renders the SAME check list, so the
+  * correctness gate checks the generation logic, not a transcribed check
+  * list; [[emptyUniverseOracleSql]] renders the expected
   * output over an all-empty universe, letting the generator run at full
   * CDM 5.4 breadth without CDM test data.
   */
@@ -371,172 +372,183 @@ object DqdChecks {
 
   // --------------------------------------------------------------- checks
 
-  /** One generated check: aggregate expressions for violated/denominator
-    * (evaluated over the parent-joined table), plus the metadata needed to
-    * render the oracle.
+  /** One aggregate, written for the Spark plan and for the DuckDB SQL. */
+  private final case class Agg(spark: Column, sql: String)
+  private val rows = Agg(count(lit(1)), "count(*)")
+  private def rowsWhere(cond: Column, condSql: String) =
+    Agg(sum(when(cond, 1L).otherwise(0L)), s"count(*) FILTER (WHERE $condSql)")
+
+  /** How a check is evaluated; each shape carries its violated/denominator
+    * pair.
     */
-  private final case class Check(
-      name: String,
-      level: String,
-      category: String,
-      table: String,
-      field: String,
-      violated: Column,
-      denominator: Column,
-      bound: Option[Double] = None,
-      parent: Option[(String, String)] = None, // (parentTable, parentPk)
-      fkCol: Option[String] = None,
-      parentField: Option[String] = None,
-      constValue: Option[(Long, Long)] = None,
-      allowed: Option[Seq[String]] = None,
-      endField: Option[String] = None,
-      stratum: Option[(String, String)] = None,
-      attrCol: Option[String] = None,      // ConceptAttr: parent attr column
-      invCol: Option[String] = None,       // ConceptAttr: must-be-NULL column
-      excludeZero: Boolean = false,        // ConceptAttr: skip sentinel id 0
-      siblingOf: Option[(String, String)] = None, // Sibling: (table, key)
-      days: Option[Int] = None,            // duringLife grace / visit slack
-      // GenderDesc: (closureTable, ancestorCol, descendantCol) — the
-      // concept-hierarchy closure the descendant set comes from
-      closure: Option[(String, String, String)] = None,
-      distinctAgg: Boolean = false) {      // branch B (Expand-confined) check
+  private sealed trait Eval { def violated: Agg; def denominator: Agg }
+  /** Branch A: a sum-style pair in the table's fused pass over the
+    * parent-joined table; `onEmpty` is its value over an empty table.
+    */
+  private final case class Fused(violated: Agg, denominator: Agg,
+      onEmpty: (Long, Long) = (0L, 0L)) extends Eval
+  /** Branch B: a DISTINCT pair over the narrow projection `reads`. */
+  private final case class Distinct(violated: Agg, denominator: Agg,
+      reads: Seq[String]) extends Eval
+  /** A plan-time constant (`cdmField`): one row of a local relation. */
+  private final case class Const(v: Long, d: Long) extends Eval {
+    val violated = Agg(lit(v), v.toString)
+    val denominator = Agg(lit(d), d.toString)
+  }
+  /** A cross-table branch: the members of `keys(load)` (column `__p`)
+    * without a row in the check's table, over all members.
+    */
+  private final case class Cross(keys: (String => DataFrame) => DataFrame) extends Eval {
+    val violated = rowsWhere(col("__fk").isNull, "c.__fk IS NULL")
+    val denominator = rows
+  }
+
+  /** Rows of `scope` that are `bad`, over the rows of `scope`. */
+  private def share(scope: Column, scopeSql: String, bad: Column, badSql: String) =
+    Fused(rowsWhere(scope && bad, s"$scopeSql AND $badSql"), rowsWhere(scope, scopeSql))
+
+  /** A quoted SQL value list. */
+  private def sqlList(values: Seq[String]): String =
+    values.map(v => s"'${v.replace("'", "''")}'").mkString(", ")
+
+  /** One generated check: its reported metadata, how it is evaluated and
+    * the FROM clause of its rendered SQL.
+    */
+  private final case class Check(name: String, level: String, category: String,
+      table: String, field: String, eval: Eval, from: String, idTail: Seq[String] = Nil) {
     /** The LITERAL OHDSI DQD check id
       * (`/root/reference/src/riab/etl/data_quality.py:420-430`
       * `_get_check_id`): `checkLevel.lower()` + `checkName.lower()` +
       * `cdmTableName.lower()` [+ field] [+ conceptId] [+ unitConceptId],
       * underscore-joined — so stored results are keyed exactly like rows
       * produced by DataQualityDashboard and downstream OHDSI tooling can
-      * consume them. Unit checks append the allowed unit list the way the
-      * DQD threshold CSV's `unitConceptIds` cell renders (space-joined,
-      * then lowercased/underscored).
+      * consume them. `idTail` holds a CONCEPT check's concept id and, for
+      * unit checks, the allowed unit list the way the DQD threshold CSV's
+      * `unitConceptIds` cell renders (space-joined, then
+      * lowercased/underscored).
       */
-    def id: String = {
-      val base = Seq(level.toLowerCase, name.toLowerCase, table.toLowerCase) ++
-        (if (field.nonEmpty) Seq(field.toLowerCase) else Nil) ++
-        (if (level == "CONCEPT") Seq(stratum.get._2.toLowerCase) else Nil) ++
-        (if (name == "plausibleUnitConceptIds")
-          allowed.toSeq.map(_.mkString("_").toLowerCase) else Nil)
-      base.mkString("_")
-    }
+    def id: String =
+      (Seq(level, name, table) ++ Seq(field).filter(_.nonEmpty) ++ idTail)
+        .map(_.toLowerCase).mkString("_")
   }
 
   /** Every per-scan check of one table. Branch-A checks reference the
-    * `__tp_*` / `__dl_*` / `__ca_*` columns [[fieldLevel]] attaches by
-    * left-joining parents on unique keys; branch-B (distinct) checks read
-    * the raw table only.
+    * `__tp_*` / `__dl_*` / `__ca_*` / `__gd_*` columns [[fieldLevel]]
+    * attaches by left-joining parents on unique keys; branch-B (distinct)
+    * checks read the raw table only. The SQL side joins the same parents
+    * as `p` (and the descendant set as `d`) to the table as `s`.
     */
   private def tableChecks(model: CdmModel, table: String, rules: RuleSet,
-      actualCols: Option[Set[String]] = None): Seq[Check] = {
-    val all = count(lit(1))
+      actualCols: Option[Set[String]]): Seq[Check] = {
+    def check(name: String, level: String, category: String, field: String, eval: Eval,
+        from: String = table, idTail: Seq[String] = Nil) =
+      Check(name, level, category, table, field, eval, from, idTail)
+    /** `table s`, then `joins`, then its FK parent's distinct key `p.__pk`
+      * and `pulls`.
+      */
+    def parentJoin(fkCol: String, pulls: Seq[String], joins: String = ""): String = {
+      val parent = model.fks(table)(fkCol)
+      val pk = model.pk(parent).getOrElse(
+        throw new IllegalStateException(s"fk target $parent has no pk"))
+      s"$table s$joins LEFT JOIN (SELECT DISTINCT ${(s"$pk AS __pk" +: pulls).mkString(", ")} " +
+        s"FROM $parent) p ON s.$fkCol = p.__pk"
+    }
+    val fields = model.sparkSchema(table).fields.toSeq
     // count(*)*0+1 instead of a bare literal: stays an aggregate expression
     // and still yields 1 on an empty table (where min/max would be NULL)
-    val one = count(lit(1)) * lit(0L) + lit(1L)
-    val presence = Seq(Check("cdmTable", "TABLE", "Conformance", table, "",
-      when(count(lit(1)) === 0, lit(1L)).otherwise(lit(0L)), one))
-    val fieldPresence = model.sparkSchema(table).fields.toSeq.map { sf =>
+    val presence = check("cdmTable", "TABLE", "Conformance", "",
+      Fused(Agg(when(count(lit(1)) === 0, lit(1L)).otherwise(lit(0L)),
+        "CASE WHEN count(*) = 0 THEN 1 ELSE 0 END"),
+        Agg(count(lit(1)) * lit(0L) + lit(1L), "1"), onEmpty = (1L, 1L)))
+    val fieldPresence = fields.map { sf =>
       val missing = actualCols.exists(cols => !cols.contains(sf.name))
-      Check("cdmField", "FIELD", "Conformance", table, sf.name,
-        lit(0L), lit(0L), constValue = Some((if (missing) 1L else 0L, 1L)))
+      check("cdmField", "FIELD", "Conformance", sf.name,
+        Const(if (missing) 1L else 0L, 1L), "(SELECT 1) AS __dual")
     }
-    val required = model.requiredColumns(table).map { f =>
-      Check("isRequired", "FIELD", "Completeness", table, f,
-        sum(when(col(f).isNull, 1L).otherwise(0L)), all)
+    def nulls(name: String, f: String) = check(name, "FIELD", "Completeness", f,
+      Fused(rowsWhere(col(f).isNull, s"$f IS NULL"), rows))
+    val required = model.requiredColumns(table).map(nulls("isRequired", _))
+    val valueCompleteness = fields.collect {
+      case sf if !model.requiredColumns(table).contains(sf.name) =>
+        nulls("measureValueCompleteness", sf.name)
     }
-    val valueCompleteness =
-      model.sparkSchema(table).fields.toSeq.collect {
-        case sf if !model.requiredColumns(table).contains(sf.name) =>
-          Check("measureValueCompleteness", "FIELD", "Completeness", table, sf.name,
-            sum(when(col(sf.name).isNull, 1L).otherwise(0L)), all)
-      }
-    val datatype = model.sparkSchema(table).fields.collect {
+    val datatype = fields.collect {
       case sf if sf.dataType == org.apache.spark.sql.types.LongType =>
-        Check("cdmDatatype", "FIELD", "Conformance", table, sf.name,
-          sum(when(col(sf.name).isNotNull && !col(sf.name).cast("string").rlike(IntRegex),
-            1L).otherwise(0L)),
-          all)
-    }.toSeq
+        val f = sf.name
+        check("cdmDatatype", "FIELD", "Conformance", f, Fused(rowsWhere(
+          col(f).isNotNull && !col(f).cast("string").rlike(IntRegex),
+          s"$f IS NOT NULL AND NOT regexp_matches(CAST($f AS VARCHAR), '$IntRegex')"), rows))
+    }
     // isPrimaryKey is a DISTINCT aggregate -> branch B, so the main pass
     // plans no Expand
     val pk = model.pk(table).toSeq.map { p =>
-      Check("isPrimaryKey", "FIELD", "Conformance", table, p,
-        count(lit(1)) - countDistinct(col(p)), count(lit(1)), distinctAgg = true)
+      check("isPrimaryKey", "FIELD", "Conformance", p, Distinct(
+        Agg(count(lit(1)) - countDistinct(col(p)), s"count(*) - count(DISTINCT $p)"),
+        rows, Seq(p)))
     }
-    val fk = model.fks(table).toSeq.sortBy(_._1).map { case (fkCol, parent) =>
-      val parentPk = model.pk(parent).getOrElse(
-        throw new IllegalStateException(s"fk target $parent has no pk"))
-      Check("isForeignKey", "FIELD", "Conformance", table, fkCol,
-        sum(when(col(fkCol).isNotNull && col(s"__pk_$fkCol").isNull, 1L).otherwise(0L)),
-        sum(when(col(fkCol).isNotNull, 1L).otherwise(0L)),
-        parent = Some((parent, parentPk)))
+    val fk = model.fks(table).keys.toSeq.sorted.map { fkCol =>
+      check("isForeignKey", "FIELD", "Conformance", fkCol,
+        share(col(fkCol).isNotNull, s"s.$fkCol IS NOT NULL",
+          col(s"__pk_$fkCol").isNull, "p.__pk IS NULL"),
+        parentJoin(fkCol, Nil))
     }
     val plausible = rules.bounds.toSeq.sortBy(_._1).collect {
       case ((t, f), (lo, hi)) if t == table =>
-        lo.toSeq.map(b =>
-          Check("plausibleValueLow", "FIELD", "Plausibility", table, f,
-            sum(when(col(f) < b, 1L).otherwise(0L)), all, Some(b))) ++
-          hi.toSeq.map(b =>
-            Check("plausibleValueHigh", "FIELD", "Plausibility", table, f,
-              sum(when(col(f) > b, 1L).otherwise(0L)), all, Some(b)))
+        def bound(name: String, b: Double, cond: Column, op: String) =
+          check(name, "FIELD", "Plausibility", f, Fused(rowsWhere(cond, s"$f $op $b"), rows))
+        lo.toSeq.map(b => bound("plausibleValueLow", b, col(f) < b, "<")) ++
+          hi.toSeq.map(b => bound("plausibleValueHigh", b, col(f) > b, ">"))
     }.flatten
     val temporalChecks = rules.temporal.filter(_.table == table)
       .sortBy(r => (r.name, r.field)).map { r =>
-        val parent = model.fks(table)(r.fkCol)
-        val parentPk = model.pk(parent).get
-        val tp = col(s"__tp_${r.fkCol}_${r.parentField}")
-        Check(r.name, "FIELD", "Plausibility", table, r.field,
-          sum(when(col(r.field).isNotNull && tp.isNotNull && col(r.field) < tp, 1L).otherwise(0L)),
-          sum(when(col(r.field).isNotNull && tp.isNotNull, 1L).otherwise(0L)),
-          parent = Some((parent, parentPk)), fkCol = Some(r.fkCol),
-          parentField = Some(r.parentField))
+        val (f, tp) = (col(r.field), col(s"__tp_${r.fkCol}_${r.parentField}"))
+        check(r.name, "FIELD", "Plausibility", r.field,
+          share(f.isNotNull && tp.isNotNull, s"s.${r.field} IS NOT NULL AND p.__tp IS NOT NULL",
+            f < tp, s"s.${r.field} < p.__tp"),
+          parentJoin(r.fkCol, Seq(s"${r.parentField} AS __tp")))
       }
     val startBeforeEnd = rules.startEnd.filter(_.table == table).sortBy(_.startField).map { r =>
       val (s, e) = (col(r.startField), col(r.endField))
-      Check("plausibleStartBeforeEnd", "FIELD", "Plausibility", table, r.startField,
-        sum(when(s.isNotNull && e.isNotNull && s > e, 1L).otherwise(0L)),
-        sum(when(s.isNotNull && e.isNotNull, 1L).otherwise(0L)),
-        endField = Some(r.endField))
+      check("plausibleStartBeforeEnd", "FIELD", "Plausibility", r.startField,
+        share(s.isNotNull && e.isNotNull, s"${r.startField} IS NOT NULL AND ${r.endField} IS NOT NULL",
+          s > e, s"${r.startField} > ${r.endField}"))
     }
     val domainChecks = rules.domains.filter(_.table == table).sortBy(_.field).map { r =>
-      Check("fkDomain", "FIELD", "Conformance", table, r.field,
-        sum(when(col(r.field).isNotNull && !col(r.field).isin(r.allowed: _*), 1L).otherwise(0L)),
-        sum(when(col(r.field).isNotNull, 1L).otherwise(0L)),
-        allowed = Some(r.allowed))
+      check("fkDomain", "FIELD", "Conformance", r.field,
+        share(col(r.field).isNotNull, s"${r.field} IS NOT NULL",
+          !col(r.field).isin(r.allowed: _*), s"${r.field} NOT IN (${sqlList(r.allowed)})"))
     }
     val conceptChecks = rules.concepts.filter(_.table == table)
       .sortBy(r => (r.field, r.strataValue)).flatMap { r =>
-        val inStratum = col(r.strataCol) === r.strataValue && col(r.field).isNotNull
-        def mk(name: String, cond: Column, b: Double) =
-          Check(name, "CONCEPT", "Plausibility", table, r.field,
-            sum(when(inStratum && cond, 1L).otherwise(0L)),
-            sum(when(inStratum, 1L).otherwise(0L)),
-            bound = Some(b), stratum = Some((r.strataCol, r.strataValue)))
-        r.lo.toSeq.map(b => mk("plausibleValueLow", col(r.field) < b, b)) ++
-          r.hi.toSeq.map(b => mk("plausibleValueHigh", col(r.field) > b, b))
+        def bound(name: String, b: Double, cond: Column, op: String) =
+          check(name, "CONCEPT", "Plausibility", r.field,
+            share(col(r.strataCol) === r.strataValue && col(r.field).isNotNull,
+              s"${r.strataCol} = '${r.strataValue}' AND ${r.field} IS NOT NULL",
+              cond, s"${r.field} $op $b"),
+            idTail = Seq(r.strataValue))
+        r.lo.toSeq.map(b => bound("plausibleValueLow", b, col(r.field) < b, "<")) ++
+          r.hi.toSeq.map(b => bound("plausibleValueHigh", b, col(r.field) > b, ">"))
       }
     val withinVisitChecks = rules.withinVisit.filter(_.table == table).sortBy(_.field).map { r =>
-      val parent = model.fks(table)(r.fkCol)
-      val parentPk = model.pk(parent).get
       val f = col(r.field)
       val vs = col(s"__tp_${r.fkCol}_${r.parentStart}")
       val ve = col(s"__tp_${r.fkCol}_${r.parentEnd}")
-      val slack = expr(s"INTERVAL ${r.slackDays} DAY")
-      Check("withinVisitDates", "FIELD", "Plausibility", table, r.field,
-        sum(when(f.isNotNull && vs.isNotNull && ve.isNotNull &&
-          (f < vs - slack || f > ve + slack), 1L).otherwise(0L)),
-        sum(when(f.isNotNull && vs.isNotNull && ve.isNotNull, 1L).otherwise(0L)),
-        parent = Some((parent, parentPk)), fkCol = Some(r.fkCol),
-        parentField = Some(r.parentStart), endField = Some(r.parentEnd),
-        days = Some(r.slackDays))
+      val (slack, d) = (expr(s"INTERVAL ${r.slackDays} DAY"), s"INTERVAL ${r.slackDays} DAY")
+      check("withinVisitDates", "FIELD", "Plausibility", r.field,
+        share(f.isNotNull && vs.isNotNull && ve.isNotNull,
+          s"s.${r.field} IS NOT NULL AND p.__vs IS NOT NULL AND p.__ve IS NOT NULL",
+          f < vs - slack || f > ve + slack,
+          s"(s.${r.field} < p.__vs - $d OR s.${r.field} > p.__ve + $d)"),
+        parentJoin(r.fkCol, Seq(s"${r.parentStart} AS __vs", s"${r.parentEnd} AS __ve")))
     }
     val duringLifeChecks = rules.duringLife.filter(_.table == table).sortBy(_.field).map { r =>
-      val f = col(r.field)
-      val dd = col(s"__dl_dt_${r.fkCol}")
-      val grace = expr(s"INTERVAL ${r.graceDays} DAY")
-      Check(r.name, "FIELD", "Plausibility", table, r.field,
-        sum(when(f.isNotNull && dd.isNotNull && f > dd + grace, 1L).otherwise(0L)),
-        sum(when(f.isNotNull && dd.isNotNull, 1L).otherwise(0L)),
-        parent = Some((r.deathTable, r.deathKey)), fkCol = Some(r.fkCol),
-        parentField = Some(r.deathDateField), days = Some(r.graceDays))
+      val (f, dd) = (col(r.field), col(s"__dl_dt_${r.fkCol}"))
+      check(r.name, "FIELD", "Plausibility", r.field,
+        share(f.isNotNull && dd.isNotNull, s"s.${r.field} IS NOT NULL AND p.__dd IS NOT NULL",
+          f > dd + expr(s"INTERVAL ${r.graceDays} DAY"),
+          s"s.${r.field} > p.__dd + INTERVAL ${r.graceDays} DAY"),
+        s"$table s LEFT JOIN (SELECT ${r.deathKey} AS __pk, min(${r.deathDateField}) AS __dd " +
+          s"FROM ${r.deathTable} GROUP BY 1) p ON s.${r.fkCol} = p.__pk")
     }
     val conceptAttrChecks = rules.conceptAttrs.filter(_.table == table)
       .sortBy(r => (r.name, r.field)).map { r =>
@@ -544,67 +556,67 @@ object DqdChecks {
         val a = col(s"__ca_${r.field}_${r.attrCol}").cast("string")
         val okAttr = r.invCol.map(ic => a.isin(r.allowed: _*) &&
           col(s"__ca_${r.field}_$ic").isNull).getOrElse(a.isin(r.allowed: _*))
-        val inScope = if (r.excludeZero) f.isNotNull && f =!= 0 else f.isNotNull
-        Check(r.name, "FIELD", "Conformance", table, r.field,
-          sum(when(inScope && !coalesce(okAttr, lit(false)), 1L).otherwise(0L)),
-          sum(when(inScope, 1L).otherwise(0L)),
-          parent = Some((r.conceptTable, r.conceptPk)), allowed = Some(r.allowed),
-          attrCol = Some(r.attrCol), invCol = r.invCol, excludeZero = r.excludeZero)
+        val okSql = s"CAST(p.__${r.attrCol} AS VARCHAR) IN (${sqlList(r.allowed)})" +
+          r.invCol.map(ic => s" AND p.__$ic IS NULL").getOrElse("")
+        val attrs = (r.attrCol +: r.invCol.toSeq).map(a => s"max($a) AS __$a").mkString(", ")
+        check(r.name, "FIELD", "Conformance", r.field,
+          share(if (r.excludeZero) f.isNotNull && f =!= 0 else f.isNotNull,
+            s"s.${r.field} IS NOT NULL" + (if (r.excludeZero) s" AND s.${r.field} != 0" else ""),
+            !coalesce(okAttr, lit(false)), s"NOT coalesce($okSql, false)"),
+          s"$table s LEFT JOIN (SELECT ${r.conceptPk} AS __pk, $attrs FROM ${r.conceptTable} " +
+            s"GROUP BY 1) p ON s.${r.field} = p.__pk")
       }
     val recordChecks = rules.recordCompleteness.filter(_.table == table)
       .sortBy(r => (r.name, r.field)).map { r =>
-        Check(r.name, "FIELD", "Completeness", table, r.field,
-          sum(when(col(r.field).isNotNull && col(r.field) === 0, 1L).otherwise(0L)), all)
+        check(r.name, "FIELD", "Completeness", r.field, Fused(rowsWhere(
+          col(r.field).isNotNull && col(r.field) === 0, s"${r.field} = 0"), rows))
       }
     val sourceValueChecks = rules.sourceValues.filter(_.table == table).sortBy(_.field).map { r =>
-      Check("sourceValueCompleteness", "FIELD", "Completeness", table, r.field,
-        countDistinct(when(col(r.conceptField) === 0, col(r.field))),
-        countDistinct(col(r.field)),
-        parentField = Some(r.conceptField), distinctAgg = true)
+      check("sourceValueCompleteness", "FIELD", "Completeness", r.field, Distinct(
+        Agg(countDistinct(when(col(r.conceptField) === 0, col(r.field))),
+          s"count(DISTINCT CASE WHEN ${r.conceptField} = 0 THEN ${r.field} END)"),
+        Agg(countDistinct(col(r.field)), s"count(DISTINCT ${r.field})"),
+        Seq(r.field, r.conceptField)))
     }
     val unitChecks = rules.units.filter(_.table == table)
       .sortBy(r => (r.unitCol, r.conceptValue)).map { r =>
-        val inStratum = col(r.conceptCol) === r.conceptValue
         val u = col(r.unitCol).cast("string")
-        Check("plausibleUnitConceptIds", "CONCEPT", "Plausibility", table, r.unitCol,
-          sum(when(inStratum && (u.isNull || !u.isin(r.allowed: _*)), 1L).otherwise(0L)),
-          sum(when(inStratum, 1L).otherwise(0L)),
-          allowed = Some(r.allowed), stratum = Some((r.conceptCol, r.conceptValue)))
+        check("plausibleUnitConceptIds", "CONCEPT", "Plausibility", r.unitCol,
+          share(col(r.conceptCol) === r.conceptValue, s"${r.conceptCol} = '${r.conceptValue}'",
+            u.isNull || !u.isin(r.allowed: _*),
+            s"(${r.unitCol} IS NULL OR CAST(${r.unitCol} AS VARCHAR) NOT IN (${sqlList(r.allowed)}))"),
+          idTail = Seq(r.conceptValue, r.allowed.mkString("_")))
       }
+    // the person parent's gender outside `allowed`, within a stratum
+    def gender(name: String, conceptCol: String, stratum: Column, stratumSql: String,
+        fkCol: String, genderCol: String, allowed: Seq[String], idValue: String,
+        joins: String = "") = {
+      val g = col(s"__tp_${fkCol}_$genderCol").cast("string")
+      check(name, "CONCEPT", "Plausibility", conceptCol,
+        share(stratum && g.isNotNull, s"$stratumSql AND p.__g IS NOT NULL",
+          !g.isin(allowed: _*), s"CAST(p.__g AS VARCHAR) NOT IN (${sqlList(allowed)})"),
+        parentJoin(fkCol, Seq(s"$genderCol AS __g"), joins), Seq(idValue))
+    }
     val genderChecks = rules.genders.filter(_.table == table)
       .sortBy(r => (r.conceptCol, r.conceptValue)).map { r =>
-        val parent = model.fks(table)(r.fkCol)
-        val parentPk = model.pk(parent).get
-        val g = col(s"__tp_${r.fkCol}_${r.parentGenderCol}").cast("string")
-        val inStratum = col(r.conceptCol) === r.conceptValue && g.isNotNull
-        Check("plausibleGender", "CONCEPT", "Plausibility", table, r.conceptCol,
-          sum(when(inStratum && !g.isin(r.allowed: _*), 1L).otherwise(0L)),
-          sum(when(inStratum, 1L).otherwise(0L)),
-          parent = Some((parent, parentPk)), fkCol = Some(r.fkCol),
-          parentField = Some(r.parentGenderCol), allowed = Some(r.allowed),
-          stratum = Some((r.conceptCol, r.conceptValue)))
+        gender("plausibleGender", r.conceptCol, col(r.conceptCol) === r.conceptValue,
+          s"s.${r.conceptCol} = '${r.conceptValue}'", r.fkCol, r.parentGenderCol, r.allowed,
+          r.conceptValue)
       }
     val genderDescChecks = rules.genderDesc.filter(_.table == table)
       .sortBy(r => (r.conceptCol, r.ancestorValue)).map { r =>
-        val parent = model.fks(table)(r.fkCol)
-        val parentPk = model.pk(parent).get
-        val g = col(s"__tp_${r.fkCol}_${r.parentGenderCol}").cast("string")
-        val inStratum =
-          col(s"__gd_${r.conceptCol}_${r.ancestorValue}").isNotNull && g.isNotNull
-        Check("plausibleGenderUseDescendants", "CONCEPT", "Plausibility",
-          table, r.conceptCol,
-          sum(when(inStratum && !g.isin(r.allowed: _*), 1L).otherwise(0L)),
-          sum(when(inStratum, 1L).otherwise(0L)),
-          parent = Some((parent, parentPk)), fkCol = Some(r.fkCol),
-          parentField = Some(r.parentGenderCol), allowed = Some(r.allowed),
-          stratum = Some((r.conceptCol, r.ancestorValue)),
-          closure = Some((r.closureTable, r.ancestorCol, r.descendantCol)))
+        gender("plausibleGenderUseDescendants", r.conceptCol,
+          col(s"__gd_${r.conceptCol}_${r.ancestorValue}").isNotNull, "d.__desc IS NOT NULL",
+          r.fkCol, r.parentGenderCol, r.allowed, r.ancestorValue,
+          s" LEFT JOIN (SELECT DISTINCT ${r.descendantCol} AS __desc FROM ${r.closureTable} " +
+            s"WHERE CAST(${r.ancestorCol} AS VARCHAR) = '${r.ancestorValue}') " +
+            s"d ON s.${r.conceptCol} = d.__desc")
       }
-    presence ++ fieldPresence ++ required ++ valueCompleteness ++ datatype ++
+    presence +: (fieldPresence ++ required ++ valueCompleteness ++ datatype ++
       pk ++ fk ++ plausible ++ temporalChecks ++ startBeforeEnd ++ domainChecks ++
       conceptChecks ++ withinVisitChecks ++ duringLifeChecks ++ conceptAttrChecks ++
       recordChecks ++ sourceValueChecks ++ unitChecks ++ genderChecks ++
-      genderDescChecks
+      genderDescChecks)
   }
 
   /** TABLE-level checks whose scan runs over a DIFFERENT table than the one
@@ -612,22 +624,38 @@ object DqdChecks {
     * and the sibling-completeness family (sibling entities with no row).
     */
   private def crossTableChecks(model: CdmModel, rules: RuleSet): Seq[Check] = {
+    def check(name: String, table: String, key: String,
+        keys: (String => DataFrame) => DataFrame, keysSql: String, on: String) =
+      Check(name, "TABLE", "Completeness", table, key, Cross(keys),
+        s"$keysSql p LEFT JOIN (SELECT DISTINCT $key AS __fk FROM $table " +
+          s"WHERE $key IS NOT NULL) c ON $on = c.__fk")
     val personCompleteness = rules.completeness.sortBy(r => (r.table, r.fkCol)).map { r =>
       val parent = model.fks(r.table).getOrElse(r.fkCol,
         throw new IllegalArgumentException(s"${r.table}.${r.fkCol} is not an FK"))
       val parentPk = model.pk(parent).getOrElse(
         throw new IllegalStateException(s"completeness parent $parent has no pk"))
-      Check("measurePersonCompleteness", "TABLE", "Completeness", r.table, r.fkCol,
-        lit(0L), lit(0L), parent = Some((parent, parentPk)), fkCol = Some(r.fkCol))
+      check("measurePersonCompleteness", r.table, r.fkCol,
+        _(parent).select(col(parentPk).as("__p")), parent, s"p.$parentPk")
     }
     val siblingCompleteness = rules.siblings.sortBy(r => (r.name, r.table)).map { r =>
-      Check(r.name, "TABLE", "Completeness", r.table, r.tableKey,
-        lit(0L), lit(0L), fkCol = Some(r.tableKey),
-        siblingOf = Some((r.sibling, r.siblingKey)))
+      check(r.name, r.table, r.tableKey,
+        _(r.sibling).select(col(r.siblingKey).as("__p")).where(col("__p").isNotNull).distinct(),
+        s"(SELECT DISTINCT ${r.siblingKey} AS __p FROM ${r.sibling} " +
+          s"WHERE ${r.siblingKey} IS NOT NULL)", "p.__p")
     }
     personCompleteness ++ siblingCompleteness
   }
 
+  /** The whole battery's checks, table by table, then the cross-table ones;
+    * `actualCols` gives a table's loaded columns for `cdmField`.
+    */
+  private def battery(model: CdmModel, rules: RuleSet,
+      actualCols: String => Option[Set[String]] = _ => None): Seq[Check] =
+    model.tables.flatMap(tb => tableChecks(model, tb, rules, actualCols(tb))) ++
+      crossTableChecks(model, rules)
+
+  private def threshold(rules: RuleSet, c: Check): Double =
+    rules.thresholds.getOrElse((c.name, c.table, c.field), 0.0)
   /** Cohort-scope a table loader — the reference's optional
     * `cohort_definition_id` restriction (`data_quality.py:49,268`; the
     * published DQD SQL joins every checked CDM table to
@@ -732,12 +760,9 @@ object DqdChecks {
 
   private def countsAndThresholds(model: CdmModel, load: String => DataFrame,
       rules: RuleSet): (DataFrame, DataFrame) = {
-    val byTable = model.tables.map { tb =>
-      tb -> tableChecks(model, tb, rules, Some(load(tb).columns.toSet))
-    }
-    val perTable = byTable.flatMap { case (tb, allChecks) =>
-      val checksA = allChecks.filter(c => c.constValue.isEmpty && !c.distinctAgg)
-      val checksB = allChecks.filter(c => c.constValue.isEmpty && c.distinctAgg)
+    val checks = battery(model, rules, tb => Some(load(tb).columns.toSet))
+    val perTable = model.tables.flatMap { tb =>
+      val own = checks.filter(_.table == tb)
       // parent-attr pulls through the FK joins: temporal/afterBirth dates,
       // visit windows, gender attributes — all deduped per (fkCol, column)
       val fkPulls: Map[String, Seq[String]] = {
@@ -796,94 +821,60 @@ object DqdChecks {
             .withColumn(s"__gd_${cc}_$anc", lit(1))
           df.join(d, df(cc) === d(s"__gd_pk_${cc}_$anc"), "left")
         }
-      val branchA = {
-        val aggs = checksA.zipWithIndex.flatMap { case (c, i) =>
-          Seq(c.violated.as(s"__v$i"), c.denominator.as(s"__d$i"))
-        }
-        gdJoined
-          .agg(aggs.head, aggs.tail: _*)
-          .select(explode(array(checksA.zipWithIndex.map { case (c, i) =>
-            struct(
-              lit(c.id).as("check_id"),
-              lit(c.name).as("check_name"),
-              lit(c.level).as("check_level"),
-              lit(c.category).as("category"),
-              lit(c.table).as("cdm_table_name"),
-              lit(c.field).as("cdm_field_name"),
-              col(s"__v$i").cast("long").as("num_violated_rows"),
-              col(s"__d$i").cast("long").as("num_denominator_rows"))
-          }: _*)).as("c"))
-          .select("c.*")
-      }
+      val branchA = aggregated(gdJoined, own.filter(_.eval.isInstanceOf[Fused]))
       // branch B: the distinct-style checks over a NARROW projection — the
       // multi-distinct Expand only ever sees the key/source columns
-      val branchB = if (checksB.isEmpty) Nil else {
-        val needed = checksB.flatMap(c =>
-          c.field +: c.parentField.toSeq).distinct.map(col)
-        val aggs = checksB.zipWithIndex.flatMap { case (c, i) =>
-          Seq(c.violated.as(s"__v$i"), c.denominator.as(s"__d$i"))
-        }
-        Seq(load(tb).select(needed: _*)
-          .agg(aggs.head, aggs.tail: _*)
-          .select(explode(array(checksB.zipWithIndex.map { case (c, i) =>
-            struct(
-              lit(c.id).as("check_id"),
-              lit(c.name).as("check_name"),
-              lit(c.level).as("check_level"),
-              lit(c.category).as("category"),
-              lit(c.table).as("cdm_table_name"),
-              lit(c.field).as("cdm_field_name"),
-              col(s"__v$i").cast("long").as("num_violated_rows"),
-              col(s"__d$i").cast("long").as("num_denominator_rows"))
-          }: _*)).as("c"))
-          .select("c.*"))
-      }
+      val reads = own.map(_.eval).collect { case d: Distinct => d.reads }.flatten.distinct
+      val branchB = if (reads.isEmpty) Nil else Seq(aggregated(
+        load(tb).select(reads.map(col): _*), own.filter(_.eval.isInstanceOf[Distinct])))
       branchA +: branchB
     }
     // the plan-time-constant checks land as ONE local relation
     val session = load(model.tables.head).sparkSession
     import session.implicits._
-    val constDf = byTable.flatMap { case (_, allChecks) =>
-      allChecks.collect { case c if c.constValue.isDefined =>
-        val (v, dnm) = c.constValue.get
-        (c.id, c.name, c.level, c.category, c.table, c.field, v, dnm)
-      }
+    val constDf = checks.map(c => (c, c.eval)).collect { case (c, Const(v, d)) =>
+      (c.id, c.name, c.level, c.category, c.table, c.field, v, d)
     }.toDF("check_id", "check_name", "check_level", "category",
       "cdm_table_name", "cdm_field_name", "num_violated_rows", "num_denominator_rows")
     // cross-table completeness: one branch per rule — the parent (or
     // sibling) distinct-key set left-joined to the table's distinct keys,
     // both aggregates in the same pass
-    val crossDfs = crossTableChecks(model, rules).map { c =>
-      val (leftDf, leftKey) = c.siblingOf match {
-        case Some((sib, sibKey)) =>
-          (load(sib).select(col(sibKey).as("__p")).where(col("__p").isNotNull).distinct(), "__p")
-        case None =>
-          val (parent, parentPk) = c.parent.get
-          (load(parent).select(col(parentPk).as("__p")), "__p")
-      }
+    val crossDfs = checks.map(c => (c, c.eval)).collect { case (c, x: Cross) =>
+      val keys = x.keys(load)
       val childFks = load(c.table)
-        .select(col(c.fkCol.get).as("__fk")).where(col("__fk").isNotNull).distinct()
-      leftDf
-        .join(childFks, col(leftKey) === col("__fk"), "left")
-        .agg(
-          sum(when(col("__fk").isNull, 1L).otherwise(0L)).as("num_violated_rows"),
-          count(lit(1)).as("num_denominator_rows"))
-        .select(
-          lit(c.id).as("check_id"), lit(c.name).as("check_name"),
-          lit(c.level).as("check_level"), lit(c.category).as("category"),
-          lit(c.table).as("cdm_table_name"), lit(c.field).as("cdm_field_name"),
-          col("num_violated_rows").cast("long"), col("num_denominator_rows").cast("long"))
+        .select(col(c.field).as("__fk")).where(col("__fk").isNotNull).distinct()
+      keys
+        .join(childFks, col("__p") === col("__fk"), "left")
+        .agg(x.violated.spark.as("num_violated_rows"), x.denominator.spark.as("num_denominator_rows"))
+        .select(meta(c) ++ Seq(
+          col("num_violated_rows").cast("long"), col("num_denominator_rows").cast("long")): _*)
     }
     // per-check thresholds ride a broadcast lookup keyed by check id
-    val allCheckMeta = byTable.flatMap(_._2) ++ crossTableChecks(model, rules)
-    val thrDf = {
-      import session.implicits._
-      allCheckMeta.map(c => (c.id, rules.thresholds.getOrElse((c.name, c.table, c.field), 0.0)))
-        .toDF("check_id", "threshold_value")
-    }
+    val thrDf = checks.map(c => (c.id, threshold(rules, c))).toDF("check_id", "threshold_value")
     (graft.Unions.balanced(perTable ++ crossDfs :+ constDf), thrDf)
   }
 
+  /** The reported metadata columns of a check. */
+  private def meta(c: Check): Seq[Column] = Seq(
+    lit(c.id).as("check_id"), lit(c.name).as("check_name"),
+    lit(c.level).as("check_level"), lit(c.category).as("category"),
+    lit(c.table).as("cdm_table_name"), lit(c.field).as("cdm_field_name"))
+
+  /** Every check's violated/denominator pair in ONE aggregate over `df`,
+    * exploded to one count row per check.
+    */
+  private def aggregated(df: DataFrame, checks: Seq[Check]): DataFrame = {
+    val aggs = checks.zipWithIndex.flatMap { case (c, i) =>
+      Seq(c.eval.violated.spark.as(s"__v$i"), c.eval.denominator.spark.as(s"__d$i"))
+    }
+    df.agg(aggs.head, aggs.tail: _*)
+      .select(explode(array(checks.zipWithIndex.map { case (c, i) =>
+        struct(meta(c) ++ Seq(
+          col(s"__v$i").cast("long").as("num_violated_rows"),
+          col(s"__d$i").cast("long").as("num_denominator_rows")): _*)
+      }: _*)).as("c"))
+      .select("c.*")
+  }
   /** One incremental continuous-DQD micro-batch over a SINGLE-TABLE model:
     * compute the battery count partials over the BATCH only, merge them
     * into the stored per-check counts (`work/counts`, one bounded row per
@@ -1025,142 +1016,27 @@ object DqdChecks {
        |  floor((count(*) - sum(failed)) * 100.0 / count(*) * 1e2 + 0.5) / 1e2 AS percent_passed
        |FROM battery""".stripMargin
 
-  /** One check's rendered DuckDB query — the oracle's per-check SELECT and
-    * ALSO the `query_text` the dashboard's show-query drill-down serves
-    * (the reference's result rows carry the rendered check SQL,
-    * `data_quality_dashboard.py:358-367`).
+  /** (check_id, query_text) for every check of a battery — joined into the
+    * stored results so each row carries its own rendered query (the
+    * reference's result rows carry the rendered check SQL,
+    * `data_quality_dashboard.py:358-367`), and the per-check SELECTs of
+    * [[oracleSql]].
     */
-  private def checkSelectSql(c: Check, threshold: Double): String = {
-    val (violSql, denomSql, fromSql) = c.name match {
-          case "cdmTable" =>
-            ("CASE WHEN count(*) = 0 THEN 1 ELSE 0 END", "1", c.table)
-          case "cdmField" =>
-            ("0", "1", "(SELECT 1) AS __dual")
-          case "isRequired" | "measureValueCompleteness" =>
-            (s"count(*) FILTER (WHERE ${c.field} IS NULL)", "count(*)", c.table)
-          case "cdmDatatype" =>
-            (s"count(*) FILTER (WHERE ${c.field} IS NOT NULL AND NOT regexp_matches(CAST(${c.field} AS VARCHAR), '$IntRegex'))",
-              "count(*)", c.table)
-          case "isPrimaryKey" =>
-            (s"count(*) - count(DISTINCT ${c.field})", "count(*)", c.table)
-          case "isForeignKey" =>
-            val (parent, parentPk) = c.parent.get
-            (s"count(*) FILTER (WHERE s.${c.field} IS NOT NULL AND p.__pk IS NULL)",
-              s"count(*) FILTER (WHERE s.${c.field} IS NOT NULL)",
-              s"${c.table} s LEFT JOIN (SELECT DISTINCT $parentPk AS __pk FROM $parent) p ON s.${c.field} = p.__pk")
-          case "plausibleValueLow" if c.stratum.isDefined =>
-            val (sc, sv) = c.stratum.get
-            (s"count(*) FILTER (WHERE $sc = '$sv' AND ${c.field} IS NOT NULL AND ${c.field} < ${c.bound.get})",
-              s"count(*) FILTER (WHERE $sc = '$sv' AND ${c.field} IS NOT NULL)", c.table)
-          case "plausibleValueHigh" if c.stratum.isDefined =>
-            val (sc, sv) = c.stratum.get
-            (s"count(*) FILTER (WHERE $sc = '$sv' AND ${c.field} IS NOT NULL AND ${c.field} > ${c.bound.get})",
-              s"count(*) FILTER (WHERE $sc = '$sv' AND ${c.field} IS NOT NULL)", c.table)
-          case "plausibleValueLow" =>
-            (s"count(*) FILTER (WHERE ${c.field} < ${c.bound.get})", "count(*)", c.table)
-          case "plausibleValueHigh" =>
-            (s"count(*) FILTER (WHERE ${c.field} > ${c.bound.get})", "count(*)", c.table)
-          case "plausibleTemporalAfter" | "plausibleAfterBirth" =>
-            val (parent, parentPk) = c.parent.get
-            (s"count(*) FILTER (WHERE s.${c.field} IS NOT NULL AND p.__tp IS NOT NULL AND s.${c.field} < p.__tp)",
-              s"count(*) FILTER (WHERE s.${c.field} IS NOT NULL AND p.__tp IS NOT NULL)",
-              s"${c.table} s LEFT JOIN (SELECT DISTINCT $parentPk AS __pk, ${c.parentField.get} AS __tp FROM $parent) p ON s.${c.fkCol.get} = p.__pk")
-          case "plausibleStartBeforeEnd" =>
-            val e = c.endField.get
-            (s"count(*) FILTER (WHERE ${c.field} IS NOT NULL AND $e IS NOT NULL AND ${c.field} > $e)",
-              s"count(*) FILTER (WHERE ${c.field} IS NOT NULL AND $e IS NOT NULL)", c.table)
-          case "fkDomain" =>
-            val list = c.allowed.get.map(v => s"'${v.replace("'", "''")}'").mkString(", ")
-            (s"count(*) FILTER (WHERE ${c.field} IS NOT NULL AND ${c.field} NOT IN ($list))",
-              s"count(*) FILTER (WHERE ${c.field} IS NOT NULL)", c.table)
-          case "withinVisitDates" =>
-            val (parent, parentPk) = c.parent.get
-            val d = c.days.get
-            (s"count(*) FILTER (WHERE s.${c.field} IS NOT NULL AND p.__vs IS NOT NULL AND p.__ve IS NOT NULL AND (s.${c.field} < p.__vs - INTERVAL $d DAY OR s.${c.field} > p.__ve + INTERVAL $d DAY))",
-              s"count(*) FILTER (WHERE s.${c.field} IS NOT NULL AND p.__vs IS NOT NULL AND p.__ve IS NOT NULL)",
-              s"${c.table} s LEFT JOIN (SELECT DISTINCT $parentPk AS __pk, ${c.parentField.get} AS __vs, ${c.endField.get} AS __ve FROM $parent) p ON s.${c.fkCol.get} = p.__pk")
-          case "plausibleDuringLife" | "plausibleBeforeDeath" =>
-            val (dTb, dKey) = c.parent.get
-            val d = c.days.get
-            (s"count(*) FILTER (WHERE s.${c.field} IS NOT NULL AND p.__dd IS NOT NULL AND s.${c.field} > p.__dd + INTERVAL $d DAY)",
-              s"count(*) FILTER (WHERE s.${c.field} IS NOT NULL AND p.__dd IS NOT NULL)",
-              s"${c.table} s LEFT JOIN (SELECT $dKey AS __pk, min(${c.parentField.get}) AS __dd FROM $dTb GROUP BY 1) p ON s.${c.fkCol.get} = p.__pk")
-          case "isStandardValidConcept" | "fkClass" =>
-            val (cTb, cPk) = c.parent.get
-            val attrs = (c.attrCol.toSeq ++ c.invCol.toSeq)
-              .map(a => s"max($a) AS __$a").mkString(", ")
-            val list = c.allowed.get.map(v => s"'${v.replace("'", "''")}'").mkString(", ")
-            val ok = s"CAST(p.__${c.attrCol.get} AS VARCHAR) IN ($list)" +
-              c.invCol.map(ic => s" AND p.__$ic IS NULL").getOrElse("")
-            val scope = s"s.${c.field} IS NOT NULL" +
-              (if (c.excludeZero) s" AND s.${c.field} != 0" else "")
-            (s"count(*) FILTER (WHERE $scope AND NOT coalesce($ok, false))",
-              s"count(*) FILTER (WHERE $scope)",
-              s"${c.table} s LEFT JOIN (SELECT $cPk AS __pk, $attrs FROM $cTb GROUP BY 1) p ON s.${c.field} = p.__pk")
-          case "standardConceptRecordCompleteness" | "sourceConceptRecordCompleteness" =>
-            (s"count(*) FILTER (WHERE ${c.field} = 0)", "count(*)", c.table)
-          case "sourceValueCompleteness" =>
-            (s"count(DISTINCT CASE WHEN ${c.parentField.get} = 0 THEN ${c.field} END)",
-              s"count(DISTINCT ${c.field})", c.table)
-          case "plausibleUnitConceptIds" =>
-            val (sc, sv) = c.stratum.get
-            val list = c.allowed.get.map(v => s"'${v.replace("'", "''")}'").mkString(", ")
-            (s"count(*) FILTER (WHERE $sc = '$sv' AND (${c.field} IS NULL OR CAST(${c.field} AS VARCHAR) NOT IN ($list)))",
-              s"count(*) FILTER (WHERE $sc = '$sv')", c.table)
-          case "plausibleGender" =>
-            val (parent, parentPk) = c.parent.get
-            val (sc, sv) = c.stratum.get
-            val list = c.allowed.get.map(v => s"'${v.replace("'", "''")}'").mkString(", ")
-            (s"count(*) FILTER (WHERE s.$sc = '$sv' AND p.__g IS NOT NULL AND CAST(p.__g AS VARCHAR) NOT IN ($list))",
-              s"count(*) FILTER (WHERE s.$sc = '$sv' AND p.__g IS NOT NULL)",
-              s"${c.table} s LEFT JOIN (SELECT DISTINCT $parentPk AS __pk, ${c.parentField.get} AS __g FROM $parent) p ON s.${c.fkCol.get} = p.__pk")
-          case "plausibleGenderUseDescendants" =>
-            val (parent, parentPk) = c.parent.get
-            val (sc, anc) = c.stratum.get
-            val (aTb, aCol, dCol) = c.closure.get
-            val list = c.allowed.get.map(v => s"'${v.replace("'", "''")}'").mkString(", ")
-            (s"count(*) FILTER (WHERE d.__desc IS NOT NULL AND p.__g IS NOT NULL AND CAST(p.__g AS VARCHAR) NOT IN ($list))",
-              s"count(*) FILTER (WHERE d.__desc IS NOT NULL AND p.__g IS NOT NULL)",
-              s"${c.table} s" +
-                s" LEFT JOIN (SELECT DISTINCT $dCol AS __desc FROM $aTb WHERE CAST($aCol AS VARCHAR) = '$anc') d ON s.$sc = d.__desc" +
-                s" LEFT JOIN (SELECT DISTINCT $parentPk AS __pk, ${c.parentField.get} AS __g FROM $parent) p ON s.${c.fkCol.get} = p.__pk")
-          case "measurePersonCompleteness" =>
-            val (parent, parentPk) = c.parent.get
-            ("count(*) FILTER (WHERE c.__fk IS NULL)", "count(*)",
-              s"$parent p LEFT JOIN (SELECT DISTINCT ${c.fkCol.get} AS __fk FROM ${c.table} WHERE ${c.fkCol.get} IS NOT NULL) c ON p.$parentPk = c.__fk")
-          case "measureConditionEraCompleteness" =>
-            val (sib, sibKey) = c.siblingOf.get
-            ("count(*) FILTER (WHERE c.__fk IS NULL)", "count(*)",
-              s"(SELECT DISTINCT $sibKey AS __p FROM $sib WHERE $sibKey IS NOT NULL) p LEFT JOIN (SELECT DISTINCT ${c.fkCol.get} AS __fk FROM ${c.table} WHERE ${c.fkCol.get} IS NOT NULL) c ON p.__p = c.__fk")
-        }
+  def queryTexts(model: CdmModel, rules: RuleSet = RuleSet()): Seq[(String, String)] =
+    battery(model, rules).map { c =>
+      c.id ->
         s"""SELECT '${c.id}' AS check_id, '${c.name}' AS check_name, '${c.level}' AS check_level,
            |  '${c.category}' AS category, '${c.table}' AS cdm_table_name, '${c.field}' AS cdm_field_name,
-           |  CAST($violSql AS BIGINT) AS num_violated_rows,
-           |  CAST($denomSql AS BIGINT) AS num_denominator_rows,
-           |  CAST($threshold AS DOUBLE) AS threshold_value
-           |FROM $fromSql""".stripMargin
-  }
+           |  CAST(${c.eval.violated.sql} AS BIGINT) AS num_violated_rows,
+           |  CAST(${c.eval.denominator.sql} AS BIGINT) AS num_denominator_rows,
+           |  CAST(${threshold(rules, c)} AS DOUBLE) AS threshold_value
+           |FROM ${c.from}""".stripMargin
+    }
 
-  /** (check_id, query_text) for every check of a battery — joined into the
-    * stored results so each row carries its own rendered query.
-    */
-  def queryTexts(model: CdmModel, rules: RuleSet = RuleSet()): Seq[(String, String)] = {
-    val allChecks = model.tables.flatMap { tb =>
-      tableChecks(model, tb, rules, actualCols = None)
-    } ++ crossTableChecks(model, rules)
-    allChecks.map(c => c.id ->
-      checkSelectSql(c, rules.thresholds.getOrElse((c.name, c.table, c.field), 0.0)))
-  }
-
-  /** The same battery rendered as DuckDB SQL from the same metadata. */
-  def oracleSql(model: CdmModel, rules: RuleSet = RuleSet()): String = {
-    val allChecks = model.tables.flatMap { tb =>
-      tableChecks(model, tb, rules, actualCols = None)
-    } ++ crossTableChecks(model, rules)
-    def thr(c: Check): Double = rules.thresholds.getOrElse((c.name, c.table, c.field), 0.0)
-    val selects = allChecks.map(c => checkSelectSql(c, thr(c)))
+  /** The same battery rendered as DuckDB SQL from the same checks. */
+  def oracleSql(model: CdmModel, rules: RuleSet = RuleSet()): String =
     s"""WITH checks AS (
-       |${selects.mkString("\nUNION ALL\n")}
+       |${queryTexts(model, rules).map(_._2).mkString("\nUNION ALL\n")}
        |)
        |SELECT check_id, check_name, check_level, category, cdm_table_name, cdm_field_name,
        |  num_violated_rows, num_denominator_rows,
@@ -1169,23 +1045,20 @@ object DqdChecks {
        |  CAST(CASE WHEN floor(CAST(num_violated_rows AS DOUBLE) / greatest(num_denominator_rows, 1) * 100 * 1e6 + 0.5)
        |    > floor(CAST(threshold_value AS DOUBLE) * 1e6 + 0.5) THEN 1 ELSE 0 END AS BIGINT) AS failed
        |FROM checks ORDER BY check_id""".stripMargin
-  }
 
   /** The expected battery output over an all-EMPTY table universe, rendered
-    * as a VALUES oracle from the same metadata.
+    * as a VALUES oracle from the same checks.
     */
   def emptyUniverseOracleSql(model: CdmModel, rules: RuleSet = RuleSet()): String = {
-    val allChecks = model.tables.flatMap { tb =>
-      tableChecks(model, tb, rules, actualCols = None)
-    } ++ crossTableChecks(model, rules)
-    val rows = allChecks.map { c =>
-      val (viol, denom, pct) = c.name match {
-        case "cdmTable" => (1, 1, "1.0")
-        case "cdmField" => (0, 1, "0.0") // column exists even when empty
-        case _          => (0, 0, "0.0")
+    val rows = battery(model, rules).map { c =>
+      val (viol, denom) = c.eval match {
+        case Fused(_, _, onEmpty) => onEmpty
+        case Const(v, d) => (v, d) // the column exists even when empty
+        case _ => (0L, 0L)
       }
-      val thr = rules.thresholds.getOrElse((c.name, c.table, c.field), 0.0)
-      val failed = if (viol * 100.0 / math.max(denom, 1) > thr) 1 else 0
+      val pct = viol.toDouble / math.max(denom, 1L)
+      val thr = threshold(rules, c)
+      val failed = if (viol * 100.0 / math.max(denom, 1L) > thr) 1 else 0
       s"('${c.id}', '${c.name}', '${c.level}', '${c.category}', '${c.table}', '${c.field}', $viol, $denom, $pct, $thr, $failed)"
     }
     s"""SELECT check_id, check_name, check_level, category, cdm_table_name, cdm_field_name,

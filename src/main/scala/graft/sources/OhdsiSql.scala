@@ -92,9 +92,10 @@ object OhdsiSql {
     * quotes then keeps its legacy pass-through meaning). A colon inside
     * quotes ('12:30') is content and never a bind.
     */
-  private def substituteBinds(text: String, binds: Map[String, String]): String =
+  private def substituteBinds(text: String, binds: Map[String, String],
+      q: SqlText.Quotes): String =
     if (binds.isEmpty) text
-    else tsql(text).mapCode(raw":([\p{L}_][\p{L}\p{Nd}_]*)".r.replaceAllIn(_, m =>
+    else SqlText(text, q).mapCode(raw":([\p{L}_][\p{L}\p{Nd}_]*)".r.replaceAllIn(_, m =>
       java.util.regex.Matcher.quoteReplacement(binds.getOrElse(m.group(1),
         throw new IllegalArgumentException(s"unbound bind parameter :${m.group(1)} — known: " +
           binds.keys.toSeq.sorted.map(":" + _).mkString(", "))))))
@@ -156,13 +157,15 @@ object OhdsiSql {
     * the literal-masked text and the literals come back at the end, so a
     * string's content is never rewritten, while rules that take a literal
     * argument (DATEADD, CHARINDEX, CONVERT, the `+` chain) still see one.
+    * `quotes` says which quotes open a literal (T-SQL unless the text is
+    * GoogleSQL).
     */
-  def translate(sql: String): String = {
+  def translate(sql: String, quotes: SqlText.Quotes = SqlText.TSql): String = {
     // a T-SQL DECLARE blob (the CDM DDL's dynamic constraint-drop
     // preamble) is dispatched whole by execute — its QUOTENAME chains are
     // not the string-concat grammar the rewrites below parse
     if (ci(raw"^\s*DECLARE\s+@").findFirstIn(sql).isDefined) return sql
-    val text = tsql(sql)
+    val text = SqlText(sql, quotes)
     var s = text.masked
     // SqlRender's rendered target dialects type bare decimal literals as
     // FLOAT (e.g. FLOAT64 on BigQuery; the reference consumes DQD's
@@ -303,7 +306,7 @@ object OhdsiSql {
     // actually uses: string literals, one-call-deep function calls
     // (CAST(x AS STRING)), and (qualified) identifiers.
     s = StrPlusChain.replaceAllIn(s, m => {
-      val terms = tsql(m.matched).split('+').map(_.trim)
+      val terms = SqlText(m.matched, quotes).split('+').map(_.trim)
       java.util.regex.Matcher.quoteReplacement(
         if (!terms.exists(_.startsWith("'")))
           m.matched // all-identifier/number chain: genuine addition, untouched
@@ -600,12 +603,12 @@ object OhdsiSql {
     * prefix (quote-aware, balanced parens) from its body: `(ctePrefix,
     * body)`; ctePrefix is empty when the statement has no WITH.
     */
-  private def splitLeadingWith(stmt: String): (String, String) = {
+  private def splitLeadingWith(stmt: String, q: SqlText.Quotes): (String, String) = {
     val m = ci(raw"^\s*WITH\b").findFirstMatchIn(stmt)
     m match {
       case None => ("", stmt)
       case Some(w) =>
-        val text = tsql(stmt)
+        val text = SqlText(stmt, q)
         var i = w.end
         var more = true
         while (more) {
@@ -636,7 +639,8 @@ object OhdsiSql {
     * discipline) — a documented strictness, never a silent
     * nondeterminism.
     */
-  private def executeUpdateFrom(spark: SparkSession, ctes: String, body: String): Unit = {
+  private def executeUpdateFrom(spark: SparkSession, ctes: String, body: String,
+      q: SqlText.Quotes): Unit = {
     // two published shapes share the semantics:
     //   T-SQL:     UPDATE a SET ... FROM t [AS] a INNER JOIN rel [AS] r ON cond
     //   GoogleSQL: UPDATE t [AS] a SET ... FROM ( subquery ) r WHERE cond
@@ -654,7 +658,7 @@ object OhdsiSql {
             "unsupported UPDATE..FROM shape (expected: UPDATE a SET ... FROM t " +
               "[AS] a INNER JOIN rel [AS] r ON cond, or UPDATE t [AS] a SET ... " +
               "FROM ( subquery ) r WHERE cond)"))
-        val (start, end) = tsql(body).parenSpan(gm.end - 1)
+        val (start, end) = SqlText(body, q).parenSpan(gm.end - 1)
         require(end > start, "unbalanced parentheses in UPDATE..FROM subquery")
         val sub = body.substring(start + 1, end)
         val tm = ci(raw"(?s)^\s*(\w+)\s+WHERE\s+(.*?)\s*;?\s*$$")
@@ -666,7 +670,7 @@ object OhdsiSql {
       }
     require(ua.equalsIgnoreCase(ta),
       s"UPDATE alias '$ua' must name the FROM target alias '$ta'")
-    val assigns = tsql(setBody).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
+    val assigns = SqlText(setBody, q).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
       val eq = a.indexOf('=')
       require(eq > 0, s"unsupported UPDATE assignment '$a'")
       val lhs = a.substring(0, eq).trim
@@ -710,7 +714,8 @@ object OhdsiSql {
     * row; the emulation enforces the same contract with a bounded
     * duplicate-match probe instead of producing nondeterministic output.
     */
-  private def executeMerge(spark: SparkSession, stmt: String, ctes: String = ""): Unit = {
+  private def executeMerge(spark: SparkSession, stmt: String, ctes: String,
+      q: SqlText.Quotes): Unit = {
     import org.apache.spark.sql.functions.{col => fcol, expr => fexpr, lit => flit,
       when => fwhen, monotonically_increasing_id}
     val head = ci(raw"^\s*MERGE\s+INTO\s+($QNamePat)\s+(?:AS\s+)?(\w+)\s+USING\s*")
@@ -718,7 +723,7 @@ object OhdsiSql {
       .getOrElse(throw new IllegalArgumentException(
         "unsupported MERGE shape (expected: MERGE INTO <t> [AS] <alias> USING (...))"))
     val (target, tA) = (head.group(1), head.group(2))
-    val (start, end) = tsql(stmt).parenSpan(head.end)
+    val (start, end) = SqlText(stmt, q).parenSpan(head.end)
     require(start < stmt.length, "MERGE USING must be a parenthesized subquery")
     require(end > start, "unbalanced parentheses in MERGE USING subquery")
     val srcSql = stmt.substring(start + 1, end)
@@ -732,7 +737,7 @@ object OhdsiSql {
         "unsupported MERGE shape (expected: ... ) [AS] <alias> ON <cond>)"))
     val sA = tailM.group(1)
     val afterOn = tail.substring(tailM.end)
-    val clauses = tsql(afterOn)
+    val clauses = SqlText(afterOn, q)
     val wm = clauses.keywords("WHEN MATCHED THEN UPDATE SET").headOption
     val wnm = clauses.keywords("WHEN NOT MATCHED THEN INSERT").headOption
     // the targeted-removal cleanup templates' form: matched rows DELETE
@@ -748,7 +753,7 @@ object OhdsiSql {
       case Some((ws, we)) =>
         val setBody = afterOn.substring(we,
           wnm.map(_._1).filter(_ > ws).getOrElse(afterOn.length))
-        tsql(setBody).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
+        SqlText(setBody, q).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
           val eq = a.indexOf('=')
           require(eq > 0, s"unsupported MERGE assignment '$a'")
           val lhs = a.substring(0, eq).trim
@@ -776,7 +781,7 @@ object OhdsiSql {
             .getOrElse(throw new IllegalArgumentException(
               "unsupported MERGE INSERT shape (expected: INSERT (cols) VALUES (exprs) or INSERT ROW)"))
           (im.group(1).split(",").map(c => cleanName(c.trim)).filter(_.nonEmpty).toSeq,
-            tsql(im.group(2)).split(',').map(_.trim).toSeq)
+            SqlText(im.group(2), q).split(',').map(_.trim).toSeq)
         }
       }
     val tgtSchema = spark.table(target).schema
@@ -872,7 +877,9 @@ object OhdsiSql {
     * the SqlRender pass unless `sqlRender` is false — the DDL tree),
     * BigQuery through [[translateBigQuery]] and [[executeAll]] without
     * SqlRender (the reference drives that tree through Jinja and the
-    * BigQuery client only). Returns the last SELECT's frame, if any.
+    * BigQuery client only), scanned with the GoogleSQL quote rule so a
+    * `"..."` string stays a literal. Returns the last SELECT's frame, if
+    * any.
     */
   def runTemplate(s: SparkSession, dialect: Dialect, name: String,
       vars: Map[String, String] = Map.empty,
@@ -885,7 +892,8 @@ object OhdsiSql {
     dialect match {
       case SqlServer => executeAll(s, rendered, binds = binds, sqlRender = sqlRender)
       case BigQuery =>
-        executeAll(s, translateBigQuery(rendered), binds = binds, sqlRender = false)
+        executeAll(s, translateBigQuery(rendered), binds = binds, sqlRender = false,
+          quotes = SqlText.GoogleSql)
     }
   }
 
@@ -903,12 +911,15 @@ object OhdsiSql {
   /** Like [[execute]] but tolerates a script with no final SELECT (many
     * published templates are pure mutations — the tombstoning UPDATEs,
     * the cleanup DELETEs): returns the last SELECT's frame if any.
+    * `quotes` is the script's string-literal rule, which every pass and
+    * statement handler scans with.
     */
   def executeAll(spark: SparkSession, sql: String,
       params: Map[String, String] = Map.empty,
       binds: Map[String, String] = Map.empty,
-      sqlRender: Boolean = true): Option[DataFrame] = {
-    val statements = translateScript(sql, params, binds, sqlRender)
+      sqlRender: Boolean = true,
+      quotes: SqlText.Quotes = SqlText.TSql): Option[DataFrame] = {
+    val statements = translateScript(sql, params, binds, sqlRender, quotes)
     var last: Option[DataFrame] = None
     // leading `--` comment lines (the published templates' rule/analysis
     // headers) would defeat the ^-anchored statement dispatch below —
@@ -916,8 +927,8 @@ object OhdsiSql {
     statements.map(_.linesIterator
         .dropWhile(l => l.trim.isEmpty || l.trim.startsWith("--"))
         .mkString("\n"))
-      .map(rewriteSysCatalog(spark, _))
-      .map(rewriteInfoSchema(spark, _))
+      .map(rewriteSysCatalog(spark, _, quotes))
+      .map(rewriteInfoSchema(spark, _, quotes))
       .foreach {
       case DropIfExists(tgt) => dropAnyTable(spark, tgt)
       case DropTable(tgt) => dropAnyTable(spark, tgt)
@@ -936,7 +947,7 @@ object OhdsiSql {
           "unsupported DECLARE/dynamic-SQL shape (only the published CDM " +
             "DDL's sys.foreign_keys constraint-drop preamble is recognized)")
       case stmt if ci(raw"^\s*IF\s+NOT\s+EXISTS\s*\(").findFirstIn(stmt).isDefined =>
-        executeIfNotExists(spark, stmt)
+        executeIfNotExists(spark, stmt, quotes)
       case stmt if ci(raw"^\s*CREATE\s+TABLE\s+IF\s+NOT\s+EXISTS\b").findFirstIn(stmt).isDefined =>
         // the GoogleSQL guarded-DDL form (swap_create in the bigquery
         // tree); a trailing CLUSTER BY clause forwards so the created
@@ -950,23 +961,24 @@ object OhdsiSql {
           else cleanName(m.group(1))).toLowerCase
         if (!spark.catalog.tableExists(dbTbl))
           executeCreateTable(spark,
-            s"CREATE TABLE ${m.group(1)} (${m.group(2)}) ${Option(m.group(3)).getOrElse("")}")
+            s"CREATE TABLE ${m.group(1)} (${m.group(2)}) ${Option(m.group(3)).getOrElse("")}",
+            quotes)
       case stmt if ci(raw"^\s*CREATE\s+OR\s+REPLACE\s+TABLE\b").findFirstIn(stmt).isDefined =>
-        executeCreateOrReplace(spark, stmt)
+        executeCreateOrReplace(spark, stmt, quotes)
       case stmt if ci(raw"^\s*IF\s+EXISTS\s*\(").findFirstIn(stmt).isDefined =>
-        executeIfExists(spark, stmt)
+        executeIfExists(spark, stmt, quotes)
       case stmt if ci(raw"^\s*CREATE\s+TABLE\b").findFirstIn(stmt).isDefined =>
-        executeCreateTable(spark, stmt)
+        executeCreateTable(spark, stmt, quotes)
       // indexes have no Spark analogue (data layout is partitioning /
       // bucketing); the reference's own BigQuery dialect likewise skips
       // them ("INDEX CREATION SKIPPED", achilles.py) — accept and ignore
       case stmt if ci(raw"^\s*CREATE\s+(?:UNIQUE\s+|CLUSTERED\s+)?INDEX\b").findFirstIn(stmt).isDefined => ()
       case stmt if {
-        val (_, b) = splitLeadingWith(stmt)
+        val (_, b) = splitLeadingWith(stmt, quotes)
         ci(raw"^\s*MERGE\s+INTO\b").findFirstIn(b).isDefined
       } =>
-        val (ctes, b) = splitLeadingWith(stmt)
-        executeMerge(spark, b, ctes)
+        val (ctes, b) = splitLeadingWith(stmt, quotes)
+        executeMerge(spark, b, ctes, quotes)
       case TruncateTable(target) =>
         reRegister(spark, target, spark.table(target).limit(0))
       case DeleteFrom(target, cond) =>
@@ -983,12 +995,12 @@ object OhdsiSql {
         }
         reRegister(spark, target, kept)
       case stmt if {
-        val (_, b) = splitLeadingWith(stmt)
+        val (_, b) = splitLeadingWith(stmt, quotes)
         ci(raw"^\s*UPDATE\b").findFirstIn(b).isDefined &&
-          tsql(b).keywords("FROM").nonEmpty
+          SqlText(b, quotes).keywords("FROM").nonEmpty
       } =>
-        val (ctes, b) = splitLeadingWith(stmt)
-        executeUpdateFrom(spark, ctes, b)
+        val (ctes, b) = splitLeadingWith(stmt, quotes)
+        executeUpdateFrom(spark, ctes, b, quotes)
       case UpdateSet(target, aliasOpt, bodyRaw) =>
         // UPDATE t [alias] SET a = e1, b = e2 [WHERE cond]: rewrite as a
         // projection — each assigned column becomes
@@ -997,15 +1009,15 @@ object OhdsiSql {
         import org.apache.spark.sql.functions.{col => fcol, expr => fexpr, lit => flit, when => fwhen}
         // an alias only qualifies the target's own columns here — strip
         // its prefix (outside quotes) so expressions resolve on the frame
-        val body = Option(aliasOpt).fold(bodyRaw)(a => tsql(bodyRaw).mapCode(
+        val body = Option(aliasOpt).fold(bodyRaw)(a => SqlText(bodyRaw, quotes).mapCode(
           ci(raw"(?<![\p{L}\p{Nd}_.])" + java.util.regex.Pattern.quote(a) + raw"\.")
             .replaceAllIn(_, "")))
-        val (setPart, condPart) = tsql(body).keywords("WHERE").lastOption match {
+        val (setPart, condPart) = SqlText(body, quotes).keywords("WHERE").lastOption match {
           case Some((i, _)) => (body.substring(0, i), Some(body.substring(i + 5)))
           case None => (body, None)
         }
         val cond = condPart.map(c => fexpr(c.trim)).getOrElse(flit(true))
-        val assigns = tsql(setPart).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
+        val assigns = SqlText(setPart, quotes).split(',').map(_.trim).filter(_.nonEmpty).map { a =>
           val eq = a.indexOf('=')
           require(eq > 0, s"unsupported UPDATE assignment '$a' (expected col = expr)")
           (a.substring(0, eq).trim.toLowerCase, a.substring(eq + 1).trim)
@@ -1028,12 +1040,12 @@ object OhdsiSql {
       case InsertIntoTable(target, colList, select) =>
         executeInsertCatalog(spark, target, colList, select)
       case stmt if {
-        val (c, b) = splitLeadingWith(stmt)
+        val (c, b) = splitLeadingWith(stmt, quotes)
         c.trim.nonEmpty && ci(raw"^\s*INSERT\s+INTO\b").findFirstIn(b).isDefined
       } =>
         // WITH-prefixed INSERT (the {omop_table}_merge shape): the CTEs
         // scope over the SELECT, so they prepend to it verbatim
-        val (c, b) = splitLeadingWith(stmt)
+        val (c, b) = splitLeadingWith(stmt, quotes)
         b match {
           case InsertInto(view, colList, select) =>
             executeInsertView(spark, view, colList, s"${c.trim} $select")
@@ -1125,9 +1137,9 @@ object OhdsiSql {
     * execute the guarded statement. Only CREATE TABLE is guarded in the
     * published tree — anything else refuses with the shape named.
     */
-  private def executeIfNotExists(spark: SparkSession, stmt: String): Unit = {
+  private def executeIfNotExists(spark: SparkSession, stmt: String, q: SqlText.Quotes): Unit = {
     val m = ci(raw"^\s*IF\s+NOT\s+EXISTS\s*").findFirstMatchIn(stmt).get
-    val (start, end) = tsql(stmt).parenSpan(m.end)
+    val (start, end) = SqlText(stmt, q).parenSpan(m.end)
     require(start < stmt.length, "IF NOT EXISTS needs a parenthesized probe subquery")
     require(end > start, "unbalanced parentheses in IF NOT EXISTS probe")
     val probe = stmt.substring(start + 1, end)
@@ -1138,9 +1150,9 @@ object OhdsiSql {
     // body is a single CREATE TABLE
     val beginM = ci(raw"(?s)^\s*BEGIN\b(.*)\bEND\s*$$").findFirstMatchIn(guarded)
     val inner = beginM.map(_.group(1)).getOrElse(guarded)
-    tsql(inner).split(';').map(_.trim).filter(_.nonEmpty).foreach {
+    SqlText(inner, q).split(';').map(_.trim).filter(_.nonEmpty).foreach {
       case st if ci(raw"^\s*CREATE\s+TABLE\b").findFirstIn(st).isDefined =>
-        executeCreateTable(spark, st)
+        executeCreateTable(spark, st, q)
       case st if ci(raw"^\s*CREATE\s+(?:UNIQUE\s+|CLUSTERED\s+)?INDEX\b").findFirstIn(st).isDefined =>
         () // no Spark analogue; the reference's BigQuery dialect skips too
       case st => throw new IllegalArgumentException(
@@ -1157,7 +1169,7 @@ object OhdsiSql {
     * managed catalog table (the location-cleanup discipline of
     * [[replaceCatalogTable]]).
     */
-  private def executeCreateTable(spark: SparkSession, stmt: String): Unit = {
+  private def executeCreateTable(spark: SparkSession, stmt: String, q: SqlText.Quotes): Unit = {
     // an optional trailing CLUSTER BY (the BigQuery dialect's data-layout
     // clause, `OMOPCDM_bigquery_5.4_ddl.sql.jinja`) is RECORDED as table
     // metadata — writes through the bridge then keep the clustered order
@@ -1168,7 +1180,7 @@ object OhdsiSql {
     val name = m.group(1)
     val clusterKeys = Option(m.group(3)).map(
       _.split(',').toSeq.map(c => cleanName(c.trim)).filter(_.nonEmpty))
-    val cols = tsql(m.group(2)).split(',').map(_.trim).filter(_.nonEmpty).map { c =>
+    val cols = SqlText(m.group(2), q).split(',').map(_.trim).filter(_.nonEmpty).map { c =>
       // a trailing NULL / NOT NULL nullability marker is accepted and
       // dropped: Spark parquet tables are nullable (the DQD battery is
       // the enforcement analogue, same rationale as constraints)
@@ -1230,7 +1242,8 @@ object OhdsiSql {
     * read the replaced table itself (the vocabulary preserve branch) —
     * the materialize-then-swap protocol makes that safe.
     */
-  private def executeCreateOrReplace(spark: SparkSession, stmt: String): Unit = {
+  private def executeCreateOrReplace(spark: SparkSession, stmt: String,
+      q: SqlText.Quotes): Unit = {
     import org.apache.spark.sql.functions.{col => fcol}
     val m = ci(raw"(?s)^\s*CREATE\s+OR\s+REPLACE\s+TABLE\s+($QNamePat)\s*(?:LIKE\s+($QNamePat)\s*)?AS\s+(.+)$$")
       .findFirstMatchIn(stmt)
@@ -1243,7 +1256,7 @@ object OhdsiSql {
     val bodyRaw = m.group(3).trim
     val body =
       if (bodyRaw.startsWith("(")) {
-        val (_, closeAt) = tsql(bodyRaw).parenSpan(0)
+        val (_, closeAt) = SqlText(bodyRaw, q).parenSpan(0)
         if (closeAt == bodyRaw.length - 1) bodyRaw.substring(1, closeAt) else bodyRaw
       } else bodyRaw
     val df = spark.sql(body)
@@ -1264,9 +1277,9 @@ object OhdsiSql {
     * `{omop_work}_drop_table.sql.jinja` shape): run the probe; when it
     * returns a row, drop the guarded table.
     */
-  private def executeIfExists(spark: SparkSession, stmt: String): Unit = {
+  private def executeIfExists(spark: SparkSession, stmt: String, q: SqlText.Quotes): Unit = {
     val m = ci(raw"^\s*IF\s+EXISTS\s*").findFirstMatchIn(stmt).get
-    val (start, end) = tsql(stmt).parenSpan(m.end)
+    val (start, end) = SqlText(stmt, q).parenSpan(m.end)
     require(start < stmt.length, "IF EXISTS needs a parenthesized probe subquery")
     require(end > start, "unbalanced parentheses in IF EXISTS probe")
     val probe = stmt.substring(start + 1, end)
@@ -1294,9 +1307,9 @@ object OhdsiSql {
     * that database — the same bounded-metadata discipline as the
     * `sys.tables` mapping below.
     */
-  private def rewriteInfoSchema(spark: SparkSession, stmt: String): String = {
+  private def rewriteInfoSchema(spark: SparkSession, stmt: String, q: SqlText.Quotes): String = {
     val ref = ci(raw"`?(\w+)`?\.`?INFORMATION_SCHEMA`?\.`?COLUMNS`?")
-    tsql(stmt).mapCode(ref.replaceAllIn(_, m => {
+    SqlText(stmt, q).mapCode(ref.replaceAllIn(_, m => {
       import spark.implicits._
       val db = m.group(1).toLowerCase
       val snap = s"info_schema_columns_${db}_snap"
@@ -1309,7 +1322,7 @@ object OhdsiSql {
     }))
   }
 
-  private def rewriteSysCatalog(spark: SparkSession, stmt: String): String = {
+  private def rewriteSysCatalog(spark: SparkSession, stmt: String, q: SqlText.Quotes): String = {
     if (ci(raw"\bsys\.(tables|schemas)\b").findFirstIn(stmt).isEmpty) stmt
     else {
       import spark.implicits._
@@ -1392,7 +1405,7 @@ object OhdsiSql {
       tables.toDF("name", "schema_id").createOrReplaceTempView("sys_tables_snap")
       dbs.toSeq.map(db => (db, db)).toDF("schema_id", "name")
         .createOrReplaceTempView("sys_schemas_snap")
-      tsql(stmt).mapCode { code =>
+      SqlText(stmt, q).mapCode { code =>
         val s1 = ci(raw"\bsys\.tables\b").replaceAllIn(code, "sys_tables_snap")
         val s2 = ci(raw"\bsys\.schemas\b").replaceAllIn(s1, "sys_schemas_snap")
         ci(raw"\bSCHEMA_NAME\s*\(").replaceAllIn(s2, "(")
@@ -1417,8 +1430,8 @@ object OhdsiSql {
     * finds comments and literals in the same pass). A block comment is
     * replaced by one space so it can never fuse two tokens.
     */
-  private def stripComments(s: String): String = {
-    val text = tsql(s)
+  private def stripComments(s: String, q: SqlText.Quotes): String = {
+    val text = SqlText(s, q)
     // T-SQL raises an error on an unterminated block comment; silently
     // swallowing the rest of the script could hand execute() an earlier
     // SELECT as the "result" of a malformed script
@@ -1537,18 +1550,20 @@ object OhdsiSql {
     * ([[stripComments]] — quote tracking must only ever see real
     * SQL), split on `;` OUTSIDE string literals (the heel warning
     * messages carry semicolons inside their quotes), translated per
-    * statement (so `TOP n` becomes that statement's `LIMIT`).
+    * statement (so `TOP n` becomes that statement's `LIMIT`); every pass
+    * scans with the script's quote rule `quotes`.
     */
   def translateScript(sql: String, params: Map[String, String] = Map.empty,
       binds: Map[String, String] = Map.empty,
-      sqlRender: Boolean = true): Seq[String] = {
+      sqlRender: Boolean = true,
+      quotes: SqlText.Quotes = SqlText.TSql): Seq[String] = {
     // the reference runs its dialect-NATIVE templates (the DDL tree)
     // through Jinja + the warehouse driver only — no SqlRender pass — and
     // T-SQL variables (`DECLARE @x`) would read as unbound SqlRender
     // params; sqlRender=false mirrors that flow
     val rendered = if (sqlRender) render(sql, params) else sql
-    splitStatements(substituteBinds(stripComments(rendered), binds))
-      .map(_.trim).filter(_.nonEmpty).map(translate)
+    splitStatements(substituteBinds(stripComments(rendered, quotes), binds, quotes), quotes)
+      .map(_.trim).filter(_.nonEmpty).map(translate(_, quotes))
   }
 
   /** Split a script on `;` OUTSIDE string literals AND outside
@@ -1560,8 +1575,8 @@ object OhdsiSql {
     * both openers count — a CASE expression can never contain a
     * top-level `;`, which keeps the accounting safe.
     */
-  private def splitStatements(s: String): Seq[String] = {
-    val text = tsql(s)
+  private def splitStatements(s: String, q: SqlText.Quotes): Seq[String] = {
+    val text = SqlText(s, q)
     var blocks = 0
     text.cutAt(s.indices.filter(i => text.isCode(i) && {
       if (text.wordAt(i, "BEGIN") > 0 || text.wordAt(i, "CASE") > 0) blocks += 1

@@ -36,7 +36,7 @@ class SessionBuilderSpec extends SparkSpec {
   test("no new sys.props / sys.env reads in src/main") {
     val reads = scalaFiles("src/main")
       .map(p => "sys\\.(props|env)".r.findAllIn(Files.readString(p)).size).sum
-    assert(reads === 12)
+    assert(reads === 11)
   }
 
   test("the test session carries GraftSession's settings") {

@@ -100,6 +100,17 @@ class GraftCliSpec extends SparkSpec {
     intercept[IllegalArgumentException](GraftCli.parseArgs(Seq("--vacuum", "--keep", "-1")))
   }
 
+  test("--port and --cohort-definition-id name themselves on a bad value") {
+    for ((flag, v) <- Seq("--port" -> "x", "--port" -> "70000", "--port" -> "-1",
+        "--cohort-definition-id" -> "x")) {
+      val e = intercept[IllegalArgumentException](GraftCli.parseArgs(Seq(flag, v)))
+      assert(e.getMessage.contains(flag) && e.getMessage.contains(v), s"$flag $v: ${e.getMessage}")
+    }
+    assert(GraftCli.parseArgs(Seq("--port", "65535")).port.contains(65535))
+    assert(GraftCli.parseArgs(Seq("--port", "0")).port.contains(0))
+    assert(GraftCli.parseArgs(Seq("--cohort-definition-id", "-7")).cohortDefinitionId.contains(-7L))
+  }
+
   test("--dry-run / --keep without --vacuum die naming the flag pairing (ADVICE r17)") {
     // dispatch-level misuse: parses fine, then errors with the flag named
     for (argv <- Seq(Array("--dry-run"), Array("--keep", "1"))) {

@@ -242,4 +242,21 @@ class DqdChecksSpec extends SparkSpec {
     val renderedIds = oracleIds.findAllIn(sql).map(_.stripPrefix("'").stripSuffix("'")).toSet
     assert(renderedIds === sparkIds)
   }
+
+  test("each drill-down query text is verbatim in the oracle, one per battery check") {
+    // the stored query_text and the oracle's per-check SELECT are one
+    // rendering of one check list: for the spec's rules (ids of the run
+    // battery) and the CDM 5.4 rules (ids of the battery's threshold lookup)
+    val cdm = graft.model.Cdm54.model
+    val cdmRules = graft.queries.LifecycleQueries.cdmRules(cdm)
+    val cdmLoad: String => DataFrame = tb => spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], cdm.sparkSchema(tb))
+    val cdmIds = batteryThresholds(cdm, cdmLoad, cdmRules).collect().map(_.getString(0)).toSeq
+    for ((m, r, ids) <- Seq((model, rules, results.keySet.toSeq), (cdm, cdmRules, cdmIds))) {
+      val texts = queryTexts(m, r)
+      val oracle = oracleSql(m, r)
+      texts.foreach { case (id, q) => assert(oracle.contains(q), s"$id's query text is not in the oracle") }
+      assert(texts.map(_._1).sorted === ids.sorted)
+    }
+  }
 }

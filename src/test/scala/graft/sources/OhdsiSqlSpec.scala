@@ -944,4 +944,13 @@ class OhdsiSqlSpec extends SparkSpec {
     assert(OhdsiSql.executeAll(spark, OhdsiSql.translateBigQuery(q), sqlRender = false)
       .get.head().toSeq === want)
   }
+
+  test("BigQuery scripts scan double-quoted strings as literals") {
+    val q = OhdsiSql.translateBigQuery("SELECT \"rank #1\" AS m, \"see [note]\" AS n")
+    assert(OhdsiSql.executeAll(spark, q, sqlRender = false, quotes = SqlText.GoogleSql)
+      .get.head().toSeq === Seq("rank #1", "see [note]"))
+    // an apostrophe inside a double-quoted string opens no literal
+    assert(OhdsiSql.translateScript("SELECT \"it's\" AS a; SELECT 2 AS b", sqlRender = false,
+      quotes = SqlText.GoogleSql) === Seq("SELECT \"it's\" AS a", "SELECT 2 AS b"))
+  }
 }
